@@ -399,6 +399,7 @@ def test_ivf_index_roundtrip(spark, sf_dir, tmp_path_factory):
     cells read), and a rebuild must reproduce identical centroids."""
     from pyspark.sql import functions as F
 
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
         ivf_topk,
         ivf_topk_indexed,
@@ -420,8 +421,12 @@ def test_ivf_index_roundtrip(spark, sf_dir, tmp_path_factory):
     plan = idx._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruning" in plan.lower(), plan[:1500]
     write_ivf_index(spark, e, f"{base}/b")
-    ca = spark.read.parquet(f"{base}/a/centroids").orderBy("cell").collect()
-    cb = spark.read.parquet(f"{base}/b/centroids").orderBy("cell").collect()
+    ca, cb = (
+        spark.read.parquet(f"{resolve_data_dir(spark, f'{base}/{v}')}/centroids")
+        .orderBy("cell")
+        .collect()
+        for v in "ab"
+    )
     assert ca == cb
 
 
@@ -1648,6 +1653,7 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
 
     from pyspark.sql import functions as F
 
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
         _cell_assign,
         append_ivf_index,
@@ -1663,10 +1669,11 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
     rest = e.filter(F.col("vec_id") % 2 == 1)
     base = str(tmp_path_factory.mktemp("ivfappend")) + "/idx"
     write_ivf_index(spark, half, base)
+    cur = resolve_data_dir(spark, base)
 
     def data_files() -> set:
         out = set()
-        for root, dirs, files in os.walk(f"{base}/cells"):
+        for root, dirs, files in os.walk(f"{cur}/cells"):
             for fn in files:
                 if not fn.startswith(("_", ".")):
                     out.add(os.path.join(root, fn))
@@ -1681,7 +1688,7 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
 
     # appended cells == assigning the full corpus against the stored
     # (half-trained) centroids in one shot
-    cent = spark.read.parquet(f"{base}/centroids").orderBy("cell").toPandas()
+    cent = spark.read.parquet(f"{cur}/centroids").orderBy("cell").toPandas()
     bc = spark.sparkContext.broadcast(
         np.asarray(cent["centroid"].tolist(), dtype=np.float64)
     )
@@ -1690,7 +1697,7 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
     }
     got = {
         (r.vec_id, r.cell)
-        for r in spark.read.parquet(f"{base}/cells").collect()
+        for r in spark.read.parquet(f"{cur}/cells").collect()
     }
     assert got == want
 
@@ -1700,7 +1707,7 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
     assert any(r.cand_id % 2 == 1 for r in res), "appended vectors invisible"
 
     stats = ivf_index_stats(spark, base).collect()
-    n_cells = spark.read.parquet(f"{base}/centroids").count()
+    n_cells = spark.read.parquet(f"{cur}/centroids").count()
     assert len(stats) == n_cells
     assert sum(r.n_vectors for r in stats) == e.filter(
         F.col("embedding").isNotNull()
@@ -1710,15 +1717,12 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
         assert abs(r.skew - r.n_vectors / mean) < 1e-3
 
 
-@pytest.mark.parametrize("pointer", [False, True], ids=["rename", "pointer"])
-def test_compact_simhash_index(spark, sf_dir, tmp_path_factory, pointer):
+def test_compact_simhash_index(spark, sf_dir, tmp_path_factory):
     """r9 — X119 compaction for the append-grown dedup index: after
     several appends the band dirs hold many small files; compaction must
     shrink them to one file per band while preserving the EXACT row set,
     leaving every probe verdict unchanged, and remaining appendable
-    afterwards (the maintenance cycle continues). Parameterized over both
-    publish mechanisms (r11): the legacy rename swap and the
-    pointer-versioned S3A-safe layout — identical observable behavior."""
+    afterwards (the maintenance cycle continues)."""
     from pyspark.sql import functions as F
 
     from twitter_event_stream_spark.fsio import (
@@ -1742,9 +1746,7 @@ def test_compact_simhash_index(spark, sf_dir, tmp_path_factory, pointer):
 
     d = table(spark, sf_dir, "documents")
     path = str(tmp_path_factory.mktemp("shcompact")) + "/idx"
-    write_simhash_index(
-        spark, d.filter(F.col("doc_id") % 4 == 0), path, pointer=pointer
-    )
+    write_simhash_index(spark, d.filter(F.col("doc_id") % 4 == 0), path)
     for m in (1, 2):  # simulated ingest cadence: two appends
         write_simhash_index(
             spark, d.filter(F.col("doc_id") % 4 == m), path, mode="append"
@@ -1766,9 +1768,9 @@ def test_compact_simhash_index(spark, sf_dir, tmp_path_factory, pointer):
     rep = compact_band_rows(spark, path)
     assert rep["files_before"] == n_before
     assert rep["files_after"] == 4  # one file per band partition
-    # after the compaction published (pointer layout: a new version with
-    # the previous retained for grace), the root count still reports only
-    # the LIVE version's files
+    # after the compaction published (a new version with the previous
+    # retained for grace), the root count still reports only the LIVE
+    # version's files
     assert data_file_count(spark, path) == rep["files_after"]
     after_rows = idx_rows(path)
     assert after_rows == before_rows, "compaction changed index content"
@@ -1800,13 +1802,11 @@ def test_compact_simhash_index(spark, sf_dir, tmp_path_factory, pointer):
     assert idx_rows(path) == grown_rows
 
 
-@pytest.mark.parametrize("pointer", [False, True], ids=["rename", "pointer"])
-def test_compact_ivf_cells(spark, sf_dir, tmp_path_factory, pointer):
+def test_compact_ivf_cells(spark, sf_dir, tmp_path_factory):
     """r9 — X119 compaction for the appended IVF index: rewrite the cell
     partitions to one file per cell; probe results must be bit-identical,
     occupancy stats unchanged, centroids untouched, and the index still
-    appendable afterwards. Parameterized over both publish mechanisms
-    (r11): rename swap and pointer-versioned layout."""
+    appendable afterwards."""
     from pyspark.sql import functions as F
 
     from twitter_event_stream_spark.fsio import (
@@ -1831,9 +1831,7 @@ def test_compact_ivf_cells(spark, sf_dir, tmp_path_factory, pointer):
 
     e = table(spark, sf_dir, "embeddings")
     base = str(tmp_path_factory.mktemp("ivfcompact")) + "/idx"
-    write_ivf_index(
-        spark, e.filter(F.col("vec_id") % 3 == 0), base, pointer=pointer
-    )
+    write_ivf_index(spark, e.filter(F.col("vec_id") % 3 == 0), base)
     for m in (1, 2):
         append_ivf_index(spark, e.filter(F.col("vec_id") % 3 == m), base)
 
@@ -1907,16 +1905,14 @@ def test_index_gate_rejects_unexact_radius(spark, tmp_path_factory):
     assert len(ok) == 1
 
 
-@pytest.mark.parametrize("pointer", [False, True], ids=["rename", "pointer"])
-def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory, pointer):
+def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory):
     """r9 — the drift rebuild made executable: retraining over every
     VISIBLE vector (absorbed + committed streaming-ingest batches) must
-    consume the spill, swap in a coherent whole index, and reproduce
+    consume the spill, publish a coherent whole index, and reproduce
     BIT-IDENTICALLY the index a fresh build over the same vector set
     produces (the quantizer sample is a TakeOrdered pure function of the
-    data). Parameterized over both publish mechanisms (r11): in pointer
-    mode the spill batches are retired explicitly after the flip instead
-    of vanishing with the swapped-away directory."""
+    data). The consumed spill batches are retired after the flip with the
+    one-cycle grace (r13)."""
     import os
 
     from pyspark.sql import functions as F
@@ -1926,6 +1922,7 @@ def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory, pointer):
         resolve_data_dir,
     )
     from twitter_event_stream_spark.operators.vector_search import (
+        absorb_ingested,
         ivf_index_stats,
         ivf_topk_indexed,
         rebuild_ivf_index,
@@ -1939,9 +1936,7 @@ def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory, pointer):
     e = table(spark, sf_dir, "embeddings")
     root = str(tmp_path_factory.mktemp("ivfrebuild"))
     base = f"{root}/live"
-    write_ivf_index(
-        spark, e.filter(F.col("vec_id") % 2 == 0), base, pointer=pointer
-    )
+    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), base)
     vector_ingest_batch(base)(
         e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding"), 0
     )
@@ -1951,24 +1946,14 @@ def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory, pointer):
     n_all = e.filter(F.col("embedding").isNotNull()).count()
     assert rep["n_vectors"] == n_all
     assert rep["pending_batches_consumed"] == 1
-    # spill consumed: nothing pending; the rename swap drops the whole
-    # ingest dir with the old directory, the pointer path retires batches
-    # explicitly (the empty spill skeleton may remain)
+    # spill consumed: nothing pending. One-cycle grace retirement (r13):
+    # the consumed batch's manifest is gone but its data dir survives
+    # this pass for in-flight probes; the next maintenance pass reclaims
+    # it as a grace-expired orphan
     assert manifested_batch_ids(spark, f"{base}/ingest") == []
-    if not pointer:
-        assert not os.path.exists(f"{base}/ingest")
-    else:
-        # one-cycle grace retirement (r13): the consumed batch's manifest
-        # is gone (checked above) but its data dir survives this pass for
-        # in-flight probes; the next maintenance pass reclaims it as a
-        # grace-expired orphan
-        assert os.path.exists(f"{base}/ingest/batch=0")
-        from twitter_event_stream_spark.operators.vector_search import (
-            absorb_ingested,
-        )
-
-        absorb_ingested(spark, base)
-        assert not os.path.exists(f"{base}/ingest/batch=0")
+    assert os.path.exists(f"{base}/ingest/batch=0")
+    absorb_ingested(spark, base)
+    assert not os.path.exists(f"{base}/ingest/batch=0")
     stats = ivf_index_stats(spark, base).collect()
     assert sum(r.n_vectors for r in stats) == n_all
 
@@ -1988,321 +1973,25 @@ def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory, pointer):
         )
     )
     cent_want = sorted(
-        map(tuple, spark.read.parquet(f"{fresh}/centroids").collect())
+        map(
+            tuple,
+            spark.read.parquet(
+                f"{resolve_data_dir(spark, fresh)}/centroids"
+            ).collect(),
+        )
     )
     assert cent_got == cent_want
 
 
-def _age_lease(idx: str) -> None:
-    """Fabricate a crashed holder: make the existing lease file ancient.
-    (min-TTL enforcement, r13, outlawed the old ttl_sec=0 + sleep
-    fabrication — sub-second TTLs made fresh leases instantly stealable.)"""
-    import os
-
-    from twitter_event_stream_spark.fsio import _lease_path
-
-    os.utime(_lease_path(idx), (0, 0))
-
-
-def test_maintenance_lease_mechanism(spark, sf_dir, tmp_path_factory):
-    """r10 — mechanical quiescing (r9 verdict "What's missing" #1): while a
-    maintenance lease is held, BOTH streaming ingest handlers fail fast
-    (instead of appending into a directory a swap may delete) and a second
-    maintenance op is refused; a released or stale lease unblocks; a
-    maintenance op that raises still releases its lease."""
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from twitter_event_stream_spark.fsio import (
-        MaintenanceLeaseHeld,
-        acquire_maintenance_lease,
-        assert_no_maintenance,
-        maintenance_lease,
-        read_maintenance_lease,
-        release_maintenance_lease,
-    )
-    from twitter_event_stream_spark.operators.corpus_full import (
-        write_simhash_index,
-    )
-    from twitter_event_stream_spark.operators.vector_search import (
-        compact_ivf_cells,
-        write_ivf_index,
-    )
-    from twitter_event_stream_spark.streaming.pipelines import (
-        dedup_ingest_batch,
-        vector_ingest_batch,
-    )
-    from twitter_event_stream_spark.tables import table
-
-    root = str(tmp_path_factory.mktemp("lease"))
-    ivf = f"{root}/ivf"
-    sidx = f"{root}/simhash"
-    out = f"{root}/corpus"
-    e = table(spark, sf_dir, "embeddings")
-    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), ivf)
-    docs = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    write_simhash_index(spark, docs, sidx)
-
-    # held lease: ingest handlers refuse, second maintenance op refuses
-    acquire_maintenance_lease(spark, ivf, owner="test-compact")
-    assert read_maintenance_lease(spark, ivf)["owner"] == "test-compact"
-    batch = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
-    with pytest.raises(MaintenanceLeaseHeld, match="test-compact"):
-        vector_ingest_batch(ivf)(batch, 0)
-    assert not __import__("os").path.exists(f"{ivf}/ingest")
-    with pytest.raises(MaintenanceLeaseHeld):
-        compact_ivf_cells(spark, ivf)
-    release_maintenance_lease(spark, ivf)
-    assert read_maintenance_lease(spark, ivf) is None
-
-    # released: both sides proceed
-    assert_no_maintenance(spark, ivf)
-    vector_ingest_batch(ivf)(batch, 0)
-    rep = compact_ivf_cells(spark, ivf)
-    assert rep["files_after"] <= rep["files_before"]
-
-    # the text-index twin: gate handler refuses mid-maintenance too
-    acquire_maintenance_lease(spark, sidx, owner="test-band-compact")
-    new_docs = spark.createDataFrame(
-        [(2, "a completely different document about spark")],
-        "doc_id long, text string",
-    )
-    with pytest.raises(MaintenanceLeaseHeld, match="test-band-compact"):
-        dedup_ingest_batch(sidx, out)(new_docs, 0)
-    release_maintenance_lease(spark, sidx)
-    dedup_ingest_batch(sidx, out)(new_docs, 0)
-
-    # stale lease (holder crashed past TTL): ingest proceeds, and the next
-    # maintenance op BREAKS the stale marker and takes the lease itself
-    acquire_maintenance_lease(spark, ivf, owner="crashed-op", ttl_sec=1)
-    _age_lease(ivf)
-    assert_no_maintenance(spark, ivf)  # stale does not block ingest
-    rep = compact_ivf_cells(spark, ivf)  # breaks stale, runs, releases
-    assert rep["files_after"] >= 1
-    assert read_maintenance_lease(spark, ivf) is None
-
-    # a raising maintenance body still releases (context-manager contract)
-    with pytest.raises(RuntimeError, match="boom"):
-        with maintenance_lease(spark, ivf, owner="failing-op"):
-            assert read_maintenance_lease(spark, ivf)["owner"] == "failing-op"
-            raise RuntimeError("boom")
-    assert read_maintenance_lease(spark, ivf) is None
-
-
-def test_maintenance_lease_heartbeat(spark, tmp_path_factory):
-    """r11 — a LIVE maintenance op past its TTL is not breakable: the
-    context manager heartbeats the lease file's mtime, so staleness can
-    only mean the holder's process died (r10 verdict "What's missing" #1).
-    A genuinely dead holder (bare acquire, no heartbeat) is still broken."""
-    import time
-
-    import pytest
-
-    from twitter_event_stream_spark.fsio import (
-        MaintenanceLeaseHeld,
-        acquire_maintenance_lease,
-        assert_no_maintenance,
-        maintenance_lease,
-        read_maintenance_lease,
-        release_maintenance_lease,
-    )
-
-    root = str(tmp_path_factory.mktemp("hb"))
-    idx = f"{root}/index"
-
-    # live holder, TTL 1s, body runs 1.6s (> TTL): heartbeat (interval
-    # ttl/4 = 0.25s) keeps the mtime fresh, so neither ingest nor a second
-    # maintenance op treats the lease as stale mid-run
-    with maintenance_lease(spark, idx, owner="long-run", ttl_sec=1):
-        time.sleep(1.6)
-        with pytest.raises(MaintenanceLeaseHeld, match="long-run"):
-            assert_no_maintenance(spark, idx)
-        with pytest.raises(MaintenanceLeaseHeld, match="long-run"):
-            acquire_maintenance_lease(spark, idx, owner="usurper", ttl_sec=1)
-        assert read_maintenance_lease(spark, idx)["owner"] == "long-run"
-    assert read_maintenance_lease(spark, idx) is None
-
-    # dead holder (no heartbeat — bare acquire simulates a crashed
-    # process) past TTL: still broken and re-taken
-    acquire_maintenance_lease(spark, idx, owner="crashed", ttl_sec=1)
-    _age_lease(idx)
-    assert_no_maintenance(spark, idx)  # stale does not block ingest
-    acquire_maintenance_lease(spark, idx, owner="successor", ttl_sec=60)
-    assert read_maintenance_lease(spark, idx)["owner"] == "successor"
-    release_maintenance_lease(spark, idx)
-
-
-def test_stale_lease_break_single_winner(spark, tmp_path_factory):
-    """r11 (r10 ADVICE) — of N contenders that all observe the same stale
-    lease exactly ONE acquires. This test caught two real unserialized
-    shapes in earlier drafts: (a) RawLocalFileSystem's "exclusive" create
-    is check-then-create, letting two creators through; (b) a slower
-    breaker's rename firing AFTER the faster one re-created a fresh lease
-    stole that fresh lease. The fix is an atomic per-scheme create plus
-    the self-validating single-winner rename (fsio._remove_if_stale:
-    rename-to-unique elects one remover, mtime re-validation restores a
-    mistakenly-grabbed fresh lease); repeated rounds keep the
-    interleaving pressure on."""
-    import threading
-
-    from twitter_event_stream_spark.fsio import (
-        MaintenanceLeaseHeld,
-        acquire_maintenance_lease,
-        read_maintenance_lease,
-        release_maintenance_lease,
-    )
-
-    root = str(tmp_path_factory.mktemp("race"))
-    for rnd in range(3):
-        idx = f"{root}/index-{rnd}"
-        acquire_maintenance_lease(spark, idx, owner="crashed", ttl_sec=1)
-        _age_lease(idx)  # everyone sees it stale
-
-        results: list[str] = []
-        lock = threading.Lock()
-        barrier = threading.Barrier(8)
-
-        def contend(i: int) -> None:
-            barrier.wait()
-            try:
-                acquire_maintenance_lease(
-                    spark, idx, owner=f"t{i}", ttl_sec=60
-                )
-                with lock:
-                    results.append(f"t{i}")
-            except MaintenanceLeaseHeld:
-                pass
-
-        threads = [
-            threading.Thread(target=contend, args=(i,)) for i in range(8)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=30)
-        assert len(results) == 1, (
-            f"round {rnd}: expected one winner, got {results}"
-        )
-        assert read_maintenance_lease(spark, idx)["owner"] == results[0]
-        release_maintenance_lease(spark, idx)
-
-
-def test_maintenance_generation_counter(spark, tmp_path_factory):
-    """r11 — the generation counter moves exactly once per completed
-    maintenance scope (success OR failure), and the generation-aware
-    assert_no_maintenance raises on a moved counter even with no lease
-    left to see."""
-    import pytest
-
-    from twitter_event_stream_spark.fsio import (
-        MaintenanceLeaseHeld,
-        assert_no_maintenance,
-        maintenance_generation,
-        maintenance_lease,
-    )
-
-    root = str(tmp_path_factory.mktemp("gen"))
-    idx = f"{root}/index"
-    assert maintenance_generation(spark, idx) == 0
-    g0 = maintenance_generation(spark, idx)
-    with maintenance_lease(spark, idx, owner="op-1"):
-        pass
-    assert maintenance_generation(spark, idx) == g0 + 1
-    with pytest.raises(MaintenanceLeaseHeld, match="generation moved"):
-        assert_no_maintenance(spark, idx, generation=g0)
-    # a RAISED maintenance scope still bumps (it may have part-mutated)
-    with pytest.raises(RuntimeError, match="boom"):
-        with maintenance_lease(spark, idx, owner="op-2"):
-            raise RuntimeError("boom")
-    assert maintenance_generation(spark, idx) == g0 + 2
-    # unchanged counter + no lease: the fence passes
-    assert_no_maintenance(spark, idx, generation=g0 + 2)
-
-
-def test_remove_if_stale_semantics(spark, tmp_path_factory):
-    """r11 — the stale-removal primitive behind lease breaking
-    (fsio._remove_if_stale): a missing file reads "gone", a fresh file is
-    left in place ("fresh"), a stale file is removed exactly once
-    ("removed"), and — the branch that closes the steal race without a
-    serialization marker — a FRESH file that the by-path rename grabbed
-    by mistake (the path was re-occupied between the staleness read and
-    the rename) is RESTORED, not deleted."""
-    import time
-
-    from twitter_event_stream_spark.fsio import _fs, _remove_if_stale
-
-    root = str(tmp_path_factory.mktemp("ris"))
-    fs, hpath = _fs(spark, root)
-    p = f"{root}/victim"
-
-    assert _remove_if_stale(spark, fs, hpath, p, 1000) == "gone"
-
-    fs.create(hpath(p), True).close()
-    assert _remove_if_stale(spark, fs, hpath, p, 60_000) == "fresh"
-    assert fs.exists(hpath(p)), "a fresh file must be left in place"
-
-    time.sleep(0.15)
-    assert _remove_if_stale(spark, fs, hpath, p, 100) == "removed"
-    assert not fs.exists(hpath(p))
-
-    # restore-on-mistake: the FIRST stat reports an ancient mtime (as if
-    # the contender validated a stale file that was then replaced), so the
-    # rename grabs the fresh replacement — the re-validation against the
-    # renamed file's TRUE mtime must put it back
-    fs.create(hpath(p), True).close()
-
-    class _ShimFS:
-        def __init__(self, real):
-            self._real = real
-            self._first = True
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-        def getFileStatus(self, jp):
-            st = self._real.getFileStatus(jp)
-            if self._first:
-                self._first = False
-
-                class _Ancient:
-                    @staticmethod
-                    def getModificationTime():
-                        return 0
-
-                return _Ancient()
-            return st
-
-    assert _remove_if_stale(spark, _ShimFS(fs), hpath, p, 60_000) == "fresh"
-    assert fs.exists(hpath(p)), (
-        "a mistakenly-grabbed fresh file must be restored to its path"
-    )
-    import glob
-
-    assert not glob.glob(f"{p}.stale-*"), "no tomb may be left behind"
-
-
-def test_batch_append_apis_fenced_and_idempotent(
-    spark, sf_dir, tmp_path_factory
-):
+def test_batch_append_apis_idempotent(spark, sf_dir, tmp_path_factory):
     """r11 — the BATCH append APIs (append_ivf_index,
-    write_simhash_index(mode="append")) carry the same
-    ingest-vs-maintenance protocol as the streaming handlers: they fail
-    fast while the index's maintenance lease is held (an unfenced append
-    racing a swap is a silent loss), and a RETRIED append converges to
-    exactly-once through the anti-join — including healing a crashed
-    PARTIAL band append back to all 4 bands per document."""
-    import pytest
+    write_simhash_index(mode="append")) converge to exactly-once under
+    retry through the anti-join, like the streaming handlers — including
+    healing a crashed PARTIAL band append back to all 4 bands per
+    document."""
     from pyspark.sql import functions as F
 
-    from twitter_event_stream_spark.fsio import (
-        MaintenanceLeaseHeld,
-        acquire_maintenance_lease,
-        release_maintenance_lease,
-    )
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.corpus_full import (
         _simhash_band_rows,
         simhash64,
@@ -2324,33 +2013,17 @@ def test_batch_append_apis_fenced_and_idempotent(
     ivf = f"{root}/ivf"
     write_ivf_index(spark, half, ivf)
 
-    acquire_maintenance_lease(spark, ivf, owner="compact-op", ttl_sec=60)
-    with pytest.raises(MaintenanceLeaseHeld, match="compact-op"):
-        append_ivf_index(spark, rest, ivf)
-    with pytest.raises(MaintenanceLeaseHeld, match="compact-op"):
-        write_ivf_index(spark, half, ivf)  # retrain of EXISTING = maint.
-    release_maintenance_lease(spark, ivf)
-
-    # a retrain over an existing index takes the lease itself and bumps
-    # the generation on exit, so in-flight batches abort at their fence
-    from twitter_event_stream_spark.fsio import maintenance_generation
-
-    g0 = maintenance_generation(spark, ivf)
-    write_ivf_index(spark, half, ivf)
-    assert maintenance_generation(spark, ivf) == g0 + 1
+    def cells():
+        return spark.read.parquet(f"{resolve_data_dir(spark, ivf)}/cells")
 
     append_ivf_index(spark, rest, ivf)
-    n_once = spark.read.parquet(f"{ivf}/cells").count()
-    append_ivf_index(spark, rest, ivf)  # the retry after an aborted commit
-    assert spark.read.parquet(f"{ivf}/cells").count() == n_once, (
+    n_once = cells().count()
+    append_ivf_index(spark, rest, ivf)  # the retry after a crashed call
+    assert cells().count() == n_once, (
         "a retried append must not duplicate vectors"
     )
     assert (
-        spark.read.parquet(f"{ivf}/cells")
-        .groupBy("vec_id")
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
+        cells().groupBy("vec_id").count().filter(F.col("count") > 1).count()
         == 0
     )
 
@@ -2361,145 +2034,25 @@ def test_batch_append_apis_fenced_and_idempotent(
     sidx = f"{root}/simhash"
     write_simhash_index(spark, seed, sidx)
 
-    acquire_maintenance_lease(spark, sidx, owner="band-compact", ttl_sec=60)
-    with pytest.raises(MaintenanceLeaseHeld, match="band-compact"):
-        write_simhash_index(spark, batch, sidx, mode="append")
-    with pytest.raises(MaintenanceLeaseHeld, match="band-compact"):
-        write_simhash_index(spark, seed, sidx)  # rewrite of EXISTING
-    release_maintenance_lease(spark, sidx)
+    def band_rows():
+        return spark.read.parquet(resolve_data_dir(spark, sidx))
 
     # crashed PARTIAL append: only bands 0-2 of the batch landed
     partial = _simhash_band_rows(simhash64(batch)).filter(F.col("band") < 3)
     write_band_rows(partial, sidx, mode="append")
     # the retried append heals band 3 without duplicating bands 0-2
     write_simhash_index(spark, batch, sidx, mode="append")
-    per_doc = (
-        spark.read.parquet(sidx)
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("band").alias("bands"),
-        )
+    per_doc = band_rows().groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("band").alias("bands"),
     )
     bad = per_doc.filter((F.col("n") != 4) | (F.col("bands") != 4)).count()
     assert bad == 0, "every doc must hold exactly one row per band"
-    n_rows = spark.read.parquet(sidx).count()
+    n_rows = band_rows().count()
     write_simhash_index(spark, batch, sidx, mode="append")  # full retry
-    assert spark.read.parquet(sidx).count() == n_rows, (
+    assert band_rows().count() == n_rows, (
         "a retried append must not duplicate band rows"
     )
-
-
-def test_commit_time_fence_text_gate(spark, tmp_path_factory, monkeypatch):
-    """r11 (r10 verdict "What's missing" #3) — maintenance that runs
-    BETWEEN the gate's publish and its manifest write aborts the batch's
-    commit (generation fence) instead of certifying a publish the swap may
-    have deleted; the replayed batch converges to the crash-free state."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    import twitter_event_stream_spark.streaming.pipelines as pl
-    from twitter_event_stream_spark.fsio import (
-        MaintenanceLeaseHeld,
-        maintenance_lease,
-        manifested_batch_ids,
-    )
-    from twitter_event_stream_spark.operators.corpus_full import (
-        write_simhash_index,
-    )
-
-    root = str(tmp_path_factory.mktemp("fence"))
-    sidx = f"{root}/simhash"
-    out = f"{root}/corpus"
-    seed = spark.createDataFrame(
-        [(1, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    write_simhash_index(spark, seed, sidx)
-    batch = spark.createDataFrame(
-        [(2, "an entirely different document about spark shuffles")],
-        "doc_id long, text string",
-    )
-
-    real_publish = pl._publish_atomic
-    fired = {"n": 0}
-
-    def publish_then_maintain(df, final_dir, partition_by=None):
-        real_publish(df, final_dir, partition_by)
-        if fired["n"] == 0 and final_dir.startswith(f"{out}/batch="):
-            fired["n"] = 1
-            # maintenance acquires, completes and releases mid-batch:
-            # no lease remains at fence time — only the counter moved
-            with maintenance_lease(df.sparkSession, sidx, "mid-batch-op"):
-                pass
-
-    monkeypatch.setattr(pl, "_publish_atomic", publish_then_maintain)
-    with pytest.raises(MaintenanceLeaseHeld, match="generation moved"):
-        pl.dedup_ingest_batch(sidx, out)(batch, 0)
-    # the aborted commit left no manifest, so readers see nothing of it
-    assert manifested_batch_ids(spark, out) == []
-
-    # replay (same batch id, maintenance window over) converges
-    monkeypatch.setattr(pl, "_publish_atomic", real_publish)
-    pl.dedup_ingest_batch(sidx, out)(batch, 0)
-    assert manifested_batch_ids(spark, out) == [0]
-    got = pl.read_ingested(spark, out)
-    assert got.count() == 1 and got.filter(F.col("doc_id") == 2).count() == 1
-    # index holds doc 2's band rows exactly once (4 bands -> 4 rows)
-    idx_rows = spark.read.parquet(sidx).filter(F.col("doc_id") == 2)
-    assert idx_rows.count() == 4
-
-
-def test_commit_time_fence_vector_ingest(spark, sf_dir, tmp_path_factory, monkeypatch):
-    """r11 — the vector twin: maintenance completing between the spill
-    publish and the manifest aborts the commit; the replay converges with
-    no duplicate vectors visible to probes."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    import twitter_event_stream_spark.streaming.pipelines as pl
-    from twitter_event_stream_spark.fsio import (
-        MaintenanceLeaseHeld,
-        maintenance_lease,
-        manifested_batch_ids,
-    )
-    from twitter_event_stream_spark.operators.vector_search import (
-        read_ivf_cells,
-        write_ivf_index,
-    )
-    from twitter_event_stream_spark.tables import table
-
-    root = str(tmp_path_factory.mktemp("vfence"))
-    ivf = f"{root}/ivf"
-    e = table(spark, sf_dir, "embeddings")
-    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), ivf)
-    batch = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
-    n_batch = batch.count()
-    n_base = read_ivf_cells(spark, ivf).count()
-
-    real_publish = pl._publish_atomic
-    fired = {"n": 0}
-
-    def publish_then_maintain(df, final_dir, partition_by=None):
-        real_publish(df, final_dir, partition_by)
-        if fired["n"] == 0 and final_dir.startswith(f"{ivf}/ingest/batch="):
-            fired["n"] = 1
-            with maintenance_lease(df.sparkSession, ivf, "mid-batch-op"):
-                pass
-
-    monkeypatch.setattr(pl, "_publish_atomic", publish_then_maintain)
-    with pytest.raises(MaintenanceLeaseHeld, match="generation moved"):
-        pl.vector_ingest_batch(ivf)(batch, 0)
-    assert manifested_batch_ids(spark, f"{ivf}/ingest") == []
-    # unmanifested spill is invisible: probes still see only the base tree
-    assert read_ivf_cells(spark, ivf).count() == n_base
-
-    monkeypatch.setattr(pl, "_publish_atomic", real_publish)
-    pl.vector_ingest_batch(ivf)(batch, 0)
-    assert manifested_batch_ids(spark, f"{ivf}/ingest") == [0]
-    vis = read_ivf_cells(spark, ivf)
-    assert vis.count() == n_base + n_batch
-    assert vis.groupBy("vec_id").count().filter("count > 1").count() == 0
 
 
 def test_consolidate_manifests_rerun_preserves_committed_file(
@@ -2550,163 +2103,13 @@ def test_consolidate_manifests_rerun_preserves_committed_file(
     )
 
 
-def test_retention_passes_hold_the_lease(spark, tmp_path_factory):
-    """r11 — consolidate_manifests and compact_rejects are maintenance ops
-    and now run under the sink dir's lease: a held lease on the SINK
-    refuses them (serializing retention passes), while ingest handlers —
-    which check the INDEX path, not the sink — remain unblocked by
-    retention, as before."""
-    import os
-
-    import pytest
-
-    import twitter_event_stream_spark.streaming.pipelines as pl
-    from twitter_event_stream_spark.fsio import (
-        MaintenanceLeaseHeld,
-        acquire_maintenance_lease,
-        consolidate_manifests,
-        release_maintenance_lease,
-    )
-
-    root = str(tmp_path_factory.mktemp("retlease"))
-    out = f"{root}/sink"
-    for bid in range(4):
-        d = f"{out}/batch={bid}"
-        os.makedirs(d)
-        with open(f"{d}/part-0.parquet", "w") as f:
-            f.write("x")
-        pl._write_fs_manifest(spark, out, bid, d)
-
-    acquire_maintenance_lease(spark, out, owner="other-retention")
-    with pytest.raises(MaintenanceLeaseHeld, match="other-retention"):
-        consolidate_manifests(spark, out, keep_last=1)
-    with pytest.raises(MaintenanceLeaseHeld, match="other-retention"):
-        pl.compact_rejects(spark, out, keep_last=1)
-    release_maintenance_lease(spark, out)
-    rep = consolidate_manifests(spark, out, keep_last=1)
-    assert rep["folded"] == 3
-
-
-def test_pointer_layout_migration_and_streaming(spark, sf_dir, tmp_path_factory):
-    """r11 — the S3A-safe pointer-versioned layout end to end: a LEGACY
-    index is migrated in place by a `pointer_swap=True` compaction (same
-    rows, same verdicts, root path unchanged), streaming ingest keeps
-    composing with it (gate appends land in the current version), the
-    layout is forward-only, and the IVF twin migrates the same way with
-    absorb/rebuild staying pointer-published."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    import twitter_event_stream_spark.streaming.pipelines as pl
-    from twitter_event_stream_spark.fsio import resolve_data_dir
-    from twitter_event_stream_spark.operators.corpus_full import (
-        compact_band_rows,
-        dedup_against_index,
-        write_simhash_index,
-    )
-    from twitter_event_stream_spark.operators.vector_search import (
-        absorb_ingested,
-        compact_ivf_cells,
-        ivf_topk_indexed,
-        read_ivf_cells,
-        rebuild_ivf_index,
-        write_ivf_index,
-    )
-    from twitter_event_stream_spark.tables import table
-
-    root = str(tmp_path_factory.mktemp("ptrmig"))
-
-    # --- text index: legacy build + one gate batch, then migrate ---
-    sidx = f"{root}/simhash"
-    out = f"{root}/corpus"
-    d = table(spark, sf_dir, "documents")
-    write_simhash_index(spark, d.filter(F.col("doc_id") % 3 == 0), sidx)
-    probe = d.filter(F.col("doc_id") % 3 == 1).limit(100)
-    before = sorted(
-        map(tuple, dedup_against_index(spark, probe, sidx).collect())
-    )
-    assert resolve_data_dir(spark, sidx) == sidx  # legacy resolves to root
-
-    rep = compact_band_rows(spark, sidx, pointer_swap=True)
-    assert rep["files_after"] == 4
-    cur = resolve_data_dir(spark, sidx)
-    assert cur != sidx and "/_v-" in cur
-    # legacy band dirs are gone from root level; only _-prefixed remain
-    assert not any(
-        n.startswith("band=") for n in os.listdir(sidx)
-    )
-    assert sorted(
-        map(tuple, dedup_against_index(spark, probe, sidx).collect())
-    ) == before
-
-    # gate batch against the MIGRATED index: appends land in the current
-    # version, replay protocol intact
-    batch = d.filter(F.col("doc_id") % 3 == 2).limit(50)
-    pl.dedup_ingest_batch(sidx, out)(batch, 0)
-    assert pl.read_ingested(spark, out).count() > 0
-    appended = (
-        spark.read.parquet(resolve_data_dir(spark, sidx))
-        .join(batch.select("doc_id"), "doc_id")
-        .count()
-    )
-    assert appended > 0  # survivors' band rows are in the live version
-
-    # a second compaction stays pointer-published (auto-detect) and the
-    # layout cannot be forced back
-    rep2 = compact_band_rows(spark, sidx)
-    assert resolve_data_dir(spark, sidx) != cur  # new version dir
-    assert rep2["files_after"] == 4
-    with pytest.raises(ValueError, match="pointer-versioned"):
-        compact_band_rows(spark, sidx, pointer_swap=False)
-
-    # --- IVF twin: legacy build -> migrate -> stream -> absorb -> rebuild ---
-    ivf = f"{root}/ivf"
-    e = table(spark, sf_dir, "embeddings")
-    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), ivf)
-    probes = e.filter(F.col("vec_id") < 20)
-    want = sorted(
-        map(tuple, ivf_topk_indexed(spark, ivf, probes, k=5).collect())
-    )
-    compact_ivf_cells(spark, ivf, pointer_swap=True)
-    vcur = resolve_data_dir(spark, ivf)
-    assert vcur != ivf and "/_v-" in vcur
-    assert not os.path.exists(f"{ivf}/cells")  # legacy tree cleaned
-    assert sorted(
-        map(tuple, ivf_topk_indexed(spark, ivf, probes, k=5).collect())
-    ) == want
-
-    vbatch = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
-    pl.vector_ingest_batch(ivf)(vbatch, 0)
-    n_all = e.filter(F.col("embedding").isNotNull()).count()
-    assert read_ivf_cells(spark, ivf).count() == n_all
-    rep3 = absorb_ingested(spark, ivf)
-    assert rep3["batches_absorbed"] == 1
-    assert read_ivf_cells(spark, ivf).count() == n_all
-
-    rep4 = rebuild_ivf_index(spark, ivf)  # auto-detects pointer layout
-    assert rep4["n_vectors"] == n_all
-    assert resolve_data_dir(spark, ivf) != vcur
-    # bit-identity with a fresh legacy build over the same visible set
-    fresh = f"{root}/fresh"
-    write_ivf_index(spark, e, fresh)
-    got = sorted(
-        map(tuple, ivf_topk_indexed(spark, ivf, probes, k=5).collect())
-    )
-    assert got == sorted(
-        map(tuple, ivf_topk_indexed(spark, fresh, probes, k=5).collect())
-    )
-    with pytest.raises(ValueError, match="pointer-versioned"):
-        rebuild_ivf_index(spark, ivf, pointer_swap=False)
-
-
 def test_index_overwrite_autodetects_pointer_layout(
     spark, sf_dir, tmp_path_factory
 ):
     """r11 — a full rebuild (`write_*_index(mode="overwrite")`) over an
-    existing pointer-versioned index must publish a fresh VERSION, not
-    write data to the legacy root position that resolving readers no
-    longer look at; forcing `pointer=False` onto a pointer layout raises."""
+    existing index publishes a fresh VERSION and never writes data at the
+    root position; `pointer=False`, which asked for the removed
+    rename-swap layout, raises."""
     import os
 
     from pyspark.sql import functions as F
@@ -2731,7 +2134,7 @@ def test_index_overwrite_autodetects_pointer_layout(
                         pointer=True)
     v1 = resolve_data_dir(spark, sidx)
     assert "/_v-" in v1
-    # overwrite with DIFFERENT content, no flags: auto-publishes a version
+    # overwrite with DIFFERENT content, no flags: publishes a version
     write_simhash_index(spark, d.filter(F.col("doc_id") % 2 == 1), sidx)
     v2 = resolve_data_dir(spark, sidx)
     assert "/_v-" in v2 and v2 != v1
@@ -2782,7 +2185,7 @@ def test_pointer_swap_retains_previous_version(spark, tmp_path_factory):
 
     path = str(tmp_path_factory.mktemp("grace")) + "/idx"
     d = table(spark, "/root/testdata/sf0.001", "documents")
-    write_simhash_index(spark, d.limit(50), path, pointer=True)
+    write_simhash_index(spark, d.limit(50), path)
 
     def versions():
         return sorted(n for n in os.listdir(path) if n.startswith("_v-"))
@@ -2810,17 +2213,17 @@ def test_pointer_swap_retains_previous_version(spark, tmp_path_factory):
 
 
 def test_resolve_data_dir_strict_errors(spark, tmp_path_factory):
-    """r11 — resolve falls back to the legacy interpretation ONLY for a
-    genuinely missing root; a root that HAS pointers but whose newest is
-    unreadable raises instead of silently misdirecting reads and appends
-    to the root position (which the next swap's cleanup would delete)."""
+    """r11 — resolve returns the root itself ONLY for a genuinely missing
+    root (nothing published yet); a root that HAS pointers but whose
+    newest is unreadable raises instead of silently misdirecting reads and
+    appends to the root position."""
     import os
 
     from twitter_event_stream_spark.fsio import resolve_data_dir
 
     root = str(tmp_path_factory.mktemp("strict"))
     missing = f"{root}/never-created"
-    assert resolve_data_dir(spark, missing) == missing  # legacy fallback
+    assert resolve_data_dir(spark, missing) == missing  # nothing published
 
     broken = f"{root}/broken"
     os.makedirs(broken)
@@ -2852,8 +2255,7 @@ def test_probe_snapshot_coherence_across_rebuild(
     e = table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), ivf,
-                    pointer=True)
+    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), ivf)
     probes = e.filter(F.col("vec_id") < 20)
     want_old = sorted(
         map(tuple, ivf_topk_indexed(spark, ivf, probes, k=5).collect())
@@ -2875,174 +2277,6 @@ def test_probe_snapshot_coherence_across_rebuild(
     )
     assert any(r[1] % 2 == 1 for r in fresh)  # rebuilt index: odd cands
     assert fresh != want_old
-
-
-def test_heartbeat_fallback_on_noop_settimes(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r12 (r11 verdict "What's missing" #1) — on stores where
-    FileSystem.setTimes is a documented no-op (S3A: mtime is PUT time),
-    the heartbeat VERIFIES each beat and falls back to rewriting the
-    lease payload, so a live holder past its TTL still never looks stale
-    — the break-a-live-holder cascade X127 closed on local FS stays
-    closed on object stores."""
-    import time
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    real_fs = fsio._fs
-
-    class _NoSetTimes:
-        def __init__(self, real):
-            self._real = real
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-        def setTimes(self, p, mtime, atime):
-            return None  # S3A shape: silently does nothing
-
-    def shim(spark_, path):
-        fs, hpath = real_fs(spark_, path)
-        return _NoSetTimes(fs), hpath
-
-    monkeypatch.setattr(fsio, "_fs", shim)
-
-    idx = f"{tmp_path_factory.mktemp('noop-st')}/index"
-    with fsio.maintenance_lease(
-        spark, idx, owner="long-run", ttl_sec=2
-    ) as status:
-        time.sleep(3.2)  # past TTL: only the rewrite fallback keeps it live
-        with pytest.raises(fsio.MaintenanceLeaseHeld, match="long-run"):
-            fsio.acquire_maintenance_lease(
-                spark, idx, owner="usurper", ttl_sec=2
-            )
-        info = fsio.read_maintenance_lease(spark, idx)
-        assert info["owner"] == "long-run"
-        assert "heartbeat_unix_ms" in info, (
-            "the payload-rewrite fallback must have run (setTimes is inert)"
-        )
-        assert status["heartbeat_failures"] == 0
-    assert fsio.read_maintenance_lease(spark, idx) is None
-
-
-def test_heartbeat_failures_surfaced(spark, tmp_path_factory, caplog):
-    """r12 — a heartbeat that cannot keep the lease fresh (here: the lease
-    was broken externally mid-hold) is COUNTED and logged instead of
-    swallowed; the scope still exits cleanly (the generation fence is
-    what protects correctness)."""
-    import logging
-    import time
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('hb-fail')}/index"
-    with caplog.at_level(
-        logging.WARNING, logger="twitter_event_stream_spark.fsio"
-    ):
-        with fsio.maintenance_lease(
-            spark, idx, owner="op", ttl_sec=1
-        ) as status:
-            # an operator force-deletes the lease (tokenless release is
-            # the unconditional override form)
-            fsio.release_maintenance_lease(spark, idx)
-            # poll with a deadline instead of a fixed sleep: beats fire
-            # every ttl/4 = 0.25s on an idle host, but a loaded suite
-            # run can starve the daemon thread past any fixed budget
-            deadline = time.time() + 30
-            while (
-                status["heartbeat_failures"] < 3 and time.time() < deadline
-            ):
-                time.sleep(0.1)
-            assert status["heartbeat_failures"] >= 3
-            assert status["heartbeat_failures_total"] >= 3
-    assert "heartbeat" in caplog.text
-    assert fsio.read_maintenance_lease(spark, idx) is None
-
-
-def test_release_owner_checked(spark, tmp_path_factory):
-    """r12 — release with the acquire token is owner-checked: a holder
-    whose lease was legitimately broken as stale cannot delete the
-    successor's lease at its own exit; tokenless release stays the
-    unconditional operator override."""
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('ownrel')}/index"
-    token_a = fsio.acquire_maintenance_lease(
-        spark, idx, owner="a", ttl_sec=1
-    )
-    assert token_a["lease_id"]
-    _age_lease(idx)  # a's lease is stale (simulated crash, no heartbeat)
-    token_b = fsio.acquire_maintenance_lease(
-        spark, idx, owner="b", ttl_sec=60
-    )  # breaks the stale lease and takes over
-    assert fsio.read_maintenance_lease(spark, idx)["owner"] == "b"
-
-    # a's (late) exit must NOT delete b's lease
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=token_a["lease_id"])
-        is False
-    )
-    assert fsio.read_maintenance_lease(spark, idx)["owner"] == "b"
-
-    # b's own release works; re-release on an absent lease is a no-op
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=token_b["lease_id"])
-        is True
-    )
-    assert fsio.read_maintenance_lease(spark, idx) is None
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=token_a["lease_id"])
-        is True
-    )
-
-
-def test_release_displacement_verified(spark, tmp_path_factory, monkeypatch):
-    """r12 — release's owner check is displace-verify-delete, not
-    read-then-delete: a break+retake landing BETWEEN the matching owner
-    read and the delete must not hand the delete the successor's lease.
-    Simulated by pinning the read to the old holder's payload (the race's
-    timeline: the read matched OURS, then the break+retake landed) while
-    the on-disk lease already belongs to the successor — the displacement
-    rename grabs the successor's lease, the re-verify catches the id
-    mismatch, and the no-clobber restore puts it back intact."""
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('disprel')}/index"
-    token_a = fsio.acquire_maintenance_lease(spark, idx, owner="a", ttl_sec=1)
-    _age_lease(idx)
-    token_b = fsio.acquire_maintenance_lease(spark, idx, owner="b", ttl_sec=60)
-    assert token_b["lease_id"] != token_a["lease_id"]
-
-    stale_read = dict(token_a)  # what a's release read just before the race
-    stale_read["mtime_ms"] = 0
-    monkeypatch.setattr(
-        fsio, "read_maintenance_lease", lambda *_a, **_k: stale_read
-    )
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=token_a["lease_id"])
-        is False
-    )
-    monkeypatch.undo()
-
-    after = fsio.read_maintenance_lease(spark, idx)
-    assert after is not None, "successor's lease must survive the release"
-    assert after["lease_id"] == token_b["lease_id"]
-    assert after["owner"] == "b"
-    # no displacement tombs left behind
-    import glob
-
-    assert glob.glob(f"{idx}._maintenance.lock.rel-*") == []
-
-    # and the normal path still releases cleanly through the displacement
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=token_b["lease_id"])
-        is True
-    )
-    assert fsio.read_maintenance_lease(spark, idx) is None
-    assert glob.glob(f"{idx}._maintenance.lock.rel-*") == []
 
 
 def _stage_version(spark, root: str, tag: str) -> str:
@@ -3094,121 +2328,13 @@ def test_pointer_swap_retains_on_unreadable_prev(spark, tmp_path_factory):
     assert resolve_data_dir(spark, root) == v3
 
 
-def test_pointer_commit_no_clobber(spark, tmp_path_factory, monkeypatch):
-    """r12 (r11 ADVICE) — the pointer commit refuses to clobber: POSIX
-    rename(2) silently REPLACES an existing destination, so two lease-free
-    fresh builds racing to `_current-000000000` would both report success
-    with one silently orphaned. With the no-clobber commit the loser
-    detects the occupied sequence and renumbers: both builds publish,
-    the later one wins the live position, the earlier becomes the
-    grace-retained previous version."""
-    import json
-    import os
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = f"{tmp_path_factory.mktemp('ptr-race')}/idx"
-    v_race = _stage_version(spark, root, "race")
-    v_ours = _stage_version(spark, root, "ours")
-
-    # unit: the primitive itself refuses an occupied destination
-    fs, hpath = fsio._fs(spark, root)
-    a, b = f"{root}/_nc_src", f"{root}/_nc_dst"
-    with open(a, "w") as f:
-        f.write("src")
-    with open(b, "w") as f:
-        f.write("dst-original")
-    assert fsio._rename_no_clobber(spark, fs, hpath(a), hpath(b)) is False
-    assert open(b).read() == "dst-original", "no-clobber must not replace"
-    assert os.path.exists(a), "a refused move leaves the source intact"
-    os.remove(a)
-    os.remove(b)
-
-    # integration: a racing commit lands on OUR sequence between our
-    # listing and our rename — we must renumber, not clobber
-    real = fsio._rename_no_clobber
-    fired = {"n": 0}
-
-    def inject(spark_, fs_, src, dst, **kw):
-        if fired["n"] == 0 and dst.getName().startswith("_current-"):
-            fired["n"] = 1
-            with open(os.path.join(root, dst.getName()), "w") as f:
-                json.dump({"version": os.path.basename(v_race)}, f)
-        return real(spark_, fs_, src, dst, **kw)
-
-    monkeypatch.setattr(fsio, "_rename_no_clobber", inject)
-    fsio.pointer_swap_dir(spark, root, v_ours)
-
-    ptr0 = f"{root}/_current-000000000"
-    ptr1 = f"{root}/_current-000000001"
-    assert os.path.exists(ptr0) and os.path.exists(ptr1)
-    assert json.load(open(ptr0))["version"] == os.path.basename(v_race), (
-        "the racing build's committed pointer must survive untouched"
-    )
-    assert json.load(open(ptr1))["version"] == os.path.basename(v_ours)
-    assert fsio.resolve_data_dir(spark, root) == v_ours
-    assert os.path.isdir(v_race), (
-        "the out-raced build's version stays as the grace-retained previous"
-    )
-
-
-def test_remove_if_stale_restore_no_clobber(spark, tmp_path_factory):
-    """r12 (r11 ADVICE) — the stale-break restore branch must not clobber:
-    when a THIRD contender's fresh lease lands at the path inside the
-    displacement blip, the restore (no-clobber move) backs off and deletes
-    the displaced file instead of silently replacing the live holder's
-    lease — two processes can no longer both believe they hold it."""
-    import glob
-
-    from twitter_event_stream_spark.fsio import _fs, _remove_if_stale
-
-    root = str(tmp_path_factory.mktemp("ris-nc"))
-    fs, hpath = _fs(spark, root)
-    p = f"{root}/victim"
-    with open(p, "w") as f:
-        f.write("original-fresh")
-
-    class _ShimFS:
-        """First stat lies 'ancient' (the contender validated a stale file
-        that was then replaced — so the rename grabs the FRESH original);
-        the second stat (tomb re-validation) injects the third contender's
-        lease landing at the just-cleared path."""
-
-        def __init__(self, real):
-            self._real = real
-            self._calls = 0
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-        def getFileStatus(self, jp):
-            self._calls += 1
-            if self._calls == 1:
-                class _Ancient:
-                    @staticmethod
-                    def getModificationTime():
-                        return 0
-
-                return _Ancient()
-            if self._calls == 2:
-                with open(p, "w") as f:
-                    f.write("third-contender")
-            return self._real.getFileStatus(jp)
-
-    assert _remove_if_stale(spark, _ShimFS(fs), hpath, p, 60_000) == "fresh"
-    assert open(p).read() == "third-contender", (
-        "the restore must not replace the third contender's fresh lease"
-    )
-    assert not glob.glob(f"{p}.stale-*"), "the displaced file is cleaned up"
-
-
 def test_write_band_rows_overwrite_refuses_pointer_root(
     spark, tmp_path_factory
 ):
-    """r12 (r11 ADVICE) — write_band_rows(mode='overwrite') on a
-    pointer-versioned index would rewrite the LIVE _v-* dir in place with
-    no lease and no staged swap; it raises and points at
-    write_simhash_index, while appends keep composing."""
+    """r12 (r11 ADVICE) — write_band_rows(mode='overwrite') on an existing
+    index would rewrite the LIVE _v-* dir in place with no staged swap; it
+    raises and points at write_simhash_index, while appends keep
+    composing and a missing index gets its first version published."""
     from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.corpus_full import (
         _simhash_band_rows,
@@ -3223,7 +2349,7 @@ def test_write_band_rows_overwrite_refuses_pointer_root(
         [(1, "the quick brown fox jumps over the lazy dog")],
         "doc_id long, text string",
     )
-    write_simhash_index(spark, docs, sidx, pointer=True)
+    write_simhash_index(spark, docs, sidx)
     assert resolve_data_dir(spark, sidx) != sidx
 
     more = spark.createDataFrame(
@@ -3240,11 +2366,11 @@ def test_write_band_rows_overwrite_refuses_pointer_root(
         .count()
         == 4
     )
-    # the LEGACY layout keeps its overwrite path (write_simhash_index's
-    # own legacy publish goes through it)
-    legacy = f"{root}/legacy"
-    write_band_rows(rows, legacy, mode="overwrite")
-    assert spark.read.parquet(legacy).count() == 4
+    # no index yet: the overwrite publishes the rows as the first version
+    fresh = f"{root}/fresh"
+    write_band_rows(rows, fresh, mode="overwrite")
+    assert resolve_data_dir(spark, fresh) != fresh
+    assert spark.read.parquet(resolve_data_dir(spark, fresh)).count() == 4
 
 
 def test_simhash_append_raises_on_unreadable_index(spark, tmp_path_factory):
@@ -3279,895 +2405,11 @@ def test_simhash_append_raises_on_unreadable_index(spark, tmp_path_factory):
         write_simhash_index(spark, batch, sidx, mode="append")
 
     # a genuinely MISSING index still bootstraps via append
+    from twitter_event_stream_spark.fsio import resolve_data_dir
+
     fresh = f"{root}/fresh"
     write_simhash_index(spark, batch, fresh, mode="append")
-    assert spark.read.parquet(fresh).count() == 4
-
-
-def test_heartbeat_is_ownership_probe(spark, tmp_path_factory):
-    """r12 — a holder whose lease was broken and RE-TAKEN (stall past TTL:
-    GC pause, suspended VM) must not keep refreshing the SUCCESSOR's
-    lease mtime and believe itself covered: each beat reads the payload
-    first, a lease_id mismatch counts as a failure without touching
-    anything, and the holder's exit leaves the successor's lease intact."""
-    import time
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('hb-own')}/index"
-    with fsio.maintenance_lease(
-        spark, idx, owner="stalled", ttl_sec=1
-    ) as status:
-        # simulate the break+retake while the original holder still runs
-        fsio.release_maintenance_lease(spark, idx)  # operator override
-        succ = fsio.acquire_maintenance_lease(
-            spark, idx, owner="successor", ttl_sec=60
-        )
-        mt0 = fsio.read_maintenance_lease(spark, idx)["mtime_ms"]
-        time.sleep(0.8)  # >= 3 beats at ttl/4 = 0.25s
-        info = fsio.read_maintenance_lease(spark, idx)
-        assert info["owner"] == "successor"
-        assert info["lease_id"] == succ["lease_id"]
-        assert info["mtime_ms"] == mt0, (
-            "the stalled holder's beats must not refresh the successor's "
-            "staleness clock"
-        )
-        assert "heartbeat_unix_ms" not in info, (
-            "the rewrite fallback must never run on a successor's lease"
-        )
-        assert status["heartbeat_failures"] >= 2
-    # the stalled holder's exit (owner-checked release) left it intact
-    assert fsio.read_maintenance_lease(spark, idx)["owner"] == "successor"
-    fsio.release_maintenance_lease(spark, idx, lease_id=succ["lease_id"])
-    assert fsio.read_maintenance_lease(spark, idx) is None
-
-
-class _InertSetTimesFS:
-    """S3A shape: setTimes silently does nothing (mtime is PUT time)."""
-
-    def __init__(self, real):
-        self._real = real
-
-    def __getattr__(self, name):
-        return getattr(self._real, name)
-
-    def setTimes(self, p, mtime, atime):
-        return None
-
-
-def _shim_inert_settimes(fsio, monkeypatch):
-    real_fs = fsio._fs
-
-    def shim(spark_, path):
-        fs, hpath = real_fs(spark_, path)
-        return _InertSetTimesFS(fs), hpath
-
-    monkeypatch.setattr(fsio, "_fs", shim)
-
-
-def test_restore_displaced_never_deletes_on_thrown_restore(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r12 — the shared restore discipline: a restore that merely THROWS
-    (transient IO, no third contender) must NOT delete the displaced
-    payload; the tomb is retried once and then left in place. Deleting it
-    would permanently destroy the successor's lease on an unrelated IO
-    error."""
-    import os
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = str(tmp_path_factory.mktemp("resdisp"))
-    fs, hpath = fsio._fs(spark, root)
-    src, tomb = f"{root}/lease", f"{root}/lease.rel-x"
-    with open(tomb, "w") as f:
-        f.write("successor-payload")
-
-    calls = {"n": 0}
-
-    def boom(*a, **k):
-        calls["n"] += 1
-        raise IOError("degraded store")
-
-    monkeypatch.setattr(fsio, "_rename_no_clobber", boom)
-    assert (
-        fsio._restore_displaced(spark, fs, hpath(tomb), hpath(src)) is False
-    )
-    assert calls["n"] == 2, "the restore is retried once before giving up"
-    assert os.path.exists(tomb), (
-        "a thrown restore must leave the tomb in place, never delete it"
-    )
-    monkeypatch.undo()
-
-    # re-occupied target: tomb deleted, occupant intact (the residual)
-    with open(src, "w") as f:
-        f.write("third-contender")
-    assert (
-        fsio._restore_displaced(spark, fs, hpath(tomb), hpath(src)) is False
-    )
-    assert not os.path.exists(tomb)
-    assert open(src).read() == "third-contender"
-
-    # clear path: restored
-    tomb2 = f"{root}/lease.rel-y"
-    os.remove(src)
-    with open(tomb2, "w") as f:
-        f.write("mine")
-    assert fsio._restore_displaced(spark, fs, hpath(tomb2), hpath(src)) is True
-    assert open(src).read() == "mine"
-
-
-def test_touch_lease_aborts_on_stop(spark, tmp_path_factory, monkeypatch):
-    """r12 — a rewrite beat that observes the scope's stop signal must not
-    land (pre-PUT check), and one that lands AFTER the signal deletes its
-    own write (post-PUT check) — a beat stalled past the exit join can no
-    longer resurrect the lease release just deleted, wedging the index
-    until TTL."""
-    import os
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('hb-stop')}/index"
-    lp = fsio._lease_path(idx)
-    _shim_inert_settimes(fsio, monkeypatch)
-
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="op", ttl_sec=60)
-    # age the lease far past the rewrite grace so the fallback must fire
-    os.utime(lp, (0, 0))
-
-    # pre-PUT abort: stop already set -> no write, beat reports failure
-    before = open(lp).read()
-    assert (
-        fsio._touch_lease(
-            spark, idx, token["lease_id"], token=token,
-            should_abort=lambda: True,
-        )
-        is False
-    )
-    assert open(lp).read() == before, "aborted beat must not touch the lease"
-
-    # post-PUT abort: the stop lands while the PUT is in flight -> the
-    # beat deletes its own late write instead of resurrecting the lease
-    os.utime(lp, (0, 0))
-    flips = {"n": 0}
-
-    def stop_after_first_check():
-        flips["n"] += 1
-        return flips["n"] > 1  # False at the pre-PUT check, True after
-
-    assert (
-        fsio._touch_lease(
-            spark, idx, token["lease_id"], token=token,
-            should_abort=stop_after_first_check,
-        )
-        is False
-    )
-    assert not os.path.exists(lp), (
-        "a late-landing rewrite must delete its own write"
-    )
-
-    # ...but the undo is owner-VERIFIED: a successor acquiring between
-    # the late PUT and the post-PUT check must not have its lease
-    # deleted by the stalled beat's cleanup
-    import json
-
-    token2 = fsio.acquire_maintenance_lease(spark, idx, owner="op2",
-                                            ttl_sec=60)
-    os.utime(lp, (0, 0))
-    succ_payload = json.dumps({"owner": "succ", "ttl_sec": 60,
-                               "lease_id": "succ-id"})
-    calls = {"n": 0}
-
-    def abort_and_usurp():
-        calls["n"] += 1
-        if calls["n"] < 3:  # pre-PUT and pre-close checks pass clean
-            return False
-        # post-PUT check: the successor's lease landed after our PUT —
-        # written through the Hadoop FS API like a real acquire (a raw
-        # Python write would leave the local ChecksumFileSystem's CRC
-        # sibling stale and the payload unreadable through the API)
-        fs, hp = fsio._fs(spark, idx)
-        out = fs.create(hp(lp), True)
-        out.write(succ_payload.encode("utf-8"))
-        out.close()
-        return True
-
-    assert (
-        fsio._touch_lease(
-            spark, idx, token2["lease_id"], token=token2,
-            should_abort=abort_and_usurp,
-        )
-        is False
-    )
-    assert json.loads(open(lp).read())["lease_id"] == "succ-id", (
-        "the post-PUT undo must leave a successor's lease intact"
-    )
-    os.remove(lp)
-
-
-def test_touch_lease_refuses_unverifiable_payload(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r12 — per-beat ownership is STRICT: a payload whose lease_id is not
-    an exact match (here: an empty file — a truncated lease whose owner
-    cannot be verified) is never touched and never "healed as ours". A
-    lenient heal would let a stale-broken holder resurrect its own lease
-    over a SUCCESSOR's truncated one; strictness fails toward losing our
-    own lease, which decays via TTL and is re-broken — the safe
-    direction. (On the stores where rewrites actually fire — object
-    stores — truncation is a non-event anyway: the rewrite is one PUT
-    that lands whole or not at all.)"""
-    import os
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('hb-strict')}/index"
-    lp = fsio._lease_path(idx)
-    _shim_inert_settimes(fsio, monkeypatch)
-
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="op", ttl_sec=60)
-    open(lp, "w").close()  # crashed rewrite: lease truncated to empty
-    os.utime(lp, (0, 0))  # and old enough that a rewrite WOULD fire
-
-    assert (
-        fsio._touch_lease(spark, idx, token["lease_id"], token=token) is False
-    )
-    assert open(lp).read() == "", (
-        "an unverifiable payload must never be touched, let alone healed"
-    )
-    # the decayed file is breakable (mtime-old), so the index self-frees
-    succ = fsio.acquire_maintenance_lease(spark, idx, owner="next", ttl_sec=60)
-    assert fsio.read_maintenance_lease(spark, idx)["owner"] == "next"
-    fsio.release_maintenance_lease(spark, idx, lease_id=succ["lease_id"])
-
-
-def test_zero_byte_lease_is_unreadable_not_a_holder(
-    spark, tmp_path_factory
-):
-    """r14 (caught live by the r14 record run's unit gate, ~1-in-many
-    flake): a ZERO-BYTE lease file is an UNREADABLE shape — a
-    mid-rewrite truncation blip (local-FS rewrite is truncate-then-
-    write) or a crash remnant — not a readable ownerless holder. One
-    blip read must not decide: the old mapping to `{}` made a contender
-    racing a heartbeat rewrite report "held by ?" from a single read
-    instead of retrying into the completed rewrite. Fresh-empty refuses
-    acquires without breaking (a live holder may be mid-rewrite);
-    stale-empty decays via mtime exactly as before."""
-    import os
-
-    import pytest
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('zero-byte')}/index"
-    lp = fsio._lease_path(idx)
-    fsio.acquire_maintenance_lease(spark, idx, owner="op", ttl_sec=60)
-    open(lp, "w").close()  # truncated: blip or crash remnant
-
-    info, absent, mtime = fsio._read_lease_status(spark, idx)
-    assert info is None and absent is False and mtime is not None
-    assert fsio.read_maintenance_lease(spark, idx) is None
-
-    # fresh-empty: not a judgeable holder, not breakable — refused
-    with pytest.raises(fsio.MaintenanceLeaseHeld):
-        fsio.acquire_maintenance_lease(spark, idx, owner="b", ttl_sec=60)
-    assert os.path.exists(lp), "a fresh unreadable lease must survive"
-
-    # stale-empty: decays via mtime through the normal break
-    os.utime(lp, (0, 0))
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="b",
-                                           ttl_sec=60)
-    assert fsio.read_maintenance_lease(spark, idx)["owner"] == "b"
-    fsio.release_maintenance_lease(spark, idx, lease_id=token["lease_id"])
-
-
-def test_heartbeat_fallback_short_ttl(spark, tmp_path_factory, monkeypatch):
-    """r12 — the rewrite fallback's still-fresh grace is bounded by TTL/4,
-    not a flat second: with ttl_sec=1 on an inert-setTimes store the
-    holder must start rewriting well before a contender could judge the
-    lease stale — previously the first rewrite fired only at age > 1s =
-    TTL, leaving a window where a LIVE beating holder was breakable."""
-    import time
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    _shim_inert_settimes(fsio, monkeypatch)
-    idx = f"{tmp_path_factory.mktemp('hb-short')}/index"
-    with fsio.maintenance_lease(spark, idx, owner="short", ttl_sec=1) as st:
-        time.sleep(1.3)  # past TTL: only TTL/4-graced rewrites keep it live
-        # wait for a LANDED beat before probing (a loaded suite run can
-        # starve the daemon thread; the property under test is the grace
-        # arithmetic, not the host scheduler's latency)
-        deadline = time.time() + 30
-        while time.time() < deadline:
-            info = fsio.read_maintenance_lease(spark, idx)
-            if (
-                info is not None
-                and "heartbeat_unix_ms" in info
-                and time.time() * 1000 - info["mtime_ms"] < 700
-            ):
-                break
-            time.sleep(0.05)
-        with pytest.raises(fsio.MaintenanceLeaseHeld, match="short"):
-            fsio.acquire_maintenance_lease(spark, idx, owner="u", ttl_sec=1)
-        assert st["heartbeat_failures"] == 0
-        info = fsio.read_maintenance_lease(spark, idx)
-        assert info["owner"] == "short"
-        assert "heartbeat_unix_ms" in info, "the rewrite fallback must run"
-    assert fsio.read_maintenance_lease(spark, idx) is None
-
-
-def test_fresh_pointer_build_leased(spark, sf_dir, tmp_path_factory):
-    """r12 — fresh POINTER builds take the maintenance lease too: a
-    staged-but-uncommitted `_v-*` dir is visible to a racing swap's
-    cleanup sweep, so two lease-free fresh builds racing could publish a
-    dangling pointer; under the lease one publishes and the other fails
-    fast. Fresh LEGACY builds (plain write, no swap) stay lease-free."""
-    from pyspark.sql import functions as F
-
-    import twitter_event_stream_spark.fsio as fsio
-    from twitter_event_stream_spark.operators.corpus_full import (
-        write_simhash_index,
-    )
-    from twitter_event_stream_spark.operators.vector_search import (
-        write_ivf_index,
-    )
-    from twitter_event_stream_spark.tables import table
-
-    root = str(tmp_path_factory.mktemp("freshlease"))
-    docs = table(spark, sf_dir, "documents").limit(40)
-    vecs = table(spark, sf_dir, "embeddings").limit(40)
-
-    # under a held lease, a fresh pointer build refuses instead of staging
-    sidx = f"{root}/simhash"
-    tok = fsio.acquire_maintenance_lease(spark, sidx, owner="rival")
-    with pytest.raises(fsio.MaintenanceLeaseHeld, match="rival"):
-        write_simhash_index(spark, docs, sidx, pointer=True)
-    fsio.release_maintenance_lease(spark, sidx, lease_id=tok["lease_id"])
-
-    ivf = f"{root}/ivf"
-    tok = fsio.acquire_maintenance_lease(spark, ivf, owner="rival")
-    with pytest.raises(fsio.MaintenanceLeaseHeld, match="rival"):
-        write_ivf_index(spark, vecs, ivf, pointer=True)
-    fsio.release_maintenance_lease(spark, ivf, lease_id=tok["lease_id"])
-
-    # without a rival the fresh pointer builds succeed and release clean
-    write_simhash_index(spark, docs, sidx, pointer=True)
-    assert "/_v-" in fsio.resolve_data_dir(spark, sidx)
-    assert fsio.read_maintenance_lease(spark, sidx) is None
-    write_ivf_index(spark, vecs, ivf, pointer=True)
-    assert "/_v-" in fsio.resolve_data_dir(spark, ivf)
-    assert fsio.read_maintenance_lease(spark, ivf) is None
-
-    # fresh LEGACY builds never touch the lease even when one is held
-    lidx = f"{root}/legacy"
-    tok = fsio.acquire_maintenance_lease(spark, lidx, owner="rival")
-    write_simhash_index(spark, docs, lidx)  # lease-free by design
-    assert fsio.read_maintenance_lease(spark, lidx)["owner"] == "rival"
-    fsio.release_maintenance_lease(spark, lidx, lease_id=tok["lease_id"])
-
-
-def test_pointer_swap_detects_swept_stage(spark, tmp_path_factory, monkeypatch):
-    """r12 — pointer_swap_dir's post-commit detection net for OFF-LEASE
-    racers: when the staged dir was swept between the exists-check and
-    the pointer commit (a racing swap's cleanup), the swap retracts its
-    just-committed pointer and raises instead of leaving a dangling
-    pointer readers would 404 on."""
-    import shutil
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = f"{tmp_path_factory.mktemp('sweep')}/idx"
-    v1 = _stage_version(spark, root, "v1")
-    fsio.pointer_swap_dir(spark, root, v1)
-
-    v2 = _stage_version(spark, root, "v2")
-    real_move = fsio._rename_no_clobber
-
-    def sweep_then_move(spark_, fs, src, dst, **kw):
-        shutil.rmtree(v2, ignore_errors=True)  # the racer's cleanup lands
-        return real_move(spark_, fs, src, dst, **kw)
-
-    monkeypatch.setattr(fsio, "_rename_no_clobber", sweep_then_move)
-    with pytest.raises(IOError, match="swept"):
-        fsio.pointer_swap_dir(spark, root, v2)
-    monkeypatch.undo()
-
-    # the dangling pointer was retracted: readers still resolve v1
-    assert fsio.resolve_data_dir(spark, root) == v1
-
-
-def test_release_unreadable_paths(spark, tmp_path_factory, monkeypatch):
-    """r12 — release's two unreadable-degradation directions: (a) a lease
-    whose initial read transiently fails but which EXISTS falls through
-    to the displacement (whose tomb read succeeds) instead of returning
-    'already gone' and wedging the index until TTL; (b) a tomb that stays
-    unreadable after the retry is RESTORED, never deleted — it may be a
-    successor's live lease caught in the displacement blip."""
-    import glob
-    import os
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    # (a) transient initial-read failure, lease present and ours
-    idx = f"{tmp_path_factory.mktemp('rel-unread')}/index"
-    lp = fsio._lease_path(idx)
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="op", ttl_sec=60)
-    monkeypatch.setattr(fsio, "read_maintenance_lease", lambda *_a, **_k: None)
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=token["lease_id"])
-        is True
-    )
-    monkeypatch.undo()
-    assert not os.path.exists(lp), (
-        "a present lease with a transiently-failing read must still be "
-        "released through the displacement, not skipped"
-    )
-    assert glob.glob(f"{lp}.rel-*") == []
-
-    # (b) tomb unreadable after retry: restored in place, never deleted
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="op2",
-                                           ttl_sec=60)
-
-    def boom(*_a, **_k):
-        raise IOError("degraded read")
-
-    monkeypatch.setattr(fsio, "_read_json_file", boom)
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=token["lease_id"])
-        is False
-    )
-    monkeypatch.undo()
-    info = fsio.read_maintenance_lease(spark, idx)
-    assert info is not None and info["owner"] == "op2", (
-        "an unreadable tomb must be restored, never deleted"
-    )
-    assert glob.glob(f"{lp}.rel-*") == []
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=token["lease_id"])
-        is True
-    )
-
-
-def test_release_thrown_rename_is_not_success(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r13 ADVICE — a transiently-THROWN fs.rename during release's
-    displacement must not be mapped to 'lease vanished, all clear': the
-    still-present lease would then wedge the index until TTL behind a
-    silent True. After a thrown rename release re-checks presence (one
-    spaced retry) and (a) retries the displacement while the lease is
-    demonstrably present, (b) returns False — never True — when the
-    displacement keeps failing with the lease still there, and (c) still
-    returns True when the lease is genuinely gone."""
-    import glob
-    import os
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    class _FlakyRenameFS:
-        def __init__(self, real, fail_times):
-            self._real = real
-            self.fails_left = fail_times
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-        def rename(self, src, dst):
-            if ".rel-" in dst.getName() and self.fails_left > 0:
-                self.fails_left -= 1
-                raise IOError("transient store blip")
-            return self._real.rename(src, dst)
-
-    real_fs = fsio._fs
-
-    def shim(fail_times):
-        def _shim(spark_, path):
-            fs, hpath = real_fs(spark_, path)
-            return _FlakyRenameFS(fs, fail_times), hpath
-        return _shim
-
-    idx = f"{tmp_path_factory.mktemp('rel-flaky')}/index"
-    lp = fsio._lease_path(idx)
-
-    # (a) one thrown rename, lease present: the retry displaces and
-    # release completes normally
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="op", ttl_sec=60)
-    monkeypatch.setattr(fsio, "_fs", shim(fail_times=1))
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=token["lease_id"])
-        is True
-    )
-    monkeypatch.undo()
-    assert not os.path.exists(lp)
-    assert glob.glob(f"{lp}.rel-*") == []
-
-    # (b) rename keeps throwing, lease still present: False, lease intact
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="op2",
-                                           ttl_sec=60)
-    monkeypatch.setattr(fsio, "_fs", shim(fail_times=99))
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=token["lease_id"])
-        is False
-    ), "a failed displacement with the lease still present is NOT success"
-    monkeypatch.undo()
-    info = fsio.read_maintenance_lease(spark, idx)
-    assert info is not None and info["owner"] == "op2", (
-        "the lease must be left intact when its displacement keeps failing"
-    )
-
-    # (c) rename throws because the lease is genuinely GONE (broken
-    # externally between the read and the rename): True, nothing left
-    def rename_after_removing(spark_, path):
-        fs, hpath = real_fs(spark_, path)
-
-        class _GoneFS(_FlakyRenameFS):
-            def rename(self, src, dst):
-                if ".rel-" in dst.getName():
-                    if os.path.exists(lp):
-                        os.remove(lp)
-                    raise IOError("no such file")
-                return self._real.rename(src, dst)
-
-        return _GoneFS(fs, 0), hpath
-
-    # release (b) left the lease held by op2; reuse it for (c)
-    monkeypatch.setattr(fsio, "_fs", rename_after_removing)
-    assert (
-        fsio.release_maintenance_lease(spark, idx, lease_id=info["lease_id"])
-        is True
-    ), "a genuinely-absent lease after a thrown rename IS all-clear"
-    monkeypatch.undo()
-    assert not os.path.exists(lp)
-
-
-def test_stalled_beat_undo_leaves_unreadable_lease(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r13 ADVICE — the stalled-beat post-PUT undo deletes ONLY a payload
-    re-verified as OURS. A lease that is present but unreadable after the
-    spaced retries may be a successor's live lease that is only
-    transiently unreadable; deleting it would destroy the successor's
-    mutual exclusion. It is left in place instead (a genuinely
-    resurrected lease decays via its TTL — bounded wedge beats destroyed
-    exclusion), matching the never-delete-on-read-error discipline of
-    _restore_displaced and release."""
-    import os
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('hb-unread')}/index"
-    lp = fsio._lease_path(idx)
-    _shim_inert_settimes(fsio, monkeypatch)
-
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="op", ttl_sec=60)
-    os.utime(lp, (0, 0))  # age past the rewrite grace: fallback must fire
-
-    real_status = fsio._read_lease_status
-    calls = {"n": 0}
-
-    def status_real_then_unreadable(spark_, index_path):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            return real_status(spark_, index_path)  # the beat's ownership probe
-        # every undo-loop retry: present but unreadable (absent=False)
-        return None, False, 0
-
-    monkeypatch.setattr(
-        fsio, "_read_lease_status", status_real_then_unreadable
-    )
-    flips = {"n": 0}
-
-    def stop_after_first_check():
-        flips["n"] += 1
-        return flips["n"] > 1  # pre-PUT passes; post-PUT sees the stop
-
-    assert (
-        fsio._touch_lease(
-            spark, idx, token["lease_id"], token=token,
-            should_abort=stop_after_first_check,
-        )
-        is False
-    )
-    monkeypatch.undo()
-    assert os.path.exists(lp), (
-        "an unreadable-but-present lease must be LEFT by the post-PUT "
-        "undo — it may be a successor's transiently-unreadable live lease"
-    )
-    assert calls["n"] >= 4, "the undo must retry the read before deciding"
-    fsio.release_maintenance_lease(spark, idx, lease_id=token["lease_id"])
-
-
-def test_pointer_retract_failure_named_in_raise(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r13 ADVICE — when the swept-stage detection's pointer retraction
-    itself fails (delete throwing twice with the pointer still present),
-    the raised error must SAY the pointer is still live so operators know
-    readers resolving it may 404 — not swallow the failed retract in a
-    bare try/except-pass."""
-    import shutil
-
-    import pytest
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = f"{tmp_path_factory.mktemp('ptr-retract')}/index"
-    v1 = _stage_version(spark, root, "v1")
-    fsio.pointer_swap_dir(spark, root, v1)
-    v2 = _stage_version(spark, root, "v2")
-
-    class _NoDeletePointerFS:
-        """delete() throws for committed _current-* pointers only."""
-
-        def __init__(self, real):
-            self._real = real
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-        def delete(self, p, recursive=False):
-            if p.getName().startswith("_current-"):
-                raise IOError("transient delete failure")
-            return self._real.delete(p, recursive)
-
-    real_fs = fsio._fs
-
-    def shim(spark_, path):
-        fs, hpath = real_fs(spark_, path)
-        return _NoDeletePointerFS(fs), hpath
-
-    real_move = fsio._rename_no_clobber
-
-    def sweep_then_move(spark_, fs, src, dst, **kw):
-        shutil.rmtree(v2, ignore_errors=True)  # the racer's cleanup lands
-        return real_move(spark_, fs, src, dst, **kw)
-
-    monkeypatch.setattr(fsio, "_fs", shim)
-    monkeypatch.setattr(fsio, "_rename_no_clobber", sweep_then_move)
-    with pytest.raises(IOError, match="retraction FAILED"):
-        fsio.pointer_swap_dir(spark, root, v2)
-    monkeypatch.undo()
-
-
-class _CondPutStream:
-    """Object-store PUT-at-close shape: writes buffer locally and the
-    object lands ATOMICALLY at close(); exclusive streams carry
-    If-None-Match semantics (O_CREAT|O_EXCL at commit time) and surface a
-    lost race as a close-time 412, exactly how S3A's conditional create
-    behaves."""
-
-    def __init__(self, local_path: str, exclusive: bool):
-        self._path = local_path
-        self._exclusive = exclusive
-        self._buf = bytearray()
-
-    def write(self, b):
-        self._buf += bytes(b)
-
-    def close(self):
-        import os
-
-        if self._exclusive:
-            try:
-                fd = os.open(
-                    self._path, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                )
-            except FileExistsError:
-                raise IOError(
-                    "RemoteFileChangedException: PUT refused — 412 "
-                    "Precondition Failed (If-None-Match: *)"
-                )
-            with os.fdopen(fd, "wb") as f:
-                f.write(bytes(self._buf))
-        else:
-            with open(self._path, "wb") as f:
-                f.write(bytes(self._buf))
-
-    def abort(self):
-        raise IOError("UnsupportedOperationException: not abortable")
-
-
-class _ConditionalPutFS:
-    """S3A-with-conditional-writes shape (Hadoop >= 3.4.1): advertises the
-    capability via hasPathCapability and enforces create(overwrite=False)
-    with an If-None-Match PUT committing at close()."""
-
-    def __init__(self, real):
-        self._real = real
-
-    def __getattr__(self, name):
-        return getattr(self._real, name)
-
-    def getScheme(self):
-        return "s3a"
-
-    def hasPathCapability(self, p, cap):
-        return cap == "fs.s3a.create.conditional.enabled"
-
-    def create(self, p, overwrite=True):
-        return _CondPutStream(p.toUri().getPath(), not overwrite)
-
-
-def _shim_conditional_put(fsio, monkeypatch):
-    real_fs = fsio._fs
-
-    def shim(spark_, path):
-        fs, hpath = real_fs(spark_, path)
-        return _ConditionalPutFS(fs), hpath
-
-    monkeypatch.setattr(fsio, "_fs", shim)
-
-
-class _PlainObjectStoreFS:
-    """Copy-rename object store WITHOUT conditional creates — the store
-    shape where NEITHER break primitive exists (r14: the conditional
-    stub now earns the CAS break, so the refusal contract needs its own
-    stub)."""
-
-    def __init__(self, real):
-        self._real = real
-
-    def __getattr__(self, name):
-        return getattr(self._real, name)
-
-    def getScheme(self):
-        return "s3a"
-
-    def hasPathCapability(self, p, cap):
-        return False
-
-
-def _shim_plain_object_store(fsio, monkeypatch):
-    real_fs = fsio._fs
-
-    def shim(spark_, path):
-        fs, hpath = real_fs(spark_, path)
-        return _PlainObjectStoreFS(fs), hpath
-
-    monkeypatch.setattr(fsio, "_fs", shim)
-
-
-def test_supports_conditional_create_probe(spark, tmp_path_factory):
-    """r13 — the capability probe: False on a real local FS (no
-    conditional-create capability), False on a pre-3.3 FS without
-    hasPathCapability at all, True on a connector advertising the S3A
-    conditional-create flag."""
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = str(tmp_path_factory.mktemp("cap-probe"))
-    fs, hpath = fsio._fs(spark, root)
-    assert fsio._supports_conditional_create(fs, hpath(root)) is False
-
-    class _NoCapFS:
-        pass
-
-    assert (
-        fsio._supports_conditional_create(_NoCapFS(), hpath(root)) is False
-    )
-    assert (
-        fsio._supports_conditional_create(
-            _ConditionalPutFS(fs), hpath(root)
-        )
-        is True
-    )
-
-
-def test_conditional_create_acquire_race(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r13 (r12 verdict "What's missing" #2) — on a store advertising
-    conditional creates, the lease acquire is STORE-ENFORCED: the loser's
-    exclusive PUT conflicts at close() and is handled as 'held', and —
-    the critical part — the loser's cleanup never deletes the WINNER's
-    lease (nothing of the loser's ever landed, so the old
-    half-made-lease delete would destroy the winner's exclusion).
-    Stale-break still works through the close-conflict path."""
-    import json
-    import os
-
-    import pytest
-
-    import twitter_event_stream_spark.fsio as fsio
-    from twitter_event_stream_spark.fsio import MaintenanceLeaseHeld
-
-    idx = f"{tmp_path_factory.mktemp('cond-acq')}/index"
-    lp = fsio._lease_path(idx)
-    _shim_conditional_put(fsio, monkeypatch)
-
-    token_a = fsio.acquire_maintenance_lease(spark, idx, owner="a",
-                                             ttl_sec=60)
-    # the loser: open succeeds (PUT-at-close stores don't check at open),
-    # the conflict surfaces at close -> MaintenanceLeaseHeld naming the
-    # live holder
-    with pytest.raises(MaintenanceLeaseHeld, match="held by a"):
-        fsio.acquire_maintenance_lease(spark, idx, owner="b", ttl_sec=60)
-    assert os.path.exists(lp), (
-        "the loser's close-conflict handling must NOT delete the "
-        "winner's lease"
-    )
-    assert json.loads(open(lp).read())["lease_id"] == token_a["lease_id"]
-
-    # stale holder on a copy-rename store: the rename-based break stays
-    # structurally impossible (the copy resets the tomb's mtime so the
-    # re-validation always reads 'fresh'), but a conditional-create
-    # store gets the CAS break instead (r14, r13 verdict #3): the
-    # break-intent marker is a store-enforced If-None-Match PUT, the
-    # stale remnant is cleared mechanically, and the acquire succeeds
-    # without operator intervention
-    os.utime(lp, (0, 0))
-    token_c = fsio.acquire_maintenance_lease(spark, idx, owner="c",
-                                             ttl_sec=60)
-    assert not os.path.exists(
-        fsio._break_marker_path(idx)
-    ), "the CAS break must clean up its intent marker"
-    assert json.loads(open(lp).read())["owner"] == "c"
-    assert (
-        fsio.release_maintenance_lease(spark, idx,
-                                       lease_id=token_c["lease_id"])
-        is True
-    )
-    assert not os.path.exists(lp)
-
-
-def test_conditional_pointer_commit_race(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r13 — on a conditional-create store the pointer commit routes
-    through an If-None-Match PUT instead of exists-check + rename: a
-    racing commit's pointer survives intact (the store refuses the
-    occupied sequence) and the loser renumbers, exactly the no-clobber
-    contract, now store-enforced."""
-    import json
-    import os
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = f"{tmp_path_factory.mktemp('cond-ptr')}/index"
-    v1 = _stage_version(spark, root, "v1")
-    _shim_conditional_put(fsio, monkeypatch)
-
-    fsio.pointer_swap_dir(spark, root, v1)
-    assert fsio.resolve_data_dir(spark, root) == v1
-
-    # staged AFTER the v1 commit — a swap's cleanup sweeps unreferenced
-    # _v-* siblings, so real flows stage under the lease, post-swap
-    v2 = _stage_version(spark, root, "v2")
-    v3 = _stage_version(spark, root, "v3")
-
-    # a racer committed the next sequence concurrently (written raw —
-    # object-store PUT shape, no CRC sibling)
-    racer = f"{root}/_current-000000002"
-    with open(racer, "w") as f:
-        f.write(json.dumps({"version": v2.rsplit("/", 1)[1]}))
-
-    fsio.pointer_swap_dir(spark, root, v3)
-    assert fsio.resolve_data_dir(spark, root) == v3, (
-        "the loser must renumber past the racer's sequence"
-    )
-    assert json.loads(open(racer).read())["version"] == v2.rsplit(
-        "/", 1
-    )[1], "the racer's pointer must survive the conditional commit intact"
-    leftovers = [n for n in os.listdir(root) if ".tmp-" in n]
-    assert leftovers == [], f"tmp pointer files left behind: {leftovers}"
-
-    # direct no-clobber unit under the stub: win then lose
-    fs, hpath = fsio._fs(spark, root)
-    src = f"{root}/move-src"
-    with open(src, "w") as f:
-        f.write("payload")
-    dst = f"{root}/move-dst"
-    assert fsio._rename_no_clobber(
-        spark, fs, hpath(src), hpath(dst)
-    ) is True
-    assert open(dst).read() == "payload" and not os.path.exists(src)
-    with open(src, "w") as f:
-        f.write("late")
-    assert fsio._rename_no_clobber(
-        spark, fs, hpath(src), hpath(dst)
-    ) is False
-    assert open(dst).read() == "payload", "occupied dst must be untouched"
-    assert os.path.exists(src), "a refused move must leave src intact"
+    assert spark.read.parquet(resolve_data_dir(spark, fresh)).count() == 4
 
 
 def test_partitioned_version_dir_read_is_correct_despite_warning(
@@ -4205,698 +2447,3 @@ def test_partitioned_version_dir_read_is_correct_despite_warning(
     os.makedirs(empty)
     with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
         spark.read.parquet(empty).count()
-
-
-def test_store_capabilities_descriptor(spark, tmp_path_factory):
-    """r14 (r13 verdict #4) — ONE resolution point for per-store
-    atomicity: probe-first (hasPathCapability) for conditional creates,
-    scheme-allowlist fallback for rename-mtime preservation, every field
-    failing CLOSED on an undeterminable store. The legacy predicates are
-    thin views over the descriptor, so the existing race tests pin the
-    same answers."""
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = str(tmp_path_factory.mktemp("caps"))
-    fs, hpath = fsio._fs(spark, root)
-
-    local = fsio.store_capabilities(fs, hpath(root))
-    assert local.scheme == "file"
-    assert local.conditional_create is False
-    assert local.mtime_preserving_rename is True
-
-    cond = fsio.store_capabilities(_ConditionalPutFS(fs), hpath(root))
-    assert cond.scheme == "s3a"
-    assert cond.conditional_create is True
-    assert cond.mtime_preserving_rename is False
-
-    class _ThrowingSchemeFS:
-        def getScheme(self):
-            raise IOError("degraded")
-
-    broken = fsio.store_capabilities(_ThrowingSchemeFS(), hpath(root))
-    assert broken.conditional_create is False
-    assert broken.mtime_preserving_rename is False
-
-    # the thin views agree with the descriptor (single source of truth)
-    assert fsio._supports_conditional_create(fs, hpath(root)) is False
-    assert fsio._displacement_supported(fs) is True
-    assert fsio._displacement_supported(_ConditionalPutFS(fs)) is False
-
-
-def test_conditional_cas_break_single_winner(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r14 (r13 verdict #3) — on a copy-rename store WITH conditional
-    creates, N contenders that all observe the same stale lease resolve
-    to exactly ONE acquirer: the break-intent marker is a store-enforced
-    If-None-Match PUT (one elected breaker), the lease delete is
-    identity-guarded by the judged mtime, and the subsequent exclusive
-    create elects one creator. No tombs, no markers, no operator
-    override left behind."""
-    import json
-    import os
-    import threading
-
-    import twitter_event_stream_spark.fsio as fsio
-    from twitter_event_stream_spark.fsio import MaintenanceLeaseHeld
-
-    _shim_conditional_put(fsio, monkeypatch)
-    root = str(tmp_path_factory.mktemp("cas-race"))
-    for rnd in range(3):
-        idx = f"{root}/index-{rnd}"
-        fsio.acquire_maintenance_lease(spark, idx, owner="crashed",
-                                       ttl_sec=1)
-        lp = fsio._lease_path(idx)
-        os.utime(lp, (0, 0))  # everyone sees it stale
-
-        results: list[str] = []
-        lock = threading.Lock()
-        barrier = threading.Barrier(8)
-
-        def contend(i: int) -> None:
-            barrier.wait()
-            try:
-                fsio.acquire_maintenance_lease(
-                    spark, idx, owner=f"t{i}", ttl_sec=60
-                )
-                with lock:
-                    results.append(f"t{i}")
-            except MaintenanceLeaseHeld:
-                pass
-
-        threads = [
-            threading.Thread(target=contend, args=(i,)) for i in range(8)
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=30)
-        assert len(results) == 1, (
-            f"round {rnd}: expected one winner, got {results}"
-        )
-        assert json.loads(open(lp).read())["owner"] == results[0]
-        assert not os.path.exists(fsio._break_marker_path(idx)), (
-            "break-intent marker must not outlive the break"
-        )
-        leftovers = [
-            n for n in os.listdir(root) if ".stale-" in n or ".break" in n
-        ]
-        assert leftovers == [], f"break leftovers: {leftovers}"
-        fsio.release_maintenance_lease(spark, idx)
-
-
-def test_conditional_cas_break_refuses_retaken_lease(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r14 — the CAS break re-validates under its marker: a FRESH lease
-    (a successor re-took the path, or the judged remnant was replaced)
-    is never deleted — the break raises Held and leaves both the lease
-    and no marker behind."""
-    import json
-    import os
-
-    import pytest
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    _shim_conditional_put(fsio, monkeypatch)
-    idx = f"{tmp_path_factory.mktemp('cas-fresh')}/index"
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="live",
-                                           ttl_sec=60)
-    lp = fsio._lease_path(idx)
-    fs, hpath = fsio._fs(spark, idx)
-    with pytest.raises(fsio.MaintenanceLeaseHeld, match="re-taken"):
-        fsio._cas_break_stale_lease(spark, fs, hpath, idx, ttl_sec=60)
-    assert json.loads(open(lp).read())["lease_id"] == token["lease_id"], (
-        "a fresh lease must survive a misdirected break attempt"
-    )
-    assert not os.path.exists(fsio._break_marker_path(idx))
-    fsio.release_maintenance_lease(spark, idx, lease_id=token["lease_id"])
-
-
-def test_conditional_cas_break_decays_crashed_marker(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r14 — a breaker that crashed between winning its marker and
-    finishing leaves a marker remnant; the next breaker decays a marker
-    older than the budget, re-elects itself via the conditional create,
-    and completes the break (self-healing, no operator step)."""
-    import json
-    import os
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    _shim_conditional_put(fsio, monkeypatch)
-    idx = f"{tmp_path_factory.mktemp('cas-marker')}/index"
-    fsio.acquire_maintenance_lease(spark, idx, owner="crashed", ttl_sec=1)
-    lp = fsio._lease_path(idx)
-    os.utime(lp, (0, 0))
-    mp = fsio._break_marker_path(idx)
-    with open(mp, "w") as f:
-        f.write(json.dumps({"breaker": "dead", "judged_mtime_ms": 0}))
-    os.utime(mp, (0, 0))  # the crashed breaker's marker, ancient
-
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="b",
-                                           ttl_sec=60)
-    assert json.loads(open(lp).read())["owner"] == "b"
-    assert not os.path.exists(mp), "decayed marker must be cleaned up"
-    fsio.release_maintenance_lease(spark, idx, lease_id=token["lease_id"])
-
-
-def test_conditional_cas_break_fresh_marker_blocks(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r14 — a FRESH marker is a live breaker mid-clear: a second
-    contender must not delete it (its recreate would race the first
-    breaker's critical section) — it raises Held and leaves the marker
-    and the stale lease for the elected breaker."""
-    import json
-    import os
-
-    import pytest
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    _shim_conditional_put(fsio, monkeypatch)
-    idx = f"{tmp_path_factory.mktemp('cas-block')}/index"
-    fsio.acquire_maintenance_lease(spark, idx, owner="crashed", ttl_sec=1)
-    lp = fsio._lease_path(idx)
-    os.utime(lp, (0, 0))
-    mp = fsio._break_marker_path(idx)
-    with open(mp, "w") as f:
-        f.write(json.dumps({"breaker": "live-rival", "judged_mtime_ms": 0}))
-
-    with pytest.raises(
-        fsio.MaintenanceLeaseHeld, match="actively clearing"
-    ):
-        fsio.acquire_maintenance_lease(spark, idx, owner="b", ttl_sec=60)
-    assert os.path.exists(lp), "stale lease left for the elected breaker"
-    assert json.loads(open(mp).read())["breaker"] == "live-rival", (
-        "a fresh rival marker must survive intact"
-    )
-
-
-def test_conditional_cas_break_stalled_breaker_heartbeat(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r15 (r14 verdict #5) — the X136 stalled-breaker residual, bounded
-    mechanically: a breaker stalled INSIDE its critical section for
-    longer than the marker TTL keeps its break-intent marker alive via
-    the marker heartbeat (fsio._beat_break_marker), so a contender
-    arriving mid-stall is refused ("actively clearing") instead of
-    decaying the marker, electing itself, and exposing a successor's
-    fresh lease to the stalled breaker's late delete. The stalled
-    breaker then completes its break and wins the lease — single
-    winner, no marker left behind. (The dead-PROCESS case — heartbeat
-    gone, marker decays, takeover proceeds — stays pinned by
-    test_conditional_cas_break_decays_crashed_marker.)"""
-    import json
-    import os
-    import threading
-    import time
-
-    import pytest
-
-    import twitter_event_stream_spark.fsio as fsio
-    from twitter_event_stream_spark.fsio import MaintenanceLeaseHeld
-
-    _shim_conditional_put(fsio, monkeypatch)
-    idx = f"{tmp_path_factory.mktemp('cas-stall')}/index"
-    fsio.acquire_maintenance_lease(spark, idx, owner="crashed", ttl_sec=1)
-    lp = fsio._lease_path(idx)
-    os.utime(lp, (0, 0))  # the holder crashed: everyone judges it stale
-    mp = fsio._break_marker_path(idx)
-    fs, hpath = fsio._fs(spark, idx)
-
-    real_spaced = fsio._read_lease_spaced_status
-
-    def stalling_spaced(spark_, index_path, attempts=3):
-        # stall ONLY the breaker thread's under-marker re-read (the
-        # marker exists exactly during the critical section) — well past
-        # the 1s marker TTL, the residual's trigger condition
-        if (
-            threading.current_thread().name == "stalled-breaker"
-            and os.path.exists(mp)
-        ):
-            time.sleep(3.2)
-        return real_spaced(spark_, index_path, attempts)
-
-    monkeypatch.setattr(
-        fsio, "_read_lease_spaced_status", stalling_spaced
-    )
-
-    outcome: dict = {}
-
-    def breaker():
-        # the break driven directly at its own ttl (the acquire path
-        # hands the break its WIDENED budget — >= 1h markers — which is
-        # the right production posture but untestable in wall time;
-        # test_conditional_cas_break_single_winner covers that stack).
-        # ttl 2s with a 0.5s heartbeat interval: 4x headroom against a
-        # loaded host delaying a beat, while the 3.2s stall still
-        # outlives the TTL by a wide margin
-        try:
-            fsio._cas_break_stale_lease(spark, fs, hpath, idx, ttl_sec=2)
-            outcome["broke"] = True
-        except Exception as ex:
-            outcome["err"] = ex
-
-    t = threading.Thread(target=breaker, name="stalled-breaker")
-    t.start()
-    for _ in range(500):  # wait for the breaker to win its marker
-        if os.path.exists(mp):
-            break
-        time.sleep(0.01)
-    assert os.path.exists(mp), "breaker never created its intent marker"
-    t_marker = time.time()
-    # let the marker outlive its 2s TTL in WALL terms while the breaker
-    # stalls — without the heartbeat a contender would now decay it
-    time.sleep(2.4)
-    assert t.is_alive(), "breaker should still be mid-stall"
-    age_ms = time.time() * 1000 - os.path.getmtime(mp) * 1000
-    assert time.time() - t_marker > 2.0, "test bug: wall age not past TTL"
-    assert age_ms < 2000, (
-        f"heartbeat should keep the marker fresh; mtime {age_ms:.0f}ms old"
-    )
-    # the contender judges the same stale lease but must be REFUSED by
-    # the live (merely slow) breaker's fresh marker, never elected
-    with pytest.raises(MaintenanceLeaseHeld, match="actively clearing"):
-        fsio._cas_break_stale_lease(spark, fs, hpath, idx, ttl_sec=2)
-    t.join(timeout=30)
-    assert outcome.get("broke"), (
-        f"stalled breaker must complete its break: {outcome.get('err')}"
-    )
-    assert not os.path.exists(lp), "the stale remnant must be gone"
-    assert not os.path.exists(mp), "marker must not outlive the break"
-    # the path is clear: the next acquire wins cleanly
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="next",
-                                           ttl_sec=60)
-    assert json.loads(open(lp).read())["owner"] == "next"
-    fsio.release_maintenance_lease(spark, idx, lease_id=token["lease_id"])
-
-
-def test_cas_marker_decay_identity_guard(spark, tmp_path_factory):
-    """r15 (r14 ADVICE #1) — the crashed-marker decay re-reads the marker
-    immediately before its delete and refuses anything that is not the
-    very remnant it judged stale: a rival's fresh recreate (younger
-    mtime / different breaker id) survives intact; only the unchanged
-    remnant is decayed; an already-gone marker reports decayed (the
-    conditional-create retry arbitrates)."""
-    import json
-    import os
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = str(tmp_path_factory.mktemp("decay-guard"))
-    fs, hpath = fsio._fs(spark, root)
-    mp = os.path.join(root, "lease.break")
-    stale = {"breaker": "dead", "judged_mtime_ms": 0}
-    with open(mp, "w") as f:
-        f.write(json.dumps(stale))
-    os.utime(mp, (0, 0))
-    _i, _a, judged_mtime = fsio._read_small_json_status(fs, hpath(mp))
-
-    # a rival decayed the same remnant and conditionally RECREATED the
-    # marker between our judge and our delete: younger mtime, its own id
-    # — the guarded decay must refuse and leave it intact
-    os.remove(mp)
-    with open(mp, "w") as f:
-        f.write(json.dumps({"breaker": "rival", "judged_mtime_ms": 7}))
-    assert (
-        fsio._decay_stale_marker(fs, hpath(mp), judged_mtime, stale)
-        is False
-    )
-    assert json.loads(open(mp).read())["breaker"] == "rival", (
-        "a rival's fresh marker must survive the refused decay"
-    )
-
-    # the unchanged remnant itself: the decay fires and cleans it up
-    os.utime(mp, (0, 0))
-    info2, _a2, m2 = fsio._read_small_json_status(fs, hpath(mp))
-    assert fsio._decay_stale_marker(fs, hpath(mp), m2, info2) is True
-    assert not os.path.exists(mp)
-
-    # already gone (a rival decayed it first): retrying the conditional
-    # create is the correct move, so the helper reports decayed
-    assert fsio._decay_stale_marker(fs, hpath(mp), m2, info2) is True
-
-
-
-
-def test_cas_marker_heartbeat_survives_unreadable_blip(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r16 (r15 ADVICE #1) — the blip path of the marker heartbeat, pinned
-    so it cannot silently regress to permanent-exit-on-one-bad-read (the
-    bug commit a3b0bac fixed: an exit there drops the stall protection
-    for the rest of the break, the exact residual X141 closes): one beat
-    reads the marker present-but-unreadable (``info is None`` with
-    ``absent False`` — a store blip), the heartbeat must SKIP that beat
-    and still refresh the marker on the next one, and the payload must
-    stay ours throughout."""
-    import json
-    import os
-    import threading
-    import time
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = str(tmp_path_factory.mktemp("hb-blip"))
-    fs, hpath = fsio._fs(spark, root)
-    mp = os.path.join(root, "lease.break")
-    payload = json.dumps(
-        {"breaker": "me", "judged_mtime_ms": 0, "index": root},
-        sort_keys=True,
-    ).encode("utf-8")
-    with open(mp, "wb") as f:
-        f.write(payload)
-    os.utime(mp, (0, 0))  # aged to the epoch: any refresh is observable
-
-    real_read = fsio._read_small_json_status
-    blip = {"fired": False}
-
-    def blip_once(fs_, hp):
-        info, absent, mtime = real_read(fs_, hp)
-        if (
-            not blip["fired"]
-            and threading.current_thread().name == "hb-blip"
-        ):
-            blip["fired"] = True
-            return None, False, mtime  # present but unreadable THIS beat
-        return info, absent, mtime
-
-    monkeypatch.setattr(fsio, "_read_small_json_status", blip_once)
-    stop = threading.Event()
-    t = threading.Thread(
-        target=fsio._beat_break_marker,
-        args=(fs, hpath(mp), "me", payload, stop, 0.05),
-        name="hb-blip",
-        daemon=True,
-    )
-    t.start()
-    deadline = time.time() + 10.0
-    refreshed = False
-    while time.time() < deadline:
-        if blip["fired"] and os.path.getmtime(mp) > 1.0:
-            refreshed = True  # a post-blip beat moved the epoch mtime
-            break
-        time.sleep(0.02)
-    stop.set()
-    t.join(timeout=10)
-    assert not t.is_alive(), (
-        "heartbeat thread must exit promptly on stop (reading the "
-        "marker under a live writer would race the assertions below)"
-    )
-    assert blip["fired"], "test bug: the unreadable blip never injected"
-    assert refreshed, (
-        "a present-but-unreadable read must only skip ONE beat — the "
-        "next beat has to refresh the marker (permanent exit regression)"
-    )
-    assert json.loads(open(mp).read())["breaker"] == "me", (
-        "the surviving heartbeat must never replace the payload with "
-        "someone else's"
-    )
-
-
-@pytest.mark.parametrize("torn", [b"", b'{"brea'])
-def test_cas_marker_heartbeat_reclaims_torn_marker(
-    spark, tmp_path_factory, torn
-):
-    """r16 (review of the r15 ADVICE #4 leak fix) — a marker torn by a
-    failed rewrite (empty commit or truncated JSON) must not kill or
-    wedge the heartbeat: an empty-but-readable payload has no breaker id
-    and is NOT 'verifiably another breaker's' (exiting there dropped the
-    stall protection), and after two consecutive unreadable/breakerless
-    reads with an unchanged mtime the heartbeat RECLAIMS the marker by
-    rewriting its own payload — a live rival's marker can never look
-    like that (its beats advance the mtime; its payload reads whole)."""
-    import json
-    import os
-    import threading
-    import time
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = str(tmp_path_factory.mktemp("hb-torn"))
-    fs, hpath = fsio._fs(spark, root)
-    mp = os.path.join(root, "lease.break")
-    payload = json.dumps(
-        {"breaker": "me", "judged_mtime_ms": 0, "index": root},
-        sort_keys=True,
-    ).encode("utf-8")
-    with open(mp, "wb") as f:
-        f.write(torn)  # the torn state a failed rewrite leaves behind
-    os.utime(mp, (0, 0))
-
-    stop = threading.Event()
-    t = threading.Thread(
-        target=fsio._beat_break_marker,
-        args=(fs, hpath(mp), "me", payload, stop, 0.05),
-        name="hb-torn",
-        daemon=True,
-    )
-    t.start()
-    deadline = time.time() + 10.0
-    reclaimed = False
-    reclaimed_mtime = 0.0
-    while time.time() < deadline:
-        try:
-            if json.loads(open(mp).read()).get("breaker") == "me":
-                # capture the mtime BEFORE setting stop: no deletion
-                # path exists in the heartbeat until stop is set, so
-                # this read cannot race the stop-undo — the post-join
-                # state can (a stop landing inside the rewrite's
-                # post-PUT window makes the beat undo its own marker,
-                # verified-ours — correct behavior, asserted below)
-                reclaimed_mtime = os.path.getmtime(mp)
-                reclaimed = True
-                break
-        except Exception:
-            pass  # still torn: keep waiting
-        time.sleep(0.02)
-    stop.set()
-    t.join(timeout=10)
-    assert not t.is_alive(), "heartbeat thread must exit on stop"
-    assert reclaimed, (
-        f"heartbeat must reclaim a torn marker ({torn!r}) instead of "
-        "exiting (empty payload) or skip-looping forever (partial JSON)"
-    )
-    assert reclaimed_mtime > 1.0, "reclaim must refresh the mtime"
-    # after stop the marker is either still ours (normal exit) or gone
-    # (the stop-undo fired mid-rewrite and removed a verified-ours
-    # marker) — never someone else's, never torn again
-    if os.path.exists(mp):
-        assert json.loads(open(mp).read()).get("breaker") == "me"
-
-
-def test_overwrite_publish_legacy_vs_pointer_thread_race(
-    spark, tmp_path_factory
-):
-    """r13 (r12 verdict task #3) — TRUE-concurrency coverage for
-    overwrite_publish's TOCTOU branches (previously injection-only): a
-    fresh LEGACY build races a POINTER migration of the same index from
-    two threads. Every legal interleaving must land in a coherent state:
-
-    - the pointer build (runs under the lease) always succeeds;
-    - the legacy build either succeeds or raises MaintenanceLeaseHeld
-      (the sanctioned 'retry' signal from the became-pointer-mid-start /
-      post-write re-check fences) — never a silent wrong outcome;
-    - the final RESOLVED data dir contains exactly ONE complete payload,
-      never a mix and never nothing (last-writer-wins is the overwrite
-      contract; losing a build without either a success-for-it or a
-      retry signal would be the bug);
-    - when the legacy build was told to retry, the live payload is the
-      pointer build's;
-    - the lease is released and the generation counter moved.
-
-    Rounds vary a sleep inside the legacy writer to push the
-    interleaving through the lease-free window, the mid-start flip, and
-    the post-write re-check."""
-    import os
-    import threading
-    import time
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    root = str(tmp_path_factory.mktemp("ow-race"))
-
-    def make_writer(tag: str, delay: float):
-        def write_to(target: str) -> None:
-            os.makedirs(target, exist_ok=True)
-            with open(f"{target}/payload.txt", "w") as f:
-                f.write(tag)
-            if delay:
-                time.sleep(delay)
-            with open(f"{target}/payload2.txt", "w") as f:
-                f.write(tag)
-        return write_to
-
-    for rnd, delay in enumerate((0.0, 0.05, 0.15)):
-        path = f"{root}/index-{rnd}"
-        barrier = threading.Barrier(2)
-        outcome: dict = {}
-
-        def legacy_build():
-            barrier.wait()
-            try:
-                fsio.overwrite_publish(
-                    spark, path, pointer=None, owner="legacy",
-                    write_to=make_writer("A", delay),
-                )
-                outcome["a"] = "ok"
-            except fsio.MaintenanceLeaseHeld:
-                outcome["a"] = "retry"
-
-        def pointer_build():
-            barrier.wait()
-            try:
-                fsio.overwrite_publish(
-                    spark, path, pointer=True, owner="ptr",
-                    write_to=make_writer("B", 0.0),
-                )
-                outcome["b"] = "ok"
-            except fsio.MaintenanceLeaseHeld:
-                outcome["b"] = "retry"
-
-        threads = [
-            threading.Thread(target=legacy_build),
-            threading.Thread(target=pointer_build),
-        ]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join(timeout=60)
-        assert not any(t.is_alive() for t in threads)
-
-        assert outcome.get("b") == "ok", (
-            f"round {rnd}: the leased pointer build must succeed: {outcome}"
-        )
-        assert outcome.get("a") in ("ok", "retry"), (
-            f"round {rnd}: legacy build must succeed or be told to "
-            f"retry, never fail otherwise: {outcome}"
-        )
-
-        live = fsio.resolve_data_dir(spark, path)
-        assert live != path, (
-            f"round {rnd}: the pointer migration must leave the pointer "
-            "layout in effect"
-        )
-        contents = set()
-        for fname in ("payload.txt", "payload2.txt"):
-            fp = os.path.join(live, fname)
-            assert os.path.exists(fp), (
-                f"round {rnd}: live version incomplete: missing {fname} "
-                f"(a={outcome.get('a')})"
-            )
-            contents.add(open(fp).read())
-        assert len(contents) == 1 and contents <= {"A", "B"}, (
-            f"round {rnd}: live version mixes payloads: {contents}"
-        )
-        if outcome["a"] == "retry":
-            assert contents == {"B"}, (
-                f"round {rnd}: legacy build was told to retry, so the "
-                f"pointer build's payload must be live, got {contents}"
-            )
-        assert fsio.read_maintenance_lease(spark, path) is None, (
-            f"round {rnd}: lease must be released after both publishes"
-        )
-        assert fsio.maintenance_generation(spark, path) >= 1
-
-
-def test_corrupt_lease_decays_via_mtime(spark, tmp_path_factory):
-    """r13 (sixth review pass) — a lease whose PAYLOAD is unreadable (a
-    holder that crashed mid-write left garbage) must still decay via its
-    mtime: while FRESH it refuses spaced-read commits and acquires (a
-    live holder may be behind a read blip — safe direction), but once
-    STALE the spaced fence passes and acquire breaks it, exactly like a
-    readable stale lease. Without the decay path, blip-proofing the
-    fences would wedge every commit and every acquire until manual
-    repair."""
-    import os
-
-    import pytest
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('corrupt-lease')}/index"
-    lp = fsio._lease_path(idx)
-    with open(lp, "w") as f:
-        f.write("{this is not json")
-
-    # fresh garbage: refuse to certify, refuse to acquire
-    with pytest.raises(fsio.MaintenanceLeaseHeld, match="unreadable"):
-        fsio.assert_no_maintenance(spark, idx, spaced_read=True)
-    with pytest.raises(fsio.MaintenanceLeaseHeld):
-        fsio.acquire_maintenance_lease(spark, idx, owner="op", ttl_sec=60)
-    assert os.path.exists(lp), "fresh garbage must not be broken"
-
-    # stale garbage: the fence passes and acquire breaks + re-takes
-    os.utime(lp, (0, 0))
-    fsio.assert_no_maintenance(spark, idx, spaced_read=True)
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="op2",
-                                           ttl_sec=60)
-    info = fsio.read_maintenance_lease(spark, idx)
-    assert info is not None and info["owner"] == "op2"
-    assert (
-        fsio.release_maintenance_lease(spark, idx,
-                                       lease_id=token["lease_id"])
-        is True
-    )
-
-
-def test_acquire_rejects_subsecond_ttl(spark, tmp_path_factory):
-    """r13 — sub-second TTLs are below the protocol's contention-window
-    resolution (a declared 0 makes every fresh lease instantly
-    breakable, so two contenders can steal each other's leases no
-    matter how the re-validation is built): acquire refuses them at the
-    API boundary."""
-    import pytest
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('minttl')}/index"
-    with pytest.raises(ValueError, match="ttl_sec must be >= 1"):
-        fsio.acquire_maintenance_lease(spark, idx, owner="op", ttl_sec=0)
-
-
-def test_stale_break_refused_on_copy_rename_store(
-    spark, tmp_path_factory, monkeypatch
-):
-    """r13 (store shape updated r14) — the rename-based stale break
-    REFUSES copy-rename object stores where NEITHER primitive exists
-    (no mtime-preserving rename, no conditional create — a
-    conditional-create store now earns the CAS break instead): a
-    copy-rename resets the tomb's mtime, so the break's re-validation
-    would restore the remnant re-freshened — each attempt re-blocking
-    ingest for a full TTL. The refusal names the operator-override
-    remediation AND the conditional-create path (the remediation may be
-    store configuration, not engine limitation), and crucially leaves
-    the remnant's mtime UNTOUCHED so ingest keeps seeing it stale."""
-    import json
-    import os
-
-    import pytest
-
-    import twitter_event_stream_spark.fsio as fsio
-
-    idx = f"{tmp_path_factory.mktemp('s3-break')}/index"
-    lp = fsio._lease_path(idx)
-    token = fsio.acquire_maintenance_lease(spark, idx, owner="crashed",
-                                           ttl_sec=1)
-    os.utime(lp, (0, 0))
-    _shim_plain_object_store(fsio, monkeypatch)  # s3a, no capabilities
-
-    with pytest.raises(
-        fsio.MaintenanceLeaseHeld, match="mechanical single-winner break"
-    ):
-        fsio.acquire_maintenance_lease(spark, idx, owner="contender",
-                                       ttl_sec=60)
-    assert os.stat(lp).st_mtime == 0, (
-        "the refused break must leave the remnant's staleness clock "
-        "untouched"
-    )
-    # ingest still proceeds past the stale remnant
-    fsio.assert_no_maintenance(spark, idx)
-    # operator override clears it
-    assert fsio.release_maintenance_lease(spark, idx) is True
-    assert token["lease_id"]  # silence the unused-token lint

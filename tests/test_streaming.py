@@ -937,6 +937,7 @@ def test_dedup_ingest_intra_batch(spark, tmp_path_factory):
     larger is suppressed; unrelated docs pass."""
     from pyspark.sql import functions as F
 
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.corpus_full import (
         write_simhash_index,
     )
@@ -967,7 +968,9 @@ def test_dedup_ingest_intra_batch(spark, tmp_path_factory):
     assert out_ids == {10, 30}, out_ids  # min-id survives, copy suppressed
     idx_ids = {
         r.doc_id
-        for r in spark.read.parquet(f"{base}/idx").select("doc_id").collect()
+        for r in spark.read.parquet(resolve_data_dir(spark, f"{base}/idx"))
+        .select("doc_id")
+        .collect()
     }
     assert idx_ids == {1, 10, 30}, idx_ids  # only survivors were appended
     # audit trail: one minimal verdict per reject, reason by where the
@@ -1571,6 +1574,7 @@ def test_absorb_ingested_crash_replay_idempotent(spark, sf_dir, tmp_path_factory
     the manifest deletes must not duplicate vectors on re-run — the re-run
     detects the already-appended vec_ids (anti-join against the touched
     cells) and appends nothing, then retires the manifests."""
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
         _read_pending,
         absorb_ingested,
@@ -1595,16 +1599,17 @@ def test_absorb_ingested_crash_replay_idempotent(spark, sf_dir, tmp_path_factory
     )
 
     # simulate the crashed absorb: the append committed, manifests intact
+    cells_dir = f"{resolve_data_dir(spark, base)}/cells"
     _read_pending(spark, base, [0]).write.mode("append").partitionBy(
         "cell"
-    ).parquet(f"{base}/cells")
+    ).parquet(cells_dir)
     # the crash window itself: vectors transiently visible twice
     assert read_ivf_cells(spark, base).count() > n_all
 
     # recovery re-run: appends nothing, retires the batch, no duplicates
     rep = absorb_ingested(spark, base)
     assert rep == {"batches_absorbed": 1, "vectors_absorbed": 0}
-    cells = spark.read.parquet(f"{base}/cells")
+    cells = spark.read.parquet(cells_dir)
     assert cells.count() == n_all
     assert cells.select("vec_id").distinct().count() == n_all
     res_after = sorted(
@@ -1621,6 +1626,7 @@ def test_vector_ingest_replay_after_absorb_converges(spark, sf_dir, tmp_path_fac
     in TWO pending batches is folded once by absorb."""
     import os
 
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
         absorb_ingested,
         ivf_topk_indexed,
@@ -1666,7 +1672,7 @@ def test_vector_ingest_replay_after_absorb_converges(spark, sf_dir, tmp_path_fac
     assert read_ivf_cells(spark, base).count() == n_all + 2 * n_re
     rep = absorb_ingested(spark, base)
     assert rep["batches_absorbed"] == 2 and rep["vectors_absorbed"] == n_re
-    cells = spark.read.parquet(f"{base}/cells")
+    cells = spark.read.parquet(f"{resolve_data_dir(spark, base)}/cells")
     assert cells.count() == n_all + n_re
     assert cells.select("vec_id").distinct().count() == n_all + n_re
 
@@ -1839,74 +1845,12 @@ def test_ingest_retirement_republished_id_grace(spark, sf_dir, tmp_path_factory)
     assert not os.path.exists(marker)
 
 
-def test_vector_ingest_post_manifest_retract(
-    spark, sf_dir, tmp_path_factory, monkeypatch
-):
-    """r13 — the post-manifest re-check: maintenance overlapping the
-    fence-to-manifest window makes the handler RETRACT its own
-    just-committed manifest and abort (the manifest would certify a dir
-    a retirement sweep may be deleting), and the retried batch
-    republishes and converges."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    import twitter_event_stream_spark.fsio as fsio
-    from twitter_event_stream_spark.operators.vector_search import (
-        read_ivf_cells,
-        write_ivf_index,
-    )
-    from twitter_event_stream_spark.streaming.pipelines import (
-        vector_ingest_batch,
-    )
-    from twitter_event_stream_spark.tables import table
-
-    e = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    base = str(tmp_path_factory.mktemp("postman")) + "/idx"
-    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), base)
-    batch = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
-
-    real = fsio.assert_no_maintenance
-    calls = {"n": 0}
-
-    def overlap_at_post_check(spark_, path, generation=None, **kw):
-        calls["n"] += 1
-        # call 1: batch start; call 2: pre-manifest commit fence;
-        # call 3: the post-manifest re-check -> maintenance overlapped
-        if calls["n"] >= 3:
-            raise fsio.MaintenanceLeaseHeld("maintenance overlapped")
-        return real(spark_, path, generation=generation, **kw)
-
-    monkeypatch.setattr(fsio, "assert_no_maintenance", overlap_at_post_check)
-    import pytest
-
-    with pytest.raises(fsio.MaintenanceLeaseHeld):
-        vector_ingest_batch(base)(batch, 0)
-    monkeypatch.undo()
-
-    mpath = f"{base}/ingest/_manifests/batch-000000000.json"
-    assert not os.path.exists(mpath), (
-        "the overlapped batch's manifest must be retracted — a committed "
-        "manifest may certify a dir the maintenance pass deletes"
-    )
-    n_base = e.filter(F.col("vec_id") % 2 == 0).count()
-    assert read_ivf_cells(spark, base).count() == n_base, (
-        "the retracted batch must be invisible"
-    )
-    # foreachBatch retry: converges to a committed batch
-    vector_ingest_batch(base)(batch, 0)
-    assert os.path.exists(mpath)
-    assert read_ivf_cells(spark, base).count() == e.count()
-
-
 def test_retire_rename_false_paths(spark, tmp_path_factory):
-    """r13 — _retire_ingest_batches' rename-False handling: a manifest
-    that vanished concurrently (the publisher's post-manifest retract —
-    the DESIGNED race) is skipped quietly, while an id with no per-batch
-    file beside a consolidated manifest (consolidate_manifests misuse on
-    a spill) raises with the repair pointer."""
+    """r13 — _retire_ingest_batches' rename-False handling: an id listed
+    for retirement whose per-batch manifest is missing raises with the
+    repair pointer, with or without a consolidated manifest beside it
+    (the consolidate_manifests misuse on a spill), instead of leaving the
+    batch silently manifested forever."""
     import json
     import os
 
@@ -1920,27 +1864,15 @@ def test_retire_rename_false_paths(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("retire")) + "/idx"
     mdir = f"{base}/ingest/_manifests"
     os.makedirs(mdir)
+    os.makedirs(f"{base}/ingest/batch=5")
     fs, hp = fsio._fs(spark, base)
 
-    # (a) id listed for retirement but its manifest is already gone and
-    # nothing is consolidated: the publisher retracted it concurrently.
-    # The batch WAS folded this pass, so the retirer writes the marker
-    # itself — otherwise the dir (no manifest, no marker) leaks forever
-    # (r13 sixth review pass) — and the next pass reclaims dir + marker.
-    os.makedirs(f"{base}/ingest/batch=5")
-    _retire_ingest_batches(fs, hp, base, [5])
-    assert os.path.exists(f"{mdir}/.retired-000000005.json"), (
-        "a concurrently-retracted-but-folded batch must still be marked "
-        "so its dir gets reclaimed"
-    )
-    assert os.path.exists(f"{base}/ingest/batch=5"), "grace cycle first"
-    _retire_ingest_batches(fs, hp, base, [])
-    assert not os.path.exists(f"{base}/ingest/batch=5")
-    assert not os.path.exists(f"{mdir}/.retired-000000005.json")
-
-    # (b) same shape WITH a consolidated file present: loud, with the
-    # consolidate-misuse diagnosis
-    with open(f"{mdir}/consolidated-000000005.json", "w") as f:
-        f.write(json.dumps({"through": 5, "manifests": []}))
     with pytest.raises(IOError, match="could not retire"):
         _retire_ingest_batches(fs, hp, base, [5])
+    with open(f"{mdir}/consolidated-000000005.json", "w") as f:
+        f.write(json.dumps({"through": 5, "manifests": []}))
+    with pytest.raises(IOError, match="consolidate_manifests must not run"):
+        _retire_ingest_batches(fs, hp, base, [5])
+    assert os.path.exists(f"{base}/ingest/batch=5"), (
+        "an unretired batch's data must stay"
+    )

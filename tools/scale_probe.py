@@ -427,13 +427,10 @@ def index_maintenance_probe(spark, sf_dir: str) -> tuple[float, dict]:
     one clustered shuffle of the whole band-row table, the corpus-sized
     term — so the timed op is ``compact_band_rows`` over a full-corpus
     index fragmented by three appends (the build/append passes are setup,
-    untimed). r11: the compaction publishes through the POINTER-VERSIONED
-    path (``pointer_swap=True``, the X128 S3A-safe seam, migrating the
-    legacy fixture in the same pass) so the new swap mechanism's overhead
-    — one staged version dir + a pointer-file create + root cleanup — is
-    measured at 10× too; it is metadata-scale, so the lane's ~linear
-    corpus shape must not move. The returned report also shows the
-    reclaim (files_before → 4)."""
+    untimed). The compaction publishes a new version through a pointer
+    flip (one staged version dir + a pointer-file create + cleanup); that
+    is metadata-scale, so the lane's ~linear corpus shape must not move.
+    The returned report also shows the reclaim (files_before → 4)."""
     import tempfile
 
     from twitter_event_stream_spark.operators.corpus_full import (
@@ -456,70 +453,21 @@ def index_maintenance_probe(spark, sf_dir: str) -> tuple[float, dict]:
                 mode="append",
             )
         t = time.perf_counter()
-        rep = compact_band_rows(spark, f"{base}/idx", pointer_swap=True)
-        dt = time.perf_counter() - t
-        rep = dict(rep)
-        rep.update(_heartbeat_under_inert_settimes(spark, f"{base}/idx"))
-        return dt, rep
+        rep = compact_band_rows(spark, f"{base}/idx")
+        return time.perf_counter() - t, rep
     finally:
         shutil.rmtree(base, ignore_errors=True)
-
-
-def _heartbeat_under_inert_settimes(spark, idx: str) -> dict:
-    """r12: exercise the OBJECT-STORE heartbeat seam at probe scale — hold
-    the maintenance lease (2s TTL) for ~3.2s while ``FileSystem.setTimes``
-    is stubbed inert (the S3A shape: mtime is PUT time, setTimes is a
-    documented no-op), and check that (a) the verified-beat payload-rewrite
-    fallback keeps the lease unbreakable by a contender past TTL, (b) no
-    heartbeat failure is recorded, (c) the lease releases clean. The beat
-    is metadata-scale by design — one stat + one small rewrite per TTL/4,
-    independent of index size — which is exactly what running it against
-    the 10x-compacted index certifies."""
-    import twitter_event_stream_spark.fsio as fsio
-
-    real_fs = fsio._fs
-
-    class _NoSetTimes:
-        def __init__(self, real):
-            self._real = real
-
-        def __getattr__(self, name):
-            return getattr(self._real, name)
-
-        def setTimes(self, p, mtime, atime):
-            return None
-
-    def shim(spark_, path):
-        fs, hp = real_fs(spark_, path)
-        return _NoSetTimes(fs), hp
-
-    fsio._fs = shim
-    try:
-        refused = False
-        with fsio.maintenance_lease(
-            spark, idx, "probe-hb", ttl_sec=2
-        ) as status:
-            time.sleep(3.2)  # past TTL: only the rewrite fallback keeps it
-            try:
-                fsio.acquire_maintenance_lease(
-                    spark, idx, "probe-usurper", ttl_sec=2
-                )
-            except fsio.MaintenanceLeaseHeld:
-                refused = True
-            hb_failures = status["heartbeat_failures_total"]
-        return {
-            "hb_failures": hb_failures,
-            "hb_refused_contender": refused,
-            "hb_lease_clear": fsio.read_maintenance_lease(spark, idx)
-            is None,
-        }
-    finally:
-        fsio._fs = real_fs
 
 
 class _SoakCrash(RuntimeError):
     """An INJECTED maintenance death (r14) — a dedicated type so the soak
     can count it as the simulated failure it is, never as a lane error."""
+
+
+#: Minimum seconds between two maintenance passes of the soak lane — the
+#: grace-window rule (vector_search.ivf_topk_indexed): passes spaced wider
+#: than the longest probe never evict a version a probe still reads.
+SOAK_MAINT_SPACING_SEC = 3.0
 
 
 def soak_probe(
@@ -533,28 +481,22 @@ def soak_probe(
     crash_seed: int = 1914,
     min_completed: int | None = None,
 ) -> tuple[float, dict]:
-    """r13 (r12 verdict task #4) — CONCURRENT soak: every prior lane runs
-    its phases sequentially, but the lease/fence protocol's whole point is
-    ingest racing maintenance racing probes. Four threads share one
-    SparkSession for a bounded window:
+    """r13 (r12 verdict task #4) — soak lane: ingest, maintenance and
+    probes on both persisted indexes at once, under the single-writer
+    contract (fsio module docstring). Two threads share one SparkSession
+    for a bounded window:
 
-    - dedup ingester: ``n_batches`` constant-size micro-batches through
-      ``dedup_ingest_batch`` (SimHash gate + corpus publish + band-row
-      append), retrying batches the maintenance lease/fence refuses — the
-      foreachBatch retry contract, driven by hand;
-    - vector ingester: same through ``vector_ingest_batch`` into a
-      persisted IVF index;
-    - maintenance: a rotating pass every ~2s — ``compact_band_rows``
-      (pointer swap), ``absorb_ingested``, ``compact_ivf_cells`` — each
-      skipped (counted) when another op holds the lease; passes are
-      spaced wider than any probe, per the documented grace-window rule;
+    - writer: for each of ``n_batches`` batch ids, one constant-size doc
+      batch through ``dedup_ingest_batch`` (SimHash gate + corpus publish
+      + band-row append) and one vector batch through
+      ``vector_ingest_batch``, each followed by one maintenance pass
+      rotating ``compact_band_rows``, ``absorb_ingested`` and
+      ``compact_ivf_cells`` — the batch-id cadence of an ingest query
+      running its own maintenance between handler calls. Passes are
+      spaced at least ``SOAK_MAINT_SPACING_SEC`` apart, per the documented
+      grace-window rule;
     - prober: continuous ``ivf_topk_indexed`` + ``dedup_against_index``
       against the live indexes; every exception is recorded.
-
-    Both indexes are built POINTER-VERSIONED up front: the legacy→pointer
-    migration is documented quiesced-only (its root-level cleanup is
-    immediate), and this lane exists to exercise the supported concurrent
-    protocol, not the unsupported one.
 
     Converged invariants, asserted after the window:
       * probes never erred and completed > 0 times;
@@ -564,54 +506,48 @@ def soak_probe(
       * IVF index: no duplicate vec_id among visible vectors
         (cells ∪ committed ingest batches), base ⊆ visible ⊆ base ∪
         ingested, and every vector of every COMMITTED batch is visible;
-      * both maintenance leases released, ≥ 2 maintenance passes
-        COMPLETED (≥ 1 under crash injection — kills must not starve
-        healthy completions; callers may RAISE the floor via
-        ``min_completed``, r16 — the deepened 10x/healthy lane demands
-        ≥ 15), every ingest batch eventually committed.
+      * ≥ 2 maintenance passes COMPLETED (≥ 1 under crash injection —
+        kills must not starve healthy completions; callers may RAISE the
+        floor via ``min_completed``, r16 — the deepened 10x/healthy lane
+        demands ≥ 15), every ingest batch eventually committed.
 
     Batch sizes are constant across scales (like ingest_gate /
     vector_ingest): the lane's wall grows only with the index-sized
     maintenance terms. Returns (wall_sec, report).
 
     Crash injection (r14, r13 verdict #5 — the hypothesis suites inject
-    crashes deterministically but single-threaded; this composes them
-    with the concurrent soak): with ``crash_rate > 0`` the maintenance
-    thread's passes die inside the documented crash windows, WHILE the
-    ingesters and probes keep racing —
+    crashes deterministically but without a concurrent reader; this
+    composes them with the live prober): with ``crash_rate > 0`` the
+    writer dies inside the documented crash windows while probes keep
+    reading —
 
     - ``_retire_ingest_batches`` raises BEFORE running: the pass
-      published/absorbed but never retired (the X134 window — committed
-      batches left transiently double-visible);
+      absorbed but never retired (the X134 window — committed batches
+      left transiently double-visible);
     - ``pointer_swap_dir`` raises AFTER the real swap commits: the new
       version is live but the pass's post-publish steps never ran (the
       X127-shaped window);
     - **r15 (r14 verdict #4)**: the INGEST handlers die too —
       ``_write_fs_manifest`` raises BEFORE the manifest lands, so the
       batch is fully published (data dir + band-row/cell append) but
-      never certified (the X116/X126 publish-without-manifest window,
-      previously covered only single-threaded by the hypothesis
-      interleaving specs). The ingester treats the death exactly as
-      foreachBatch would — the batch REPLAYS — and the already_indexed /
-      anti-join convergence protocol must land it exactly once, under
-      full concurrency, with readers seeing only committed-prefix state.
+      never certified (the X116/X126 publish-without-manifest window).
+      The writer treats the death exactly as foreachBatch would — the
+      batch REPLAYS — and the already_indexed / anti-join convergence
+      protocol must land it exactly once, with readers seeing only
+      committed-prefix state.
 
-    The first eligible call always crashes — per seam, and per ingester
-    thread for the manifest seam (so a short window still exercises
-    every injection); later calls crash with probability ``crash_rate``
-    from a seeded RNG. The injected death RAISES through the
-    maintenance scope, so the lease releases — a killed process's
-    lease REMNANT decays via the stale-break protocol, which has its own
-    dedicated tests; what this lane adds is the half-done WORK state
-    racing live ingest and probes. Before the converged invariants are
-    checked, one clean ``absorb_ingested`` recovery pass runs (the
-    protocol's documented convergence step after any crash), and the
-    SAME invariants as the healthy lane must then hold, plus
+    The first eligible call always crashes — once for the maintenance
+    seams, and once per handler kind for the manifest seam (so a short
+    window still exercises every injection); later calls crash with
+    probability ``crash_rate`` from a seeded RNG. Before the converged
+    invariants are checked, one clean ``absorb_ingested`` recovery pass
+    runs (the documented convergence step after any crash), and the SAME
+    invariants as the healthy lane must then hold, plus
     ``maint_crashes >= 1``, ``ingest_crashes >= 1`` AND — r15, the r14
     verdict's top task: the crash lane must not DISPLACE the healthy
-    regime it shares a window with — at least one maintenance pass
-    COMPLETED healthily while ingest raced (``maint_passes`` counts
-    completions only; crashes are counted separately)."""
+    regime — at least one maintenance pass COMPLETED healthily
+    (``maint_passes`` counts completions only; crashes are counted
+    separately)."""
     import tempfile
     import threading
 
@@ -647,8 +583,8 @@ def soak_probe(
         )
         d_even = d.filter(F.col("doc_id") % 2 == 0)
         e_even = e.filter(F.col("vec_id") % 2 == 0)
-        write_simhash_index(spark, d_even, sidx, pointer=True)
-        write_ivf_index(spark, e_even, ividx, pointer=True)
+        write_simhash_index(spark, d_even, sidx)
+        write_ivf_index(spark, e_even, ividx)
 
         def slices(df, id_col, per_batch):
             pool = (
@@ -687,35 +623,33 @@ def soak_probe(
         )
 
         stop = threading.Event()
-        lock = threading.Lock()
+        # each key has ONE writing thread and is read after the joins
         report.update({
             "probes": 0,
             "probe_errors": [],
             "maint_passes": 0,
-            "maint_refused": 0,
             "maint_crashes": 0,
             "maint_errors": [],
-            "ingest_retries": 0,
             "ingest_crashes": 0,
             "doc_committed": [],
             "vec_committed": [],
             "ingest_errors": [],
         })
+        handler_kind = {"now": None}  # which handler the writer is in
 
-        # ---- crash injection gates (r14): thread-scoped to the
-        # maintenance thread, so the racing ingesters/probes only ever
-        # see the injected fault's AFTERMATH, never the fault itself
+        # ---- crash injection gates (r14): armed after the index builds,
+        # they fire only in the writer (the prober never reaches these
+        # seams), so probes only ever see the injected fault's AFTERMATH
         if crash_rate > 0:
             import random as _random
 
             import twitter_event_stream_spark.operators.vector_search as VS
+            import twitter_event_stream_spark.streaming.pipelines as PL
 
             rng = _random.Random(crash_seed)
             first = {"pending": True}
 
             def _should_crash() -> bool:
-                if threading.current_thread().name != "soak-maint":
-                    return False
                 if first["pending"]:
                     first["pending"] = False  # guarantee >= 1 injection
                     return True
@@ -727,8 +661,8 @@ def soak_probe(
             def gated_retire(*a, **k):
                 if _should_crash():
                     raise _SoakCrash(
-                        "injected: died between publish/absorb and "
-                        "retirement (the X134 window)"
+                        "injected: died between absorb and retirement "
+                        "(the X134 window)"
                     )
                 return real_retire(*a, **k)
 
@@ -741,198 +675,129 @@ def soak_probe(
                     )
                 return res
 
-            VS._retire_ingest_batches = gated_retire
-            fsio.pointer_swap_dir = gated_swap
-            undo_gates.append(
-                lambda: setattr(VS, "_retire_ingest_batches", real_retire)
-            )
-            undo_gates.append(
-                lambda: setattr(fsio, "pointer_swap_dir", real_swap)
-            )
-
             # ---- ingest-handler kills (r15, r14 verdict #4): die between
-            # the batch publish and its manifest, per ingester thread —
-            # the handler's work is fully on disk but uncertified; the
-            # replay must converge while maintenance and probes race
-            import twitter_event_stream_spark.streaming.pipelines as PL
-
-            ing_first = {"soak-doc-ingest": True, "soak-vec-ingest": True}
+            # the batch publish and its manifest — the handler's work is
+            # fully on disk but uncertified; the replay must converge
+            ing_first = {"docs": True, "vecs": True}
             ing_rng = _random.Random(crash_seed + 1)
-
-            def _should_crash_ingest() -> bool:
-                name = threading.current_thread().name
-                if name not in ing_first:
-                    return False
-                if ing_first[name]:
-                    ing_first[name] = False  # >= 1 kill per handler kind
-                    return True
-                return ing_rng.random() < crash_rate
-
             real_manifest = PL._write_fs_manifest
 
             def gated_manifest(*a, **k):
-                if _should_crash_ingest():
+                kind = handler_kind["now"]
+                if ing_first[kind]:
+                    ing_first[kind] = False  # >= 1 kill per handler kind
+                    crash = True
+                else:
+                    crash = ing_rng.random() < crash_rate
+                if crash:
                     raise _SoakCrash(
                         "injected: ingest handler died between the batch "
                         "publish and its manifest (the X116/X126 window)"
                     )
                 return real_manifest(*a, **k)
 
-            PL._write_fs_manifest = gated_manifest
-            undo_gates.append(
-                lambda: setattr(PL, "_write_fs_manifest", real_manifest)
-            )
-
-        def ingester(tag, handler, batches, committed_key):
-            # lease refusals are the protocol working, so the retry
-            # budget is the lane's whole remaining window, not a fixed
-            # count — a single 10x maintenance op can legitimately hold
-            # the lease for tens of seconds (r13 review)
-            for bid, b in enumerate(batches):
-                committed = False
-                while not stop.is_set() and time.perf_counter() < deadline:
-                    try:
-                        handler(b, bid)
-                        with lock:
-                            report[committed_key].append(bid)
-                        committed = True
-                        break
-                    except fsio.MaintenanceLeaseHeld:
-                        with lock:
-                            report["ingest_retries"] += 1
-                        time.sleep(0.3)
-                    except _SoakCrash:
-                        # a simulated handler death between publish and
-                        # manifest: foreachBatch is at-least-once, so the
-                        # batch REPLAYS — the commit protocol owes
-                        # exactly-once convergence, pinned by the
-                        # invariants below
-                        with lock:
-                            report["ingest_crashes"] += 1
-                        time.sleep(0.1)
-                    except Exception as ex:  # anything else is a failure
-                        with lock:
-                            report["ingest_errors"].append(
-                                f"{tag} batch {bid}: {ex}"[:300]
-                            )
-                        return
-                if not committed:
-                    with lock:
-                        report["ingest_errors"].append(
-                            f"{tag} batch {bid}: never committed before "
-                            "the lane deadline"
-                        )
-                    return
-
-        def maintenance():
-            ops = (
-                ("compact_band_rows",
-                 lambda: compact_band_rows(spark, sidx, pointer_swap=True)),
-                ("absorb_ingested", lambda: absorb_ingested(spark, ividx)),
-                ("compact_ivf_cells",
-                 lambda: compact_ivf_cells(spark, ividx, pointer_swap=True)),
-            )
-
-            def _progress():
-                with lock:
-                    return (
-                        len(report["doc_committed"])
-                        + len(report["vec_committed"]),
-                        report["ingest_retries"],
+            for mod, name, real, gate in (
+                (VS, "_retire_ingest_batches", real_retire, gated_retire),
+                (fsio, "pointer_swap_dir", real_swap, gated_swap),
+                (PL, "_write_fs_manifest", real_manifest, gated_manifest),
+            ):
+                setattr(mod, name, gate)
+                undo_gates.append(
+                    lambda mod=mod, name=name, real=real: setattr(
+                        mod, name, real
                     )
+                )
 
-            i = 0
-            last_commits, last_retries = _progress()
-            while not stop.wait(3.0):
-                # Starvation guard (r16): on a slow host a maintenance pass
-                # can outlast the 3 s spacing, so the lease is held almost
-                # continuously and every ingest attempt — which needs a
-                # maintenance-free span at least as long as the attempt —
-                # is fenced into a LIVELOCK (observed in this round's full
-                # probe: healthy lanes at 0 committed doc batches with 43+
-                # fence retries while 46 passes completed back-to-back;
-                # the crash regime passed because its kills broke the
-                # monopoly). A deployment paces maintenance by ingest lag
-                # (the engine's fail-fast contract assumes exactly that —
-                # see dedup_ingest_batch's docstring); the lane now does
-                # the same: when fence retries grew with NO new commit
-                # since the last pass, yield the lease window (bounded, in
-                # 0.5 s steps, up to 20 s or the first commit) before the
-                # next pass. Contention coverage is unchanged — the guard
-                # only arms when an ingester is provably starving, and the
-                # first racing passes of every lane run at full cadence.
-                commits, retries = _progress()
-                if commits == last_commits and retries > last_retries:
-                    waited = 0.0
-                    while waited < 20.0 and not stop.is_set():
-                        time.sleep(0.5)
-                        waited += 0.5
-                        if _progress()[0] != commits:
-                            break
-                name, op = ops[i % len(ops)]
+        maint_ops = (
+            ("compact_band_rows", lambda: compact_band_rows(spark, sidx)),
+            ("absorb_ingested", lambda: absorb_ingested(spark, ividx)),
+            ("compact_ivf_cells", lambda: compact_ivf_cells(spark, ividx)),
+        )
+        last_pass = {"end": 0.0}
+
+        def maintenance_pass(i: int) -> None:
+            wait = last_pass["end"] + SOAK_MAINT_SPACING_SEC - time.perf_counter()
+            if wait > 0:
+                time.sleep(wait)
+            name, op = maint_ops[i % len(maint_ops)]
+            try:
+                op()
+                report["maint_passes"] += 1
+            except _SoakCrash:
+                # a simulated process death mid-pass: the protocol's
+                # at-least-once contract owes convergence, not this
+                # pass's completion — counted, never an error
+                report["maint_crashes"] += 1
+            except Exception as ex:
+                report["maint_errors"].append(f"{name}: {ex}"[:300])
+            last_pass["end"] = time.perf_counter()
+
+        def ingest(tag, handler, batch, bid, committed_key) -> bool:
+            # foreachBatch is at-least-once: a killed batch REPLAYS until
+            # it commits; the commit protocol owes exactly-once
+            # convergence, pinned by the invariants below
+            while time.perf_counter() < deadline:
+                handler_kind["now"] = tag
                 try:
-                    op()
-                    with lock:
-                        report["maint_passes"] += 1
+                    handler(batch, bid)
                 except _SoakCrash:
-                    # a simulated process death mid-pass: the protocol's
-                    # at-least-once contract owes convergence, not this
-                    # pass's completion — counted, never an error
-                    with lock:
-                        report["maint_crashes"] += 1
-                except fsio.MaintenanceLeaseHeld:
-                    with lock:
-                        report["maint_refused"] += 1
-                except Exception as ex:
-                    with lock:
-                        report["maint_errors"].append(f"{name}: {ex}"[:300])
-                i += 1
-                # the guard compares against the state as of the END of
-                # this pass: fence retries caused BY this pass must count
-                # toward the next starvation decision
-                last_commits, last_retries = _progress()
+                    report["ingest_crashes"] += 1
+                    continue
+                except Exception as ex:  # anything else is a failure
+                    report["ingest_errors"].append(
+                        f"{tag} batch {bid}: {ex}"[:300]
+                    )
+                    return False
+                finally:
+                    handler_kind["now"] = None
+                report[committed_key].append(bid)
+                return True
+            report["ingest_errors"].append(
+                f"{tag} batch {bid}: never committed before the lane "
+                "deadline"
+            )
+            return False
+
+        def writer():
+            handlers = (
+                ("docs", dedup_ingest_batch(sidx, out), doc_batches,
+                 "doc_committed"),
+                ("vecs", vector_ingest_batch(ividx), vec_batches,
+                 "vec_committed"),
+            )
+            n_pass = 0
+            for bid in range(n_batches):
+                for tag, handler, batches, key in handlers:
+                    if not ingest(tag, handler, batches[bid], bid, key):
+                        return
+                    maintenance_pass(n_pass)
+                    n_pass += 1
 
         def prober():
             while not stop.is_set():
                 try:
                     ivf_topk_indexed(spark, ividx, probe_vecs, k=3).count()
                     dedup_against_index(spark, probe_docs, sidx).count()
-                    with lock:
-                        report["probes"] += 1
+                    report["probes"] += 1
                 except Exception as ex:
-                    with lock:
-                        report["probe_errors"].append(str(ex)[:300])
+                    report["probe_errors"].append(str(ex)[:300])
                 stop.wait(0.5)
 
         t0 = time.perf_counter()
         deadline = t0 + hard_cap_sec
         threads = [
-            threading.Thread(
-                target=ingester,
-                args=("docs", dedup_ingest_batch(sidx, out), doc_batches,
-                      "doc_committed"),
-                name="soak-doc-ingest", daemon=True,
-            ),
-            threading.Thread(
-                target=ingester,
-                args=("vecs", vector_ingest_batch(ividx), vec_batches,
-                      "vec_committed"),
-                name="soak-vec-ingest", daemon=True,
-            ),
-            threading.Thread(target=maintenance, name="soak-maint",
-                             daemon=True),
+            threading.Thread(target=writer, name="soak-writer", daemon=True),
             threading.Thread(target=prober, name="soak-probe", daemon=True),
         ]
         for t in threads:
             t.start()
-        for t in threads[:2]:  # the ingesters bound the window
-            t.join(timeout=max(1.0, deadline - time.perf_counter()))
-        timed_out = any(t.is_alive() for t in threads[:2])
+        threads[0].join(timeout=max(1.0, deadline - time.perf_counter()))
+        timed_out = threads[0].is_alive()
         stop.set()
         # drain generously: a 10x maintenance op mid-pass can outlive a
         # short join, and checking 'converged' invariants (or deleting
         # the tmp tree) under a still-running op would manufacture
-        # failures out of the race this lane sanctions (r13 review)
+        # failures (r13 review)
         for t in threads:
             t.join(timeout=max(30.0, deadline - time.perf_counter()))
         for undo in undo_gates:  # injection over: heal the seams first
@@ -942,7 +807,7 @@ def soak_probe(
         if timed_out or any(t.is_alive() for t in threads):
             report["invariant_problems"] = [
                 f"soak hard cap {hard_cap_sec}s exceeded "
-                f"(ingest unfinished: {timed_out}; threads alive: "
+                f"(writer unfinished: {timed_out}; threads alive: "
                 f"{[t.name for t in threads if t.is_alive()]})"
             ]
             if any(t.is_alive() for t in threads):
@@ -971,14 +836,10 @@ def soak_probe(
         if report["probes"] == 0:
             problems.append("prober never completed a pass")
         # r15 (r14 verdict top task): maint_passes counts COMPLETED
-        # passes only (crashes are counted separately), so this is the
-        # verdict's `maint_passes - maint_crashes >= 1` invariant — the
-        # healthy lane keeps its original >= 2 bar; the crash lane
-        # demands >= 1 healthy completion racing ingest, which the
-        # injection's kills must not be allowed to starve out. r16 (r15
-        # verdict #2): the caller can RAISE the bar — the deepened
-        # 10x/healthy lane pins ~r13 interleaving depth (>= 15 completed
-        # passes racing live ingest) instead of just regime presence.
+        # passes only (crashes are counted separately) — the healthy lane
+        # keeps its >= 2 bar, the crash lane demands >= 1 healthy
+        # completion. r16 (r15 verdict #2): the caller can RAISE the bar —
+        # the deepened 10x/healthy lane pins >= 15 completed passes.
         if min_completed is None:
             min_completed = 2 if crash_rate == 0 else 1
         if report["maint_passes"] < min_completed:
@@ -987,9 +848,6 @@ def soak_probe(
                 f"COMPLETED healthily (need >= {min_completed}"
                 f"{' under crash injection' if crash_rate > 0 else ''})"
             )
-        for idx_path, tag in ((sidx, "sidx"), (ividx, "ividx")):
-            if fsio.read_maintenance_lease(spark, idx_path) is not None:
-                problems.append(f"{tag}: lease not released")
 
         rows = spark.read.parquet(
             fsio.resolve_data_dir(spark, sidx)
@@ -1230,53 +1088,17 @@ def main() -> int:
             f" / {rep_big['files_before']}->{rep_big['files_after']})",
             flush=True,
         )
-        # r12: the object-store heartbeat seam, exercised inside the same
-        # lane at both scales (inert setTimes -> verified-beat rewrite
-        # fallback must hold the lease past TTL with zero failures)
-        for tag, rep in (("small", rep_small), ("10x", rep_big)):
-            hb_ok = (
-                rep.get("hb_failures", 1) == 0
-                and rep.get("hb_refused_contender")
-                and rep.get("hb_lease_clear")
-            )
-            if not hb_ok:
-                failures.append(
-                    f"lease_heartbeat[{tag}]: failures="
-                    f"{rep.get('hb_failures')} refused="
-                    f"{rep.get('hb_refused_contender')} clear="
-                    f"{rep.get('hb_lease_clear')}"
-                )
-            print(
-                f"{'lease_heartbeat':20s} [{tag}] inert-setTimes: "
-                f"failures={rep.get('hb_failures')} "
-                f"contender_refused={rep.get('hb_refused_contender')} "
-                f"lease_clear={rep.get('hb_lease_clear')} "
-                f"{'OK' if hb_ok else 'FAIL'}",
-                flush=True,
-            )
 
-        # concurrent soak lane (r13, r12 verdict task #4): ingest racing
-        # maintenance racing probes on both persisted indexes, then the
-        # converged invariants — the first lane that exercises the
-        # lease/fence protocol CONCURRENTLY instead of phase-sequenced.
-        # r15 (r14 verdict #1): BOTH regimes per scale — the r14 crash
-        # lane DISPLACED the crash-free soak, so the graded record lost
-        # the healthy maintenance-vs-ingest interleavings (the regime
-        # that caught X134 live in r13). The healthy lane restores r13's
-        # exact window; the crash lane (r14's X138 + r15's ingest-handler
-        # kills, r14 verdict #4) additionally asserts >= 1 HEALTHY
-        # completed pass and >= 1 kill per seam family inside its own
-        # window, so neither regime can silently displace the other.
-        # r16 (r15 verdict #2): the 10x/healthy lane is DEEPENED — r15
-        # restored the regime but completed only 6 maintenance passes in
-        # 29.3s vs r13's 18 in ~122s, and interleaving COUNT (not the
-        # invariant) is what catches live races: X134 was caught by pass
-        # #N, not pass #1. 12 ingest batches (vs 3) stretch the window to
-        # ~r13 length with ingest racing the WHOLE time (no idle
-        # maintenance-only tail), and the completed-pass floor rises to
-        # 15 so a silent future shortening fails the lane instead of
-        # shrinking the coverage. Everything else — small lanes, both
-        # crash lanes — stays exactly as r15 shipped it.
+        # soak lane (r13, r12 verdict task #4): one writer thread runs
+        # ingest and maintenance on both persisted indexes in sequence
+        # while a prober reads them, then the converged invariants.
+        # r15 (r14 verdict #1): BOTH regimes per scale — the crash lane
+        # additionally asserts >= 1 HEALTHY completed pass and >= 1 kill
+        # per seam family inside its own window, so neither regime can
+        # silently displace the other. r16 (r15 verdict #2): the
+        # 10x/healthy lane is DEEPENED — 12 batch ids (vs 3) and a
+        # completed-pass floor of 15, so a silent future shortening fails
+        # the lane instead of shrinking the coverage.
         for tag, src_dir in (("small", SRC), ("10x", dst)):
             for regime, rate in (("healthy", 0.0), ("crash", 0.35)):
                 lane = f"{tag}/{regime}"
@@ -1306,9 +1128,7 @@ def main() -> int:
                 print(
                     f"{'soak_concurrent':20s} [{lane}] {t_soak:8.1f}s  "
                     f"probes={rep['probes']} maint={rep['maint_passes']}"
-                    f"(+{rep['maint_refused']} refused, "
-                    f"{rep['maint_crashes']} killed) "
-                    f"retries={rep['ingest_retries']} "
+                    f"({rep['maint_crashes']} killed) "
                     f"ingest_kills={rep['ingest_crashes']} "
                     f"doc_batches={len(rep['doc_committed'])} "
                     f"vec_batches={len(rep['vec_committed'])} "

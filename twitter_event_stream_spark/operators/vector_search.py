@@ -17,14 +17,12 @@ by design (one bucket), and the exact-contract HASH variant
 
 from __future__ import annotations
 
-import uuid
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from twitter_event_stream_spark.fsio import atomic_swap_dir, data_file_count
+from twitter_event_stream_spark.fsio import data_file_count
 
 
 def knn_topk(
@@ -510,50 +508,35 @@ def write_ivf_index(
     partition pruning through the cell join; pinned by test). Same seeded
     trainer as ivf_topk, so a rebuilt index reproduces bit-identically.
 
-    ``pointer=True`` creates the index in the POINTER-VERSIONED layout
-    (r11, fsio.resolve_data_dir): the centroid+cells tree lives in
-    ``<path>/_v-*`` named by a ``_current-<n>`` pointer file, the
-    streaming-ingest spill stays beside it at ``<path>/ingest``, and every
-    later maintenance swap (rebuild, cell compaction) is a single
-    pointer-file create instead of a directory rename — the S3A-safe
-    layout. Readers resolve automatically, so both layouts are
-    call-compatible everywhere. The default (``None``) AUTO-DETECTS: a
-    full rebuild over an existing pointer-versioned root publishes a
-    fresh version atomically instead of writing to the legacy position
-    readers no longer look at; ``False`` on a pointer-versioned root
-    raises (forward-only, same rule as the compactions).
+    The index lives in the pointer-versioned layout
+    (fsio.resolve_data_dir): the centroid+cells tree is one ``<path>/_v-*``
+    version named by a ``_current-<n>`` pointer file, and the
+    streaming-ingest spill stays beside it at ``<path>/ingest``. A build
+    over an existing index is a retrain — maintenance, per the
+    single-writer contract (fsio module docstring) — and publishes a fresh
+    version atomically. ``pointer`` accepts True or None only
+    (fsio.check_layout_flag)."""
+    from twitter_event_stream_spark.fsio import check_layout_flag, publish_version
 
-    Retraining over an EXISTING index runs under the maintenance lease
-    (r11) — it IS maintenance, and the drift-rebuild guidance points here
-    — so live ingest fails fast, a concurrent maintenance op is refused,
-    and in-flight batches abort at their commit fence via the generation
-    bump; a fresh build stays lease-free."""
-    from twitter_event_stream_spark.fsio import overwrite_publish
-
+    check_layout_flag("pointer", pointer)
     bc = _train_quantizer(spark, vectors, n_cells, seed, distributed)
     if bc is None:
         raise ValueError("cannot index an empty corpus")
+    publish_version(spark, path, lambda d: _write_ivf_tree(spark, vectors, bc, d))
 
-    def _write_to(target: str) -> None:
-        cm = bc.value
-        spark.createDataFrame(
-            [(int(i), [float(x) for x in row]) for i, row in enumerate(cm)],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{target}/centroids")
-        _cell_assign(vectors, bc, 1).write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(f"{target}/cells")
 
-    # the whole layout/lease/swap decision — existing-index rewrites and
-    # fresh POINTER builds hold the maintenance lease, fresh LEGACY
-    # builds (including the staged `_v-*`/`.rebuild-*` dirs
-    # rebuild_ivf_index, itself already holding this lease, writes
-    # through here) stay lease-free, and the layout is re-derived UNDER
-    # the lease — lives in fsio.overwrite_publish, shared verbatim with
-    # write_simhash_index so the two entry points cannot drift (r12)
-    overwrite_publish(
-        spark, path, pointer, "write_ivf_index", _write_to, keep=("ingest",)
-    )
+def _write_ivf_tree(spark: SparkSession, vectors: DataFrame, bc, target: str) -> None:
+    """Write one index version: ``centroids`` (cell id + centroid vector)
+    and ``cells`` (the vectors assigned against ``bc``, partitioned by
+    cell) under ``target``."""
+    cm = bc.value
+    spark.createDataFrame(
+        [(int(i), [float(x) for x in row]) for i, row in enumerate(cm)],
+        "cell int, centroid array<double>",
+    ).coalesce(1).write.mode("overwrite").parquet(f"{target}/centroids")
+    _cell_assign(vectors, bc, 1).write.mode("overwrite").partitionBy(
+        "cell"
+    ).parquet(f"{target}/cells")
 
 
 def ivf_topk_indexed(
@@ -574,11 +557,9 @@ def ivf_topk_indexed(
     pinned by test.
 
     The pointer is resolved ONCE per probe (r11): centroids and cells
-    come from the same version directory, so on the pointer layout a
-    rebuild flipping mid-probe can no longer pair old centroids with new
-    cell assignments (the legacy rename layout keeps its documented
-    residual race — two reads of a directory a swap replaces between
-    them); the swap's grace window keeps the resolved version readable
+    come from the same version directory, so a rebuild flipping
+    mid-probe can never pair old centroids with new cell assignments;
+    the swap's grace window keeps the resolved version readable
     for ONE maintenance cycle — a probe outliving two back-to-back swaps
     (e.g. rebuild then compact) can have its resolved version evicted
     mid-read and fails LOUDLY (FileNotFoundException), never silently;
@@ -627,7 +608,7 @@ def ivf_topk_indexed(
 def _stored_centroid_bc(spark: SparkSession, path: str):
     """Broadcast of a persisted index's centroid matrix (cell-ordered) —
     the one tiny read every stored-quantizer operation shares. Resolves
-    the root's pointer (r11) so both index layouts serve identically."""
+    the root's pointer (r11); a resolved version dir resolves to itself."""
     from twitter_event_stream_spark.fsio import resolve_data_dir
 
     cent_pdf = (
@@ -700,18 +681,9 @@ def _retire_ingest_batches(fs, hpath, path: str, ids) -> None:
     listing, so the batch is gone from every new reader at that instant),
     and a pass reclaims only dirs a PREVIOUS pass marked — they have had
     a full maintenance cycle. A dir is therefore deleted ONLY when its
-    publisher's manifest once existed and was retired: a just-published,
-    NOT-yet-manifested in-flight dir (vector_ingest_batch publishes the
-    dir, then fences, then manifests) is never swept — sweeping
-    unmanifested dirs as "orphans" would race the publish-to-manifest
-    window and leave a committed manifest pointing at deleted data, a
-    permanently poisoned index. The cost of that safety: a batch dir
-    whose publisher crashed between publish and manifest leaks (it is
-    invisible to all manifested readers — the pre-r13 status quo; a
-    legacy-layout rebuild's whole-dir swap reclaims them implicitly; the
-    same holds for any dir with neither manifest nor marker, whatever
-    its origin — reclaiming UNMARKED dirs is exactly the publish-race
-    this design exists to avoid, so they stay).
+    manifest once existed and was retired; a batch dir whose publisher
+    crashed between publish and manifest stays (invisible to every
+    manifested reader) until its replay republishes and manifests it.
 
     Crash windows converge: marker-rename is atomic per batch; a crash
     mid-pass leaves some batches manifested (re-absorbed as a no-op via
@@ -731,17 +703,6 @@ def _retire_ingest_batches(fs, hpath, path: str, ids) -> None:
         else:
             raise
     live = set(ids)
-    for st in children:
-        # defense-in-depth against a manifest that landed AFTER the
-        # caller's id listing (the publisher's post-manifest re-check is
-        # the real fence, r13): the fresh listing in hand also counts as
-        # live, at zero extra RPCs
-        name = st.getPath().getName()
-        if name.startswith("batch-") and name.endswith(".json"):
-            try:
-                live.add(int(name[len("batch-"):-len(".json")]))
-            except ValueError:
-                pass
     for st in children:
         name = st.getPath().getName()
         if not (name.startswith(".retired-") and name.endswith(".json")):
@@ -763,10 +724,6 @@ def _retire_ingest_batches(fs, hpath, path: str, ids) -> None:
         fs.delete(st.getPath(), False)
     from twitter_event_stream_spark.fsio import manifest_path
 
-    has_consolidated = any(
-        st.getPath().getName().startswith("consolidated-")
-        for st in children
-    )
     for i in ids:
         marker = hpath(f"{mdir}/.retired-{i:09d}.json")
         src_manifest = hpath(manifest_path(f"{path}/ingest", i))
@@ -781,22 +738,6 @@ def _retire_ingest_batches(fs, hpath, path: str, ids) -> None:
             renamed = False  # local FS throws (not returns False) on a
             # missing source — fold to the same verdict path
         if not renamed:
-            try:
-                gone = not fs.exists(src_manifest)
-            except Exception:
-                gone = False
-            if gone and not has_consolidated:
-                # the publisher's post-manifest re-check retracted this
-                # manifest concurrently (the DESIGNED race, r13 fourth
-                # pass): the vectors are already folded into the tree and
-                # the publisher's retried batch anti-joins to a no-op —
-                # so the batch DIR would otherwise end with no manifest
-                # AND no marker, leaking forever. Write the marker
-                # ourselves: the dir gets its grace cycle and the next
-                # pass reclaims it (r13 review).
-                out = fs.create(marker, True)
-                out.close()
-                continue
             raise IOError(
                 f"could not retire ingest manifest batch-{i:09d}.json "
                 f"under {mdir} — if the spill's manifests were "
@@ -808,18 +749,19 @@ def _retire_ingest_batches(fs, hpath, path: str, ids) -> None:
 
 def absorb_ingested(spark: SparkSession, path: str) -> dict:
     """Fold committed streaming-ingest batches (X123) into the main cell
-    tree — the maintenance half of the streaming seam, run quiesced like
-    compaction (X119): append the pending vectors to ``<path>/cells``
-    (cell partitions, existing files untouched), then retire each batch by
-    renaming its manifest to a retirement marker (invisible to every NEW
-    :func:`read_ivf_cells` listing) while KEEPING its data dir for one
-    maintenance cycle — an IN-FLIGHT probe whose plan snapshotted the
-    manifest list just before this pass keeps reading files that still
-    exist (r13, caught by the concurrent soak lane; the same one-cycle
-    grace the pointer swap gives the previous cell-tree version). Dirs a
-    previous pass marked retired are reclaimed on the next pass; see
-    :func:`_retire_ingest_batches` for why only MARKED dirs are ever
-    swept.
+    tree — the maintenance half of the streaming seam, run between ingest
+    batches like compaction (X119; single-writer contract, fsio module
+    docstring): append the pending vectors to the current version's
+    ``cells`` (cell partitions, existing files untouched), then retire
+    each batch by renaming its manifest to a retirement marker (invisible
+    to every NEW :func:`read_ivf_cells` listing) while KEEPING its data
+    dir for one maintenance cycle — an IN-FLIGHT probe whose plan
+    snapshotted the manifest list just before this pass keeps reading
+    files that still exist (r13, caught by the concurrent soak lane; the
+    same one-cycle grace the pointer swap gives the previous cell-tree
+    version). Dirs a previous pass marked retired are reclaimed on the
+    next pass; see :func:`_retire_ingest_batches` for why only MARKED dirs
+    are ever swept.
 
     Idempotent across its crash window (r9 ADVICE): the append anti-joins
     the pending vec_ids against the cells the pending batches touch (the
@@ -837,50 +779,40 @@ def absorb_ingested(spark: SparkSession, path: str) -> dict:
     Follow with :func:`compact_ivf_cells` when the append pushed file
     counts up.
 
-    Runs under the index's maintenance lease (r10 — mechanical quiescing):
-    concurrent maintenance ops are refused, and live ingest handlers fail
-    fast while the lease is held instead of publishing a batch this fold
-    could race.
-
     Returns ``{"batches_absorbed", "vectors_absorbed"}`` —
     ``vectors_absorbed`` counts vectors actually appended, so a pure
     crash-recovery re-run reports 0."""
     from twitter_event_stream_spark.fsio import (
         _fs,
-        maintenance_lease,
+        live_version_dir,
         manifested_batch_ids,
-        resolve_data_dir,
     )
 
-    with maintenance_lease(spark, path, "absorb_ingested"):
-        cur = resolve_data_dir(spark, path)  # pointer layout (r11) or root
-        ids = manifested_batch_ids(spark, f"{path}/ingest")
-        if not ids:
-            # still sweep grace-expired orphan dirs: a quiesced stream
-            # must not leave the last retired batches on disk forever
-            fs, hpath = _fs(spark, path)
-            _retire_ingest_batches(fs, hpath, path, [])
-            return {"batches_absorbed": 0, "vectors_absorbed": 0}
-        # dedup WITHIN the pending set too: a producer redelivering the
-        # same vec_id across trigger boundaries lands it in two pending
-        # batches (identical rows — deterministic assignment), and a plain
-        # fold would append it twice; one copy survives (r10)
-        pending = _read_pending(spark, path, ids).dropDuplicates(["vec_id"])
-        touched = [r.cell for r in pending.select("cell").distinct().collect()]
-        already = (
-            spark.read.parquet(f"{cur}/cells")
-            .filter(F.col("cell").isin(touched))
-            .select("vec_id")
-        )
-        new = pending.join(already, "vec_id", "left_anti")
-        n = new.count()
-        if n:
-            new.write.mode("append").partitionBy("cell").parquet(
-                f"{cur}/cells"
-            )
-        fs, hpath = _fs(spark, path)
-        _retire_ingest_batches(fs, hpath, path, ids)
-        return {"batches_absorbed": len(ids), "vectors_absorbed": n}
+    fs, hpath = _fs(spark, path)
+    ids = manifested_batch_ids(spark, f"{path}/ingest")
+    if not ids:
+        # still sweep grace-expired orphan dirs: a quiesced stream
+        # must not leave the last retired batches on disk forever
+        _retire_ingest_batches(fs, hpath, path, [])
+        return {"batches_absorbed": 0, "vectors_absorbed": 0}
+    cells = f"{live_version_dir(spark, path)}/cells"
+    # dedup WITHIN the pending set too: a producer redelivering the
+    # same vec_id across trigger boundaries lands it in two pending
+    # batches (identical rows — deterministic assignment), and a plain
+    # fold would append it twice; one copy survives (r10)
+    pending = _read_pending(spark, path, ids).dropDuplicates(["vec_id"])
+    touched = [r.cell for r in pending.select("cell").distinct().collect()]
+    already = (
+        spark.read.parquet(cells)
+        .filter(F.col("cell").isin(touched))
+        .select("vec_id")
+    )
+    new = pending.join(already, "vec_id", "left_anti")
+    n = new.count()
+    if n:
+        new.write.mode("append").partitionBy("cell").parquet(cells)
+    _retire_ingest_batches(fs, hpath, path, ids)
+    return {"batches_absorbed": len(ids), "vectors_absorbed": n}
 
 
 def append_ivf_index(spark: SparkSession, new_vectors: DataFrame, path: str) -> None:
@@ -902,29 +834,17 @@ def append_ivf_index(spark: SparkSession, new_vectors: DataFrame, path: str) -> 
     exceeds ~4× the mean or any probed cell outgrows executor memory —
     the same re-train rule of thumb FAISS documents for IVF lists.
 
-    FENCED and IDEMPOTENT (r11) — the batch-append twin of the streaming
-    ingest protocol (X126), because an unfenced append racing a
-    maintenance swap is a silent loss in BOTH directions: the appended
-    files land in a version directory the swap retires (rows gone), and a
-    mid-rebuild append tears the rebuild's input between its two actions.
-    So: fail fast while the maintenance lease is held; anti-join the
-    assignment against the vec_ids already present in the touched cells
-    (partition-pruned), so only missing vectors append; and re-check the
-    maintenance GENERATION after the append — maintenance that overlapped
-    this call raises :class:`fsio.MaintenanceLeaseHeld` instead of
-    returning as if the rows were durable, and the caller's retry
-    converges to exactly-once through the same anti-join."""
-    from twitter_event_stream_spark.fsio import (
-        assert_no_maintenance,
-        maintenance_generation,
-        resolve_data_dir,
-    )
+    IDEMPOTENT (r11) — the batch-append twin of the streaming ingest
+    protocol (X126): the assignment is anti-joined against the vec_ids
+    already present in the touched cells (partition-pruned), so only
+    missing vectors append and a retried call converges to exactly-once.
+    An append is an index write, so it follows the single-writer contract
+    (fsio module docstring)."""
+    from twitter_event_stream_spark.fsio import live_version_dir
 
-    gen0 = maintenance_generation(spark, path)
-    assert_no_maintenance(spark, path)
     # one resolve (r11): assign against the SAME version's centroids the
-    # append lands in — two separate resolves could span a rebuild flip
-    cur = resolve_data_dir(spark, path)
+    # append lands in
+    cur = live_version_dir(spark, path)
     bc = _stored_centroid_bc(spark, cur)
     assigned = _cell_assign(new_vectors.dropDuplicates(["vec_id"]), bc, 1)
     assigned.persist()
@@ -943,8 +863,6 @@ def append_ivf_index(spark: SparkSession, new_vectors: DataFrame, path: str) -> 
         )
     finally:
         assigned.unpersist()
-    # spaced_read (r13): this verdict certifies the append as durable
-    assert_no_maintenance(spark, path, generation=gen0, spaced_read=True)
 
 
 def rebuild_ivf_index(
@@ -953,98 +871,57 @@ def rebuild_ivf_index(
     n_cells: int | None = None,
     seed: int = 42,
     distributed: bool | None = None,
-    pointer_swap: bool | None = None,
 ) -> dict:
     """The drift rebuild that :func:`ivf_index_stats` skew points at, made
     executable: retrain the quantizer over every VISIBLE vector (absorbed
-    cells plus committed streaming-ingest batches), build a complete fresh
-    index in a staging sibling, then atomically swap the WHOLE index
-    directory into place. Swapping centroids and cells together matters —
-    a probe must never pair old centroids with new cell assignments, so
-    the two-file-read probe (:func:`ivf_topk_indexed`) sees either the old
-    coherent index or the new one. The ingest spill is consumed by the
-    rebuild (its vectors land in the fresh cells) and does not exist in
-    the swapped-in directory.
+    cells plus committed streaming-ingest batches), write a complete fresh
+    version (centroids AND cells), then publish it with one pointer flip
+    (:func:`fsio.pointer_swap_dir`). Publishing centroids and cells
+    together matters — a probe must never pair old centroids with new
+    cell assignments — and :func:`ivf_topk_indexed` resolves the pointer
+    once, reading both from the single version the swap's grace window
+    keeps readable. Runs between ingest batches, per the single-writer
+    contract (fsio module docstring).
 
-    Runs under the index's maintenance lease (r10): an ingest batch
-    publishing between the visible-set snapshot and the swap would be
-    deleted with the old directory — ingest handlers now FAIL FAST while
-    the lease is held instead (fsio.assert_no_maintenance), and a second
-    concurrent maintenance op is refused. On the POINTER layout a probe
-    racing the swap is fully coherent (r11): :func:`ivf_topk_indexed`
-    resolves the pointer once and reads centroids and cells from that
-    single version, which the swap's grace window keeps readable; the
-    legacy rename layout keeps its residual race (old centroids against
-    new cells between a probe's two directory reads) — the documented
-    reason to prefer the pointer layout on non-atomic-rename filesystems.
-    A crash BEFORE the swap leaves the live index untouched plus a stray
-    ``<path>.rebuild-*`` staging dir to clean; a crash after it leaves the
-    new index live. Deterministic: same visible vectors + seed reproduce
-    the same index as a fresh :func:`write_ivf_index` build (pinned by
-    test).
-
-    ``pointer_swap`` picks the publish mechanism (r11): ``None`` keeps the
-    index's current layout; ``True`` publishes the fresh tree as a new
-    ``<path>/_v-*`` version named by a pointer-file flip
-    (:func:`fsio.pointer_swap_dir`) — the S3A-safe form, migrating a
-    legacy index in the same pass — and then retires the consumed ingest
-    batches through the shared one-cycle-grace rule (r13,
-    :func:`_retire_ingest_batches` — manifests now, data dirs next pass;
-    the rename swap removed the whole spill implicitly). A crash between the flip and the
-    retire leaves the consumed batches transiently visible TWICE through
-    :func:`read_ivf_cells` (fresh cells already hold their vectors) —
-    the same bounded at-least-once window :func:`absorb_ingested`
-    documents for its own crash, and the next absorb/rebuild converges it
-    to exactly-once. ``False`` on a pointer-versioned index raises.
+    The ingest spill is consumed by the rebuild (its vectors land in the
+    fresh cells); after the flip the consumed batches retire through the
+    shared one-cycle-grace rule (r13, :func:`_retire_ingest_batches` —
+    manifests now, data dirs next pass). A crash BEFORE the flip leaves
+    the live index untouched plus an unreferenced staged ``_v-*`` dir the
+    next swap reclaims; a crash between the flip and the retire leaves the
+    consumed batches transiently visible TWICE through
+    :func:`read_ivf_cells` (fresh cells already hold their vectors) — the
+    same bounded at-least-once window :func:`absorb_ingested` documents
+    for its own crash, and the next absorb/rebuild converges it to
+    exactly-once. Deterministic: same visible vectors + seed reproduce the
+    same index as a fresh :func:`write_ivf_index` build (pinned by test).
 
     Returns ``{"n_vectors", "n_cells_before", "n_cells_after",
     "pending_batches_consumed"}``."""
     from twitter_event_stream_spark.fsio import (
         _fs,
-        atomic_swap_dir,
-        maintenance_lease,
+        live_version_dir,
         manifested_batch_ids,
-        pointer_swap_dir,
-        resolve_data_dir,
-        stage_version_dir,
+        publish_version,
     )
 
-    with maintenance_lease(spark, path, "rebuild_ivf_index"):
-        cur = resolve_data_dir(spark, path)
-        is_pointer = cur != path
-        if pointer_swap is None:
-            pointer_swap = is_pointer
-        if is_pointer and not pointer_swap:
-            raise ValueError(
-                f"{path} uses the pointer-versioned layout; it cannot be "
-                "rebuilt back to the legacy rename-swap layout"
-            )
-        vectors = read_ivf_cells(spark, path).select("vec_id", "embedding")
-        n = vectors.count()
-        n_before = spark.read.parquet(f"{cur}/centroids").count()
-        pending_ids = manifested_batch_ids(spark, f"{path}/ingest")
-        if pointer_swap:
-            staged = stage_version_dir(path)
-            write_ivf_index(spark, vectors, staged, n_cells, seed, distributed)
-            pointer_swap_dir(spark, path, staged, keep=("ingest",))
-            fs, hpath = _fs(spark, path)
-            # one-cycle grace retirement, shared with absorb (r13): the
-            # manifests go now, the data dirs on the next pass — an
-            # in-flight probe reading the consumed batches keeps its files
-            _retire_ingest_batches(fs, hpath, path, pending_ids)
-        else:
-            tmp = f"{path}.rebuild-{uuid.uuid4().hex}"
-            write_ivf_index(spark, vectors, tmp, n_cells, seed, distributed)
-            atomic_swap_dir(spark, path, tmp)
-        after_dir = resolve_data_dir(spark, path)
-        return {
-            "n_vectors": n,
-            "n_cells_before": n_before,
-            "n_cells_after": spark.read.parquet(
-                f"{after_dir}/centroids"
-            ).count(),
-            "pending_batches_consumed": len(pending_ids),
-        }
+    cur = live_version_dir(spark, path)
+    vectors = read_ivf_cells(spark, path, data_dir=cur).select("vec_id", "embedding")
+    n = vectors.count()
+    n_before = spark.read.parquet(f"{cur}/centroids").count()
+    pending_ids = manifested_batch_ids(spark, f"{path}/ingest")
+    bc = _train_quantizer(spark, vectors, n_cells, seed, distributed)
+    if bc is None:
+        raise ValueError(f"cannot rebuild {path}: it holds no vectors")
+    publish_version(spark, path, lambda d: _write_ivf_tree(spark, vectors, bc, d))
+    fs, hpath = _fs(spark, path)
+    _retire_ingest_batches(fs, hpath, path, pending_ids)
+    return {
+        "n_vectors": n,
+        "n_cells_before": n_before,
+        "n_cells_after": len(bc.value),
+        "pending_batches_consumed": len(pending_ids),
+    }
 
 
 def ivf_index_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -1098,68 +975,50 @@ def compact_ivf_cells(
     drifts toward thousands of tiny files per cell. Compaction rewrites
     the same vectors (content equality, bit-identical probe results, and
     unchanged occupancy stats pinned by test) clustered by cell — one
-    shuffle, each cell in one writer task — then swaps ``<path>/cells``
-    atomically; the centroids file is untouched, so the quantizer and
-    every cell assignment are exactly preserved. Runs under the index's
-    maintenance lease (r10): a streaming append racing the swap now fails
-    fast at its next batch instead of landing files in the doomed
-    directory, and a concurrent maintenance op is refused.
-
-    ``pointer_swap`` picks the publish mechanism (r11): ``None`` keeps the
-    index's current layout; ``True`` publishes a whole fresh version dir —
-    compacted cells plus a byte-exact COPY of the untouched centroids
-    file — through a pointer flip (:func:`fsio.pointer_swap_dir`), the
-    S3A-safe form, migrating a legacy index in the same pass; ``False``
-    on a pointer-versioned index raises.
+    shuffle, each cell in one writer task — into a fresh version dir
+    beside a byte-exact COPY of the untouched centroids file, then flips
+    the pointer (:func:`fsio.pointer_swap_dir`); the quantizer and every
+    cell assignment are exactly preserved. Runs between ingest batches,
+    per the single-writer contract (fsio module docstring).
+    ``pointer_swap`` accepts True or None only (fsio.check_layout_flag).
 
     Returns ``{"files_before", "files_after"}``; trigger on
     :func:`fsio.data_file_count` growth, and note compaction is NOT the
     drift rebuild — occupancy skew still calls for
     :func:`write_ivf_index` (full retrain) per :func:`ivf_index_stats`."""
     from twitter_event_stream_spark.fsio import (
+        check_layout_flag,
         copy_dir,
-        maintenance_lease,
-        pointer_swap_dir,
+        live_version_dir,
+        publish_version,
         resolve_data_dir,
-        stage_version_dir,
     )
 
-    with maintenance_lease(spark, path, "compact_ivf_cells"):
-        cur = resolve_data_dir(spark, path)
-        is_pointer = cur != path
-        if pointer_swap is None:
-            pointer_swap = is_pointer
-        if is_pointer and not pointer_swap:
-            raise ValueError(
-                f"{path} uses the pointer-versioned layout; it cannot be "
-                "compacted back to the legacy rename-swap layout"
+    check_layout_flag("pointer_swap", pointer_swap)
+    cur = live_version_dir(spark, path)
+    cells_dir = f"{cur}/cells"
+    before = data_file_count(spark, cells_dir)
+    cells = spark.read.parquet(cells_dir)
+    if files_per_cell <= 1:
+        df = cells.repartition("cell")
+    else:
+        df = (
+            cells.withColumn(
+                "_salt",
+                F.pmod(F.xxhash64("vec_id"), F.lit(files_per_cell)),
             )
-        cells_dir = f"{cur}/cells"
-        before = data_file_count(spark, cells_dir)
-        cells = spark.read.parquet(cells_dir)
-        if files_per_cell <= 1:
-            df = cells.repartition("cell")
-        else:
-            df = (
-                cells.withColumn(
-                    "_salt",
-                    F.pmod(F.xxhash64("vec_id"), F.lit(files_per_cell)),
-                )
-                .repartition("cell", "_salt")
-                .drop("_salt")
-            )
-        if pointer_swap:
-            staged = stage_version_dir(path)
-            df.write.partitionBy("cell").parquet(f"{staged}/cells")
-            copy_dir(spark, f"{cur}/centroids", f"{staged}/centroids")
-            pointer_swap_dir(spark, path, staged, keep=("ingest",))
-        else:
-            tmp = f"{cells_dir}.compact-{uuid.uuid4().hex}"
-            df.write.partitionBy("cell").parquet(tmp)
-            atomic_swap_dir(spark, cells_dir, tmp)
-        return {
-            "files_before": before,
-            "files_after": data_file_count(
-                spark, f"{resolve_data_dir(spark, path)}/cells"
-            ),
-        }
+            .repartition("cell", "_salt")
+            .drop("_salt")
+        )
+
+    def _write_to(target: str) -> None:
+        df.write.partitionBy("cell").parquet(f"{target}/cells")
+        copy_dir(spark, f"{cur}/centroids", f"{target}/centroids")
+
+    publish_version(spark, path, _write_to)
+    return {
+        "files_before": before,
+        "files_after": data_file_count(
+            spark, f"{resolve_data_dir(spark, path)}/cells"
+        ),
+    }

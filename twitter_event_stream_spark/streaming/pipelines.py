@@ -661,6 +661,10 @@ def dedup_ingest_batch(
     the min-(hamming, doc_id) verdict (duplicate band rows only duplicate
     join candidates) plus the self-identity filter (a doc's own appended
     rows never gate it). Pinned by tests/test_streaming.py's replay test.
+
+    The handler writes the index, so index maintenance runs between its
+    calls, never during one (single-writer contract, fsio module
+    docstring).
     """
     from twitter_event_stream_spark.operators.corpus_full import (
         _simhash_band_rows,
@@ -680,21 +684,7 @@ def dedup_ingest_batch(
         )
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from twitter_event_stream_spark.fsio import (
-            assert_no_maintenance,
-            maintenance_generation,
-        )
-
         spark = batch_df.sparkSession
-        # fail FAST while index maintenance (compaction) holds the lease —
-        # an append racing the atomic swap would land in the doomed dir and
-        # silently lose this batch's band rows; foreachBatch retries the
-        # refused batch after the maintenance window (r10). The generation
-        # snapshot backs the COMMIT-TIME fence below (r11): maintenance
-        # that starts AND finishes inside this batch's compute window
-        # leaves no lease to see, but moves the counter.
-        gen0 = maintenance_generation(spark, index_path)
-        assert_no_maintenance(spark, index_path)
         # construct the plan BEFORE caching anything: simhash64's analysis
         # can raise (e.g. schema drift), and a persist taken outside the
         # try/finally that unpersists it would leak the cached frame for
@@ -813,21 +803,6 @@ def dedup_ingest_batch(
                     index_path,
                     mode="append",
                 )
-                # COMMIT-TIME FENCE (r11, closing the r10 "residual race"):
-                # re-check immediately before the manifest write, with the
-                # batch-start generation snapshot. Maintenance that
-                # acquired mid-batch (lease visible) or ran to completion
-                # mid-batch (generation moved) may have swapped away the
-                # band-row append above — abort BEFORE certifying the
-                # commit; the retried batch republishes atomically and the
-                # X126 already_indexed protocol re-appends only what the
-                # index actually lacks, so the replay converges either way.
-                # spaced_read (r13): this verdict certifies the commit,
-                # and an in-flight maintenance pass is visible ONLY via
-                # the lease — one read blip must not certify
-                assert_no_maintenance(
-                    spark, index_path, generation=gen0, spaced_read=True
-                )
                 # manifest LAST: its presence certifies publish + append
                 # both committed — read_ingested skips unmanifested batches
                 _write_fs_manifest(
@@ -854,7 +829,7 @@ def _publish_atomic(df: DataFrame, final_dir: str, partition_by=None) -> None:
     never an absence."""
     import uuid
 
-    from twitter_event_stream_spark.fsio import _fs, atomic_swap_dir
+    from twitter_event_stream_spark.fsio import _fs
 
     spark = df.sparkSession
     parent, name = final_dir.rstrip("/").rsplit("/", 1)
@@ -865,9 +840,30 @@ def _publish_atomic(df: DataFrame, final_dir: str, partition_by=None) -> None:
     writer.parquet(tmp)
     fs, hpath = _fs(spark, parent)
     if fs.exists(hpath(final_dir)):
-        atomic_swap_dir(spark, final_dir, tmp)
+        _swap_dir(fs, hpath, final_dir, tmp)
     elif not fs.rename(hpath(tmp), hpath(final_dir)):
         raise IOError(f"could not publish {final_dir}")
+
+
+def _swap_dir(fs, hpath, live: str, fresh: str) -> None:
+    """Replace directory ``live`` with ``fresh`` via two renames: move the
+    live dir aside, move the fresh dir into its place, delete the old.
+    Rename is atomic on HDFS and local filesystems, so a concurrent reader
+    resolves either the old file set or the new one (a reader that already
+    listed the old files keeps reading them through open handles). If the
+    second rename fails the old dir is restored, so a crashed swap never
+    leaves the batch dir missing."""
+    import uuid
+
+    old = hpath(f"{live}.old-{uuid.uuid4().hex}")
+    if not fs.rename(hpath(live), old):
+        raise IOError(f"could not move {live} aside")
+    if not fs.rename(hpath(fresh), hpath(live)):
+        fs.rename(old, hpath(live))
+        raise IOError(
+            f"could not move {fresh} into place (previous contents restored)"
+        )
+    fs.delete(old, True)
 
 
 def _write_fs_manifest(
@@ -989,27 +985,18 @@ def compact_rejects(spark, out_dir: str, keep_last: int = 8) -> dict:
     manifests themselves stay per-batch unless that pass also runs — the
     two are independent).
 
-    Runs under ``out_dir``'s maintenance lease (r11) — same rule as
-    :func:`fsio.consolidate_manifests`: blocks no ingest (handlers check
-    the INDEX path's lease), serializes retention passes against each
-    other mechanically.
+    Like every maintenance op it runs between ingest batches
+    (single-writer contract, fsio module docstring).
 
     Returns ``{"folded", "through", "files_before", "files_after"}``."""
-    from twitter_event_stream_spark.fsio import maintenance_lease
-
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    with maintenance_lease(spark, out_dir, "compact_rejects"):
-        return _compact_rejects_locked(spark, out_dir, keep_last)
-
-
-def _compact_rejects_locked(spark, out_dir: str, keep_last: int) -> dict:
     from twitter_event_stream_spark.fsio import (
         _fs,
         data_file_count,
         manifested_batch_ids,
     )
 
+    if keep_last < 1:
+        raise ValueError("keep_last must be >= 1")
     rej = f"{out_dir}/_rejects"
     fs0, hpath0 = _fs(spark, rej)
     if not fs0.exists(hpath0(rej)):
@@ -1077,6 +1064,10 @@ def dedup_ingest_stream(
 
     Returns the started query (caller awaits termination); drain with
     ``trigger(availableNow=True)`` semantics — the trigger is set here.
+    The process running this query is the index's only writer: run
+    maintenance (compaction, reject/manifest retention) after the drain
+    terminates, never beside it (single-writer contract, fsio module
+    docstring).
     """
     return (
         docs_stream.writeStream.foreachBatch(
@@ -1112,27 +1103,21 @@ def vector_ingest_batch(index_path: str) -> Callable[[DataFrame, int], None]:
     publishes nothing. The spill area is folded into the main tree by
     ``absorb_ingested`` on the maintenance cadence — ingest stays
     append-cheap, probes stay pruned, and the main cell files are never
-    touched by a streaming batch."""
+    touched by a streaming batch. That maintenance runs between the
+    handler's calls, never during one (single-writer contract, fsio
+    module docstring)."""
     from twitter_event_stream_spark.operators.vector_search import (
         _cell_assign,
         _stored_centroid_bc,
     )
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from twitter_event_stream_spark.fsio import (
-            assert_no_maintenance,
-            maintenance_generation,
-        )
+        from twitter_event_stream_spark.fsio import resolve_data_dir
 
         spark = batch_df.sparkSession
-        # fail FAST while maintenance (absorb/rebuild/compact) holds the
-        # index lease: a rebuild's whole-dir swap would delete a batch
-        # published after its visible-set snapshot (r10); the refused
-        # batch is retried by foreachBatch after the lease is released.
-        # gen0 backs the commit-time fence before the manifest (r11).
-        gen0 = maintenance_generation(spark, index_path)
-        assert_no_maintenance(spark, index_path)
-        bc = _stored_centroid_bc(spark, index_path)
+        # one resolve: assign against and anti-join with the same version
+        cur = resolve_data_dir(spark, index_path)
+        bc = _stored_centroid_bc(spark, cur)
         assigned = _cell_assign(batch_df, bc, 1)
         assigned.persist()
         try:
@@ -1148,12 +1133,8 @@ def vector_ingest_batch(index_path: str) -> Callable[[DataFrame, int], None]:
             touched = [
                 r.cell for r in assigned.select("cell").distinct().collect()
             ]
-            from twitter_event_stream_spark.fsio import resolve_data_dir
-
             already = (
-                spark.read.parquet(
-                    f"{resolve_data_dir(spark, index_path)}/cells"
-                )
+                spark.read.parquet(f"{cur}/cells")
                 .filter(F.col("cell").isin(touched))
                 .select("vec_id")
             )
@@ -1165,81 +1146,7 @@ def vector_ingest_batch(index_path: str) -> Callable[[DataFrame, int], None]:
                 out_dir = f"{index_path}/ingest"
                 batch_dir = f"{out_dir}/batch={batch_id}"
                 _publish_atomic(fresh, batch_dir, partition_by="cell")
-                # COMMIT-TIME FENCE (r11): a rebuild that acquired (lease)
-                # or completed (generation moved) while this batch computed
-                # may have swapped the whole index away — including the
-                # just-published unmanifested dir. Abort before the
-                # manifest certifies it; the retry re-anti-joins against
-                # the (possibly rebuilt) tree and converges. spaced_read
-                # (r13): one read blip must not certify the commit.
-                assert_no_maintenance(
-                    spark, index_path, generation=gen0, spaced_read=True
-                )
                 _write_fs_manifest(spark, out_dir, batch_id, batch_dir)
-                # POST-MANIFEST RE-CHECK (r13, closing the fence-to-
-                # manifest window the retirement sweep opened): a
-                # maintenance pass acquiring between the fence above and
-                # the manifest rename landing can retire/reclaim through
-                # a STALE same-id marker (checkpoint reset reusing ids)
-                # and delete the dir this manifest certifies — a
-                # committed manifest pointing at deleted data poisons
-                # every reader. The overlap is always observable here:
-                # the pass either still holds the lease or has bumped
-                # the generation. On overlap, RETRACT our manifest and
-                # abort; the retried batch republishes and converges
-                # (same shape as pointer_swap_dir's post-commit
-                # staged-exists retract).
-                try:
-                    assert_no_maintenance(
-                        spark, index_path, generation=gen0,
-                        spaced_read=True,
-                    )
-                except Exception as fence_err:
-                    # retract like pointer_swap_dir does (r13 review):
-                    # retry once spaced, VERIFY absence, and name a
-                    # failed retraction in the raise — an unretracted
-                    # manifest may certify deleted data until the
-                    # retried batch republishes
-                    import time as _time
-
-                    from twitter_event_stream_spark.fsio import (
-                        _fs,
-                        manifest_path,
-                    )
-
-                    fs2, hp2 = _fs(spark, out_dir)
-                    mpath = hp2(manifest_path(out_dir, batch_id))
-                    retracted = False
-                    for attempt in range(2):
-                        try:
-                            fs2.delete(mpath, False)
-                        except Exception:
-                            pass
-                        try:
-                            retracted = not fs2.exists(mpath)
-                        except Exception:
-                            retracted = False
-                        if retracted:
-                            break
-                        if attempt == 0:
-                            _time.sleep(0.1)
-                    if not retracted:
-                        from twitter_event_stream_spark.fsio import (
-                            MaintenanceLeaseHeld,
-                        )
-
-                        # always a constructible type: type(fence_err)
-                        # may need exotic args (Py4JJavaError), and a
-                        # TypeError here would replace the one
-                        # diagnostic an operator needs (r13 review)
-                        raise MaintenanceLeaseHeld(
-                            f"{fence_err}; AND the manifest retraction "
-                            f"for batch {batch_id} FAILED (delete did "
-                            "not succeed after retry) — the committed "
-                            "manifest may certify deleted data until "
-                            "the retried batch republishes"
-                        ) from fence_err
-                    raise
             finally:
                 fresh.unpersist()
         finally:
@@ -1256,7 +1163,9 @@ def vector_ingest_stream(
     cell-partitioned, probe-visible index batch. Returns the started
     availableNow query (caller awaits termination). Semantics — assignment
     arithmetic, commit protocol, replay safety, absorb cadence — live on
-    :func:`vector_ingest_batch`."""
+    :func:`vector_ingest_batch`. Run ``absorb_ingested`` and the other
+    maintenance passes after the drain terminates, in the same process
+    (single-writer contract, fsio module docstring)."""
     return (
         vectors_stream.writeStream.foreachBatch(vector_ingest_batch(index_path))
         .option("checkpointLocation", checkpoint)
