@@ -146,6 +146,7 @@ def bench_streaming(spark, sf_dir: str, n_runs: int = 4) -> dict:
     from twitter_event_stream_spark.streaming.pipelines import (
         bridge_pipeline,
         fanout_foreach_partition,
+        manifested_fanout_files,
     )
     from twitter_event_stream_spark.streaming.replay import (
         replay_stream,
@@ -166,8 +167,11 @@ def bench_streaming(spark, sf_dir: str, n_runs: int = 4) -> dict:
     #
     # Trigger sizing (r8, profiled): per-micro-batch FIXED cost — state
     # store open/commit, source listing, incremental planning — dominates
-    # this pipeline end-to-end; the fan-out writer itself adds only
-    # ~0.3 s/batch on top of routing. Measured delivery at sf0.1:
+    # this pipeline end-to-end. The fan-out writer used to add a Python
+    # (mapInPandas) stage of 8 tasks per batch: ~0.7 s of wall time for
+    # ~15 ms of JVM CPU per task. It now writes through Spark's own text
+    # writer (BENCH_NOTES.md, "Fan-out without a Python stage"). Measured
+    # delivery at sf0.1 with the Python writer:
     # files_per_trigger 2→4→10→20 gives 12k→25k→40k→65k events/s, near-
     # inverse-proportional to batch COUNT. 4 files/trigger (5 micro-batches
     # over the 20-chunk replay) is the throughput point that still
@@ -241,11 +245,9 @@ def bench_streaming(spark, sf_dir: str, n_runs: int = 4) -> dict:
                 prog = progress_summary(q)
                 last_fan = fan
         delivered = 0
-        for root, dirs, files in _os.walk(last_fan):
-            dirs[:] = [d for d in dirs if not d.startswith("_")]  # _manifests
-            for fname in files:
-                with open(_os.path.join(root, fname), "rb") as f:
-                    delivered += sum(1 for _ in f)
+        for e in manifested_fanout_files(last_fan):  # committed files only
+            with open(_os.path.join(last_fan, e["path"]), "rb") as f:
+                delivered += sum(1 for _ in f)
         # run 1 = cold (headline protocol parity): warm median over 2..n
         routing_dt = _stats.median(routing_secs[1:])
         delivery_dt = _stats.median(delivery_secs[1:])

@@ -8,8 +8,11 @@ dispatch → per-subscriber filter → legacy-payload reshape → redelivery ded
 → fan-out, with keep-alive/backpressure as trigger/source options.
 
 Scale: every stage is a narrow transformation except the stream-static
-subscription join (broadcast — subscriptions are the small side) and the
-stateful dedup (state partitioned by event_id hash, bounded by watermark).
+subscription join (broadcast — subscriptions are the small side), the
+stateful dedup (state partitioned by event_id hash, bounded by watermark)
+and the fan-out's one shuffle by client. The fan-out runs in the JVM:
+Spark's partitioned text writer and its file commit, then a driver-side
+rename of each client's file, then a batch manifest written last.
 """
 
 from __future__ import annotations
@@ -223,129 +226,96 @@ def fanout_foreach_batch(
     return handle
 
 
-def _write_fanout_chunks(base_dir: str, batch_id: int):
-    """Executor-side per-client writer for one micro-batch partition,
-    Arrow-batched: payloads arrive as pandas chunks (no per-row Python), and
-    each client's lines are joined and written in one call. Stands in for
-    the reference's per-connection socket writers — a real deployment opens
-    one connection per client here (connection pool per executor) instead
-    of a per-batch file. Module-level so the closure sent to ``mapInPandas``
-    pickles without dragging the DataFrame along."""
-
-    def write(chunks) -> Iterable[pd.DataFrame]:
-        import os
-        import uuid
-
-        # Each (client, batch) file is written to an attempt-unique temp
-        # name and os.replace()d into place only on clean close: replace is
-        # atomic, so duplicate attempts of the same task (speculative
-        # execution, zombie tasks after a driver-perceived failure) can
-        # never interleave partial lines in the final file — last writer
-        # wins with a complete copy, and a crashed attempt leaves only an
-        # orphan .tmp. Plain truncate-then-write ("w" on the final name)
-        # is idempotent for sequential replays but not for concurrent ones.
-        writers: dict[str, tuple[object, str, str]] = {}
-        counts: dict[str, int] = {}
-        ok = False
-        try:
-            for pdf in chunks:  # chunk order == sorted partition order
-                # groupby(sort=False) keeps within-group row order, so ts
-                # ordering from sortWithinPartitions survives.
-                for client, grp in pdf.groupby("client_id", sort=False):
-                    entry = writers.get(client)
-                    if entry is None:
-                        d = os.path.join(base_dir, f"client_id={client}")
-                        os.makedirs(d, exist_ok=True)
-                        final = os.path.join(d, f"batch-{batch_id:09d}.ndjson")
-                        tmp = f"{final}.tmp-{uuid.uuid4().hex}"
-                        entry = (open(tmp, "w", encoding="utf-8"), tmp, final)
-                        writers[client] = entry
-                    entry[0].write("\n".join(grp["payload"]) + "\n")
-                    counts[client] = counts.get(client, 0) + len(grp)
-            ok = True
-        finally:
-            # Per-entry isolation: one writer's close/replace/unlink failing
-            # must not skip cleanup (leaked handles, orphaned .tmp, partial
-            # publish) for the remaining entries — finish them all, then
-            # re-raise the first error so the task attempt still fails.
-            first_err: BaseException | None = None
-            for w, tmp, final in writers.values():
-                try:
-                    w.close()
-                    if ok:
-                        os.replace(tmp, final)
-                    else:
-                        os.unlink(tmp)
-                except BaseException as exc:
-                    if first_err is None:
-                        first_err = exc
-            if first_err is not None:
-                raise first_err
-        # one row per published (client, file): the driver aggregates these
-        # tiny rows into the batch manifest — payloads never leave executors
-        yield pd.DataFrame(
-            {
-                "client_id": list(counts),
-                "path": [
-                    os.path.relpath(writers[c][2], base_dir) for c in counts
-                ],
-                "n_written": [counts[c] for c in counts],
-            }
-        ).astype({"client_id": "object", "path": "object", "n_written": "int64"})
-
-    return write
-
-
 def fanout_foreach_partition(base_dir: str) -> Callable[[DataFrame, int], None]:
     """R9 at scale — demux a micro-batch to per-client streams WITHOUT the
     driver touching a single payload.
 
     ``repartition(client_id)`` routes each client's rows to exactly one
-    task (hash partitioning; several clients may share a task, handled by
-    the per-partition writer map), ``sortWithinPartitions`` restores R11
-    per-client ordering inside the batch, and an Arrow-batched
-    ``mapInPandas`` writer runs on the executors. The driver only
-    coordinates micro-batches and collects one count row per partition, so
-    fan-out bandwidth scales with the executor count — the collect-based
-    double above is O(stream) on one node. Each (client, batch) produces
-    one atomically-replaced file named by batch id, so concatenating a
-    client's files in name order replays its stream in delivery order.
+    task, ``sortWithinPartitions`` restores R11 per-client ordering inside
+    the batch (ties on ``ts`` broken by payload, so the file content is a
+    pure function of the batch), and Spark's own partitioned text writer
+    writes one file per client, all in the JVM. Fan-out bandwidth scales
+    with the executor count — the collect-based double above is O(stream)
+    on one node. Each (client, batch) produces one file named by batch id,
+    so concatenating a client's files in name order replays its stream in
+    delivery order. Rows whose ``client_id`` is null or empty go to no
+    client and are dropped: the partitioned writer would put both in its
+    ``__HIVE_DEFAULT_PARTITION__`` directory. The writer escapes the id in
+    the directory name (``a/b`` → ``client_id=a%2Fb``), so no id can nest
+    or leave ``base_dir``; the manifest carries the raw id.
 
-    Commit protocol (r9): after every partition's files are in place, the
-    driver writes ``_manifests/batch-<id>.json`` — the sorted (client,
-    file, count) list — to a temp name and atomically renames it. The
-    manifest is written LAST, so its existence certifies the batch is
-    fully published: a crash mid-batch leaves data files (or orphan .tmp
-    attempts) but no manifest, and :func:`manifested_fanout_files` makes
-    those invisible to readers. A foreachBatch replay rewrites the same
-    files and the same manifest (deterministic content), so the marker is
-    idempotent too. The rows the driver collects are one per (client,
-    task) — file paths and counts, never payloads."""
+    Commit protocol, in three steps:
+
+    1. Spark's file commit: the batch is written to
+       ``_staging/batch-<id>`` and each task attempt's output becomes
+       visible only when the job commits, so a speculative or zombie
+       attempt can never interleave lines.
+    2. A driver rename: each client's single ``part-*`` file is
+       ``os.replace``d to ``client_id=<c>/batch-<id>.ndjson``, and
+       ``_staging`` is removed (one writer per ``base_dir``, batches in
+       sequence).
+    3. The manifest: the driver writes ``_manifests/batch-<id>.json`` —
+       the sorted (client, file, bytes) list — to a temp name and
+       atomically renames it. It is written LAST, so its existence
+       certifies the batch is fully published: a crash mid-batch leaves
+       staging or data files but no manifest, and
+       :func:`manifested_fanout_files` makes those invisible to readers.
+
+    A foreachBatch replay overwrites the staging dir, renames over any
+    partial final files and rewrites the same manifest (deterministic
+    content), so every step is idempotent. The driver only lists and
+    renames files; payloads never leave the executors."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
         import os
+        import shutil
+        from urllib.parse import unquote
 
-        rows = (
-            batch.repartition("client_id")
+        staging_root = os.path.join(base_dir, "_staging")
+        staging = os.path.join(staging_root, f"batch-{batch_id}")
+        (
+            batch.filter(F.length("client_id") > 0)
+            .repartition("client_id")
             .sortWithinPartitions("client_id", "ts", "payload")
             .select("client_id", "payload")
-            .mapInPandas(
-                _write_fanout_chunks(base_dir, batch_id),
-                "client_id string, path string, n_written long",
-            )
-            .collect()
+            .write.mode("overwrite")
+            # the publish step below relies on both: a stale staging dir
+            # is wiped whole, and each client gets exactly one part file
+            .option("partitionOverwriteMode", "static")
+            .option("maxRecordsPerFile", 0)
+            .partitionBy("client_id")
+            .text(staging)
         )
+        name = f"batch-{batch_id:09d}.ndjson"
+        entries = []
+        for cdir in os.listdir(staging):
+            if not cdir.startswith("client_id="):
+                continue  # _SUCCESS and checksum files
+            parts = [
+                f for f in os.listdir(os.path.join(staging, cdir))
+                if f.startswith("part-")
+            ]
+            if len(parts) != 1:
+                raise RuntimeError(
+                    f"fan-out batch {batch_id}: {len(parts)} part files "
+                    f"for {cdir}, expected one"
+                )
+            rel = os.path.join(cdir, name)
+            final = os.path.join(base_dir, rel)
+            os.makedirs(os.path.dirname(final), exist_ok=True)
+            os.replace(os.path.join(staging, cdir, parts[0]), final)
+            entries.append(
+                {
+                    "client_id": unquote(cdir[len("client_id="):]),
+                    "path": rel,
+                    "bytes": os.stat(final).st_size,
+                }
+            )
+        shutil.rmtree(staging_root)
         _write_local_manifest(
             os.path.join(base_dir, "_manifests"),
             batch_id,
-            sorted(
-                (
-                    {"client_id": r.client_id, "path": r.path, "n": r.n_written}
-                    for r in rows
-                    if r.client_id is not None
-                ),
-                key=lambda e: (e["client_id"], e["path"]),
-            ),
+            sorted(entries, key=lambda e: (e["client_id"], e["path"])),
         )
 
     return handle
@@ -368,10 +338,12 @@ def _write_local_manifest(mdir: str, batch_id: int, entries: list) -> None:
 
 
 def manifested_fanout_files(base_dir: str) -> list[dict]:
-    """Reader side of the fan-out commit protocol: the (client_id, path, n)
-    entries of every COMMITTED batch, in batch order — data files not
-    covered by a manifest (a crashed batch's partial publish, orphan .tmp
-    attempts) are invisible. Concatenating one client's paths in this
+    """Reader side of the fan-out commit protocol: the (client_id, path,
+    bytes) entries of every COMMITTED batch, in batch order — data files
+    not covered by a manifest (a crashed batch's partial publish, the
+    ``_staging`` dir) are invisible. Manifests written before entries
+    carried ``bytes`` carry a row count ``n`` instead; entries are passed
+    through as stored. Concatenating one client's paths in this
     order replays its stream in delivery order. Understands the
     consolidated manifest a retention pass (fsio.consolidate_manifests)
     folds old per-batch files into: newest consolidated file first,
