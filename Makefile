@@ -14,7 +14,7 @@
 
 PY ?= python
 
-.PHONY: test test-deep test-driver-scale verify verify-sf01 bench verify-sf1-probe all record archive-evidence
+.PHONY: test test-deep test-driver-scale verify verify-sf01 bench perfbench perfbench-selfcheck verify-sf1-probe all record archive-evidence
 
 # Evidence retention (r13): move rounds older than the newest two into
 # evidence/archive/ (one-line index regenerated there). `make record`
@@ -40,6 +40,19 @@ verify-sf01:
 
 bench:
 	$(PY) bench.py
+
+# The repository benchmark (BENCHMARK.json, perfbench/README.md): one
+# untraced run per workload, each printing its record and contract line.
+PERFBENCH_SEED ?= 1
+PERFBENCH_SECONDS ?= 10
+
+perfbench:
+	$(PY) perfbench/run.py --workload analytics_sf01 --seed $(PERFBENCH_SEED) --seconds $(PERFBENCH_SECONDS) --trace 0
+	$(PY) perfbench/run.py --workload bridge_stream --seed $(PERFBENCH_SEED) --seconds $(PERFBENCH_SECONDS) --trace 0
+
+# The benchmark's own self-check, about 5 minutes.
+perfbench-selfcheck:
+	$(PY) perfbench/selfcheck.py
 
 # 10x scale-probe lane (r5 verdict #3): synthesizes a ~sf1 fixture in tmp
 # from sf0.1 and asserts ~linear scaling + clean plans on the most

@@ -53,7 +53,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from twitter_event_stream_spark import registry  # noqa: E402
 from twitter_event_stream_spark.operators.vector_search import knn_bench_query  # noqa: E402
-from twitter_event_stream_spark.session import get_spark  # noqa: E402
+from twitter_event_stream_spark.session import get_spark, resolve_cpus  # noqa: E402
 from twitter_event_stream_spark.tables import load_tables  # noqa: E402
 
 #: BASELINE.md row name → engine query. The knn row uses the vectorized
@@ -280,6 +280,9 @@ def bench_streaming(spark, sf_dir: str, n_runs: int = 4) -> dict:
             "avg_processed_rows_per_sec": int(
                 prog["avg_processed_rows_per_second"]
             ),
+            # where the last delivery run's data batches spent their time
+            "phase_median_ms": prog["phase_median_ms"],
+            "state_commit_median_ms": prog["state_commit_median_ms"],
         }
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
@@ -579,7 +582,7 @@ def main() -> None:
         # is verifiable from the record itself — $SPARK_GRAFT_CPUS is
         # honored by session.py (master local[cpus], shuffle.partitions =
         # cpus) and defaultParallelism is the JVM's own report of it.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count(),
+        "cpus": resolve_cpus(),
         "default_parallelism": spark.sparkContext.defaultParallelism,
         # selection verdict IN-BAND (r14): how many attempts ran, which
         # one this record is, and whether it passed the coherence test

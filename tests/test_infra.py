@@ -15,6 +15,11 @@ from twitter_event_stream_spark.operators.multimodal import (
     dedup_by_content,
     with_payload,
 )
+from twitter_event_stream_spark.session import (
+    CHECKPOINT_FILE_MANAGER_KEY,
+    LOCAL_CHECKPOINT_FILE_MANAGER,
+    configure_session,
+)
 from twitter_event_stream_spark.tables import table
 
 
@@ -2447,3 +2452,64 @@ def test_partitioned_version_dir_read_is_correct_despite_warning(
     os.makedirs(empty)
     with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
         spark.read.parquet(empty).count()
+
+
+class _StubConf:
+    """The two ``RuntimeConfig`` calls ``configure_session`` makes: ``get``
+    raises for an unset key without a default, as Spark does."""
+
+    def __init__(self, values: dict[str, str]) -> None:
+        self.values = dict(values)
+
+    def get(self, key, *default):
+        if key in self.values:
+            return self.values[key]
+        if default:
+            return default[0]
+        raise KeyError(key)
+
+    def set(self, key, value) -> None:
+        self.values[key] = value
+
+
+class _StubSession:
+    def __init__(self, values: dict[str, str]) -> None:
+        from types import SimpleNamespace
+
+        self.conf = _StubConf(values)
+        self.sparkContext = SimpleNamespace(defaultParallelism=3)
+
+
+@pytest.mark.parametrize(
+    "master, preset, want_manager, want_partitions",
+    [
+        ("local[4]", None, LOCAL_CHECKPOINT_FILE_MANAGER, "3"),
+        ("local[4]", "com.example.StoreManager", "com.example.StoreManager", "3"),
+        ("spark://cluster:7077", None, None, "200"),
+    ],
+    ids=["local-unset", "local-user-value", "cluster"],
+)
+def test_configure_session_checkpoint_manager_scope(
+    master, preset, want_manager, want_partitions
+):
+    """The FileSystem-based checkpoint file manager is chosen only for a
+    local master whose key is unset: an explicit value is kept, and a
+    cluster session is left untouched (no key, no shuffle clamp)."""
+    values = {"spark.master": master, "spark.sql.shuffle.partitions": "200"}
+    if preset is not None:
+        values[CHECKPOINT_FILE_MANAGER_KEY] = preset
+    stub = _StubSession(values)
+    configure_session(stub)
+    assert stub.conf.values.get(CHECKPOINT_FILE_MANAGER_KEY) == want_manager
+    assert stub.conf.values["spark.sql.shuffle.partitions"] == want_partitions
+
+
+def test_local_session_uses_filesystem_checkpoint_manager(spark, tmp_path):
+    """The test session is local, so every stream it starts checkpoints
+    through the FileSystem-based manager."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert manager.getClass().getName() == LOCAL_CHECKPOINT_FILE_MANAGER

@@ -25,6 +25,7 @@ from twitter_event_stream_spark.streaming.pipelines import (
     windowed_counts,
 )
 from twitter_event_stream_spark.streaming.replay import (
+    EVENTS_SCHEMA,
     replay_stream,
     run_available_now,
     write_replay_chunks,
@@ -233,6 +234,79 @@ def test_bridge_pipeline_fanout_partitioned(spark, sf_dir, chunk_dir):
     assert {c: len(p) for c, p in got.items()} == want
     sample = next(iter(got.values()))[0]
     assert '"event"' in sample and '"created_at"' in sample
+
+
+def test_bridge_dedup_state_survives_restart(spark, tmp_path_factory):
+    """R6 across a restart: the bridge's dedup state is rebuilt from the
+    checkpoint's delta files, so an event redelivered after a restart is
+    not delivered again. First run: three one-file batches through
+    `bridge_pipeline` → `fanout_foreach_partition`, then the query stops.
+    Second run, same checkpoint and fan-out dir: a new file holding new
+    events plus a byte-identical copy of an event from the first run.
+    Every event reaches its client exactly once. All event times lie within
+    the 10-minute watermark, so only the restored state can drop the copy."""
+    import datetime
+    import json
+    import os
+
+    base = str(tmp_path_factory.mktemp("bridge_restart"))
+    src, ckpt, out = (os.path.join(base, d) for d in ("src", "ckpt", "out"))
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def event(i):
+        return (i, t0 + datetime.timedelta(seconds=i), i % 6, "click", float(i), None)
+
+    def write_chunk(n, rows):
+        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.parquet(
+            os.path.join(src, f"chunk={n:03d}")
+        )
+
+    def run():
+        q = (
+            bridge_pipeline(replay_stream(spark, src), subs)
+            .writeStream.foreachBatch(fanout_foreach_partition(out))
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        return q
+
+    subs = spark.createDataFrame(
+        [(u, f"client_{u % 3}") for u in range(6)], "user_id long, client_id string"
+    )
+    for n in range(3):
+        write_chunk(n, [event(i) for i in range(n * 20, n * 20 + 20)])
+    first = run()
+    assert [p.numInputRows for p in first.recentProgress][:3] == [20, 20, 20]
+
+    redelivered = event(25)
+    write_chunk(3, [event(i) for i in range(60, 80)] + [redelivered])
+    second = run()
+    data_batches = [p for p in second.recentProgress if p.numInputRows]
+    assert [p.numInputRows for p in data_batches] == [21]
+    assert data_batches[0].batchId == first.lastProgress.batchId + 1, (
+        "restart did not resume the checkpoint"
+    )
+
+    ids: dict[int, int] = {}
+    for e in manifested_fanout_files(out):
+        with open(os.path.join(out, e["path"]), encoding="utf-8") as f:
+            for line in f:
+                payload = json.loads(line)
+                assert e["client_id"] == f"client_{payload['id'] % 6 % 3}"
+                ids[payload["id"]] = ids.get(payload["id"], 0) + 1
+    assert ids == {i: 1 for i in range(80)}, "redelivered event reached a client twice"
+    # the restored state lives in checksummed delta files
+    state = os.path.join(ckpt, "state", "0")
+    deltas = [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(state)
+        for f in files
+        if f.endswith(".delta")
+    ]
+    assert deltas
+    assert all(os.path.exists(d + ".crc") for d in deltas)
 
 
 def test_decode_events_roundtrip(spark, sf_dir):
@@ -1645,7 +1719,8 @@ def test_dlq_stream_split_and_observed_metrics(spark, sf_dir):
 
 def test_progress_capture_listener(spark, chunk_dir):
     """R11 push path: a registered StreamingQueryListener sees every
-    micro-batch's progress; its rollup matches the pull-path summary."""
+    micro-batch's progress; its rollup matches the pull-path summary,
+    including the per-phase and state-commit medians of a stateful query."""
     import time
 
     from twitter_event_stream_spark.streaming.observe import (
@@ -1656,7 +1731,11 @@ def test_progress_capture_listener(spark, chunk_dir):
     cap = ProgressCapture()
     spark.streams.addListener(cap)
     try:
-        stream = replay_stream(spark, chunk_dir, files_per_trigger=5)
+        stream = (
+            as_event_time(replay_stream(spark, chunk_dir, files_per_trigger=5))
+            .withWatermark("ts", "10 minutes")
+            .dropDuplicatesWithinWatermark(["event_id"])
+        )
         ckpt = tempfile.mkdtemp(prefix="tes_ckpt_listener_")
         q = run_available_now(stream, "listener_probe", ckpt)
         q.awaitTermination(120)
@@ -1669,6 +1748,16 @@ def test_progress_capture_listener(spark, chunk_dir):
         pushed = progress_summary(cap.rows_for(q))
         assert pushed["n_input_rows"] == pulled["n_input_rows"] > 0
         assert pushed["n_batches"] >= pulled["n_batches"] > 0
+        phases = pulled["phase_median_ms"]
+        assert {
+            "latestOffset", "getBatch", "queryPlanning", "addBatch",
+            "walCommit", "commitOffsets", "triggerExecution",
+        } <= set(phases)
+        assert phases["triggerExecution"] >= phases["addBatch"] > 0
+        assert pushed["phase_median_ms"] == phases
+        assert pushed["state_commit_median_ms"] == pulled["state_commit_median_ms"]
+        data_rows = [r for r in cap.rows_for(q) if r["num_input_rows"] > 0]
+        assert data_rows and all(len(r["state_commit_ms"]) == 1 for r in data_rows)
         shutil.rmtree(ckpt, ignore_errors=True)
     finally:
         spark.streams.removeListener(cap)

@@ -11,6 +11,22 @@ they hold even on a session the driver created for us):
   for µs data, and the loader's ns normalization guard never fires.
 - AQE on (coalesce partitions, skew-join split) — the 100 TB posture relies on
   runtime re-planning at shuffle boundaries (SURVEY §4.2).
+- Local master only, and only where the deployment left the key unset:
+  ``spark.sql.streaming.checkpointFileManagerClass`` is Spark's
+  ``FileSystemBasedCheckpointFileManager``. Spark's default, the
+  FileContext-based manager, goes through Hadoop's local FileContext, which
+  without the native ``libhadoop`` forks ``readlink`` for every rename and
+  ``chmod`` for every create — the offset log, the commit log and every
+  state-store delta of every micro-batch. The FileSystem-based manager
+  renames with ``File.renameTo``, so a rename forks nothing; only the
+  ``chmod`` of a create remains, and a bridge batch forks about a third as
+  often (BENCH_NOTES.md). Atomicity is the same on the local FS: a
+  FileContext no-overwrite rename (``AbstractFileSystem.renameInternal``)
+  is also an existence check followed by ``rename(2)``, and both managers
+  write to a temp file and rename it into place. Spark's ``ChecksumCheckpointFileManager`` still
+  wraps the chosen manager, so checkpoint checksums and state-store commit
+  validation are unchanged. A cluster keeps its own choice, as it does for
+  shuffle partitions.
 
 Scale posture: shuffle partitions default to the core count locally; on a real
 cluster this is expected to be overridden (e.g. 2-3x total cores, or left to
@@ -47,6 +63,19 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
 
+#: The checkpoint file manager a local session uses unless one is configured
+#: (see the module docstring for why, and why it is as atomic).
+CHECKPOINT_FILE_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def resolve_cpus() -> int:
+    """The local core count: ``$SPARK_GRAFT_CPUS`` if set, else all cores."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 4
+
 
 def configure_session(spark: SparkSession) -> SparkSession:
     """Apply the engine's runtime-settable conventions to an existing session.
@@ -62,19 +91,25 @@ def configure_session(spark: SparkSession) -> SparkSession:
             # Non-settable in this context (e.g. static conf on a locked
             # session) — the engine still works, parity may need the conf.
             pass
-    # Local mode with Spark's untouched 200-partition default: clamp shuffle
-    # partitions to the core count (the BASELINE.md config). 200 tasks per
-    # tiny local shuffle is pure scheduler overhead; AQE coalesces *after*
-    # the shuffle but the initial partitioning still costs. On a cluster
-    # (non-local master) the engine never overrides the deployment's choice.
+    # Local mode only — on a cluster (non-local master) the engine never
+    # overrides the deployment's choice:
+    # - with Spark's untouched 200-partition default, clamp shuffle
+    #   partitions to the core count (the BASELINE.md config). 200 tasks per
+    #   tiny local shuffle is pure scheduler overhead; AQE coalesces *after*
+    #   the shuffle but the initial partitioning still costs;
+    # - with no checkpoint file manager configured, use the FileSystem-based
+    #   one (module docstring).
     try:
-        if spark.conf.get("spark.master", "").startswith("local") and (
-            spark.conf.get("spark.sql.shuffle.partitions") == "200"
-        ):
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(spark.sparkContext.defaultParallelism),
-            )
+        if spark.conf.get("spark.master", "").startswith("local"):
+            if spark.conf.get("spark.sql.shuffle.partitions") == "200":
+                spark.conf.set(
+                    "spark.sql.shuffle.partitions",
+                    str(spark.sparkContext.defaultParallelism),
+                )
+            if spark.conf.get(CHECKPOINT_FILE_MANAGER_KEY, None) is None:
+                spark.conf.set(
+                    CHECKPOINT_FILE_MANAGER_KEY, LOCAL_CHECKPOINT_FILE_MANAGER
+                )
     except Exception:
         pass
     return spark
@@ -88,12 +123,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a local SparkSession with the engine conventions.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores. Local mode is a
-    single JVM with N executor threads; the partitioning discipline in the
-    operators is what makes the same plans hold on a multi-executor cluster.
+    ``cpus`` defaults to :func:`resolve_cpus`. Local mode is a single JVM
+    with N executor threads; the partitioning discipline in the operators is
+    what makes the same plans hold on a multi-executor cluster.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 0)) or os.cpu_count() or 4
+        cpus = resolve_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
     builder = (

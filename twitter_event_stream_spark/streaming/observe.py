@@ -21,6 +21,7 @@ the number a production listener ships to a metrics store.
 
 from __future__ import annotations
 
+from statistics import median
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -66,7 +67,11 @@ def _progress_row(p: Any) -> dict:
         "num_input_rows": p.numInputRows or 0,
         "input_rows_per_second": p.inputRowsPerSecond or 0.0,
         "processed_rows_per_second": p.processedRowsPerSecond or 0.0,
-        "batch_duration_ms": (p.durationMs or {}).get("triggerExecution", 0),
+        # every phase Spark timed (latestOffset, getBatch, queryPlanning,
+        # addBatch, walCommit, commitOffsets, triggerExecution, ...)
+        "duration_ms": dict(p.durationMs or {}),
+        # one entry per state operator: its state-store commit time
+        "state_commit_ms": [s.commitTimeMs or 0 for s in state],
         "state_rows_total": sum(s.numRowsTotal or 0 for s in state),
         "state_memory_bytes": sum(s.memoryUsedBytes or 0 for s in state),
         "watermark": (p.eventTime or {}).get("watermark"),
@@ -113,8 +118,11 @@ class ProgressCapture(StreamingQueryListener):
 
 def progress_summary(source: StreamingQuery | list[dict]) -> dict:
     """R11 pull path — roll recent progress up to the numbers a dashboard
-    (or a test) wants: batches, rows, rates, state size, watermark, and the
-    summed ``observe`` counters.
+    (or a test) wants: batches, rows, rates, state size, watermark, the
+    summed ``observe`` counters, and where a micro-batch's time goes — the
+    median of each ``durationMs`` phase and of the state-store commit,
+    over the batches that read input (a trailing no-data batch would pull
+    every median toward zero).
 
     Accepts a (finished) query — reads ``recentProgress``, complete for an
     ``availableNow`` run after ``awaitTermination`` PROVIDED the run fits
@@ -138,6 +146,8 @@ def progress_summary(source: StreamingQuery | list[dict]) -> dict:
             for k, v in metrics.items():
                 if isinstance(v, (int, float)):
                     observed[k] = observed.get(k, 0) + v
+    phases = sorted({k for r in active for k in r["duration_ms"]})
+    commits = [ms for r in active for ms in r["state_commit_ms"]]
     return {
         "n_batches": len(rows),
         "n_input_rows": sum(r["num_input_rows"] for r in rows),
@@ -154,4 +164,9 @@ def progress_summary(source: StreamingQuery | list[dict]) -> dict:
             (r["watermark"] for r in reversed(rows) if r["watermark"]), None
         ),
         "observed": observed,
+        "phase_median_ms": {
+            k: median(r["duration_ms"][k] for r in active if k in r["duration_ms"])
+            for k in phases
+        },
+        "state_commit_median_ms": median(commits) if commits else 0.0,
     }
