@@ -1912,22 +1912,14 @@ def test_index_gate_rejects_unexact_radius(spark, tmp_path_factory):
 
 def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory):
     """r9 — the drift rebuild made executable: retraining over every
-    VISIBLE vector (absorbed + committed streaming-ingest batches) must
-    consume the spill, publish a coherent whole index, and reproduce
-    BIT-IDENTICALLY the index a fresh build over the same vector set
-    produces (the quantizer sample is a TakeOrdered pure function of the
-    data). The consumed spill batches are retired after the flip with the
-    one-cycle grace (r13)."""
-    import os
-
+    vector of the live version — streamed ingest included — must publish a
+    coherent whole index that reproduces BIT-IDENTICALLY the index a fresh
+    build over the same vector set produces (the quantizer sample is a
+    TakeOrdered pure function of the data)."""
     from pyspark.sql import functions as F
 
-    from twitter_event_stream_spark.fsio import (
-        manifested_batch_ids,
-        resolve_data_dir,
-    )
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
-        absorb_ingested,
         ivf_index_stats,
         ivf_topk_indexed,
         rebuild_ivf_index,
@@ -1945,20 +1937,10 @@ def test_rebuild_ivf_index(spark, sf_dir, tmp_path_factory):
     vector_ingest_batch(base)(
         e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding"), 0
     )
-    assert manifested_batch_ids(spark, f"{base}/ingest") == [0]
 
     rep = rebuild_ivf_index(spark, base)
     n_all = e.filter(F.col("embedding").isNotNull()).count()
     assert rep["n_vectors"] == n_all
-    assert rep["pending_batches_consumed"] == 1
-    # spill consumed: nothing pending. One-cycle grace retirement (r13):
-    # the consumed batch's manifest is gone but its data dir survives
-    # this pass for in-flight probes; the next maintenance pass reclaims
-    # it as a grace-expired orphan
-    assert manifested_batch_ids(spark, f"{base}/ingest") == []
-    assert os.path.exists(f"{base}/ingest/batch=0")
-    absorb_ingested(spark, base)
-    assert not os.path.exists(f"{base}/ingest/batch=0")
     stats = ivf_index_stats(spark, base).collect()
     assert sum(r.n_vectors for r in stats) == n_all
 
@@ -2082,7 +2064,7 @@ def test_consolidate_manifests_rerun_preserves_committed_file(
         os.makedirs(d)
         with open(f"{d}/part-0.parquet", "w") as f:
             f.write("x")
-        pl._write_fs_manifest(spark, out, bid, d)
+        pl._write_fs_manifest(spark, out, bid)
 
     rep = consolidate_manifests(spark, out, keep_last=2)
     assert rep["folded"] == 8 and rep["through"] == 7
@@ -2092,7 +2074,7 @@ def test_consolidate_manifests_rerun_preserves_committed_file(
     # simulate the crash window: a prior run committed consolidated-7 but
     # died before deleting some folded per-batch manifests — recreate them
     for bid in (0, 1, 2):
-        pl._write_fs_manifest(spark, out, bid, f"{out}/batch={bid}")
+        pl._write_fs_manifest(spark, out, bid)
     assert manifested_batch_ids(spark, out) == list(range(10))
 
     rep2 = consolidate_manifests(spark, out, keep_last=2)

@@ -1196,33 +1196,26 @@ def test_ingest_commit_protocol_random_crash_interleavings(spark, scenario):
 # --- X123 vector ingest protocol under random crash interleavings ----------
 
 
-def _attempt_vector_ingest(idx_path, bdf, bid, crash_after):
-    """One at-least-once attempt of vector batch ``bid``: the two protocol
-    writes (cell-partitioned publish, manifest) instrumented to die after
-    ``crash_after`` of them complete (2 = clean). Returns True when the
-    attempt reached the manifest. An attempt that correctly publishes
-    NOTHING (fully-absorbed retry) also returns True — it is complete."""
+def _attempt_vector_ingest(idx_path, bdf, bid, crash=None):
+    """One at-least-once attempt of vector batch ``bid``: ``crash`` is None
+    (clean), ``"before"`` (the handler dies before its append starts) or
+    ``"after"`` (it dies after the append committed, before it returns).
+    Returns True when the handler returned."""
     from unittest import mock
 
+    import twitter_event_stream_spark.operators.vector_search as VS
     import twitter_event_stream_spark.streaming.pipelines as P
 
-    state = {"n": 0}
+    real = VS.append_ivf_index
 
-    def gated(real):
-        def inner(*a, **k):
-            if state["n"] >= crash_after:
-                raise _SimCrash()
-            res = real(*a, **k)
-            state["n"] += 1
-            return res
+    def gated(*a, **k):
+        if crash == "before":
+            raise _SimCrash()
+        real(*a, **k)
+        if crash == "after":
+            raise _SimCrash()
 
-        return inner
-
-    with mock.patch.object(
-        P, "_publish_atomic", gated(P._publish_atomic)
-    ), mock.patch.object(
-        P, "_write_fs_manifest", gated(P._write_fs_manifest)
-    ):
+    with mock.patch.object(VS, "append_ivf_index", gated):
         try:
             P.vector_ingest_batch(idx_path)(bdf, bid)
             return True
@@ -1230,19 +1223,23 @@ def _attempt_vector_ingest(idx_path, bdf, bid, crash_after):
             return False
 
 
+_VECTOR_MAINT = ("none", "compact_ivf_cells", "rebuild_ivf_index")
+
+
 @st.composite
 def _vector_crash_scenarios(draw):
-    """Per batch: 0-1 crashing attempts (dying after 0 or 1 completed
-    writes); between/after batch deliveries, maintenance events drawn from
-    {none, absorb, crashed-absorb-then-absorb}; plus an optional
-    foreachBatch RETRY of batch 0 late in the run (the composition that
-    found the replay-after-absorb duplication)."""
+    """Per batch: 0-2 crashing attempts, each dying before or after the
+    append; after every attempt, crashed or clean, one maintenance event
+    drawn from {none, compact_ivf_cells, rebuild_ivf_index}; plus an
+    optional foreachBatch RETRY of batch 0 late in the run."""
     crashes = [
-        draw(st.lists(st.integers(min_value=0, max_value=1), max_size=1))
+        draw(st.lists(st.sampled_from(["before", "after"]), max_size=2))
         for _ in range(2)
     ]
-    maint = [draw(st.sampled_from(["none", "absorb", "crash_absorb"]))
-             for _ in range(2)]
+    maint = [
+        [draw(st.sampled_from(_VECTOR_MAINT)) for _ in range(len(c) + 1)]
+        for c in crashes
+    ]
     late_retry = draw(st.booleans())
     return crashes, maint, late_retry
 
@@ -1252,27 +1249,27 @@ def _vector_crash_scenarios(draw):
 @given(_vector_crash_scenarios())
 def test_vector_protocol_random_crash_interleavings(spark, sf_dir, scenario):
     """r10 — the X123 protocol as a functional spec over random
-    compositions of publish/manifest crashes, replays, absorb, CRASHED
-    absorb, and post-absorb retries, with OVERLAPPING batches (cross-batch
-    redelivery): after every event the visible distinct vec_id set equals
-    base ∪ committed batches; after every completed absorb the tree holds
-    no duplicate; and the final probe results equal a fresh index built
-    over the same visible set. Maintenance runs between batch deliveries,
-    the single-writer cadence."""
+    compositions of handler crashes before and after the append, replays,
+    compactions, rebuilds and late retries, with OVERLAPPING batches
+    (cross-batch redelivery): after every event no vec_id is visible
+    twice and the visible set equals base ∪ committed batches, plus a
+    crashed batch exactly when its append finished; at the end the cell
+    tree equals a one-shot assignment of that set against the stored
+    centroids. Maintenance runs between handler calls, the single-writer
+    cadence."""
     import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
-    from twitter_event_stream_spark.fsio import (
-        manifested_batch_ids,
-        resolve_data_dir,
-    )
+    from twitter_event_stream_spark.fsio import resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
-        _read_pending,
-        absorb_ingested,
+        _cell_assign,
+        _stored_centroid_bc,
+        compact_ivf_cells,
         ivf_topk_indexed,
         read_ivf_cells,
+        rebuild_ivf_index,
         write_ivf_index,
     )
     from twitter_event_stream_spark.tables import table
@@ -1297,74 +1294,56 @@ def test_vector_protocol_random_crash_interleavings(spark, sf_dir, scenario):
     idx = f"{root}/idx"
     try:
         write_ivf_index(spark, base_df, idx)
-        committed: set[int] = set()
+        appended: set[int] = set()  # committed, or crashed after the append
 
-        def cells_dir():
-            return f"{resolve_data_dir(spark, idx)}/cells"
+        def want():
+            return base_ids.union(*(ids_of[b] for b in appended))
 
         def visible_ok():
-            want = base_ids.union(*(ids_of[b] for b in committed)) if committed else base_ids
-            got = {
+            got = [
                 r.vec_id
                 for r in read_ivf_cells(spark, idx).select("vec_id").collect()
-            }
-            assert got == want, (sorted(got ^ want), sorted(committed))
+            ]
+            assert len(got) == len(set(got)), "a vec_id is visible twice"
+            assert set(got) == want(), (
+                sorted(set(got) ^ want()), sorted(appended)
+            )
 
-        def crash_absorb():
-            ids = manifested_batch_ids(spark, f"{idx}/ingest")
-            if ids:
-                _read_pending(spark, idx, ids).dropDuplicates(
-                    ["vec_id"]
-                ).write.mode("append").partitionBy("cell").parquet(
-                    cells_dir()
-                )
+        def maintain(op):
+            if op == "compact_ivf_cells":
+                compact_ivf_cells(spark, idx)
+            elif op == "rebuild_ivf_index":
+                rebuild_ivf_index(spark, idx)
+            visible_ok()
 
         for b in range(2):
-            for crash_after in crashes[b]:
-                assert not _attempt_vector_ingest(
-                    idx, batches[b], b, crash_after
-                )
-                visible_ok()  # a crashed attempt exposes nothing
-            assert _attempt_vector_ingest(idx, batches[b], b, crash_after=2)
-            committed.add(b)
+            for crash, op in zip(crashes[b], maint[b]):
+                assert not _attempt_vector_ingest(idx, batches[b], b, crash)
+                if crash == "after":
+                    appended.add(b)
+                visible_ok()
+                maintain(op)
+            assert _attempt_vector_ingest(idx, batches[b], b)
+            appended.add(b)
             visible_ok()
-            if maint[b] == "crash_absorb":
-                crash_absorb()  # duplicates transient, set unchanged
-                visible_ok()
-            if maint[b] in ("absorb", "crash_absorb"):
-                absorb_ingested(spark, idx)
-                visible_ok()
-                cells = spark.read.parquet(cells_dir())
-                assert cells.count() == cells.select("vec_id").distinct().count()
+            maintain(maint[b][-1])
 
         if late_retry:
-            # foreachBatch retry of batch 0 arbitrarily late — possibly
-            # after its vectors were absorbed into the main tree
-            assert _attempt_vector_ingest(idx, batches[0], 0, crash_after=2)
+            # foreachBatch retry of batch 0 arbitrarily late — after batch
+            # 1 and any compaction or rebuild
+            assert _attempt_vector_ingest(idx, batches[0], 0)
             visible_ok()
 
-        # converge: no duplicates, and the tree's (vec_id, cell) content is
-        # EXACTLY the one-shot stored-centroid assignment of the visible
-        # set — the quantizer is frozen across every ingest/absorb path, so
-        # however the crashes interleaved, the final tree must be the one a
-        # single clean assignment produces (content equality implies probe
-        # equality: identical candidates, identical ranking arithmetic)
-        absorb_ingested(spark, idx)
-        visible_ok()
-        cells = spark.read.parquet(cells_dir())
-        n_vis = cells.select("vec_id").distinct().count()
-        assert cells.count() == n_vis
-        from twitter_event_stream_spark.operators.vector_search import (
-            _cell_assign,
-            _stored_centroid_bc,
-        )
-
+        # converge: the tree's (vec_id, cell) content is EXACTLY the
+        # one-shot stored-centroid assignment of the visible set — however
+        # the crashes, compactions and rebuilds interleaved (content
+        # equality implies probe equality: identical candidates, identical
+        # ranking arithmetic)
+        cells = spark.read.parquet(f"{resolve_data_dir(spark, idx)}/cells")
         bc = _stored_centroid_bc(spark, idx)
-        visible_vecs = e.filter(
-            F.col("vec_id").isin(
-                list(base_ids.union(*(ids_of[b] for b in committed)))
-            )
-        ).select("vec_id", "embedding")
+        visible_vecs = e.filter(F.col("vec_id").isin(list(want()))).select(
+            "vec_id", "embedding"
+        )
         want_cells = sorted(
             (r.vec_id, r.cell)
             for r in _cell_assign(visible_vecs, bc, 1).collect()

@@ -1510,6 +1510,50 @@ def test_ingest_manifest_commit_protocol(spark, tmp_path_factory):
     assert got2 == {10, 30}, "unmanifested batch leaked to reader"
 
 
+def test_ingest_manifest_kept_on_replay(spark, tmp_path_factory):
+    """A replay of a committed corpus-sink batch leaves its manifest as it
+    is — same file (inode) and same bytes, ``{"batch_id": id}`` — so the
+    batch is never hidden from read_ingested / read_ingest_rejects by a
+    delete-then-rename of its manifest."""
+    import json
+    import os
+
+    from twitter_event_stream_spark.operators.corpus_full import (
+        write_simhash_index,
+    )
+    from twitter_event_stream_spark.streaming.pipelines import (
+        dedup_ingest_batch,
+        read_ingested,
+    )
+
+    base = str(tmp_path_factory.mktemp("manifest_replay"))
+    write_simhash_index(
+        spark,
+        spark.createDataFrame(
+            [(1, "seed document entirely different vocabulary alpha beta")],
+            "doc_id long, text string",
+        ),
+        f"{base}/idx",
+    )
+    batch = spark.createDataFrame(
+        [(10, "ten bright red lanterns floating over the quiet harbor")],
+        "doc_id long, text string",
+    )
+    handler = dedup_ingest_batch(f"{base}/idx", f"{base}/out")
+    handler(batch, 0)
+    mpath = f"{base}/out/_manifests/batch-000000000.json"
+
+    def snapshot():
+        with open(mpath, "rb") as f:
+            return os.stat(mpath).st_ino, f.read()
+
+    first = snapshot()
+    assert json.loads(first[1]) == {"batch_id": 0}
+    handler(batch, 0)  # at-least-once replay of the committed batch
+    assert snapshot() == first
+    assert {r.doc_id for r in read_ingested(spark, f"{base}/out").collect()} == {10}
+
+
 def test_dedup_ingest_checkpoint_continuation(spark, tmp_path_factory):
     """r9 — exactly-once ACROSS streaming runs through the checkpoint: a
     second availableNow run over the same checkpoint/out/index processes
@@ -1822,66 +1866,14 @@ def test_bridge_backfill_dedup_survivor_deterministic(spark):
         assert run(order) == first
 
 
-def test_absorb_ingested_crash_replay_idempotent(spark, sf_dir, tmp_path_factory):
-    """r9 ADVICE (medium): a crash AFTER absorb's cells append but BEFORE
-    the manifest deletes must not duplicate vectors on re-run — the re-run
-    detects the already-appended vec_ids (anti-join against the touched
-    cells) and appends nothing, then retires the manifests."""
-    from twitter_event_stream_spark.fsio import resolve_data_dir
-    from twitter_event_stream_spark.operators.vector_search import (
-        _read_pending,
-        absorb_ingested,
-        ivf_topk_indexed,
-        read_ivf_cells,
-        write_ivf_index,
-    )
-    from twitter_event_stream_spark.streaming.pipelines import (
-        vector_ingest_batch,
-    )
-
-    e = table(spark, sf_dir, "embeddings")
-    half = e.filter(F.col("vec_id") % 2 == 0)
-    rest = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
-    base = str(tmp_path_factory.mktemp("absorbcrash")) + "/idx"
-    write_ivf_index(spark, half, base)
-    vector_ingest_batch(base)(rest, 0)
-    n_all = e.filter(F.col("embedding").isNotNull()).count()
-    probes = e.filter(F.col("vec_id") < 20)
-    res_before = sorted(
-        map(tuple, ivf_topk_indexed(spark, base, probes, k=5).collect())
-    )
-
-    # simulate the crashed absorb: the append committed, manifests intact
-    cells_dir = f"{resolve_data_dir(spark, base)}/cells"
-    _read_pending(spark, base, [0]).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(cells_dir)
-    # the crash window itself: vectors transiently visible twice
-    assert read_ivf_cells(spark, base).count() > n_all
-
-    # recovery re-run: appends nothing, retires the batch, no duplicates
-    rep = absorb_ingested(spark, base)
-    assert rep == {"batches_absorbed": 1, "vectors_absorbed": 0}
-    cells = spark.read.parquet(cells_dir)
-    assert cells.count() == n_all
-    assert cells.select("vec_id").distinct().count() == n_all
-    res_after = sorted(
-        map(tuple, ivf_topk_indexed(spark, base, probes, k=5).collect())
-    )
-    assert res_after == res_before
-
-
 def test_vector_ingest_replay_after_absorb_converges(spark, sf_dir, tmp_path_factory):
-    """r10 — the at-least-once composition across the maintenance cadence:
-    (a) a batch retried AFTER absorb folded its first attempt must publish
-    nothing (its vectors already live in the main tree), never a second
-    visible copy a probe would rank twice; (b) the same vec_id redelivered
-    in TWO pending batches is folded once by absorb."""
-    import os
-
-    from twitter_event_stream_spark.fsio import resolve_data_dir
+    """r10 — the at-least-once composition of the vector ingest handler:
+    a vec_id redelivered across two batches, or twice within one batch,
+    and a whole batch replayed under its own id, are each visible exactly
+    once straight after ingest — the append anti-joins against what the
+    touched cells already hold, so there is no transient duplicate for a
+    probe to rank twice."""
     from twitter_event_stream_spark.operators.vector_search import (
-        absorb_ingested,
         ivf_topk_indexed,
         read_ivf_cells,
         write_ivf_index,
@@ -1895,51 +1887,52 @@ def test_vector_ingest_replay_after_absorb_converges(spark, sf_dir, tmp_path_fac
     odd = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
     base = str(tmp_path_factory.mktemp("replayabsorb")) + "/idx"
     write_ivf_index(spark, half, base)
+    handler = vector_ingest_batch(base)
     n_all = e.filter(F.col("embedding").isNotNull()).count()
     probes = e.filter(F.col("vec_id") < 20)
 
-    # (a) ingest, absorb, then REPLAY the absorbed batch
-    vector_ingest_batch(base)(odd, 0)
-    assert absorb_ingested(spark, base)["batches_absorbed"] == 1
+    def visible_once(n):
+        ids = read_ivf_cells(spark, base).select("vec_id")
+        assert ids.count() == n
+        assert ids.distinct().count() == n
+
+    # a whole batch replayed under its own id (foreachBatch retry)
+    handler(odd, 0)
+    visible_once(n_all)
     res_before = sorted(
         map(tuple, ivf_topk_indexed(spark, base, probes, k=5).collect())
     )
-    vector_ingest_batch(base)(odd, 0)  # foreachBatch retry post-absorb
-    assert not os.path.exists(f"{base}/ingest/_manifests/batch-000000000.json")
-    visible = read_ivf_cells(spark, base)
-    assert visible.count() == n_all
-    assert visible.select("vec_id").distinct().count() == n_all
+    handler(odd, 0)
+    visible_once(n_all)
     assert (
         sorted(map(tuple, ivf_topk_indexed(spark, base, probes, k=5).collect()))
         == res_before
     )
 
-    # (b) same vec_ids redelivered in two pending batches -> absorbed once
+    # the same vec_ids redelivered across two batches, and twice within
+    # one batch
     redeliver = e.filter(
         (F.col("vec_id") < 10) & F.col("embedding").isNotNull()
     ).select((F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding")
     n_re = redeliver.count()
-    vector_ingest_batch(base)(redeliver, 5)
-    vector_ingest_batch(base)(redeliver, 6)
-    # both pending: transiently visible twice (documented), distinct once
-    assert read_ivf_cells(spark, base).count() == n_all + 2 * n_re
-    rep = absorb_ingested(spark, base)
-    assert rep["batches_absorbed"] == 2 and rep["vectors_absorbed"] == n_re
-    cells = spark.read.parquet(f"{resolve_data_dir(spark, base)}/cells")
-    assert cells.count() == n_all + n_re
-    assert cells.select("vec_id").distinct().count() == n_all + n_re
+    assert n_re > 0
+    handler(redeliver, 5)
+    visible_once(n_all + n_re)
+    handler(redeliver, 6)
+    visible_once(n_all + n_re)
+    twice = redeliver.select(
+        (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
+    )
+    handler(twice.unionByName(twice), 7)
+    visible_once(n_all + 2 * n_re)
 
 
 def test_vector_ingest_stream_end_to_end(spark, sf_dir, tmp_path_factory):
     """X123: streaming vector ingest into a persisted IVF index — committed
-    batches are probe-visible and stats-visible, a handler replay is
-    byte-equivalent (no duplicate vectors), an unmanifested batch dir is
-    invisible, and absorb folds the spill into the main tree without
-    changing any probe result."""
-    import os
-
+    batches are probe-visible and stats-visible, a handler replay adds
+    nothing, and a batch with only null embeddings changes nothing."""
+    from twitter_event_stream_spark.fsio import data_file_count, resolve_data_dir
     from twitter_event_stream_spark.operators.vector_search import (
-        absorb_ingested,
         ivf_index_stats,
         ivf_topk_indexed,
         read_ivf_cells,
@@ -1955,8 +1948,6 @@ def test_vector_ingest_stream_end_to_end(spark, sf_dir, tmp_path_factory):
     rest = e.filter(F.col("vec_id") % 2 == 1).select("vec_id", "embedding")
     base = str(tmp_path_factory.mktemp("vecingest")) + "/idx"
     write_ivf_index(spark, half, base)
-    # no pending batches -> the visible set is the PLAIN cells scan
-    assert "Union" not in read_ivf_cells(spark, base)._jdf.queryExecution().toString()
 
     # stream the odd vectors in 2 micro-batches
     src = str(tmp_path_factory.mktemp("vecsrc"))
@@ -1983,149 +1974,24 @@ def test_vector_ingest_stream_end_to_end(spark, sf_dir, tmp_path_factory):
     stats = ivf_index_stats(spark, base).collect()
     assert sum(r.n_vectors for r in stats) == n_all
 
-    # handler replay with an already-committed batch id: byte-equivalent
-    def pending_rows():
-        return sorted(
+    def tree():
+        cells = f"{resolve_data_dir(spark, base)}/cells"
+        rows = sorted(
             (r.vec_id, r.cell)
-            for r in spark.read.option("basePath", f"{base}/ingest").parquet(
-                *[p for p in [f"{base}/ingest/batch=0", f"{base}/ingest/batch=1"]]
-            ).collect()
+            for r in spark.read.parquet(cells).select("vec_id", "cell").collect()
         )
+        return rows, data_file_count(spark, base)
 
-    before = pending_rows()
+    # handler replay with an already-committed batch id adds nothing
+    before = tree()
     vector_ingest_batch(base)(rest.filter(F.col("vec_id") % 4 == 1), 0)
-    assert pending_rows() == before, "replay duplicated or dropped vectors"
+    assert tree() == before, "replay duplicated or dropped vectors"
 
-    # a batch that assigns to nothing (all-null embeddings) publishes
-    # nothing: no manifest, no dir — and so can't poison the readers
+    # a batch that assigns to nothing (all-null embeddings) writes nothing
     null_batch = spark.createDataFrame(
         [(900001, None), (900002, None)], "vec_id long, embedding array<float>"
     )
     vector_ingest_batch(base)(null_batch, 7)
-    assert not os.path.exists(f"{base}/ingest/batch=7")
-    assert not os.path.exists(f"{base}/ingest/_manifests/batch-000000007.json")
-    assert read_ivf_cells(spark, base).count() == n_all
-
-    # crash-sim: a batch dir without a manifest is invisible
-    rest.limit(5).write.mode("overwrite").parquet(f"{base}/ingest/batch=99")
-    assert read_ivf_cells(spark, base).count() == n_all
-    import shutil as _sh
-
-    _sh.rmtree(f"{base}/ingest/batch=99")
-
-    # absorb: spill folds into the cell tree, probe results unchanged
-    rep = absorb_ingested(spark, base)
-    assert rep["batches_absorbed"] == 2 and rep["vectors_absorbed"] == len(before)
-    # one-cycle grace retirement (r13, caught by the soak lane): the
-    # manifests go now — invisible to every NEW read_ivf_cells listing —
-    # but the data dirs survive this pass, so an in-flight probe whose
-    # plan snapshotted the manifest list mid-absorb keeps its files
-    assert not os.path.exists(f"{base}/ingest/_manifests/batch-000000000.json")
-    assert os.path.exists(f"{base}/ingest/batch=0"), (
-        "retired batch dirs must survive one maintenance cycle"
-    )
-    assert read_ivf_cells(spark, base).count() == n_all
-    assert "Union" not in read_ivf_cells(spark, base)._jdf.queryExecution().toString()
+    assert tree() == before
     res_after = ivf_topk_indexed(spark, base, probes, k=5).collect()
     assert sorted(map(tuple, res_after)) == sorted(map(tuple, res_before))
-    # absorb again: nothing pending -> clean no-op, and it reclaims the
-    # grace-expired orphan dirs from the previous pass
-    assert absorb_ingested(spark, base) == {
-        "batches_absorbed": 0,
-        "vectors_absorbed": 0,
-    }
-    assert not os.path.exists(f"{base}/ingest/batch=0"), (
-        "the next pass must reclaim grace-expired orphan dirs"
-    )
-
-
-def test_ingest_retirement_republished_id_grace(spark, sf_dir, tmp_path_factory):
-    """r13 (third review pass) — a batch id RE-PUBLISHED after an earlier
-    retirement (stale .retired marker coexisting with a fresh manifest,
-    e.g. a checkpoint reset reusing ids) keeps the full one-cycle grace:
-    the absorb pass consuming the fresh publish must not reclaim its dir
-    through the stale marker (zero grace would re-open the in-flight
-    probe 404), and the re-mark resets the cycle so the NEXT pass
-    reclaims it."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from twitter_event_stream_spark.operators.vector_search import (
-        absorb_ingested,
-        read_ivf_cells,
-        write_ivf_index,
-    )
-    from twitter_event_stream_spark.streaming.pipelines import (
-        vector_ingest_batch,
-    )
-    from twitter_event_stream_spark.tables import table
-
-    e = table(spark, sf_dir, "embeddings").filter(
-        F.col("embedding").isNotNull()
-    )
-    base = str(tmp_path_factory.mktemp("regrace")) + "/idx"
-    write_ivf_index(spark, e.filter(F.col("vec_id") % 2 == 0), base)
-
-    first = e.filter(F.col("vec_id") % 4 == 1).select("vec_id", "embedding")
-    vector_ingest_batch(base)(first, 0)
-    assert absorb_ingested(spark, base)["batches_absorbed"] == 1
-    marker = f"{base}/ingest/_manifests/.retired-000000000.json"
-    assert os.path.exists(marker) and os.path.exists(f"{base}/ingest/batch=0")
-
-    # the SAME id re-published with fresh vectors while the stale marker
-    # still exists
-    second = e.filter(F.col("vec_id") % 4 == 3).select("vec_id", "embedding")
-    vector_ingest_batch(base)(second, 0)
-    assert os.path.exists(f"{base}/ingest/batch=0")
-    n_all = read_ivf_cells(spark, base).select("vec_id").distinct().count()
-
-    rep = absorb_ingested(spark, base)
-    assert rep["batches_absorbed"] == 1
-    assert os.path.exists(f"{base}/ingest/batch=0"), (
-        "the pass consuming a re-published id must NOT reclaim its dir "
-        "through the stale marker — that would be zero grace"
-    )
-    assert os.path.exists(marker), "the re-mark must reset the grace cycle"
-    assert (
-        read_ivf_cells(spark, base).select("vec_id").distinct().count()
-        == n_all
-    )
-
-    # next pass: grace elapsed, dir reclaimed
-    assert absorb_ingested(spark, base)["batches_absorbed"] == 0
-    assert not os.path.exists(f"{base}/ingest/batch=0")
-    assert not os.path.exists(marker)
-
-
-def test_retire_rename_false_paths(spark, tmp_path_factory):
-    """r13 — _retire_ingest_batches' rename-False handling: an id listed
-    for retirement whose per-batch manifest is missing raises with the
-    repair pointer, with or without a consolidated manifest beside it
-    (the consolidate_manifests misuse on a spill), instead of leaving the
-    batch silently manifested forever."""
-    import json
-    import os
-
-    import pytest
-
-    import twitter_event_stream_spark.fsio as fsio
-    from twitter_event_stream_spark.operators.vector_search import (
-        _retire_ingest_batches,
-    )
-
-    base = str(tmp_path_factory.mktemp("retire")) + "/idx"
-    mdir = f"{base}/ingest/_manifests"
-    os.makedirs(mdir)
-    os.makedirs(f"{base}/ingest/batch=5")
-    fs, hp = fsio._fs(spark, base)
-
-    with pytest.raises(IOError, match="could not retire"):
-        _retire_ingest_batches(fs, hp, base, [5])
-    with open(f"{mdir}/consolidated-000000005.json", "w") as f:
-        f.write(json.dumps({"through": 5, "manifests": []}))
-    with pytest.raises(IOError, match="consolidate_manifests must not run"):
-        _retire_ingest_batches(fs, hp, base, [5])
-    assert os.path.exists(f"{base}/ingest/batch=5"), (
-        "an unretired batch's data must stay"
-    )

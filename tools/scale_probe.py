@@ -385,12 +385,16 @@ def ingest_gate_probe(spark, sf_dir: str) -> tuple[float, int]:
 def vector_ingest_probe(spark, sf_dir: str) -> tuple[float, int]:
     """r9 (X123): ONE streamed vector micro-batch (1000 smallest odd
     vec_ids — constant across scales; sf0.1 has ~1000 odd vectors total)
-    into a persisted IVF index built (untimed) over the even half. The timed handler is centroid read + Arrow-batched assignment +
-    cell-partitioned publish + manifest — NONE of which touches the main
-    cell files or scales with the index, so the expected ratio is ~1x:
-    streamed ingest cost is a function of the batch, not the corpus.
-    That flatness is the lane's claim; a corpus-sized term creeping into
-    the handler (e.g. an accidental index scan) fails the budget."""
+    into a persisted IVF index built (untimed) over the even half. The
+    timed handler is centroid read + Arrow-batched assignment + an
+    anti-join against the vec_ids of the cells the batch touches + a
+    cell-partitioned append. Only the touched cells are scanned, and
+    auto-sized cells hold a constant number of vectors, so the scan is
+    bounded by the batch's cell count times that occupancy, and the
+    expected ratio is ~1x: streamed ingest cost is a function of the
+    batch, not the corpus. That flatness is the lane's claim; a
+    corpus-sized term creeping into the handler (e.g. an unpruned index
+    scan) fails the budget."""
     import tempfile
 
     from twitter_event_stream_spark.operators.vector_search import (
@@ -490,8 +494,8 @@ def soak_probe(
       batch through ``dedup_ingest_batch`` (SimHash gate + corpus publish
       + band-row append) and one vector batch through
       ``vector_ingest_batch``, each followed by one maintenance pass
-      rotating ``compact_band_rows``, ``absorb_ingested`` and
-      ``compact_ivf_cells`` — the batch-id cadence of an ingest query
+      alternating ``compact_band_rows`` and ``compact_ivf_cells`` — the
+      batch-id cadence of an ingest query
       running its own maintenance between handler calls. Passes are
       spaced at least ``SOAK_MAINT_SPACING_SEC`` apart, per the documented
       grace-window rule;
@@ -503,9 +507,9 @@ def soak_probe(
       * SimHash index: no duplicate (band, doc_id) rows, every doc has
         exactly 4 band rows, base ⊆ visible ⊆ base ∪ ingested, and every
         PUBLISHED survivor (manifested corpus batch) is indexed;
-      * IVF index: no duplicate vec_id among visible vectors
-        (cells ∪ committed ingest batches), base ⊆ visible ⊆ base ∪
-        ingested, and every vector of every COMMITTED batch is visible;
+      * IVF index: no duplicate vec_id among visible vectors (the live
+        version's cells), base ⊆ visible ⊆ base ∪ ingested, and every
+        vector of every COMMITTED batch is visible;
       * ≥ 2 maintenance passes COMPLETED (≥ 1 under crash injection —
         kills must not starve healthy completions; callers may RAISE the
         floor via ``min_completed``, r16 — the deepened 10x/healthy lane
@@ -521,28 +525,24 @@ def soak_probe(
     writer dies inside the documented crash windows while probes keep
     reading —
 
-    - ``_retire_ingest_batches`` raises BEFORE running: the pass
-      absorbed but never retired (the X134 window — committed batches
-      left transiently double-visible);
     - ``pointer_swap_dir`` raises AFTER the real swap commits: the new
       version is live but the pass's post-publish steps never ran (the
       X127-shaped window);
-    - **r15 (r14 verdict #4)**: the INGEST handlers die too —
-      ``_write_fs_manifest`` raises BEFORE the manifest lands, so the
-      batch is fully published (data dir + band-row/cell append) but
-      never certified (the X116/X126 publish-without-manifest window).
-      The writer treats the death exactly as foreachBatch would — the
-      batch REPLAYS — and the already_indexed / anti-join convergence
-      protocol must land it exactly once, with readers seeing only
-      committed-prefix state.
+    - **r15 (r14 verdict #4)**: the INGEST handlers die too. The
+      document handler dies in ``_write_fs_manifest`` BEFORE the manifest
+      lands, so the batch is fully published (data dir + band-row append)
+      but never certified (the X116 publish-without-manifest window). The
+      vector handler dies AFTER ``append_ivf_index`` commits and before
+      it returns, so the batch is visible but foreachBatch would count it
+      as failed. The writer treats either death exactly as foreachBatch
+      would — the batch REPLAYS — and the already_indexed / anti-join
+      convergence protocol must land it exactly once.
 
     The first eligible call always crashes — once for the maintenance
-    seams, and once per handler kind for the manifest seam (so a short
-    window still exercises every injection); later calls crash with
-    probability ``crash_rate`` from a seeded RNG. Before the converged
-    invariants are checked, one clean ``absorb_ingested`` recovery pass
-    runs (the documented convergence step after any crash), and the SAME
-    invariants as the healthy lane must then hold, plus
+    seam, and once per handler kind (so a short window still exercises
+    every injection); later calls crash with probability ``crash_rate``
+    from a seeded RNG. The SAME converged invariants as the healthy lane
+    must then hold, with no recovery step, plus
     ``maint_crashes >= 1``, ``ingest_crashes >= 1`` AND — r15, the r14
     verdict's top task: the crash lane must not DISPLACE the healthy
     regime — at least one maintenance pass COMPLETED healthily
@@ -558,7 +558,6 @@ def soak_probe(
         write_simhash_index,
     )
     from twitter_event_stream_spark.operators.vector_search import (
-        absorb_ingested,
         compact_ivf_cells,
         ivf_topk_indexed,
         read_ivf_cells,
@@ -655,16 +654,7 @@ def soak_probe(
                     return True
                 return rng.random() < crash_rate
 
-            real_retire = VS._retire_ingest_batches
             real_swap = fsio.pointer_swap_dir
-
-            def gated_retire(*a, **k):
-                if _should_crash():
-                    raise _SoakCrash(
-                        "injected: died between absorb and retirement "
-                        "(the X134 window)"
-                    )
-                return real_retire(*a, **k)
 
             def gated_swap(*a, **k):
                 res = real_swap(*a, **k)  # the real swap COMMITS first
@@ -675,31 +665,41 @@ def soak_probe(
                     )
                 return res
 
-            # ---- ingest-handler kills (r15, r14 verdict #4): die between
-            # the batch publish and its manifest — the handler's work is
-            # fully on disk but uncertified; the replay must converge
+            # ---- ingest-handler kills (r15, r14 verdict #4): the handler's
+            # work is on disk but the handler never returns; the replay
+            # must converge
             ing_first = {"docs": True, "vecs": True}
             ing_rng = _random.Random(crash_seed + 1)
             real_manifest = PL._write_fs_manifest
+            real_append = VS.append_ivf_index
 
-            def gated_manifest(*a, **k):
-                kind = handler_kind["now"]
+            def _ingest_should_crash(kind) -> bool:
                 if ing_first[kind]:
                     ing_first[kind] = False  # >= 1 kill per handler kind
-                    crash = True
-                else:
-                    crash = ing_rng.random() < crash_rate
-                if crash:
+                    return True
+                return ing_rng.random() < crash_rate
+
+            def gated_manifest(*a, **k):
+                if _ingest_should_crash("docs"):
                     raise _SoakCrash(
                         "injected: ingest handler died between the batch "
-                        "publish and its manifest (the X116/X126 window)"
+                        "publish and its manifest (the X116 window)"
                     )
                 return real_manifest(*a, **k)
 
+            def gated_append(*a, **k):
+                res = real_append(*a, **k)  # the real append COMMITS first
+                if handler_kind["now"] == "vecs" and _ingest_should_crash("vecs"):
+                    raise _SoakCrash(
+                        "injected: vector handler died after its append "
+                        "committed, before it returned"
+                    )
+                return res
+
             for mod, name, real, gate in (
-                (VS, "_retire_ingest_batches", real_retire, gated_retire),
                 (fsio, "pointer_swap_dir", real_swap, gated_swap),
                 (PL, "_write_fs_manifest", real_manifest, gated_manifest),
+                (VS, "append_ivf_index", real_append, gated_append),
             ):
                 setattr(mod, name, gate)
                 undo_gates.append(
@@ -710,7 +710,6 @@ def soak_probe(
 
         maint_ops = (
             ("compact_band_rows", lambda: compact_band_rows(spark, sidx)),
-            ("absorb_ingested", lambda: absorb_ingested(spark, ividx)),
             ("compact_ivf_cells", lambda: compact_ivf_cells(spark, ividx)),
         )
         last_pass = {"end": 0.0}
@@ -814,13 +813,6 @@ def soak_probe(
                 # never rmtree under a live op; the tmp dir leaks instead
                 report["leaked_tmp"] = base
             return wall, report
-
-        if crash_rate > 0:
-            # the protocol's documented convergence step after any crash:
-            # one clean absorb folds/retires whatever a killed pass left
-            # half-done, and the invariants below must then hold EXACTLY
-            # as in the healthy lane
-            absorb_ingested(spark, ividx)
 
         # ---- converged invariants (quiesced now: all threads joined)
         problems = report["probe_errors"] + report["maint_errors"] + \

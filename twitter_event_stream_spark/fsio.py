@@ -8,15 +8,14 @@ calls against a path string. Same JVM FileSystem API the X117 manifest
 writer uses (streaming/pipelines._write_fs_manifest).
 
 Single-writer contract: the process that drives an index's ingest is the
-ONLY writer of that index. Maintenance — ``absorb_ingested``,
-``compact_band_rows``, ``compact_ivf_cells``, ``rebuild_ivf_index``,
-``write_*_index`` rewrites, ``compact_rejects``,
-:func:`consolidate_manifests` — runs in that same process, in sequence
-with ingest: after an ``availableNow`` drain of the ingest stream, or
-between handler calls. Ingest and maintenance therefore never overlap,
-and Structured Streaming's offset log plus the batch-id-keyed, idempotent
-sinks give exactly-once without locks. Running maintenance from a second
-concurrent process is not supported.
+ONLY writer of that index. Maintenance — ``compact_band_rows``,
+``compact_ivf_cells``, ``rebuild_ivf_index``, ``write_*_index`` rewrites,
+``compact_rejects``, :func:`consolidate_manifests` — runs in that same
+process, in sequence with ingest: after an ``availableNow`` drain of the
+ingest stream, or between handler calls. Ingest and maintenance
+therefore never overlap, and Structured Streaming's offset log plus the
+batch-id-keyed, idempotent sinks give exactly-once without locks.
+Running maintenance from a second concurrent process is not supported.
 
 Every index uses one layout: data lives in ``<root>/_v-<id>`` version
 dirs, and the newest ``_current-<n>`` pointer file names the live one
@@ -212,7 +211,7 @@ def pointer_swap_dir(spark, root: str, staged: str) -> None:
     retained that cycle and the next healthy swap reclaims them. Cleanup
     failures are harmless: stragglers are invisible to resolution and the
     next swap retries the deletes. Non-version entries beside the
-    versions (the IVF ingest spill) are never touched."""
+    versions are never touched."""
     fs, hpath = _fs(spark, root)
     staged = staged.rstrip("/")
     parent, vname = staged.rsplit("/", 1)
@@ -274,14 +273,6 @@ def check_layout_flag(name: str, value: bool | None) -> None:
         )
 
 
-def manifest_path(out_dir: str, batch_id: int) -> str:
-    """THE per-batch manifest file name (r13 — previously four
-    independent copies of the ``batch-<id:09d>.json`` scheme; a writer
-    and the retirer disagreeing on the name would strand a committed
-    manifest)."""
-    return f"{out_dir}/_manifests/batch-{batch_id:09d}.json"
-
-
 def _read_json_file(fs, path) -> dict:
     stream = fs.open(path)
     try:
@@ -313,8 +304,8 @@ def manifested_batch_ids(spark, out_dir: str) -> list[int]:
     """Sorted ids of batches with a COMMITTED manifest under
     ``out_dir/_manifests`` (the X117 commit protocol: the manifest is the
     batch's last write, so its presence certifies the data landed). Shared
-    by every manifested reader — corpus sink, reject trail, vector-ingest
-    spill — so the commit rule cannot drift between them. Reads both
+    by every manifested reader — corpus sink and reject trail — so the
+    commit rule cannot drift between them. Reads both
     per-batch manifest files and the consolidated manifest a retention
     pass (:func:`consolidate_manifests`) folds old ones into; the union is
     deduped, so the crash window between writing a new consolidated file
@@ -333,23 +324,6 @@ def manifested_batch_ids(spark, out_dir: str) -> list[int]:
     return sorted(ids)
 
 
-def read_manifest_entries(spark, out_dir: str) -> list[dict]:
-    """Every committed batch's manifest CONTENT in batch order — per-batch
-    files plus the newest consolidated file, deduped by batch id (a batch
-    present in both is identical content; per-batch wins arbitrarily).
-    Shared by readers that need the payload (the fan-out file list), not
-    just the ids."""
-    fs, hpath = _fs(spark, out_dir)
-    per_batch, consolidated = _list_manifest_files(fs, hpath, out_dir)
-    entries: dict[int, dict] = {}
-    if consolidated:
-        for m in _read_json_file(fs, consolidated[-1][1])["manifests"]:
-            entries[m["batch_id"]] = m
-    for bid, p in per_batch.items():
-        entries[bid] = _read_json_file(fs, p)
-    return [entries[bid] for bid in sorted(entries)]
-
-
 def consolidate_manifests(spark, out_dir: str, keep_last: int = 8) -> dict:
     """Retention pass for the ``_manifests`` bookkeeping dir (r9 verdict
     "What's missing" #5): at one manifest per micro-batch, a month of
@@ -364,10 +338,7 @@ def consolidate_manifests(spark, out_dir: str, keep_last: int = 8) -> dict:
     leaves both visible and the readers' dedup-by-batch-id absorbs it; a
     re-run finishes the deletes. Runs between ingest batches like every
     maintenance op (single-writer contract, module docstring) and never
-    touches the newest ``keep_last >= 1`` manifests. Do NOT run on a vector-ingest
-    spill area (``<ivf index>/ingest``) — ``absorb_ingested`` retires
-    those manifests individually and would not see batches folded here;
-    that dir never accretes anyway, absorb deletes as it folds.
+    touches the newest ``keep_last >= 1`` manifests.
 
     Returns ``{"folded", "through", "files_before", "files_after"}``."""
     if keep_last < 1:

@@ -510,8 +510,7 @@ def write_ivf_index(
 
     The index lives in the pointer-versioned layout
     (fsio.resolve_data_dir): the centroid+cells tree is one ``<path>/_v-*``
-    version named by a ``_current-<n>`` pointer file, and the
-    streaming-ingest spill stays beside it at ``<path>/ingest``. A build
+    version named by a ``_current-<n>`` pointer file. A build
     over an existing index is a retrain — maintenance, per the
     single-writer contract (fsio module docstring) — and publishes a fresh
     version atomically. ``pointer`` accepts True or None only
@@ -620,199 +619,32 @@ def _stored_centroid_bc(spark: SparkSession, path: str):
     return spark.sparkContext.broadcast(cm)
 
 
-def _read_pending(spark: SparkSession, path: str, ids: list[int]) -> DataFrame:
-    """One scan relation over the given committed ingest batches — shared
-    by the reader and the absorber so the spill layout can't drift."""
-    return (
-        spark.read.option("basePath", f"{path}/ingest")
-        .parquet(*[f"{path}/ingest/batch={i}" for i in ids])
-        .select("vec_id", "embedding", "cell")
-    )
-
-
 def read_ivf_cells(
     spark: SparkSession, path: str, data_dir: str | None = None
 ) -> DataFrame:
-    """Every VISIBLE vector of a persisted IVF index: the absorbed cell
-    tree plus all COMMITTED streaming-ingest batches (X123 spill area,
-    ``<path>/ingest/batch=<id>`` — only manifested batches, same X117
-    commit rule as the text-corpus sink). With nothing pending this
-    returns the plain ``cells`` scan unchanged — same plan, same dynamic
-    partition pruning — so batch-only deployments never pay for the
-    streaming seam. Pending batches are cell-partitioned too (one scan
-    relation via ``basePath``), so a probe's cell join prunes their files
-    the same way; the spill stays small because :func:`absorb_ingested`
-    folds it into the main tree on the maintenance cadence.
+    """Every vector of a persisted IVF index: the ``cells`` scan of its
+    live version. Streamed batches append into that same tree
+    (``pipelines.vector_ingest_batch`` calls :func:`append_ivf_index`), so
+    there is nothing else to read, and a probe's cell join prunes the scan
+    to the probed cells' files.
 
     ``data_dir`` lets a caller pin the RESOLVED version directory it
     already holds (r11 snapshot coherence): a probe that resolved the
     pointer once reads centroids AND cells from that same version even if
-    a rebuild flips the pointer mid-probe. The ingest spill is always
-    read from the ROOT — it lives beside the versions."""
-    from twitter_event_stream_spark.fsio import (
-        manifested_batch_ids,
-        resolve_data_dir,
-    )
+    a rebuild flips the pointer mid-probe."""
+    from twitter_event_stream_spark.fsio import resolve_data_dir
 
     if data_dir is None:
         data_dir = resolve_data_dir(spark, path)
-    cells = spark.read.parquet(f"{data_dir}/cells")
-    ids = manifested_batch_ids(spark, f"{path}/ingest")
-    if not ids:
-        return cells
-    return cells.select("vec_id", "embedding", "cell").unionByName(
-        _read_pending(spark, path, ids)
-    )
-
-
-def _retire_ingest_batches(fs, hpath, path: str, ids) -> None:
-    """Retire consumed streaming-ingest batches with a ONE-CYCLE GRACE
-    window (r13 — the concurrent soak lane caught an in-flight probe
-    404ing mid-read): deleting a batch's manifest makes it invisible to
-    every NEW :func:`read_ivf_cells` listing, but a probe whose plan
-    snapshotted the manifest list just before this pass still reads the
-    batch's FILES — deleting the data dir in the same breath fails that
-    probe loudly (FAILED_READ_FILE), the exact hazard the pointer swap's
-    previous-version retention already covers for the cell tree.
-
-    The grace is MARKER-BASED (r13 second review pass): each consumed
-    batch's manifest is RENAMED to a dot-prefixed retirement marker
-    (``_manifests/.retired-<id>.json`` — invisible to the manifest
-    listing, so the batch is gone from every new reader at that instant),
-    and a pass reclaims only dirs a PREVIOUS pass marked — they have had
-    a full maintenance cycle. A dir is therefore deleted ONLY when its
-    manifest once existed and was retired; a batch dir whose publisher
-    crashed between publish and manifest stays (invisible to every
-    manifested reader) until its replay republishes and manifests it.
-
-    Crash windows converge: marker-rename is atomic per batch; a crash
-    mid-pass leaves some batches manifested (re-absorbed as a no-op via
-    the anti-join) and some marked (reclaimed next pass). Storage cost:
-    one cycle of micro-batch spill, bounded. Shared by
-    :func:`absorb_ingested` and :func:`rebuild_ivf_index` so the
-    retirement rule cannot drift."""
-    mdir = f"{path}/ingest/_manifests"
-    try:
-        children = list(fs.listStatus(hpath(mdir)))
-    except Exception as e:
-        # ONLY a genuinely absent spill area is ignorable; a transient
-        # listing failure must not silently skip reclamation every pass
-        # and unbound the "one cycle of spill" promise (r13 review)
-        if "FileNotFoundException" in str(e):
-            children = []
-        else:
-            raise
-    live = set(ids)
-    for st in children:
-        name = st.getPath().getName()
-        if not (name.startswith(".retired-") and name.endswith(".json")):
-            continue
-        try:
-            bid = int(name[len(".retired-"):-len(".json")])
-        except ValueError:
-            continue
-        if bid in live:
-            # a STALE marker coexisting with a live manifest: the id was
-            # re-published (checkpoint reset / reused id) after an
-            # earlier retirement. The fresh publish is being consumed by
-            # THIS pass — deleting the dir now would give it zero grace
-            # (r13 third review pass); the re-mark below resets its
-            # grace cycle instead.
-            continue
-        # marked by a previous pass: the grace cycle has elapsed
-        fs.delete(hpath(f"{path}/ingest/batch={bid}"), True)
-        fs.delete(st.getPath(), False)
-    from twitter_event_stream_spark.fsio import manifest_path
-
-    for i in ids:
-        marker = hpath(f"{mdir}/.retired-{i:09d}.json")
-        src_manifest = hpath(manifest_path(f"{path}/ingest", i))
-        # clear a stale same-id marker first: rename refuses an occupied
-        # destination on HDFS, and a silently-failed rename would leave
-        # the batch manifested (and re-absorbed) forever — which is also
-        # why the rename's verdict is CHECKED (r13 third review pass)
-        fs.delete(marker, False)
-        try:
-            renamed = fs.rename(src_manifest, marker)
-        except Exception:
-            renamed = False  # local FS throws (not returns False) on a
-            # missing source — fold to the same verdict path
-        if not renamed:
-            raise IOError(
-                f"could not retire ingest manifest batch-{i:09d}.json "
-                f"under {mdir} — if the spill's manifests were "
-                "consolidated, the id has no per-batch file to retire "
-                "(consolidate_manifests must not run on a vector-ingest "
-                "spill); the batch stays visible until repaired"
-            )
+    return spark.read.parquet(f"{data_dir}/cells")
 
 
 def absorb_ingested(spark: SparkSession, path: str) -> dict:
-    """Fold committed streaming-ingest batches (X123) into the main cell
-    tree — the maintenance half of the streaming seam, run between ingest
-    batches like compaction (X119; single-writer contract, fsio module
-    docstring): append the pending vectors to the current version's
-    ``cells`` (cell partitions, existing files untouched), then retire
-    each batch by renaming its manifest to a retirement marker (invisible
-    to every NEW :func:`read_ivf_cells` listing) while KEEPING its data
-    dir for one maintenance cycle — an IN-FLIGHT probe whose plan
-    snapshotted the manifest list just before this pass keeps reading
-    files that still exist (r13, caught by the concurrent soak lane; the
-    same one-cycle grace the pointer swap gives the previous cell-tree
-    version). Dirs a previous pass marked retired are reclaimed on the
-    next pass; see :func:`_retire_ingest_batches` for why only MARKED dirs
-    are ever swept.
-
-    Idempotent across its crash window (r9 ADVICE): the append anti-joins
-    the pending vec_ids against the cells the pending batches touch (the
-    partition filter prunes the scan to exactly those cell directories, so
-    the check never reads the whole tree; per-cell occupancy is bounded by
-    TARGET_CELL_ROWS-scale auto-sizing, so the anti-join's build side is
-    micro-batch-sized). A crash AFTER the append but BEFORE the manifest
-    deletes therefore re-runs to a no-op append — without the anti-join a
-    re-run would append the same vectors a second time, permanently
-    duplicating them in the main tree (neither rebuild nor compaction
-    dedups), and duplicate candidates would displace legitimate neighbors
-    in top-k results. Between the crash and the re-run the affected
-    vectors ARE visible twice through :func:`read_ivf_cells` (cells ∪
-    still-manifested pending) — transient, bounded to the crashed window.
-    Follow with :func:`compact_ivf_cells` when the append pushed file
-    counts up.
-
-    Returns ``{"batches_absorbed", "vectors_absorbed"}`` —
-    ``vectors_absorbed`` counts vectors actually appended, so a pure
-    crash-recovery re-run reports 0."""
-    from twitter_event_stream_spark.fsio import (
-        _fs,
-        live_version_dir,
-        manifested_batch_ids,
-    )
-
-    fs, hpath = _fs(spark, path)
-    ids = manifested_batch_ids(spark, f"{path}/ingest")
-    if not ids:
-        # still sweep grace-expired orphan dirs: a quiesced stream
-        # must not leave the last retired batches on disk forever
-        _retire_ingest_batches(fs, hpath, path, [])
-        return {"batches_absorbed": 0, "vectors_absorbed": 0}
-    cells = f"{live_version_dir(spark, path)}/cells"
-    # dedup WITHIN the pending set too: a producer redelivering the
-    # same vec_id across trigger boundaries lands it in two pending
-    # batches (identical rows — deterministic assignment), and a plain
-    # fold would append it twice; one copy survives (r10)
-    pending = _read_pending(spark, path, ids).dropDuplicates(["vec_id"])
-    touched = [r.cell for r in pending.select("cell").distinct().collect()]
-    already = (
-        spark.read.parquet(cells)
-        .filter(F.col("cell").isin(touched))
-        .select("vec_id")
-    )
-    new = pending.join(already, "vec_id", "left_anti")
-    n = new.count()
-    if n:
-        new.write.mode("append").partitionBy("cell").parquet(cells)
-    _retire_ingest_batches(fs, hpath, path, ids)
-    return {"batches_absorbed": len(ids), "vectors_absorbed": n}
+    """Does nothing: streamed vectors append straight into the cell tree
+    (:func:`append_ivf_index`), so there is no ingest spill to fold."""
+    # kept only because perfbench/workloads.py still calls it; drop it
+    # with the next benchmark revision
+    return {"batches_absorbed": 0, "vectors_absorbed": 0}
 
 
 def append_ivf_index(spark: SparkSession, new_vectors: DataFrame, path: str) -> None:
@@ -821,10 +653,11 @@ def append_ivf_index(spark: SparkSession, new_vectors: DataFrame, path: str) -> 
     #2; the text-dedup twin, write_simhash_index, had ``mode="append"``
     from day one): assign the new vectors against the STORED centroids and
     append to the cell partitions. Parquet append only adds files, so
-    existing cells' files are untouched (pinned by test) and concurrent
-    probes keep reading a consistent index; :func:`ivf_topk_indexed` sees
-    the appended vectors on its next read with the identical ranking
-    arithmetic.
+    existing cells' files are untouched (pinned by test);
+    :func:`ivf_topk_indexed` sees the appended vectors on its next read
+    with the identical ranking arithmetic. A probe that lists the cells
+    while the append's job commits may see part of the append, never a
+    vector twice.
 
     The quantizer is deliberately frozen: recall depends on probing the
     cells nearest a query, and that only degrades when the data
@@ -834,19 +667,25 @@ def append_ivf_index(spark: SparkSession, new_vectors: DataFrame, path: str) -> 
     exceeds ~4× the mean or any probed cell outgrows executor memory —
     the same re-train rule of thumb FAISS documents for IVF lists.
 
-    IDEMPOTENT (r11) — the batch-append twin of the streaming ingest
-    protocol (X126): the assignment is anti-joined against the vec_ids
-    already present in the touched cells (partition-pruned), so only
-    missing vectors append and a retried call converges to exactly-once.
-    An append is an index write, so it follows the single-writer contract
-    (fsio module docstring)."""
+    IDEMPOTENT (r11): the input is deduped on vec_id and the assignment is
+    anti-joined against the vec_ids already present in the touched cells
+    (partition-pruned, so the check is batch-sized, not tree-sized), so
+    only missing vectors append and a retried call converges to
+    exactly-once. That makes it the streaming sink too:
+    ``pipelines.vector_ingest_batch`` calls it once per micro-batch, and a
+    batch replayed after a crash — before, during or after its append —
+    adds only what the first attempt did not. An append is an index
+    write, so it follows the single-writer contract (fsio module
+    docstring)."""
     from twitter_event_stream_spark.fsio import live_version_dir
 
     # one resolve (r11): assign against the SAME version's centroids the
     # append lands in
     cur = live_version_dir(spark, path)
     bc = _stored_centroid_bc(spark, cur)
-    assigned = _cell_assign(new_vectors.dropDuplicates(["vec_id"]), bc, 1)
+    # dedup AFTER the assignment: a shuffle below the mapInPandas would
+    # spread a micro-batch over every shuffle partition, one Python task each
+    assigned = _cell_assign(new_vectors, bc, 1).dropDuplicates(["vec_id"])
     assigned.persist()
     try:
         touched = [
@@ -873,54 +712,34 @@ def rebuild_ivf_index(
     distributed: bool | None = None,
 ) -> dict:
     """The drift rebuild that :func:`ivf_index_stats` skew points at, made
-    executable: retrain the quantizer over every VISIBLE vector (absorbed
-    cells plus committed streaming-ingest batches), write a complete fresh
-    version (centroids AND cells), then publish it with one pointer flip
-    (:func:`fsio.pointer_swap_dir`). Publishing centroids and cells
-    together matters — a probe must never pair old centroids with new
-    cell assignments — and :func:`ivf_topk_indexed` resolves the pointer
-    once, reading both from the single version the swap's grace window
-    keeps readable. Runs between ingest batches, per the single-writer
-    contract (fsio module docstring).
+    executable: retrain the quantizer over every vector of the live
+    version, write a complete fresh version (centroids AND cells), then
+    publish it with one pointer flip (:func:`fsio.pointer_swap_dir`).
+    Publishing centroids and cells together matters — a probe must never
+    pair old centroids with new cell assignments — and
+    :func:`ivf_topk_indexed` resolves the pointer once, reading both from
+    the single version the swap's grace window keeps readable. Runs
+    between ingest batches, per the single-writer contract (fsio module
+    docstring). A crash BEFORE the flip leaves the live index untouched
+    plus an unreferenced staged ``_v-*`` dir the next swap reclaims.
+    Deterministic: same vectors + seed reproduce the same index as a fresh
+    :func:`write_ivf_index` build (pinned by test).
 
-    The ingest spill is consumed by the rebuild (its vectors land in the
-    fresh cells); after the flip the consumed batches retire through the
-    shared one-cycle-grace rule (r13, :func:`_retire_ingest_batches` —
-    manifests now, data dirs next pass). A crash BEFORE the flip leaves
-    the live index untouched plus an unreferenced staged ``_v-*`` dir the
-    next swap reclaims; a crash between the flip and the retire leaves the
-    consumed batches transiently visible TWICE through
-    :func:`read_ivf_cells` (fresh cells already hold their vectors) — the
-    same bounded at-least-once window :func:`absorb_ingested` documents
-    for its own crash, and the next absorb/rebuild converges it to
-    exactly-once. Deterministic: same visible vectors + seed reproduce the
-    same index as a fresh :func:`write_ivf_index` build (pinned by test).
-
-    Returns ``{"n_vectors", "n_cells_before", "n_cells_after",
-    "pending_batches_consumed"}``."""
-    from twitter_event_stream_spark.fsio import (
-        _fs,
-        live_version_dir,
-        manifested_batch_ids,
-        publish_version,
-    )
+    Returns ``{"n_vectors", "n_cells_before", "n_cells_after"}``."""
+    from twitter_event_stream_spark.fsio import live_version_dir, publish_version
 
     cur = live_version_dir(spark, path)
     vectors = read_ivf_cells(spark, path, data_dir=cur).select("vec_id", "embedding")
     n = vectors.count()
     n_before = spark.read.parquet(f"{cur}/centroids").count()
-    pending_ids = manifested_batch_ids(spark, f"{path}/ingest")
     bc = _train_quantizer(spark, vectors, n_cells, seed, distributed)
     if bc is None:
         raise ValueError(f"cannot rebuild {path}: it holds no vectors")
     publish_version(spark, path, lambda d: _write_ivf_tree(spark, vectors, bc, d))
-    fs, hpath = _fs(spark, path)
-    _retire_ingest_batches(fs, hpath, path, pending_ids)
     return {
         "n_vectors": n,
         "n_cells_before": n_before,
         "n_cells_after": len(bc.value),
-        "pending_batches_consumed": len(pending_ids),
     }
 
 
@@ -932,9 +751,9 @@ def ivf_index_stats(spark: SparkSession, path: str) -> DataFrame:
     n_vectors / mean-occupancy; ``max(skew)`` ≳ 4 is the documented
     rebuild trigger. Output is n_cells rows — driver-safe at any corpus
     size; the only corpus-wide work is one count aggregation pushed to the
-    cell partitioning. Counts every VISIBLE vector — committed
-    streaming-ingest batches included — so the rebuild signal can't lag
-    behind a continuously-ingesting deployment."""
+    cell partitioning. Streamed batches append into the cells this
+    counts, so the rebuild signal can't lag behind a
+    continuously-ingesting deployment."""
     from twitter_event_stream_spark.fsio import resolve_data_dir
 
     cur = resolve_data_dir(spark, path)  # one resolve: coherent snapshot

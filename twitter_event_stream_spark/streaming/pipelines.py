@@ -777,9 +777,7 @@ def dedup_ingest_batch(
                 )
                 # manifest LAST: its presence certifies publish + append
                 # both committed — read_ingested skips unmanifested batches
-                _write_fs_manifest(
-                    spark, out_dir, batch_id, f"{out_dir}/batch={batch_id}"
-                )
+                _write_fs_manifest(spark, out_dir, batch_id)
             finally:
                 uniq.unpersist()
                 survivors.unpersist()
@@ -790,7 +788,7 @@ def dedup_ingest_batch(
     return _ingest
 
 
-def _publish_atomic(df: DataFrame, final_dir: str, partition_by=None) -> None:
+def _publish_atomic(df: DataFrame, final_dir: str) -> None:
     """Stage-then-rename publish for a per-batch sink directory: write to a
     dot-prefixed temp dir (invisible to Spark readers) and move it into
     place — atomically swapping out the previous attempt's dir on a
@@ -806,10 +804,7 @@ def _publish_atomic(df: DataFrame, final_dir: str, partition_by=None) -> None:
     spark = df.sparkSession
     parent, name = final_dir.rstrip("/").rsplit("/", 1)
     tmp = f"{parent}/.tmp-{name.replace('=', '-')}-{uuid.uuid4().hex}"
-    writer = df.write
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(tmp)
+    df.write.parquet(tmp)
     fs, hpath = _fs(spark, parent)
     if fs.exists(hpath(final_dir)):
         _swap_dir(fs, hpath, final_dir, tmp)
@@ -838,43 +833,32 @@ def _swap_dir(fs, hpath, live: str, fresh: str) -> None:
     fs.delete(old, True)
 
 
-def _write_fs_manifest(
-    spark, out_dir: str, batch_id: int, batch_dir: str
-) -> None:
+def _write_fs_manifest(spark, out_dir: str, batch_id: int) -> None:
     """Commit marker for the X116 corpus sink, written through the Hadoop
     FileSystem API so it lands on whatever FS the parquet went to (local,
-    HDFS, S3A): ``<out_dir>/_manifests/batch-<id>.json`` holds the batch's
-    data-file list and is the LAST write of the batch — temp file + rename
-    (the delete-before-rename only fires on an at-least-once replay, where
-    the same content is republished anyway)."""
+    HDFS, S3A): ``<out_dir>/_manifests/batch-<id>.json`` holds
+    ``{"batch_id": id}`` and is the LAST write of the batch — temp file +
+    rename. Readers take the batch's whole ``batch=<id>`` dir, so the id is
+    all a manifest says. On an at-least-once replay the manifest already
+    exists and is left as it is: replacing it would hide a committed batch
+    from every reader between the delete and the rename."""
     import json
     import uuid
 
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    conf = spark._jsc.hadoopConfiguration()
-    fs = hpath(out_dir).getFileSystem(conf)
-    files = sorted(
-        st.getPath().getName()
-        for st in fs.listStatus(hpath(batch_dir))
-        if not st.getPath().getName().startswith(("_", "."))
-    )
-    from twitter_event_stream_spark.fsio import manifest_path
+    from twitter_event_stream_spark.fsio import _fs
 
+    fs, hpath = _fs(spark, out_dir)
     mdir = f"{out_dir}/_manifests"
+    final = hpath(f"{mdir}/batch-{batch_id:09d}.json")
+    if fs.exists(final):
+        return
     fs.mkdirs(hpath(mdir))
-    final = hpath(manifest_path(out_dir, batch_id))
     tmp = hpath(f"{mdir}/.batch-{batch_id:09d}.tmp-{uuid.uuid4().hex}")
     out = fs.create(tmp, True)
-    out.write(
-        json.dumps(
-            {"batch_id": batch_id, "dir": f"batch={batch_id}", "files": files},
-            sort_keys=True,
-        ).encode("utf-8")
-    )
+    out.write(json.dumps({"batch_id": batch_id}).encode("utf-8"))
     out.close()
-    fs.delete(final, False)
-    fs.rename(tmp, final)
+    if not fs.rename(tmp, final):
+        raise IOError(f"could not commit manifest {final}")
 
 
 def read_ingested(spark, out_dir: str) -> DataFrame:
@@ -1053,76 +1037,25 @@ def dedup_ingest_stream(
 
 def vector_ingest_batch(index_path: str) -> Callable[[DataFrame, int], None]:
     """X123 — per-micro-batch handler growing a persisted IVF index (X114)
-    from a stream, the vector twin of :func:`dedup_ingest_batch`: assign
-    the batch's vectors against the STORED centroids (quantizer frozen, as
-    in ``append_ivf_index``) and publish them cell-partitioned under
-    ``<index>/ingest/batch=<id>``, manifest LAST (X117 commit rule).
-
-    Replay-safe by layout, not by append: a raw ``mode("append")`` into
-    the cell tree would duplicate every vector of a replayed batch
-    (foreachBatch is at-least-once); publishing each batch into its OWN
-    directory — staged dot-prefixed, then atomically renamed/swapped into
-    place, so a concurrent probe never sees a manifested batch mid-rewrite
-    — makes the retry equivalent, and probes see only manifested batches
-    (``read_ivf_cells``). Replay is also safe ACROSS the maintenance
-    cadence (r10): vectors already in the main cell tree are anti-joined
-    away before publishing (partition-pruned to the batch's own cells, so
-    the check never scans the whole tree) — without it, a batch retried
-    AFTER ``absorb_ingested`` folded its first attempt would republish
-    vectors the tree already holds, and a probe would rank the same
-    candidate twice until the next absorb. A batch that assigns to
-    nothing — empty, all embeddings null, or fully absorbed already —
-    publishes nothing. The spill area is folded into the main tree by
-    ``absorb_ingested`` on the maintenance cadence — ingest stays
-    append-cheap, probes stay pruned, and the main cell files are never
-    touched by a streaming batch. That maintenance runs between the
-    handler's calls, never during one (single-writer contract, fsio
-    module docstring)."""
-    from twitter_event_stream_spark.operators.vector_search import (
-        _cell_assign,
-        _stored_centroid_bc,
-    )
+    from a stream, the vector twin of :func:`dedup_ingest_batch`: each
+    batch goes through ``vector_search.append_ivf_index``, which assigns
+    it against the STORED centroids (quantizer frozen), drops vectors the
+    touched cells already hold, and appends the rest into the live
+    version's ``cells``. A batch is visible once that append job commits,
+    as in the SimHash index. foreachBatch is at-least-once, and the
+    append's anti-join makes a replay — after a crash before, during or
+    after the append — add only what the first attempt did not, so no
+    vector is ever visible twice. A batch that assigns to nothing (empty,
+    or all embeddings null) writes nothing. Maintenance runs between the
+    handler's calls, never during one (single-writer contract, fsio module
+    docstring)."""
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from twitter_event_stream_spark.fsio import resolve_data_dir
+        from twitter_event_stream_spark.operators.vector_search import (
+            append_ivf_index,
+        )
 
-        spark = batch_df.sparkSession
-        # one resolve: assign against and anti-join with the same version
-        cur = resolve_data_dir(spark, index_path)
-        bc = _stored_centroid_bc(spark, cur)
-        assigned = _cell_assign(batch_df, bc, 1)
-        assigned.persist()
-        try:
-            # Guard on the ASSIGNED rows, not the raw batch: a batch whose
-            # embeddings are all null assigns to nothing, and publishing it
-            # would commit a manifested dir with no parquet footers —
-            # poisoning every reader of the index with UNABLE_TO_INFER_SCHEMA.
-            if assigned.isEmpty():
-                return  # replay of a no-op batch is a no-op
-            # replay-after-absorb convergence (r10): drop vectors the main
-            # tree already holds — the scan is pruned to this batch's own
-            # cells, so the check is micro-batch-sized, not tree-sized
-            touched = [
-                r.cell for r in assigned.select("cell").distinct().collect()
-            ]
-            already = (
-                spark.read.parquet(f"{cur}/cells")
-                .filter(F.col("cell").isin(touched))
-                .select("vec_id")
-            )
-            fresh = assigned.join(already, "vec_id", "left_anti")
-            fresh.persist()
-            try:
-                if fresh.isEmpty():
-                    return  # first attempt fully absorbed: retry is a no-op
-                out_dir = f"{index_path}/ingest"
-                batch_dir = f"{out_dir}/batch={batch_id}"
-                _publish_atomic(fresh, batch_dir, partition_by="cell")
-                _write_fs_manifest(spark, out_dir, batch_id, batch_dir)
-            finally:
-                fresh.unpersist()
-        finally:
-            assigned.unpersist()
+        append_ivf_index(batch_df.sparkSession, batch_df, index_path)
 
     return _ingest
 
@@ -1131,13 +1064,13 @@ def vector_ingest_stream(
     vectors_stream: DataFrame, index_path: str, checkpoint: str
 ):
     """X123 — streaming vector ingestion into a persisted IVF index: every
-    micro-batch of (vec_id, embedding) rows becomes a committed,
-    cell-partitioned, probe-visible index batch. Returns the started
-    availableNow query (caller awaits termination). Semantics — assignment
-    arithmetic, commit protocol, replay safety, absorb cadence — live on
-    :func:`vector_ingest_batch`. Run ``absorb_ingested`` and the other
-    maintenance passes after the drain terminates, in the same process
-    (single-writer contract, fsio module docstring)."""
+    micro-batch of (vec_id, embedding) rows is appended into the index's
+    cells and is probe-visible once its append commits. Returns the
+    started availableNow query (caller awaits termination). Semantics —
+    assignment, replay safety — live on :func:`vector_ingest_batch`. Run
+    the maintenance passes (compaction, rebuild) after the drain
+    terminates, in the same process (single-writer contract, fsio module
+    docstring)."""
     return (
         vectors_stream.writeStream.foreachBatch(vector_ingest_batch(index_path))
         .option("checkpointLocation", checkpoint)
