@@ -2051,10 +2051,10 @@ def test_consolidate_manifests_rerun_preserves_committed_file(
     the folded batch ids; the re-run just finishes the per-batch deletes."""
     import os
 
-    import twitter_event_stream_spark.streaming.pipelines as pl
     from twitter_event_stream_spark.fsio import (
         consolidate_manifests,
         manifested_batch_ids,
+        write_manifest,
     )
 
     root = str(tmp_path_factory.mktemp("remani"))
@@ -2064,7 +2064,7 @@ def test_consolidate_manifests_rerun_preserves_committed_file(
         os.makedirs(d)
         with open(f"{d}/part-0.parquet", "w") as f:
             f.write("x")
-        pl._write_fs_manifest(spark, out, bid)
+        write_manifest(spark, out, bid)
 
     rep = consolidate_manifests(spark, out, keep_last=2)
     assert rep["folded"] == 8 and rep["through"] == 7
@@ -2074,7 +2074,7 @@ def test_consolidate_manifests_rerun_preserves_committed_file(
     # simulate the crash window: a prior run committed consolidated-7 but
     # died before deleting some folded per-batch manifests — recreate them
     for bid in (0, 1, 2):
-        pl._write_fs_manifest(spark, out, bid)
+        write_manifest(spark, out, bid)
     assert manifested_batch_ids(spark, out) == list(range(10))
 
     rep2 = consolidate_manifests(spark, out, keep_last=2)
@@ -2088,6 +2088,46 @@ def test_consolidate_manifests_rerun_preserves_committed_file(
         and int(n[len("batch-"):-len(".json")]) in (0, 1, 2)
         for n in os.listdir(f"{out}/_manifests")
     )
+
+
+def test_consolidate_manifests_failed_rename_keeps_every_manifest(
+    spark, tmp_path_factory, monkeypatch
+):
+    """A consolidated manifest whose rename fails is not committed, so the
+    pass must raise before it deletes a single folded per-batch manifest:
+    otherwise those batches would vanish from every reader for good."""
+    import os
+
+    import twitter_event_stream_spark.fsio as fsio
+
+    out = f"{tmp_path_factory.mktemp('failrename')}/sink"
+    for bid in range(5):
+        fsio.write_manifest(spark, out, bid)
+    mdir = f"{out}/_manifests"
+    before = sorted(n for n in os.listdir(mdir) if not n.startswith("."))
+
+    class NoRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            return False
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real_fs = fsio._fs
+
+    def no_rename_fs(*a):
+        fs, hpath = real_fs(*a)
+        return NoRename(fs), hpath
+
+    monkeypatch.setattr(fsio, "_fs", no_rename_fs)
+    with pytest.raises(IOError):
+        fsio.consolidate_manifests(spark, out, keep_last=1)
+    monkeypatch.undo()
+    assert sorted(n for n in os.listdir(mdir) if not n.startswith(".")) == before
+    assert fsio.manifested_batch_ids(spark, out) == list(range(5))
 
 
 def test_index_overwrite_autodetects_pointer_layout(

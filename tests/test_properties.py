@@ -1048,6 +1048,7 @@ def _attempt_ingest(idx_path, out_dir, bdf, bid, crash_after):
     Returns True when the attempt committed (reached the manifest)."""
     from unittest import mock
 
+    import twitter_event_stream_spark.fsio as FS
     import twitter_event_stream_spark.operators.corpus_full as CF
     import twitter_event_stream_spark.streaming.pipelines as P
 
@@ -1064,9 +1065,9 @@ def _attempt_ingest(idx_path, out_dir, bdf, bid, crash_after):
         return inner
 
     with mock.patch.object(
-        P, "_publish_atomic", gated(P._publish_atomic)
+        P, "_write_batch_dir", gated(P._write_batch_dir)
     ), mock.patch.object(
-        P, "_write_fs_manifest", gated(P._write_fs_manifest)
+        FS, "write_manifest", gated(FS.write_manifest)
     ), mock.patch.object(
         CF, "write_band_rows", gated(CF.write_band_rows)
     ):

@@ -529,7 +529,7 @@ def soak_probe(
       version is live but the pass's post-publish steps never ran (the
       X127-shaped window);
     - **r15 (r14 verdict #4)**: the INGEST handlers die too. The
-      document handler dies in ``_write_fs_manifest`` BEFORE the manifest
+      document handler dies in ``fsio.write_manifest`` BEFORE the manifest
       lands, so the batch is fully published (data dir + band-row append)
       but never certified (the X116 publish-without-manifest window). The
       vector handler dies AFTER ``append_ivf_index`` commits and before
@@ -670,7 +670,7 @@ def soak_probe(
             # must converge
             ing_first = {"docs": True, "vecs": True}
             ing_rng = _random.Random(crash_seed + 1)
-            real_manifest = PL._write_fs_manifest
+            real_manifest = fsio.write_manifest
             real_append = VS.append_ivf_index
 
             def _ingest_should_crash(kind) -> bool:
@@ -698,7 +698,7 @@ def soak_probe(
 
             for mod, name, real, gate in (
                 (fsio, "pointer_swap_dir", real_swap, gated_swap),
-                (PL, "_write_fs_manifest", real_manifest, gated_manifest),
+                (fsio, "write_manifest", real_manifest, gated_manifest),
                 (VS, "append_ivf_index", real_append, gated_append),
             ):
                 setattr(mod, name, gate)

@@ -1,11 +1,12 @@
-"""Hadoop-FileSystem helpers for the persisted indexes (X119).
+"""Hadoop-FileSystem helpers for the persisted indexes (X119) and the
+batch-id sinks' manifests (X117).
 
 The two persisted indexes (X114 IVF cells, X115 SimHash band rows) grow by
 parquet APPENDS — one-plus files per ingest batch — so their maintenance
 paths (compaction, file-count telemetry) need filesystem operations that
 land on whatever FS the parquet lives on (local, HDFS, S3A), not POSIX
-calls against a path string. Same JVM FileSystem API the X117 manifest
-writer uses (streaming/pipelines._write_fs_manifest).
+calls against a path string. The batch-id sinks (the fan-out, the corpus
+sink and its reject trail) publish through the same API.
 
 Single-writer contract: the process that drives an index's ingest is the
 ONLY writer of that index. Maintenance — ``compact_band_rows``,
@@ -22,6 +23,13 @@ dirs, and the newest ``_current-<n>`` pointer file names the live one
 (:func:`resolve_data_dir`). Publishing a version is one new small-file
 create (:func:`pointer_swap_dir`), atomic on local, HDFS and S3A.
 
+Every batch-id sink follows one commit rule. ``<out>/_manifests/
+batch-<id>.json`` (:func:`write_manifest`) is a batch's LAST write, so
+readers see exactly the manifested batches. A handler whose batch is
+already manifested (:func:`is_manifested`) returns at once, without a
+Spark job. An unmanifested batch's directory is invisible to readers, so a
+replay simply overwrites it. A manifested batch is thus never rewritten.
+
 What still needs a mechanism under one writer — the hazards that involve
 concurrent READERS or a crash, not a second writer:
 
@@ -32,8 +40,13 @@ Swap cleanup sweeps the version an     one-cycle grace retention of the    test_
   in-flight probe resolved             previous version                    version
 Unreadable previous pointer defeats    retain ALL version dirs that        test_pointer_swap_retains_on_
   the grace window                     cycle; reclaim next healthy swap    unreadable_prev
+A replay rewrites a batch readers      a manifested batch is skipped;      test_*_replay_of_manifested_batch_
+  already see                          the newest manifest is never        runs_no_job
+                                       folded
 Consolidation crash loses folded       write-new-first, keep identical     test_consolidate_manifests_*
   manifests                            existing file, delete-after
+A failed rename leaves no commit, but  :func:`_write_json` raises before   test_consolidate_manifests_failed_
+  the folded manifests get deleted     any delete runs                     rename_keeps_every_manifest
 =====================================  ==================================  ===================================
 """
 
@@ -52,10 +65,34 @@ class MaintenanceLeaseHeld(RuntimeError):
 
 
 def _fs(spark, path: str):
-    """(FileSystem, Path-class) pair for ``path``'s filesystem."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    """(FileSystem, Path-class) pair for ``path``'s filesystem. A local
+    path gets the raw local filesystem under Hadoop's checksumming one, so
+    a file created or renamed here carries no ``.crc`` sidecar: a
+    published file stands alone in its directory, as on HDFS or S3A."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path
     fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    if jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.ChecksumFileSystem"
+    ).isInstance(fs):
+        fs = fs.getRawFileSystem()
     return fs, hpath
+
+
+def _write_json(fs, hpath, final: str, obj) -> None:
+    """Publish ``obj`` as the JSON file ``final``: write a dot-prefixed
+    temp file beside it, then rename it into place. Raises when the rename
+    fails, so no caller goes on as if the file had landed."""
+    parent, name = final.rsplit("/", 1)
+    tmp = hpath(f"{parent}/.{name}.tmp-{uuid.uuid4().hex}")
+    out = fs.create(tmp, True)
+    try:
+        out.write(json.dumps(obj, sort_keys=True).encode("utf-8"))
+    finally:
+        out.close()
+    if not fs.rename(tmp, hpath(final)):
+        fs.delete(tmp, False)
+        raise IOError(f"could not commit {final}")
 
 
 def data_file_count(spark, path: str) -> int:
@@ -229,13 +266,7 @@ def pointer_swap_dir(spark, root: str, staged: str) -> None:
             keep.add(_read_json_file(fs, best_ptr)["version"])
         except Exception:
             prev_unreadable = True
-    final = hpath(f"{root}/_current-{best + 1:09d}")
-    tmp = hpath(f"{root}/._current-{best + 1:09d}.tmp-{uuid.uuid4().hex}")
-    out = fs.create(tmp, True)
-    out.write(json.dumps({"version": vname}, sort_keys=True).encode("utf-8"))
-    out.close()
-    if not fs.rename(tmp, final):
-        raise IOError(f"could not commit pointer {final}")
+    _write_json(fs, hpath, f"{root}/_current-{best + 1:09d}", {"version": vname})
     # cleanup AFTER the commit: all best-effort, all invisible to readers
     for st in fs.listStatus(hpath(root)):
         name = st.getPath().getName()
@@ -281,10 +312,41 @@ def _read_json_file(fs, path) -> dict:
         stream.close()
 
 
-def _list_manifest_files(fs, hpath, out_dir: str):
-    """(per_batch, consolidated) manifest files under ``out_dir/_manifests``:
-    ``per_batch`` maps batch id → Path of its ``batch-<id>.json``;
-    ``consolidated`` is [(through, Path)] sorted by through."""
+def manifest_path(out_dir: str, batch_id: int) -> str:
+    """Path of batch ``batch_id``'s manifest under ``out_dir``."""
+    return f"{out_dir}/_manifests/batch-{batch_id:09d}.json"
+
+
+def is_manifested(spark, out_dir: str, batch_id: int) -> bool:
+    """Whether batch ``batch_id`` of the sink at ``out_dir`` committed —
+    the check every batch-id handler makes first. Only the per-batch file
+    is looked for: consolidation never folds the newest ``keep_last >= 1``
+    manifests, and only the newest batch can be replayed."""
+    fs, hpath = _fs(spark, out_dir)
+    return fs.exists(hpath(manifest_path(out_dir, batch_id)))
+
+
+def write_manifest(spark, out_dir: str, batch_id: int,
+                   files: list | None = None) -> None:
+    """Commit batch ``batch_id`` of the sink at ``out_dir``: its manifest
+    holds ``{"batch_id": id}``, plus the fan-out's ``files`` list when
+    given. It is the batch's LAST write, through the Hadoop FileSystem so
+    it lands beside the data (local, HDFS, S3A); ``create`` makes the
+    ``_manifests`` dir."""
+    body = {"batch_id": batch_id}
+    if files is not None:
+        body["files"] = files
+    fs, hpath = _fs(spark, out_dir)
+    _write_json(fs, hpath, manifest_path(out_dir, batch_id), body)
+
+
+def _scan_manifests(fs, hpath, out_dir: str):
+    """The one reader of ``out_dir/_manifests``: (per_batch, folded,
+    consolidated). ``per_batch`` maps batch id → Path of its
+    ``batch-<id>.json``; ``folded`` maps batch id → manifest for every
+    batch in the NEWEST consolidated file (each consolidation folds every
+    older one, so older files — pending delete after a crash — hold a
+    subset); ``consolidated`` is [(through, Path)] sorted by through."""
     mdir = hpath(f"{out_dir}/_manifests")
     per_batch: dict[int, object] = {}
     consolidated: list[tuple[int, object]] = []
@@ -297,7 +359,12 @@ def _list_manifest_files(fs, hpath, out_dir: str):
                 consolidated.append(
                     (int(name[len("consolidated-"):-len(".json")]), st.getPath())
                 )
-    return per_batch, sorted(consolidated)
+    consolidated.sort()
+    folded: dict[int, dict] = {}
+    if consolidated:
+        for m in _read_json_file(fs, consolidated[-1][1])["manifests"]:
+            folded[m["batch_id"]] = m
+    return per_batch, folded, consolidated
 
 
 def manifested_batch_ids(spark, out_dir: str) -> list[int]:
@@ -305,23 +372,25 @@ def manifested_batch_ids(spark, out_dir: str) -> list[int]:
     ``out_dir/_manifests`` (the X117 commit protocol: the manifest is the
     batch's last write, so its presence certifies the data landed). Shared
     by every manifested reader — corpus sink and reject trail — so the
-    commit rule cannot drift between them. Reads both
-    per-batch manifest files and the consolidated manifest a retention
-    pass (:func:`consolidate_manifests`) folds old ones into; the union is
-    deduped, so the crash window between writing a new consolidated file
-    and deleting the folded per-batch files is invisible."""
+    commit rule cannot drift between them. Per-batch files and the
+    consolidated manifest a retention pass (:func:`consolidate_manifests`)
+    folds old ones into are unioned, so the crash window between writing a
+    new consolidated file and deleting the folded per-batch files is
+    invisible."""
     fs, hpath = _fs(spark, out_dir)
-    per_batch, consolidated = _list_manifest_files(fs, hpath, out_dir)
-    ids = set(per_batch)
-    if consolidated:
-        # only the NEWEST consolidated file is authoritative — each
-        # consolidation folds every older one, so older files (pending
-        # delete after a crash) hold a subset of the newest
-        ids.update(
-            m["batch_id"]
-            for m in _read_json_file(fs, consolidated[-1][1])["manifests"]
-        )
-    return sorted(ids)
+    per_batch, folded, _ = _scan_manifests(fs, hpath, out_dir)
+    return sorted(set(per_batch) | set(folded))
+
+
+def read_manifests(spark, out_dir: str) -> list[dict]:
+    """Every committed batch's manifest under ``out_dir``, in batch order,
+    as stored — across per-batch and consolidated files alike, so
+    consolidation is invisible to readers."""
+    fs, hpath = _fs(spark, out_dir)
+    per_batch, folded, _ = _scan_manifests(fs, hpath, out_dir)
+    for bid, p in per_batch.items():
+        folded[bid] = _read_json_file(fs, p)
+    return [folded[bid] for bid in sorted(folded)]
 
 
 def consolidate_manifests(spark, out_dir: str, keep_last: int = 8) -> dict:
@@ -336,16 +405,18 @@ def consolidate_manifests(spark, out_dir: str, keep_last: int = 8) -> dict:
     Commit protocol mirrors X117: the new consolidated file is written
     tmp+rename FIRST, the folded files deleted after — a crash in between
     leaves both visible and the readers' dedup-by-batch-id absorbs it; a
-    re-run finishes the deletes. Runs between ingest batches like every
-    maintenance op (single-writer contract, module docstring) and never
-    touches the newest ``keep_last >= 1`` manifests.
+    re-run finishes the deletes. A rename that fails raises before any
+    delete. Runs between ingest batches like every maintenance op
+    (single-writer contract, module docstring) and never touches the
+    newest ``keep_last >= 1`` manifests, which the batch-id handlers'
+    replay check relies on.
 
     Returns ``{"folded", "through", "files_before", "files_after"}``."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1 (the newest manifest may "
                          "still be the live query's latest commit)")
     fs, hpath = _fs(spark, out_dir)
-    per_batch, consolidated = _list_manifest_files(fs, hpath, out_dir)
+    per_batch, entries, consolidated = _scan_manifests(fs, hpath, out_dir)
     files_before = len(per_batch) + len(consolidated)
     fold_ids = sorted(per_batch)[:-keep_last] if per_batch else []
     if not fold_ids and len(consolidated) <= 1:
@@ -355,31 +426,20 @@ def consolidate_manifests(spark, out_dir: str, keep_last: int = 8) -> dict:
             "files_before": files_before,
             "files_after": files_before,
         }
-    entries: dict[int, dict] = {}
-    if consolidated:
-        for m in _read_json_file(fs, consolidated[-1][1])["manifests"]:
-            entries[m["batch_id"]] = m
     for bid in fold_ids:
         entries[bid] = _read_json_file(fs, per_batch[bid])
     through = max(entries)
-    mdir = f"{out_dir}/_manifests"
-    final = hpath(f"{mdir}/consolidated-{through:09d}.json")
-    if not fs.exists(final):
-        tmp = hpath(
-            f"{mdir}/.consolidated-{through:09d}.tmp-{uuid.uuid4().hex}"
+    final = f"{out_dir}/_manifests/consolidated-{through:09d}.json"
+    if not fs.exists(hpath(final)):
+        _write_json(
+            fs,
+            hpath,
+            final,
+            {
+                "through": through,
+                "manifests": [entries[bid] for bid in sorted(entries)],
+            },
         )
-        out = fs.create(tmp, True)
-        out.write(
-            json.dumps(
-                {
-                    "through": through,
-                    "manifests": [entries[bid] for bid in sorted(entries)],
-                },
-                sort_keys=True,
-            ).encode("utf-8")
-        )
-        out.close()
-        fs.rename(tmp, final)
     # else: a prior (crashed) run already committed this exact fold — same
     # fold set produces the same through and, by construction, identical
     # content, so KEEP the existing file and just finish the deletes below.
@@ -391,7 +451,7 @@ def consolidate_manifests(spark, out_dir: str, keep_last: int = 8) -> dict:
     for thr, p in consolidated:
         if thr != through:
             fs.delete(p, False)
-    _, after_cons = _list_manifest_files(fs, hpath, out_dir)
+    _, _, after_cons = _scan_manifests(fs, hpath, out_dir)
     return {
         "folded": len(fold_ids),
         "through": through,

@@ -12,17 +12,23 @@ subscription join (broadcast — subscriptions are the small side), the
 stateful dedup (state partitioned by event_id hash, bounded by watermark)
 and the fan-out's one shuffle by client. The fan-out runs in the JVM:
 Spark's partitioned text writer and its file commit, then a driver-side
-rename of each client's file, then a batch manifest written last.
+rename of each client's file, then a batch manifest written last. The
+batch-id sinks here (the fan-out, the corpus sink and its reject trail)
+share fsio's commit rule: a manifested batch is skipped, an unmanifested
+one overwritten.
 """
 
 from __future__ import annotations
 
+import re
 from typing import Callable, Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from twitter_event_stream_spark import fsio
 
 #: R2 — the wire schema of a raw JSON event line. ``ts`` is TIMESTAMP_NTZ to
 #: match the batch fixture tables (the events parquet stores
@@ -207,25 +213,6 @@ def bridge_pipeline(
     )
 
 
-def fanout_foreach_batch(
-    sinks: dict[str, list],
-) -> Callable[[DataFrame, int], None]:
-    """R9 (test double) — one ingest query demuxed to N per-client buffers
-    via foreachBatch. ``sinks`` maps client_id → list collecting payloads.
-
-    This variant collects every micro-batch to the driver so tests can
-    assert on in-memory buffers; it is NOT the scale path — at production
-    volume the driver would serialize every event. The deployable form is
-    :func:`fanout_foreach_partition`, which keeps payloads on the
-    executors."""
-
-    def handle(batch: DataFrame, batch_id: int) -> None:
-        for row in batch.orderBy("ts", "payload").collect():  # R11 ordering
-            sinks.setdefault(row.client_id, []).append(row.payload)
-
-    return handle
-
-
 def fanout_foreach_partition(base_dir: str) -> Callable[[DataFrame, int], None]:
     """R9 at scale — demux a micro-batch to per-client streams WITHOUT the
     driver touching a single payload.
@@ -235,44 +222,47 @@ def fanout_foreach_partition(base_dir: str) -> Callable[[DataFrame, int], None]:
     the batch (ties on ``ts`` broken by payload, so the file content is a
     pure function of the batch), and Spark's own partitioned text writer
     writes one file per client, all in the JVM. Fan-out bandwidth scales
-    with the executor count — the collect-based double above is O(stream)
-    on one node. Each (client, batch) produces one file named by batch id,
-    so concatenating a client's files in name order replays its stream in
-    delivery order. Rows whose ``client_id`` is null or empty go to no
-    client and are dropped: the partitioned writer would put both in its
-    ``__HIVE_DEFAULT_PARTITION__`` directory. The writer escapes the id in
-    the directory name (``a/b`` → ``client_id=a%2Fb``), so no id can nest
-    or leave ``base_dir``; the manifest carries the raw id.
+    with the executor count. Each (client, batch) produces one file named
+    by batch id, so concatenating a client's files in name order replays
+    its stream in delivery order. Rows whose ``client_id`` is null or
+    empty go to no client and are dropped: the partitioned writer would
+    put both in its ``__HIVE_DEFAULT_PARTITION__`` directory. The writer
+    escapes the id in the directory name (``a/b`` → ``client_id=a%2Fb``),
+    so no id can nest or leave ``base_dir``; the manifest carries the raw
+    id.
 
-    Commit protocol, in three steps:
+    Commit protocol, fsio's batch-id sink rule in three steps, all through
+    the Hadoop FileSystem, so ``base_dir`` may be any path or URI Spark
+    writes to:
 
     1. Spark's file commit: the batch is written to
        ``_staging/batch-<id>`` and each task attempt's output becomes
        visible only when the job commits, so a speculative or zombie
        attempt can never interleave lines.
-    2. A driver rename: each client's single ``part-*`` file is
-       ``os.replace``d to ``client_id=<c>/batch-<id>.ndjson``, and
-       ``_staging`` is removed (one writer per ``base_dir``, batches in
-       sequence).
-    3. The manifest: the driver writes ``_manifests/batch-<id>.json`` —
-       the sorted (client, file, bytes) list — to a temp name and
-       atomically renames it. It is written LAST, so its existence
-       certifies the batch is fully published: a crash mid-batch leaves
-       staging or data files but no manifest, and
+    2. A driver rename: each client's single ``part-*`` file, found by one
+       glob over staging, is renamed to
+       ``client_id=<c>/batch-<id>.ndjson`` over any stale file of an
+       earlier attempt, and ``_staging`` is deleted (one writer per
+       ``base_dir``, batches in sequence).
+    3. The manifest: ``_manifests/batch-<id>.json`` — the sorted (client,
+       file, bytes) list — is written LAST (:func:`fsio.write_manifest`),
+       so its existence certifies the batch is fully published: a crash
+       mid-batch leaves staging or data files but no manifest, and
        :func:`manifested_fanout_files` makes those invisible to readers.
 
-    A foreachBatch replay overwrites the staging dir, renames over any
-    partial final files and rewrites the same manifest (deterministic
-    content), so every step is idempotent. The driver only lists and
-    renames files; payloads never leave the executors."""
+    A foreachBatch replay of a manifested batch returns at once, without a
+    Spark job; a replay of an unmanifested one overwrites staging and
+    every final file. The driver only lists and renames files; payloads
+    never leave the executors."""
 
     def handle(batch: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
         from urllib.parse import unquote
 
-        staging_root = os.path.join(base_dir, "_staging")
-        staging = os.path.join(staging_root, f"batch-{batch_id}")
+        spark = batch.sparkSession
+        if fsio.is_manifested(spark, base_dir, batch_id):
+            return
+        staging_root = f"{base_dir}/_staging"
+        staging = f"{staging_root}/batch-{batch_id}"
         (
             batch.filter(F.length("client_id") > 0)
             .repartition("client_id")
@@ -286,55 +276,47 @@ def fanout_foreach_partition(base_dir: str) -> Callable[[DataFrame, int], None]:
             .partitionBy("client_id")
             .text(staging)
         )
+        fs, hpath = fsio._fs(spark, base_dir)
+        parts: dict[str, object] = {}
+        # one glob, not a recursive listFiles: on the local FS that builds
+        # a LocatedFileStatus per file, which forks a shell to read its
+        # permissions (about 7 ms a file without native Hadoop). Hadoop
+        # globs every path component, so the base dir's own glob
+        # metacharacters are escaped
+        pattern = re.sub(r"([\\*?\[\]{}])", r"\\\1", staging)
+        for st in fs.globStatus(hpath(f"{pattern}/client_id=*/part-*")) or []:
+            cdir = st.getPath().getParent().getName()
+            if cdir in parts:
+                raise RuntimeError(
+                    f"fan-out batch {batch_id}: several part files for "
+                    f"{cdir}, expected one"
+                )
+            parts[cdir] = st
         name = f"batch-{batch_id:09d}.ndjson"
         entries = []
-        for cdir in os.listdir(staging):
-            if not cdir.startswith("client_id="):
-                continue  # _SUCCESS and checksum files
-            parts = [
-                f for f in os.listdir(os.path.join(staging, cdir))
-                if f.startswith("part-")
-            ]
-            if len(parts) != 1:
-                raise RuntimeError(
-                    f"fan-out batch {batch_id}: {len(parts)} part files "
-                    f"for {cdir}, expected one"
-                )
-            rel = os.path.join(cdir, name)
-            final = os.path.join(base_dir, rel)
-            os.makedirs(os.path.dirname(final), exist_ok=True)
-            os.replace(os.path.join(staging, cdir, parts[0]), final)
+        for cdir, st in parts.items():
+            rel = f"{cdir}/{name}"
+            final = hpath(f"{base_dir}/{rel}")
+            fs.delete(final, False)  # HDFS renames onto no existing name
+            fs.mkdirs(final.getParent())
+            if not fs.rename(st.getPath(), final):
+                raise IOError(f"fan-out batch {batch_id}: could not publish {rel}")
             entries.append(
                 {
                     "client_id": unquote(cdir[len("client_id="):]),
                     "path": rel,
-                    "bytes": os.stat(final).st_size,
+                    "bytes": st.getLen(),
                 }
             )
-        shutil.rmtree(staging_root)
-        _write_local_manifest(
-            os.path.join(base_dir, "_manifests"),
+        fs.delete(hpath(staging_root), True)
+        fsio.write_manifest(
+            spark,
+            base_dir,
             batch_id,
             sorted(entries, key=lambda e: (e["client_id"], e["path"])),
         )
 
     return handle
-
-
-def _write_local_manifest(mdir: str, batch_id: int, entries: list) -> None:
-    """Atomically publish ``<mdir>/batch-<id>.json`` (temp file +
-    ``os.replace``) listing a batch's published files — the LAST write of a
-    batch, so manifest-present ⟺ batch-complete."""
-    import json
-    import os
-    import uuid
-
-    os.makedirs(mdir, exist_ok=True)
-    final = os.path.join(mdir, f"batch-{batch_id:09d}.json")
-    tmp = f"{final}.tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump({"batch_id": batch_id, "files": entries}, f, sort_keys=True)
-    os.replace(tmp, final)
 
 
 def manifested_fanout_files(base_dir: str) -> list[dict]:
@@ -343,37 +325,17 @@ def manifested_fanout_files(base_dir: str) -> list[dict]:
     not covered by a manifest (a crashed batch's partial publish, the
     ``_staging`` dir) are invisible. Manifests written before entries
     carried ``bytes`` carry a row count ``n`` instead; entries are passed
-    through as stored. Concatenating one client's paths in this
-    order replays its stream in delivery order. Understands the
-    consolidated manifest a retention pass (fsio.consolidate_manifests)
-    folds old per-batch files into: newest consolidated file first,
-    per-batch files override by batch id (identical content), output in
-    batch order — so consolidation is invisible to readers."""
-    import json
-    import os
+    through as stored. Concatenating one client's paths in this order
+    replays its stream in delivery order. Reads through
+    :func:`fsio.read_manifests` on the active session, so a retention
+    pass (:func:`fsio.consolidate_manifests`) is invisible here too."""
+    from pyspark.sql import SparkSession
 
-    mdir = os.path.join(base_dir, "_manifests")
-    if not os.path.isdir(mdir):
-        return []
-    per_batch: dict[int, dict] = {}
-    cons: list[tuple[int, str]] = []
-    for name in os.listdir(mdir):
-        if name.startswith("batch-") and name.endswith(".json"):
-            with open(os.path.join(mdir, name), encoding="utf-8") as f:
-                m = json.load(f)
-            per_batch[m["batch_id"]] = m
-        elif name.startswith("consolidated-") and name.endswith(".json"):
-            cons.append((int(name[len("consolidated-"):-len(".json")]), name))
-    entries: dict[int, dict] = {}
-    if cons:
-        with open(os.path.join(mdir, max(cons)[1]), encoding="utf-8") as f:
-            for m in json.load(f)["manifests"]:
-                entries[m["batch_id"]] = m
-    entries.update(per_batch)
-    out: list[dict] = []
-    for bid in sorted(entries):
-        out.extend(entries[bid]["files"])
-    return out
+    return [
+        e
+        for m in fsio.read_manifests(SparkSession.active(), base_dir)
+        for e in m["files"]
+    ]
 
 
 def windowed_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
@@ -626,13 +588,15 @@ def dedup_ingest_batch(
     ``dedup_against_index(broadcast=False)`` instead of this per-batch
     handler.
 
-    Replay safety: the corpus sink republishes ``out_dir/batch=<id>``
-    via a staged write + atomic swap (``_publish_atomic`` — a replay
-    replaces the dir without a window where a concurrent reader sees a
-    manifested batch's path vanish); the index append is absorbed by
-    the min-(hamming, doc_id) verdict (duplicate band rows only duplicate
-    join candidates) plus the self-identity filter (a doc's own appended
-    rows never gate it). Pinned by tests/test_streaming.py's replay test.
+    Replay safety follows fsio's batch-id sink rule. A replay of a
+    manifested batch returns at once, without a Spark job. A replay of an
+    unmanifested batch — a crash after the index append, before the
+    manifest — overwrites ``out_dir/batch=<id>`` and its reject dir with a
+    plain ``mode("overwrite")`` (no reader sees an unmanifested dir), and
+    its index append is absorbed by the self-identity filter (a doc's own
+    appended rows never gate it) and the ``already_indexed`` anti-join
+    (nothing is appended twice). Pinned by tests/test_streaming.py's
+    replay test.
 
     The handler writes the index, so index maintenance runs between its
     calls, never during one (single-writer contract, fsio module
@@ -657,6 +621,8 @@ def dedup_ingest_batch(
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
+        if fsio.is_manifested(spark, out_dir, batch_id):
+            return
         # construct the plan BEFORE caching anything: simhash64's analysis
         # can raise (e.g. schema drift), and a persist taken outside the
         # try/finally that unpersists it would leak the cached frame for
@@ -755,8 +721,8 @@ def dedup_ingest_batch(
                         .alias("reason"),
                     )
                 )
-                _publish_atomic(rejects, f"{out_dir}/_rejects/batch={batch_id}")
-                _publish_atomic(uniq, f"{out_dir}/batch={batch_id}")
+                _write_batch_dir(rejects, f"{out_dir}/_rejects/batch={batch_id}")
+                _write_batch_dir(uniq, f"{out_dir}/batch={batch_id}")
                 # append only rows the index does not already hold: on an
                 # at-least-once replay after a crash between the append and
                 # the manifest, every survivor is already_indexed and this
@@ -777,7 +743,7 @@ def dedup_ingest_batch(
                 )
                 # manifest LAST: its presence certifies publish + append
                 # both committed — read_ingested skips unmanifested batches
-                _write_fs_manifest(spark, out_dir, batch_id)
+                fsio.write_manifest(spark, out_dir, batch_id)
             finally:
                 uniq.unpersist()
                 survivors.unpersist()
@@ -788,77 +754,10 @@ def dedup_ingest_batch(
     return _ingest
 
 
-def _publish_atomic(df: DataFrame, final_dir: str) -> None:
-    """Stage-then-rename publish for a per-batch sink directory: write to a
-    dot-prefixed temp dir (invisible to Spark readers) and move it into
-    place — atomically swapping out the previous attempt's dir on a
-    replay. A plain ``mode("overwrite")`` deletes the live dir FIRST, so a
-    crash-retry of an already-manifested batch would leave a window where
-    a concurrent reader lists the manifest and then reads a vanishing
-    path; with the swap, readers resolve the old file set or the new one,
-    never an absence."""
-    import uuid
-
-    from twitter_event_stream_spark.fsio import _fs
-
-    spark = df.sparkSession
-    parent, name = final_dir.rstrip("/").rsplit("/", 1)
-    tmp = f"{parent}/.tmp-{name.replace('=', '-')}-{uuid.uuid4().hex}"
-    df.write.parquet(tmp)
-    fs, hpath = _fs(spark, parent)
-    if fs.exists(hpath(final_dir)):
-        _swap_dir(fs, hpath, final_dir, tmp)
-    elif not fs.rename(hpath(tmp), hpath(final_dir)):
-        raise IOError(f"could not publish {final_dir}")
-
-
-def _swap_dir(fs, hpath, live: str, fresh: str) -> None:
-    """Replace directory ``live`` with ``fresh`` via two renames: move the
-    live dir aside, move the fresh dir into its place, delete the old.
-    Rename is atomic on HDFS and local filesystems, so a concurrent reader
-    resolves either the old file set or the new one (a reader that already
-    listed the old files keeps reading them through open handles). If the
-    second rename fails the old dir is restored, so a crashed swap never
-    leaves the batch dir missing."""
-    import uuid
-
-    old = hpath(f"{live}.old-{uuid.uuid4().hex}")
-    if not fs.rename(hpath(live), old):
-        raise IOError(f"could not move {live} aside")
-    if not fs.rename(hpath(fresh), hpath(live)):
-        fs.rename(old, hpath(live))
-        raise IOError(
-            f"could not move {fresh} into place (previous contents restored)"
-        )
-    fs.delete(old, True)
-
-
-def _write_fs_manifest(spark, out_dir: str, batch_id: int) -> None:
-    """Commit marker for the X116 corpus sink, written through the Hadoop
-    FileSystem API so it lands on whatever FS the parquet went to (local,
-    HDFS, S3A): ``<out_dir>/_manifests/batch-<id>.json`` holds
-    ``{"batch_id": id}`` and is the LAST write of the batch — temp file +
-    rename. Readers take the batch's whole ``batch=<id>`` dir, so the id is
-    all a manifest says. On an at-least-once replay the manifest already
-    exists and is left as it is: replacing it would hide a committed batch
-    from every reader between the delete and the rename."""
-    import json
-    import uuid
-
-    from twitter_event_stream_spark.fsio import _fs
-
-    fs, hpath = _fs(spark, out_dir)
-    mdir = f"{out_dir}/_manifests"
-    final = hpath(f"{mdir}/batch-{batch_id:09d}.json")
-    if fs.exists(final):
-        return
-    fs.mkdirs(hpath(mdir))
-    tmp = hpath(f"{mdir}/.batch-{batch_id:09d}.tmp-{uuid.uuid4().hex}")
-    out = fs.create(tmp, True)
-    out.write(json.dumps({"batch_id": batch_id}).encode("utf-8"))
-    out.close()
-    if not fs.rename(tmp, final):
-        raise IOError(f"could not commit manifest {final}")
+def _write_batch_dir(df: DataFrame, path: str) -> None:
+    """Write one unmanifested batch dir of the corpus sink, over whatever
+    an earlier attempt left there."""
+    df.write.mode("overwrite").parquet(path)
 
 
 def read_ingested(spark, out_dir: str) -> DataFrame:
@@ -868,10 +767,8 @@ def read_ingested(spark, out_dir: str) -> DataFrame:
     directory (or a publish whose index append never committed) is
     invisible until its replay completes. Raises if nothing has been
     committed yet (no schema to fabricate an empty frame from)."""
-    from twitter_event_stream_spark.fsio import manifested_batch_ids
-
     dirs = [
-        f"{out_dir}/batch={bid}" for bid in manifested_batch_ids(spark, out_dir)
+        f"{out_dir}/batch={bid}" for bid in fsio.manifested_batch_ids(spark, out_dir)
     ]
     if not dirs:
         raise ValueError(f"no committed ingest batches under {out_dir}")
@@ -885,10 +782,8 @@ def _newest_consolidated_rejects(spark, out_dir: str) -> tuple[int, str | None]:
     skip older consolidated dirs and any per-batch dir at id <= through
     (a crash-replay may recreate one whose rows the consolidation already
     holds)."""
-    from twitter_event_stream_spark.fsio import _fs
-
     rej = f"{out_dir}/_rejects"
-    fs, hpath = _fs(spark, rej)
+    fs, hpath = fsio._fs(spark, rej)
     through, cons_dir = -1, None
     if fs.exists(hpath(rej)):
         for st in fs.listStatus(hpath(rej)):
@@ -910,9 +805,7 @@ def read_ingest_rejects(spark, out_dir: str) -> DataFrame:
     After a retention pass (:func:`compact_rejects`) the old batches' rows
     come from the newest consolidated dir instead — same rows, fewer
     files."""
-    from twitter_event_stream_spark.fsio import manifested_batch_ids
-
-    ids = manifested_batch_ids(spark, out_dir)
+    ids = fsio.manifested_batch_ids(spark, out_dir)
     if not ids:
         raise ValueError(f"no committed ingest batches under {out_dir}")
     through, cons_dir = _newest_consolidated_rejects(spark, out_dir)
@@ -933,10 +826,13 @@ def compact_rejects(spark, out_dir: str, keep_last: int = 8) -> dict:
     :func:`read_ingest_rejects` sees the identical row multiset before and
     after (pinned by test).
 
-    Crash-safe in the X119 style: the consolidated dir is published staged
-    + atomic rename FIRST; a crash before the deletes leaves per-batch
-    dirs at id <= through that every reader already skips, and a re-run
-    finishes the cleanup. Run it on the same maintenance cadence as
+    Crash-safe in the X119 style: the consolidated dir gets a fresh name
+    each time, so it is published by one staged write plus one checked
+    rename FIRST; a crash before the deletes leaves per-batch dirs at id
+    <= through that every reader already skips, and a re-run finishes the
+    cleanup (and drops a crashed run's staging dir). The newest
+    ``keep_last >= 1`` batches are never folded, so a replayable batch
+    keeps its own dir. Run it on the same maintenance cadence as
     :func:`~twitter_event_stream_spark.fsio.consolidate_manifests` (the
     manifests themselves stay per-batch unless that pass also runs — the
     two are independent).
@@ -945,25 +841,21 @@ def compact_rejects(spark, out_dir: str, keep_last: int = 8) -> dict:
     (single-writer contract, fsio module docstring).
 
     Returns ``{"folded", "through", "files_before", "files_after"}``."""
-    from twitter_event_stream_spark.fsio import (
-        _fs,
-        data_file_count,
-        manifested_batch_ids,
-    )
+    import uuid
 
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     rej = f"{out_dir}/_rejects"
-    fs0, hpath0 = _fs(spark, rej)
-    if not fs0.exists(hpath0(rej)):
+    fs, hpath = fsio._fs(spark, rej)
+    if not fs.exists(hpath(rej)):
         return {
             "folded": 0,
             "through": None,
             "files_before": 0,
             "files_after": 0,
         }
-    files_before = data_file_count(spark, rej)
-    ids = manifested_batch_ids(spark, out_dir)
+    files_before = fsio.data_file_count(spark, rej)
+    ids = fsio.manifested_batch_ids(spark, out_dir)
     through, cons_dir = _newest_consolidated_rejects(spark, out_dir)
     fold_ids = [i for i in sorted(ids)[:-keep_last] if i > through]
     new_through = max([through] + fold_ids)
@@ -971,29 +863,30 @@ def compact_rejects(spark, out_dir: str, keep_last: int = 8) -> dict:
         srcs = ([cons_dir] if cons_dir else []) + [
             f"{rej}/batch={i}" for i in fold_ids
         ]
-        _publish_atomic(
-            spark.read.parquet(*srcs).coalesce(4),
-            f"{rej}/consolidated-{new_through:09d}",
-        )
+        final = f"{rej}/consolidated-{new_through:09d}"
+        tmp = f"{rej}/.tmp-consolidated-{uuid.uuid4().hex}"
+        spark.read.parquet(*srcs).coalesce(4).write.parquet(tmp)
+        if not fs.rename(hpath(tmp), hpath(final)):
+            raise IOError(f"could not publish {final}")
     # cleanup (also finishes a crashed prior run): folded batch dirs, stale
-    # replay-recreated batch dirs at or below the new through, and every
-    # non-newest consolidated dir
-    fs, hpath = _fs(spark, rej)
-    if fs.exists(hpath(rej)):
-        for st in fs.listStatus(hpath(rej)):
-            name = st.getPath().getName()
-            if name.startswith("batch=") and int(name[6:]) <= new_through:
-                fs.delete(st.getPath(), True)
-            elif (
+    # replay-recreated batch dirs at or below the new through, every
+    # non-newest consolidated dir and any crashed run's staging dir
+    for st in fs.listStatus(hpath(rej)):
+        name = st.getPath().getName()
+        if (
+            (name.startswith("batch=") and int(name[6:]) <= new_through)
+            or (
                 name.startswith("consolidated-")
                 and int(name[len("consolidated-"):]) < new_through
-            ):
-                fs.delete(st.getPath(), True)
+            )
+            or name.startswith(".tmp-")
+        ):
+            fs.delete(st.getPath(), True)
     return {
         "folded": len(fold_ids),
         "through": new_through if new_through >= 0 else None,
         "files_before": files_before,
-        "files_after": data_file_count(spark, rej),
+        "files_after": fsio.data_file_count(spark, rej),
     }
 
 
