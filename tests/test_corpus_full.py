@@ -189,6 +189,37 @@ def test_dedup_cluster_stats_full(spark, sf_dir):
     assert n_clusters == sum(f.n_canonical for f in funnel)
 
 
+def test_dedup_cluster_stats_full_recomputes_each_call(spark, sf_dir, tmp_path):
+    """No result is reused across calls: a second call builds the star
+    edges and CC labels again, so it runs no fewer Spark jobs than the
+    first. The fixture is read through a fresh path so no earlier test's
+    call in this session can have run first."""
+    import os
+    import uuid
+
+    fresh = str(tmp_path / "sf")
+    os.symlink(sf_dir, fresh)
+    # the loader reads the tables' schemas once per path: keep those
+    # jobs out of the first count
+    table(spark, fresh, "documents")
+    sc = spark.sparkContext
+    q = registry.get("q_dedup_cluster_stats_full").fn
+
+    def jobs_and_rows():
+        group = f"recompute-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "recompute check")
+        try:
+            rows = sorted(q(spark, fresh).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), rows
+
+    jobs1, rows1 = jobs_and_rows()
+    jobs2, rows2 = jobs_and_rows()
+    assert rows1 == rows2 and len(rows1) > 0
+    assert jobs2 >= jobs1 > 0, (jobs1, jobs2)
+
+
 def test_dup_spans_full_invariants(spark, sf_dir):
     """Whole-corpus span-duplication report: doc universe = docs with ≥5
     tokens, dup grams bounded by total grams, deterministic."""

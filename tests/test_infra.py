@@ -1063,6 +1063,20 @@ def test_neardup_lsh_invariants(spark):
     assert hist == {0.0: 2041, 0.1: 17078, 0.2: 23497, 0.3: 20871}
 
 
+def test_neardup_lsh_recomputes_each_call(spark, sf_dir):
+    """K2 keeps no result between calls: each call returns its own lazy,
+    unpersisted plan, and both plans yield the same rows."""
+    from pyspark import StorageLevel
+
+    q = registry.get("q_llm_neardup_lsh").fn
+    first, second = q(spark, sf_dir), q(spark, sf_dir)
+    assert first is not second
+    assert first.storageLevel == StorageLevel.NONE
+    assert second.storageLevel == StorageLevel.NONE
+    rows = sorted(first.collect())
+    assert rows == sorted(second.collect()) and len(rows) > 0
+
+
 def test_minhash_banding_prunes_on_realistic_vocab(spark):
     """K2's scale claim, measured (r5 verdict item 4): the fixture corpus's
     ~40-token vocabulary degenerates MinHash banding (every doc shares a
@@ -1720,6 +1734,39 @@ def test_ivf_index_append_and_stats(spark, sf_dir, tmp_path_factory):
     mean = sum(r.n_vectors for r in stats) / n_cells
     for r in stats:
         assert abs(r.skew - r.n_vectors / mean) < 1e-3
+
+
+def test_data_file_count_matches_recursive_listing(spark, sf_dir, tmp_path):
+    """data_file_count descends into every directory, `_`/`.`-prefixed
+    ones included, and counts each file whose own name has no `_`/`.`
+    prefix: the same number a recursive Hadoop listFiles gives under that
+    name rule, on a tree with success markers, `.crc` sidecars and a
+    `_`-prefixed dir holding a plain-named file."""
+    import os
+
+    from twitter_event_stream_spark.fsio import _fs, data_file_count
+
+    base = str(tmp_path / "tree")
+    table(spark, sf_dir, "documents").select("doc_id", "lang").repartition(
+        2
+    ).write.partitionBy("lang").parquet(f"{base}/t")
+    for rel in ("_staging/part-0", ".hidden/part-1", "a/b/c/data.bin",
+                "a/_SUCCESS", "a/b/.data.bin.crc", "_x/_y/z"):
+        os.makedirs(os.path.dirname(f"{base}/{rel}"), exist_ok=True)
+        with open(f"{base}/{rel}", "w") as f:
+            f.write("x")
+    names = [n for _, _, files in os.walk(base) for n in files]
+    assert any(n.endswith(".crc") for n in names)
+    assert "_SUCCESS" in names
+
+    fs, hpath = _fs(spark, base)
+    it = fs.listFiles(hpath(base), True)
+    listed = 0
+    while it.hasNext():
+        if not it.next().getPath().getName().startswith(("_", ".")):
+            listed += 1
+    want = sum(not n.startswith(("_", ".")) for n in names)
+    assert data_file_count(spark, base) == listed == want
 
 
 def test_compact_simhash_index(spark, sf_dir, tmp_path_factory):

@@ -176,46 +176,6 @@ def _ntile_core(spark, sf_dir: str, scale: int) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("n"))
 
 
-def _curation_full_core(spark, sf_dir: str, scale: int) -> DataFrame:
-    """q_corpus_curation_full's pipeline WITHOUT the session label cache
-    (the registered query memoizes CC labels per (app, sf_dir), which would
-    make the probe's best-of-2 timing measure a cache hit instead of the
-    signature pass + CC fixpoint this lane exists to bound). Star-edge
-    graph + default two-phase CC — the registered query's real execution
-    path."""
-    from twitter_event_stream_spark.operators.graph import connected_components
-    from twitter_event_stream_spark.operators.llm_extra import (
-        minhash_cluster_edges,
-    )
-    from twitter_event_stream_spark.tables import table
-
-    d = table(spark, sf_dir, "documents")
-    labels = connected_components(minhash_cluster_edges(d), "a_id", "b_id")
-    toks = F.split("text", " ")
-    n_tokens = F.size(toks)
-    uniq_ratio = F.size(F.array_distinct(toks)) / n_tokens.cast("double")
-    canonical = F.coalesce(F.col("label"), F.col("doc_id")) == F.col("doc_id")
-    kept = canonical & (uniq_ratio >= 0.3)
-    return (
-        d.join(
-            labels.select(F.col("node").alias("doc_id"), "label"), "doc_id", "left"
-        )
-        .select(
-            "lang",
-            canonical.cast("long").alias("c"),
-            kept.cast("long").alias("k"),
-            F.when(kept, n_tokens).otherwise(0).alias("t"),
-        )
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("c").alias("n_canonical"),
-            F.sum("k").alias("n_curated"),
-            F.sum("t").alias("total_tokens"),
-        )
-    )
-
-
 #: embed_neardup at 10× is covered by the q_embed_neardup_full registry
 #: probe (same blocked operator over the whole table + a one-row rollup) —
 #: AUTO cell count keeps cell occupancy constant, which is what keeps the
@@ -251,7 +211,7 @@ PROBES = {
     "q_sessionize": _registry_probe("q_sessionize"),
     "q_llm_ann_ivf": _registry_probe("q_llm_ann_ivf"),
     "curation_core": _curation_core,
-    "curation_full_core": _curation_full_core,
+    "q_corpus_curation_full": _registry_probe("q_corpus_curation_full"),
     "q_simhash_dedup_full": _registry_probe("q_simhash_dedup_full"),
     "q_embed_neardup_full": _registry_probe("q_embed_neardup_full"),
     "q_dup_spans_full": _registry_probe("q_dup_spans_full"),

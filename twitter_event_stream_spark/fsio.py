@@ -110,12 +110,17 @@ def data_file_count(spark, path: str) -> int:
     index — the compaction trigger must watch what probes actually read."""
     path = resolve_data_dir(spark, path)
     fs, hpath = _fs(spark, path)
-    it = fs.listFiles(hpath(path), True)
+    # a listStatus walk, not listFiles(path, True): on the local FS without
+    # native Hadoop every LocatedFileStatus that listFiles builds forks a
+    # shell to read its permissions, while a plain FileStatus reads none
     n = 0
-    while it.hasNext():
-        name = it.next().getPath().getName()
-        if not name.startswith(("_", ".")):
-            n += 1
+    todo = [hpath(path)]
+    while todo:
+        for st in fs.listStatus(todo.pop()):
+            if st.isDirectory():
+                todo.append(st.getPath())
+            elif not st.getPath().getName().startswith(("_", ".")):
+                n += 1
     return n
 
 

@@ -90,31 +90,19 @@ def simhash64(d: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _full_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CC labels of the ≥7-of-8-band MinHash near-dup graph over the WHOLE
-    documents table, cached per (session, sf_dir) like the bounded graph
-    (graph._cached). Computed over :func:`~twitter_event_stream_spark.
-    operators.llm_extra.minhash_cluster_edges` — the O(n·bands) star-edge
-    formulation with provably identical components to the k²-per-clique
-    pair list (the fixture's degenerate vocab makes dup cliques huge:
-    987k pairs vs ≤40k star edges at sf0.1, and the gap grows with
-    cluster size at 100 TB)."""
-    from twitter_event_stream_spark.operators.graph import (
-        _cached,
-        connected_components,
-    )
+    documents table, computed on each call. Computed over
+    :func:`~twitter_event_stream_spark.operators.llm_extra.
+    minhash_cluster_edges` — the O(n·bands) star-edge formulation with
+    provably identical components to the k²-per-clique pair list (the
+    fixture's degenerate vocab makes dup cliques huge: 987k pairs vs ≤40k
+    star edges at sf0.1, and the gap grows with cluster size at 100 TB)."""
+    from twitter_event_stream_spark.operators.graph import connected_components
     from twitter_event_stream_spark.operators.llm_extra import (
         minhash_cluster_edges,
     )
 
-    def build() -> DataFrame:
-        edges = _cached(
-            spark,
-            sf_dir,
-            "star_edges_full",
-            lambda: minhash_cluster_edges(table(spark, sf_dir, "documents")),
-        )
-        return connected_components(edges, "a_id", "b_id")
-
-    return _cached(spark, sf_dir, "labels_full", build)
+    edges = minhash_cluster_edges(table(spark, sf_dir, "documents"))
+    return connected_components(edges, "a_id", "b_id")
 
 
 @query("q_corpus_curation_full", oracle=None)
@@ -202,11 +190,11 @@ def q_simhash_dedup_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_cluster_stats_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X108 (ROWS) — `q_dedup_cluster_stats` (X101) unbounded: the
     cluster-size distribution of the WHOLE corpus's near-dup graph — the
-    report a pipeline reads before committing a full dedup pass. Rides the
-    session-cached star-edge CC labels (`_full_labels`), so its marginal
-    cost over `q_corpus_curation_full` is two aggregations of a
-    doc-count-sized table; unclustered docs count as singleton clusters,
-    so `sum(n_docs)` always equals the corpus size (pinned in tests)."""
+    report a pipeline reads before committing a full dedup pass. Builds
+    the same star-edge CC labels (`_full_labels`) as
+    `q_corpus_curation_full`, then two aggregations of a doc-count-sized
+    table; unclustered docs count as singleton clusters, so `sum(n_docs)`
+    always equals the corpus size (pinned in tests)."""
     labels = _full_labels(spark, sf_dir)
     d = table(spark, sf_dir, "documents")
     clustered = d.join(

@@ -131,8 +131,8 @@ def connected_components(
     hash-min (:func:`_cc_local`, the identical fixpoint) replaces 4-6
     scheduler rounds — milliseconds instead of seconds, exactly the
     "finish small graphs locally" phase of the two-phase algorithm. The
-    count that picks the phase is one job over the caller's (cached) pair
-    list; pass ``local_threshold=0`` to force the distributed loop.
+    bounded collect that picks the phase is one job over the caller's
+    pair list; pass ``local_threshold=0`` to force the distributed loop.
 
     Distributed phase — each round: every node takes min(own label,
     neighbors' labels) — one shuffle join + one shuffle agg — then
@@ -243,52 +243,16 @@ def connected_components(
     return labels
 
 
-# Shared-per-session cache for the near-dup graph. The three graph queries
-# (CC clustering, corpus curation, PageRank) all consume the same MinHash
-# candidate-pair edge list, and two of them the same CC labels; recomputing
-# the shingle→signature→band pipeline per query tripled the cost of the
-# correctness sweep. Keyed by (Spark application, sf_dir) so a new session
-# or a different scale factor rebuilds; values are localCheckpoint'ed, so
-# the cached plan is a scan of materialized blocks, not a live lineage.
-# Bounded: LRU-evicted past _GRAPH_CACHE_MAX entries (a session normally
-# holds 2 kinds × 1-3 sf_dirs; the cap only matters for long-lived sessions
-# sweeping many fixture dirs, where unbounded growth would pin dead
-# checkpoint blocks).
-_GRAPH_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_GRAPH_CACHE_MAX = 8
-
-
-def _cached(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    df = _GRAPH_CACHE.pop(key, None)  # pop+reinsert = move to MRU position
-    if df is None:
-        df = build().localCheckpoint()
-    _GRAPH_CACHE[key] = df
-    while len(_GRAPH_CACHE) > _GRAPH_CACHE_MAX:
-        _GRAPH_CACHE.pop(next(iter(_GRAPH_CACHE)))
-    return df
-
-
 def neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic-MinHash candidate pairs (a_id, b_id), computed once per
-    (session, sf_dir) and reused by every graph query."""
-    return _cached(
-        spark,
-        sf_dir,
-        "pairs",
-        lambda: registry.get("q_llm_minhash_det").fn(spark, sf_dir).select("a_id", "b_id"),
-    )
+    """Deterministic-MinHash candidate pairs (a_id, b_id) — the edge list
+    every graph query consumes, built fresh on each call."""
+    return registry.get("q_llm_minhash_det").fn(spark, sf_dir).select("a_id", "b_id")
 
 
 def neardup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected-component labels over :func:`neardup_pairs`, cached like
-    the pairs (CC is iterative — by far the most expensive shared piece)."""
-    return _cached(
-        spark,
-        sf_dir,
-        "labels",
-        lambda: connected_components(neardup_pairs(spark, sf_dir), "a_id", "b_id"),
-    )
+    """Connected-component labels over :func:`neardup_pairs`, computed on
+    each call (the CC phase pick collects the pair list once)."""
+    return connected_components(neardup_pairs(spark, sf_dir), "a_id", "b_id")
 
 
 @query(
@@ -588,9 +552,9 @@ def q_dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, how many clusters, how many documents they hold, and how many a
     keep-one-canonical policy removes — the report a pipeline reads before
     committing a dedup pass (a fat head of large clusters usually means
-    boilerplate, not true duplicates). Reuses the per-session cached CC
-    labels (`neardup_labels`), so the marginal cost over the clustering
-    itself is two aggregations of a doc-count-sized table."""
+    boilerplate, not true duplicates). Runs the same MinHash pair
+    pipeline and CC labels (`neardup_labels`) as `q_llm_dedup_cluster`,
+    then two aggregations of a doc-count-sized table."""
     labels = neardup_labels(spark, sf_dir)
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     clustered = d.join(

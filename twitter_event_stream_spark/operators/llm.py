@@ -21,8 +21,6 @@ Scale design (the whole point of this family):
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -325,23 +323,6 @@ def q_llm_lang_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Session-scoped memo for q_llm_neardup_lsh (r13 verdict task #6): the
-#: query re-ran its whole pipeline per invocation, making it the slowest
-#: registered query (~4 s). Measured breakdown at sf0.01: HashingTF 0.13 s,
-#: MinHashLSH.fit 0.03 s (data-independent random coefficients — NOT the
-#: bottleneck the nit assumed), approxSimilarityJoin ~3-6 s (the fixture's
-#: ~40-token vocabulary saturates every bucket, so the join evaluates exact
-#: Jaccard on ~125k candidate pairs of 16k-dim sparse vectors). Caching the
-#: fit alone therefore changes nothing; the memo stores the MATERIALIZED
-#: result keyed by (applicationId, sf_dir, params) — repeat invocations in
-#: one session (tests, notebooks, the entry flow) return the persisted
-#: DataFrame in ~0 s, and a new SparkSession misses on applicationId so no
-#: stale JVM handles survive a restart. Bounded to 4 entries, LRU-evicted
-#: with unpersist.
-_NEARDUP_LSH_CACHE: dict = {}
-_NEARDUP_LSH_LOCK = threading.Lock()  # all cache mutations hold this
-
-
 @query("q_llm_neardup_lsh", oracle=None)
 def q_llm_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K2 (ROWS) — MinHash-LSH near-duplicate candidate pairs over token
@@ -359,29 +340,20 @@ def q_llm_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall 1.0 (pinned by
     tests/test_infra.py::test_minhash_banding_prunes_on_realistic_vocab).
 
-    This query demonstrates the Spark ML library operator; its
-    materialized result is memoized per (session, sf_dir, params) — see
-    ``_NEARDUP_LSH_CACHE`` for the measured cost breakdown (the expense
-    is the similarity join on the saturated candidate set, not the model
-    fit). For PRODUCTION whole-corpus near-dup, use
-    the deterministic X6/X105 machinery instead — ``q_llm_minhash_det``
-    (llm_extra) and ``corpus_full.q_corpus_curation_full`` /
-    ``q_simhash_dedup_full`` (signatures computed once, star-edge
-    connected components, no model fit per run).
+    This query demonstrates the Spark ML library operator and returns a
+    lazy plan, run in full by each action. Measured at sf0.01: HashingTF
+    0.13 s, MinHashLSH.fit 0.03 s (data-independent random coefficients),
+    approxSimilarityJoin 3-6 s — the fixture's ~40-token vocabulary
+    saturates every bucket, so the join evaluates exact Jaccard on ~125k
+    candidate pairs of 16k-dim sparse vectors. For PRODUCTION whole-corpus
+    near-dup, use the deterministic X6/X105 machinery instead —
+    ``q_llm_minhash_det`` (llm_extra) and
+    ``corpus_full.q_corpus_curation_full`` / ``q_simhash_dedup_full``
+    (signatures computed once, star-edge connected components, no model
+    fit per run).
     """
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    # (applicationId, sf_dir) IS the full key: every other parameter of
-    # this query (numFeatures, tables, seed, threshold, id clamp) is a
-    # compile-time literal of the body below, so duplicating them here
-    # would only create a tuple to keep in sync by hand (r13 review)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _NEARDUP_LSH_LOCK:
-        hit = _NEARDUP_LSH_CACHE.pop(key, None)
-        if hit is not None:
-            _NEARDUP_LSH_CACHE[key] = hit  # re-insert: most-recently-used
-    if hit is not None:
-        return hit
     d = table(spark, sf_dir, "documents").filter(
         (F.col("doc_id") < 500) & F.col("text").isNotNull()
     )
@@ -398,42 +370,11 @@ def q_llm_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=5, seed=42)
     model = lsh.fit(feats)
     pairs = model.approxSimilarityJoin(feats, feats, 0.35, distCol="jaccard_dist")
-    out = (
-        pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id"))
-        .select(
-            F.col("datasetA.doc_id").alias("a_id"),
-            F.col("datasetB.doc_id").alias("b_id"),
-            rnd("jaccard_dist", 4).alias("dist"),
-        )
-        .persist()
+    return pairs.filter(F.col("datasetA.doc_id") < F.col("datasetB.doc_id")).select(
+        F.col("datasetA.doc_id").alias("a_id"),
+        F.col("datasetB.doc_id").alias("b_id"),
+        rnd("jaccard_dist", 4).alias("dist"),
     )
-    out.count()  # materialize under the memo: repeats skip the join
-    # the check-race-evict-insert sequence holds the lock so two
-    # concurrent misses cannot interleave and replace (leak) each
-    # other's persisted entry (r13 second review pass); the blocking
-    # unpersist calls run OUTSIDE the lock
-    evicted = []
-    with _NEARDUP_LSH_LOCK:
-        race = _NEARDUP_LSH_CACHE.get(key)
-        if race is None:
-            while len(_NEARDUP_LSH_CACHE) >= 4:
-                evicted.append(
-                    _NEARDUP_LSH_CACHE.pop(next(iter(_NEARDUP_LSH_CACHE)))
-                )
-            _NEARDUP_LSH_CACHE[key] = out
-    if race is not None:
-        # a concurrent invocation of the same key won the insert while we
-        # computed: free OUR copy and return the cached one
-        evicted.append(out)
-        out = race
-    for df in evicted:
-        try:
-            # an evicted frame a caller still holds silently reverts to
-            # recompute-per-action — correct, just no longer cached
-            df.unpersist()
-        except Exception:
-            pass  # a stale handle from a stopped session: nothing to free
-    return out
 
 
 @query("q_llm_ann_lsh", oracle=None)
