@@ -20,7 +20,12 @@ from twitter_event_stream_spark.session import (
     LOCAL_CHECKPOINT_FILE_MANAGER,
     configure_session,
 )
-from twitter_event_stream_spark.tables import table
+from twitter_event_stream_spark.tables import (
+    TABLE_NAMES,
+    TABLE_SCHEMAS,
+    load_tables,
+    table,
+)
 
 
 def test_parquet_sink_roundtrip(spark, sf_dir):
@@ -640,6 +645,55 @@ def test_loader_cache_interleaves_scale_factors(spark):
     assert spark.sql("SELECT count(*) AS n FROM events").first()["n"] == 10000
     table(spark, "/root/testdata/sf0.001", "events")
     assert spark.sql("SELECT count(*) AS n FROM events").first()["n"] == 1000
+
+
+def _assert_declared_schemas_match(spark, sf_dir):
+    """Each declared table schema equals what Spark infers from the files
+    of ``sf_dir``: names, order and types. A declared column that a file
+    lacks or spells differently would read as all-NULL without an error."""
+    for name, ddl in TABLE_SCHEMAS.items():
+        path = f"{sf_dir}/{name}.parquet"
+        declared = spark.read.schema(ddl).parquet(path).schema
+        inferred = spark.read.parquet(path).schema
+        assert declared == inferred, (
+            sf_dir, name, declared.simpleString(), inferred.simpleString()
+        )
+
+
+def test_declared_schemas_match_fixtures(spark, sf_dir, tmp_path):
+    """The loader reads every table but ``events`` with its declared schema
+    (tables.TABLE_SCHEMAS), so the declarations are pinned to every
+    fixture the engine is run on: the three shipped scale factors and the
+    benchmark's generated tables."""
+    import os
+
+    from perfbench.fixture import make_tables
+
+    assert set(TABLE_SCHEMAS) == set(TABLE_NAMES) - {"events"}
+    testdata = os.path.dirname(sf_dir)
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        _assert_declared_schemas_match(spark, f"{testdata}/{sf}")
+    _assert_declared_schemas_match(spark, make_tables(str(tmp_path), 0.001, 1))
+
+
+def test_load_tables_runs_one_job_on_a_fresh_dir(spark, sf_dir, tmp_path):
+    """Loading a fixture dir runs exactly one Spark job: the schema
+    inference of ``events``. The other nine tables are read with declared
+    schemas, which need no job. The fixture is read through a fresh path
+    so the loader's per-dir cache cannot hide the reads."""
+    import os
+    import uuid
+
+    fresh = str(tmp_path / "sf")
+    os.symlink(sf_dir, fresh)
+    sc = spark.sparkContext
+    group = f"load-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_tables job count")
+    try:
+        load_tables(spark, fresh)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_hll_partitioned_estimates_within_bound(spark, sf_dir):
@@ -1510,6 +1564,7 @@ def test_scale_probe_fixture_and_audit_machinery(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("probe_fix"))
     copies = 3
     build_fixture(spark, src, d, copies)
+    _assert_declared_schemas_match(spark, d)
 
     base_docs = spark.read.parquet(f"{src}/documents.parquet")
     docs = spark.read.parquet(f"{d}/documents.parquet")

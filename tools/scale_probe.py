@@ -17,7 +17,9 @@ Fixture synthesis (COPIES=10 by default):
   stays ~COPIES× the original's edges instead of exploding quadratically
   in cross-copy duplicate cliques (length, and hence n_chars, unchanged).
 * ``events.ts`` shifts k seconds per copy (no pathological full-tie sort
-  keys); ``embeddings`` perturb by k·1e-3 per component.
+  keys); ``embeddings`` perturb by k·1e-3 per component, kept FLOAT.
+* Every table keeps its source schema, which the loader declares
+  (``tables.TABLE_SCHEMAS``).
 * Non-scaled tables are byte-copied.
 
 Probed workloads: the unclamped contract queries (q_bm25, q_mix_sample,
@@ -87,7 +89,9 @@ def build_fixture(spark, src: str, dst: str, copies: int) -> None:
                     "vec_id", F.col("vec_id") * copies + F.lit(k)
                 ).withColumn(
                     "embedding",
-                    F.transform("embedding", lambda x: x + F.lit(k * 1e-3)),
+                    F.transform(
+                        "embedding", lambda x: (x + F.lit(k * 1e-3)).cast("float")
+                    ),
                 )
             parts.append(p)
         functools.reduce(DataFrame.unionByName, parts).coalesce(8).write.mode(

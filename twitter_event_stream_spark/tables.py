@@ -3,17 +3,19 @@
 Every query callable goes through :func:`load_tables`, which
 
 1. re-applies the runtime session conventions (UTC, nanosAsLong, AQE);
-2. reads each parquet table of the scale-factor directory — the current
-   fixtures store every timestamp as µs NTZ (isAdjustedToUTC=false), which
-   Spark reads natively as ``TIMESTAMP_NTZ`` (SURVEY §1.3(1));
+2. reads each parquet table of the scale-factor directory with its declared
+   schema (:data:`TABLE_SCHEMAS`), so no Spark job infers it — the current
+   fixtures store every timestamp as µs NTZ (isAdjustedToUTC=false), read
+   as ``TIMESTAMP_NTZ`` (SURVEY §1.3(1)); only ``events`` is inferred;
 3. keeps a guarded ns fallback: if a regenerated ``events.ts`` arrives as
    INT64 nanoseconds (read as ``bigint`` under nanosAsLong), it is
    normalized to µs with integer division (``ts DIV 1000``) so no
    double-rounding can perturb the value — a no-op against current data;
 4. registers each table as a temp view under its canonical name.
 
-DataFrames are lazy, so loading is cheap; a small per-(session, dir) cache
-avoids re-reading parquet footers and re-registering views on every call.
+DataFrames are lazy, and only ``events`` reads a parquet footer (one Spark
+job) at load; a small per-(session, dir) cache avoids repeating that read,
+the Py4J reader calls and the view registration on every call.
 """
 
 from __future__ import annotations
@@ -42,6 +44,38 @@ TABLE_NAMES: tuple[str, ...] = (
 #: joins fall back to shuffled strategies via AQE size estimates.
 BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "part"})
 
+#: DDL schema of every fixture table but ``events`` (FIXTURES.md). A read
+#: with a declared schema runs no schema-inference job; a column missing
+#: from a file would read as NULL, which the schema-equality test rules out
+#: for every shipped fixture.
+TABLE_SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT, c_acctbal DOUBLE, "
+        "c_mktsegment STRING"
+    ),
+    "supplier": "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, "
+        "p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
+        "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, l_linenumber INT, "
+        "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, "
+        "l_tax DOUBLE, l_returnflag STRING, l_linestatus STRING, "
+        "l_shipdate TIMESTAMP_NTZ"
+    ),
+    "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+#: The loaded frames per (session, dir): a hit skips the Py4J reader calls,
+#: the ``events`` footer read and, for the active dir, the view registration.
 _cache: dict[tuple[int, str], dict[str, DataFrame]] = {}
 
 #: Which sf_dir's tables are currently bound to the session's temp views.
@@ -73,10 +107,13 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     if dfs is None:
         dfs = {}
         for name in TABLE_NAMES:
-            df = spark.read.parquet(f"{sf}/{name}.parquet")
+            path = f"{sf}/{name}.parquet"
             if name == "events":
-                df = _normalize_events(df)
-            dfs[name] = df
+                # inferred: a ns-typed ts must reach the guard as bigint, and a
+                # declared TIMESTAMP_NTZ fails at the scan on such a file
+                dfs[name] = _normalize_events(spark.read.parquet(path))
+            else:
+                dfs[name] = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
         _cache[key] = dfs
     if _active_views.get(id(spark)) != sf:
         for name, df in dfs.items():
