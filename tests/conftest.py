@@ -11,10 +11,39 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from twitter_event_stream_spark.parity import oracle_connection  # noqa: E402
 from twitter_event_stream_spark.session import get_spark  # noqa: E402
+from twitter_event_stream_spark.tables import TABLE_SCHEMAS  # noqa: E402
 
 #: Unit CI runs the differential suite at sf0.001 (SURVEY §5.2.1); override
 #: with TES_TEST_SF_DIR to re-verify at sf0.01 before handoff.
 SF_DIR = os.environ.get("TES_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+def spark_jobs(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` runs, counted under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def assert_declared_schemas_match(spark, sf_dir: str) -> None:
+    """Each declared table schema (tables.TABLE_SCHEMAS) equals what Spark
+    infers from the files of ``sf_dir``: names, order and types. A declared
+    column that a file lacks or spells differently would read as all-NULL
+    without an error, and a type that differs fails at the first scan."""
+    for name, ddl in TABLE_SCHEMAS.items():
+        path = f"{sf_dir}/{name}.parquet"
+        declared = spark.read.schema(ddl).parquet(path).schema
+        inferred = spark.read.parquet(path).schema
+        assert declared == inferred, (
+            sf_dir, name, declared.simpleString(), inferred.simpleString()
+        )
 
 
 def pytest_collection_modifyitems(config, items):

@@ -9,6 +9,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import assert_declared_schemas_match, spark_jobs
 from twitter_event_stream_spark import registry
 from twitter_event_stream_spark.operators.multimodal import (
     decode_features,
@@ -647,33 +648,25 @@ def test_loader_cache_interleaves_scale_factors(spark):
     assert spark.sql("SELECT count(*) AS n FROM events").first()["n"] == 1000
 
 
-def _assert_declared_schemas_match(spark, sf_dir):
-    """Each declared table schema equals what Spark infers from the files
-    of ``sf_dir``: names, order and types. A declared column that a file
-    lacks or spells differently would read as all-NULL without an error."""
-    for name, ddl in TABLE_SCHEMAS.items():
-        path = f"{sf_dir}/{name}.parquet"
-        declared = spark.read.schema(ddl).parquet(path).schema
-        inferred = spark.read.parquet(path).schema
-        assert declared == inferred, (
-            sf_dir, name, declared.simpleString(), inferred.simpleString()
-        )
-
-
 def test_declared_schemas_match_fixtures(spark, sf_dir, tmp_path):
     """The loader reads every table but ``events`` with its declared schema
     (tables.TABLE_SCHEMAS), so the declarations are pinned to every
-    fixture the engine is run on: the three shipped scale factors and the
-    benchmark's generated tables."""
+    fixture the engine is run on: the shipped scale factors that are
+    present next to ``sf_dir`` and the benchmark's generated tables."""
     import os
 
     from perfbench.fixture import make_tables
 
     assert set(TABLE_SCHEMAS) == set(TABLE_NAMES) - {"events"}
     testdata = os.path.dirname(sf_dir)
-    for sf in ("sf0.001", "sf0.01", "sf0.1"):
-        _assert_declared_schemas_match(spark, f"{testdata}/{sf}")
-    _assert_declared_schemas_match(spark, make_tables(str(tmp_path), 0.001, 1))
+    dirs = {sf_dir} | {
+        f"{testdata}/{sf}"
+        for sf in ("sf0.001", "sf0.01", "sf0.1")
+        if os.path.exists(f"{testdata}/{sf}/events.parquet")
+    }
+    for d in sorted(dirs):
+        assert_declared_schemas_match(spark, d)
+    assert_declared_schemas_match(spark, make_tables(str(tmp_path), 0.001, 1))
 
 
 def test_load_tables_runs_one_job_on_a_fresh_dir(spark, sf_dir, tmp_path):
@@ -682,18 +675,10 @@ def test_load_tables_runs_one_job_on_a_fresh_dir(spark, sf_dir, tmp_path):
     schemas, which need no job. The fixture is read through a fresh path
     so the loader's per-dir cache cannot hide the reads."""
     import os
-    import uuid
 
     fresh = str(tmp_path / "sf")
     os.symlink(sf_dir, fresh)
-    sc = spark.sparkContext
-    group = f"load-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "load_tables job count")
-    try:
-        load_tables(spark, fresh)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert spark_jobs(spark, lambda: load_tables(spark, fresh)) == 1
 
 
 def test_hll_partitioned_estimates_within_bound(spark, sf_dir):
@@ -1286,6 +1271,7 @@ def test_all_queries_tolerate_empty_tables(spark, tmp_path_factory):
             .write.mode("overwrite")
             .parquet(f"{d}/{name}.parquet")
         )
+    assert_declared_schemas_match(spark, d)
     failures = {}
     for name, fn in sorted(registry.all_queries().items()):
         try:
@@ -1338,6 +1324,7 @@ def test_all_queries_tolerate_null_injection(spark, tmp_path_factory):
                     ).otherwise(F.col(c)),
                 )
         df.write.mode("overwrite").parquet(f"{d}/{name}.parquet")
+    assert_declared_schemas_match(spark, d)
     failures = {}
     for name, fn in sorted(registry.all_queries().items()):
         try:
@@ -1397,6 +1384,7 @@ def test_all_queries_tolerate_adversarial_text(spark, tmp_path_factory):
                     ).otherwise(F.col(c)),
                 )
         df.write.mode("overwrite").parquet(f"{d}/{name}.parquet")
+    assert_declared_schemas_match(spark, d)
     failures = {}
     for name, fn in sorted(registry.all_queries().items()):
         try:
@@ -1464,6 +1452,7 @@ def test_all_queries_tolerate_nonfinite_floats(spark, tmp_path_factory):
                     ).otherwise(F.col(c)),
                 )
         df.write.mode("overwrite").parquet(f"{d}/{name}.parquet")
+    assert_declared_schemas_match(spark, d)
     failures = {}
     for name, fn in sorted(registry.all_queries().items()):
         try:
@@ -1564,7 +1553,7 @@ def test_scale_probe_fixture_and_audit_machinery(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("probe_fix"))
     copies = 3
     build_fixture(spark, src, d, copies)
-    _assert_declared_schemas_match(spark, d)
+    assert_declared_schemas_match(spark, d)
 
     base_docs = spark.read.parquet(f"{src}/documents.parquet")
     docs = spark.read.parquet(f"{d}/documents.parquet")

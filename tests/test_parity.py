@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from conftest import assert_declared_schemas_match
 from twitter_event_stream_spark import registry
 from twitter_event_stream_spark.parity import check_query
 
@@ -101,6 +102,7 @@ def test_differential_under_skewed_distribution(spark, tmp_path_factory):
                 ),
             )
         df.write.mode("overwrite").parquet(f"{d}/{name}.parquet")
+    assert_declared_schemas_match(spark, d)
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(
@@ -171,10 +173,13 @@ def test_differential_under_degenerate_text(spark, tmp_path_factory):
                 "embedding",
                 F.when(
                     F.col("vec_id") % 31 == 0,
-                    F.transform("embedding", lambda x: x * F.lit(0.0)),
+                    F.transform(
+                        "embedding", lambda x: (x * F.lit(0.0)).cast("float")
+                    ),
                 ).otherwise(F.col("embedding")),
             )
         df.write.mode("overwrite").parquet(f"{d}/{name}.parquet")
+    assert_declared_schemas_match(spark, d)
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.execute(

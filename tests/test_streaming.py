@@ -14,6 +14,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import spark_jobs
 from twitter_event_stream_spark.streaming.pipelines import (
     as_event_time,
     bridge_pipeline,
@@ -162,20 +163,6 @@ def fanout_foreach_batch(sinks: dict[str, list]):
             sinks.setdefault(row.client_id, []).append(row.payload)
 
     return handle
-
-
-def _spark_jobs(spark, fn) -> int:
-    """Number of Spark jobs ``fn()`` runs, counted under a job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_bridge_pipeline_fanout(spark, sf_dir, chunk_dir):
@@ -1031,7 +1018,7 @@ def test_dedup_ingest_replay_is_lossless(spark, sf_dir, tmp_path_factory):
 
     idx_first = index_rows()
     os.remove(manifest_path(f"{base}/out", 3))
-    assert _spark_jobs(spark, lambda: handler(batch, 3)) > 0
+    assert spark_jobs(spark, lambda: handler(batch, 3)) > 0
     assert os.path.exists(manifest_path(f"{base}/out", 3))
     assert index_rows() == idx_first, "replay appended to the index again"
     second = sorted(
@@ -1509,14 +1496,14 @@ def test_fanout_replay_of_manifested_batch_runs_no_job(spark, tmp_path_factory):
     )
     handle = fanout_foreach_partition(base)
     for bid in range(3):
-        assert _spark_jobs(spark, lambda: handle(batch, bid)) > 0
+        assert spark_jobs(spark, lambda: handle(batch, bid)) > 0
     files = _tree(base)
-    assert _spark_jobs(spark, lambda: handle(batch, 2)) == 0
+    assert spark_jobs(spark, lambda: handle(batch, 2)) == 0
     assert _tree(base) == files
     entries = manifested_fanout_files(base)
     assert consolidate_manifests(spark, base, keep_last=1)["folded"] == 2
     assert os.path.exists(manifest_path(base, 2))
-    assert _spark_jobs(spark, lambda: handle(batch, 2)) == 0
+    assert spark_jobs(spark, lambda: handle(batch, 2)) == 0
     assert manifested_fanout_files(base) == entries
 
 
@@ -1567,11 +1554,11 @@ def test_ingest_replay_of_manifested_batch_runs_no_job(spark, tmp_path_factory):
 
     seen = view()
     assert seen[0] == [10, 11, 12] and len(seen[1]) == 3
-    assert _spark_jobs(spark, lambda: handler(batches[2], 2)) == 0
+    assert spark_jobs(spark, lambda: handler(batches[2], 2)) == 0
     assert consolidate_manifests(spark, out, keep_last=1)["folded"] == 2
     assert compact_rejects(spark, out, keep_last=1)["folded"] == 2
     assert os.path.exists(manifest_path(out, 2))
-    assert _spark_jobs(spark, lambda: handler(batches[2], 2)) == 0
+    assert spark_jobs(spark, lambda: handler(batches[2], 2)) == 0
     assert view() == seen
 
 
