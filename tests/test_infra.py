@@ -3,6 +3,7 @@ through named queries (SURVEY §2.2 legend)."""
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -11,6 +12,7 @@ from pyspark.sql import functions as F
 
 from conftest import assert_declared_schemas_match, spark_jobs
 from twitter_event_stream_spark import registry
+from twitter_event_stream_spark import session as session_mod
 from twitter_event_stream_spark.operators.multimodal import (
     decode_features,
     dedup_by_content,
@@ -18,7 +20,11 @@ from twitter_event_stream_spark.operators.multimodal import (
 )
 from twitter_event_stream_spark.session import (
     CHECKPOINT_FILE_MANAGER_KEY,
+    DAEMON_MODULE,
+    DAEMON_MODULE_KEY,
+    ENGINE_ROOT,
     LOCAL_CHECKPOINT_FILE_MANAGER,
+    PYTHONPATH_KEY,
     configure_session,
 )
 from twitter_event_stream_spark.tables import (
@@ -2626,3 +2632,130 @@ def test_local_session_uses_filesystem_checkpoint_manager(spark, tmp_path):
         spark._jsparkSession.sessionState().newHadoopConf(),
     )
     assert manager.getClass().getName() == LOCAL_CHECKPOINT_FILE_MANAGER
+
+
+def _worker_invalidate_caches_file(spark) -> str:
+    """Where the Python worker's ``zipimporter.invalidate_caches`` is defined."""
+
+    def report(batches):
+        import zipimport
+
+        import pandas as pd
+
+        code = zipimport.zipimporter.invalidate_caches.__code__
+        for _ in batches:
+            yield pd.DataFrame({"file": [code.co_filename]})
+
+    return spark.range(1).mapInPandas(report, "file string").first().file
+
+
+def test_python_workers_keep_zip_directories(spark):
+    """The session's Python workers run under the engine's daemon, whose
+    zipimporter skips the per-task archive directory re-read."""
+    import twitter_event_stream_spark.pydaemon as pydaemon
+
+    assert _worker_invalidate_caches_file(spark) == pydaemon.__file__
+
+
+def test_python_workers_see_archives_added_later(spark, tmp_path):
+    """An archive (and a plain module) added with ``addPyFile`` after the
+    daemon started is importable in a later task: new ``sys.path`` entries
+    and the refreshed spark-files dir are still seen."""
+    import uuid
+    import zipfile
+
+    _worker_invalidate_caches_file(spark)  # the daemon is up
+    tag = uuid.uuid4().hex
+    zipped, plain = f"late_zip_{tag}", f"late_py_{tag}"
+    archive = tmp_path / f"{zipped}.zip"
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr(f"{zipped}.py", "VALUE = 7\n")
+    (tmp_path / f"{plain}.py").write_text("VALUE = 5\n")
+    sc = spark.sparkContext
+    sc.addPyFile(str(archive))
+    sc.addPyFile(str(tmp_path / f"{plain}.py"))
+
+    def use(batches):
+        import importlib
+
+        import pandas as pd
+
+        total = sum(importlib.import_module(m).VALUE for m in (zipped, plain))
+        for _ in batches:
+            yield pd.DataFrame({"v": [total]})
+
+    assert spark.range(1).mapInPandas(use, "v long").first().v == 12
+
+
+class _StubBuilder:
+    """The ``SparkSession.builder`` calls ``get_spark`` makes."""
+
+    def __init__(self) -> None:
+        self.values: dict[str, str] = {}
+
+    def master(self, value):
+        self.values["spark.master"] = value
+        return self
+
+    def appName(self, value):
+        return self
+
+    def config(self, key, value):
+        self.values[key] = value
+        return self
+
+    def getOrCreate(self):
+        return _StubSession(self.values)
+
+
+@pytest.mark.parametrize(
+    "extra, want_daemon, want_path",
+    [
+        (None, DAEMON_MODULE, [ENGINE_ROOT]),
+        (
+            {DAEMON_MODULE_KEY: "pyspark.daemon", PYTHONPATH_KEY: f"/a{os.pathsep}/b"},
+            "pyspark.daemon",
+            ["/a", "/b", ENGINE_ROOT],
+        ),
+    ],
+    ids=["unset", "caller-values"],
+)
+def test_get_spark_python_worker_confs(monkeypatch, extra, want_daemon, want_path):
+    """``get_spark`` starts the engine's daemon unless the caller names one,
+    and appends the package's parent dir to the workers' PYTHONPATH after
+    the caller's entries."""
+    from types import SimpleNamespace
+
+    builder = _StubBuilder()
+    monkeypatch.setattr(session_mod, "SparkSession", SimpleNamespace(builder=builder))
+    session_mod.get_spark(cpus=2, extra_confs=extra)
+    assert builder.values[DAEMON_MODULE_KEY] == want_daemon
+    assert builder.values[PYTHONPATH_KEY].split(os.pathsep) == want_path
+
+
+@pytest.mark.deep
+def test_engine_udfs_run_outside_the_repo_root(tmp_path, sf_dir):
+    """A driver whose cwd is not the repo root still runs engine UDFs: the
+    workers import the engine (the daemon, functions pickled by reference)
+    through the package's parent dir, not through the cwd."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {root!r})\n"
+        "from twitter_event_stream_spark import registry\n"
+        "from twitter_event_stream_spark.session import get_spark\n"
+        "spark = get_spark(app_name='tes-cwd', cpus=2)\n"
+        f"rows = registry.all_queries()['q_llm_ann_ivf'](spark, {sf_dir!r}).collect()\n"
+        "print('rows', len(rows))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    done = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert int(done.stdout.split()[-1]) > 0

@@ -27,6 +27,22 @@ they hold even on a session the driver created for us):
   wraps the chosen manager, so checkpoint checksums and state-store commit
   validation are unchanged. A cluster keeps its own choice, as it does for
   shuffle partitions.
+- ``spark.python.daemon.module=twitter_event_stream_spark.pydaemon``, unless
+  the caller passes its own value. Before every task, pyspark's worker calls
+  ``importlib.invalidate_caches()``, and in CPython 3.11 and 3.12 each
+  ``zipimporter`` then re-reads its whole archive directory at once (3.13
+  only drops the cache entry). The worker's ``sys.path`` holds Spark's
+  ``pyspark.zip``, the py4j zip and the spark-core jar, so every Python
+  task (``mapInPandas``, pandas and Python UDFs) paid about 150 ms of CPU
+  for no work. The engine's daemon is pyspark's own with that re-read
+  turned off. It is safe because Spark never rewrites an archive in place,
+  and an archive added later (``addPyFile``) is a new ``sys.path`` entry
+  whose new importer reads its directory on first lookup. Directory finders
+  are still refreshed every task. The workers find the module, and the
+  engine functions that UDFs pickle by reference, through the package's
+  parent directory, which ``get_spark`` appends to
+  ``spark.executorEnv.PYTHONPATH`` after any entries of the caller: a
+  worker's import no longer depends on the driver's working directory.
 
 Scale posture: shuffle partitions default to the core count locally; on a real
 cluster this is expected to be overridden (e.g. 2-3x total cores, or left to
@@ -62,6 +78,13 @@ RUNTIME_CONFS: dict[str, str] = {
     # Arrow for every pandas-UDF / toPandas boundary (SURVEY §3.2 step 6).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
 }
+
+#: The Python daemon a ``get_spark`` session starts (see the module docstring).
+DAEMON_MODULE_KEY = "spark.python.daemon.module"
+DAEMON_MODULE = "twitter_event_stream_spark.pydaemon"
+#: Python workers import the engine from the directory that holds the package.
+PYTHONPATH_KEY = "spark.executorEnv.PYTHONPATH"
+ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: The checkpoint file manager a local session uses unless one is configured
 #: (see the module docstring for why, and why it is as atomic).
@@ -131,17 +154,18 @@ def get_spark(
         cpus = resolve_cpus()
     if shuffle_partitions is None:
         shuffle_partitions = cpus
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    confs = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.ui.enabled": "false",
+        DAEMON_MODULE_KEY: DAEMON_MODULE,
+        **RUNTIME_CONFS,
+        **(extra_confs or {}),
+    }
+    confs[PYTHONPATH_KEY] = os.pathsep.join(
+        filter(None, [confs.get(PYTHONPATH_KEY), ENGINE_ROOT])
     )
-    for key, value in RUNTIME_CONFS.items():
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
+    for key, value in confs.items():
         builder = builder.config(key, value)
-    if extra_confs:
-        for key, value in extra_confs.items():
-            builder = builder.config(key, value)
     return configure_session(builder.getOrCreate())
