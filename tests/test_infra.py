@@ -655,15 +655,16 @@ def test_loader_cache_interleaves_scale_factors(spark):
 
 
 def test_declared_schemas_match_fixtures(spark, sf_dir, tmp_path):
-    """The loader reads every table but ``events`` with its declared schema
+    """The loader reads every table with its declared schema
     (tables.TABLE_SCHEMAS), so the declarations are pinned to every
     fixture the engine is run on: the shipped scale factors that are
-    present next to ``sf_dir`` and the benchmark's generated tables."""
-    import os
-
+    present next to ``sf_dir`` and the benchmark's generated tables. The
+    bridge decodes its wire events with the same ``events`` declaration."""
     from perfbench.fixture import make_tables
+    from twitter_event_stream_spark.streaming.pipelines import WIRE_SCHEMA
 
-    assert set(TABLE_SCHEMAS) == set(TABLE_NAMES) - {"events"}
+    assert set(TABLE_SCHEMAS) == set(TABLE_NAMES)
+    assert WIRE_SCHEMA == TABLE_SCHEMAS["events"]
     testdata = os.path.dirname(sf_dir)
     dirs = {sf_dir} | {
         f"{testdata}/{sf}"
@@ -675,16 +676,14 @@ def test_declared_schemas_match_fixtures(spark, sf_dir, tmp_path):
     assert_declared_schemas_match(spark, make_tables(str(tmp_path), 0.001, 1))
 
 
-def test_load_tables_runs_one_job_on_a_fresh_dir(spark, sf_dir, tmp_path):
-    """Loading a fixture dir runs exactly one Spark job: the schema
-    inference of ``events``. The other nine tables are read with declared
-    schemas, which need no job. The fixture is read through a fresh path
-    so the loader's per-dir cache cannot hide the reads."""
-    import os
-
+def test_load_tables_runs_no_job_on_a_fresh_dir(spark, sf_dir, tmp_path):
+    """Loading a fixture dir runs no Spark job: all ten tables are read
+    with declared schemas, so nothing infers one. The fixture is read
+    through a fresh path so the loader's per-dir cache cannot hide the
+    reads."""
     fresh = str(tmp_path / "sf")
     os.symlink(sf_dir, fresh)
-    assert spark_jobs(spark, lambda: load_tables(spark, fresh)) == 1
+    assert spark_jobs(spark, lambda: load_tables(spark, fresh)) == 0
 
 
 def test_hll_partitioned_estimates_within_bound(spark, sf_dir):
@@ -1494,26 +1493,22 @@ def test_bucketize_approx_matches_exact_populations(spark, sf_dir):
     assert empty.count() == 0
 
 
-def test_events_ns_timestamp_fallback_normalizes(spark, sf_dir):
-    """SURVEY §1.3(1) dormant path: a testdata regeneration that stores
-    `events.ts` as parquet INT64 TIMESTAMP(NANOS) reads as bigint under
-    the pinned nanosAsLong conf, and the loader's `_normalize_events`
-    guard must convert it to µs TimestampType with integer `DIV 1000`
-    (no double-rounding) — yielding exactly the same instants as the
-    native µs fixture. Previously this guard shipped untested."""
-    import os as _os
-
+def test_events_ns_timestamp_is_refused_at_the_first_scan(spark, sf_dir, tmp_path):
+    """An ``events`` file whose ``ts`` is parquet INT64 TIMESTAMP(NANOS),
+    the type of an earlier testdata generation (SURVEY §1.3(1)), is not
+    read: the declared ``ts TIMESTAMP_NTZ`` fails at the first action with
+    ``PARQUET_COLUMN_DATA_TYPE_MISMATCH``, with ``nanosAsLong`` unset and
+    with it ``true``, as a driver session may set it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from twitter_event_stream_spark.tables import table
-
     t = pq.read_table(sf_dir + "/events.parquet")
     idx = t.schema.get_field_index("ts")
-    ns_col = t.column("ts").cast(pa.timestamp("ns"))
-    t_ns = t.set_column(idx, pa.field("ts", pa.timestamp("ns")), ns_col)
-    d = tempfile.mkdtemp(prefix="tes_ns_events_")
-    _os.makedirs(d + "/events.parquet", exist_ok=True)
+    t_ns = t.set_column(
+        idx, pa.field("ts", pa.timestamp("ns")), t.column("ts").cast(pa.timestamp("ns"))
+    )
+    d = str(tmp_path / "sf_ns")
+    os.makedirs(d + "/events.parquet")
     pq.write_table(
         t_ns,
         d + "/events.parquet/part-0.parquet",
@@ -1521,23 +1516,24 @@ def test_events_ns_timestamp_fallback_normalizes(spark, sf_dir):
         use_deprecated_int96_timestamps=False,
     )
     # the loader reads the whole fixture dir — link the other nine tables
-    from twitter_event_stream_spark.tables import TABLE_NAMES
-
     for name in TABLE_NAMES:
         if name != "events":
-            _os.symlink(f"{sf_dir}/{name}.parquet", f"{d}/{name}.parquet")
-    got = table(spark, d, "events")
-    assert dict(got.dtypes)["ts"] == "timestamp"
-    want = {
-        r.event_id: r.ts for r in table(spark, sf_dir, "events").collect()
-    }
-    for r in got.collect():
-        w = want[r.event_id]
-        assert (r.ts.year, r.ts.month, r.ts.day, r.ts.hour, r.ts.minute,
-                r.ts.second, r.ts.microsecond) == (
-            w.year, w.month, w.day, w.hour, w.minute, w.second, w.microsecond
-        ), (r.event_id, r.ts, w)
-    shutil.rmtree(d, ignore_errors=True)
+            os.symlink(f"{sf_dir}/{name}.parquet", f"{d}/{name}.parquet")
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(key, None)
+    try:
+        for value in (None, "true"):
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+            with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+                table(spark, d, "events").collect()
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def test_scale_probe_fixture_and_audit_machinery(spark, tmp_path_factory):

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from conftest import spark_jobs
 from twitter_event_stream_spark.streaming.pipelines import (
+    WIRE_SCHEMA,
     as_event_time,
     bridge_pipeline,
     decode_events,
@@ -25,7 +26,6 @@ from twitter_event_stream_spark.streaming.pipelines import (
     windowed_counts,
 )
 from twitter_event_stream_spark.streaming.replay import (
-    EVENTS_SCHEMA,
     replay_stream,
     run_available_now,
     write_replay_chunks,
@@ -272,7 +272,7 @@ def test_bridge_dedup_state_survives_restart(spark, tmp_path_factory):
         return (i, t0 + datetime.timedelta(seconds=i), i % 6, "click", float(i), None)
 
     def write_chunk(n, rows):
-        spark.createDataFrame(rows, EVENTS_SCHEMA).coalesce(1).write.parquet(
+        spark.createDataFrame(rows, WIRE_SCHEMA).coalesce(1).write.parquet(
             os.path.join(src, f"chunk={n:03d}")
         )
 
@@ -485,54 +485,6 @@ def test_rocksdb_state_store_parity(spark, sf_dir, chunk_dir):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
-
-
-def test_transform_with_state_counters(spark, sf_dir, chunk_dir):
-    """I8 (Spark-4 transformWithState): final per-user counters from the
-    replayed stream must equal the batch groupBy — same check as the
-    applyInPandasWithState form, on the typed-state API + RocksDB.
-
-    Spark's transformWithState driver-worker protocol needs google.protobuf
-    at runtime; this container doesn't ship it (and installs are off), so
-    the test skips there — the operator itself is plain public API."""
-    pytest.importorskip("google.protobuf")
-    from twitter_event_stream_spark.streaming.pipelines import user_counters_tws
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = replay_stream(spark, chunk_dir)
-        rows = _drain(spark, user_counters_tws(stream), "t_tws", "update")
-        batch = {
-            r.user_id: (r.n, round(r.s, 6))
-            for r in table(spark, sf_dir, "events")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
-            .collect()
-        }
-        got_final = {u: max(vs) for u, vs in _group_last(rows).items()}
-        assert set(got_final) == set(batch)
-        for u, (n, s) in batch.items():
-            assert got_final[u][0] == n, f"user {u}: {got_final[u]} != {(n, s)}"
-            assert abs(got_final[u][1] - s) < 1e-6
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
-def _group_last(rows):
-    """Counters are monotone (counts only grow), so the final state per
-    user is the max emitted (n_events, sum_value) tuple."""
-    acc = {}
-    for r in rows:
-        acc.setdefault(r.user_id, []).append((r.n_events, r.sum_value))
-    return acc
 
 
 def test_stream_session_window_parity(spark, sf_dir, chunk_dir):

@@ -5,10 +5,6 @@ they hold even on a session the driver created for us):
 
 - ``spark.sql.session.timeZone=UTC`` — DuckDB TIMESTAMP is naive; with UTC
   pinned both engines yield identical naive datetimes (SURVEY §1.3(2)).
-- ``spark.sql.legacy.parquet.nanosAsLong=true`` — dormant fallback: current
-  fixtures store timestamps as µs NTZ (read natively), but a ns-typed
-  testdata regeneration would need this conf (SURVEY §1.3(1)); harmless
-  for µs data, and the loader's ns normalization guard never fires.
 - AQE on (coalesce partitions, skew-join split) — the 100 TB posture relies on
   runtime re-planning at shuffle boundaries (SURVEY §4.2).
 - Local master only, and only where the deployment left the key unset:
@@ -58,7 +54,6 @@ from pyspark.sql import SparkSession
 #: Runtime-settable SQL confs every engine entry point re-applies.
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # parallelismFirst=true (the default) keeps reducer count at the

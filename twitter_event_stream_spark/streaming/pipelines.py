@@ -29,15 +29,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from twitter_event_stream_spark import fsio
+from twitter_event_stream_spark.tables import TABLE_SCHEMAS
 
-#: R2 — the wire schema of a raw JSON event line. ``ts`` is TIMESTAMP_NTZ to
-#: match the batch fixture tables (the events parquet stores
-#: isAdjustedToUTC=false micros, which Spark reads as NTZ), so decoded
-#: streams union/join with batch tables without an implicit type coercion.
-WIRE_SCHEMA = (
-    "event_id long, ts timestamp_ntz, user_id long, event_type string, "
-    "value double, props string"
-)
+#: R2 — the wire schema of a raw JSON event line: the declared schema of the
+#: batch ``events`` table, so decoded streams union/join with batch tables
+#: without an implicit type coercion (``ts`` is TIMESTAMP_NTZ on both).
+WIRE_SCHEMA = TABLE_SCHEMAS["events"]
 
 
 def as_event_time(df: DataFrame, *cols: str) -> DataFrame:
@@ -418,47 +415,6 @@ def running_ewma(events: DataFrame, alpha: float = 0.25) -> DataFrame:
         stateStructType="ewma double, n long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def user_counters_tws(events: DataFrame) -> DataFrame:
-    """I8 (Spark-4 form) — the same per-user running counters as
-    running_user_counters, on the transformWithState API: typed ValueState
-    per key, incremental per micro-batch. Requires the RocksDB state store
-    provider (the API's only supported backend — also the engine's 100 TB
-    default). Prefer this form going forward: fine-grained state types
-    (value/list/map), timers, and TTL without re-shipping the whole state
-    tuple per batch. Runtime needs google.protobuf (Spark's state-server
-    protocol); the test gates on it — absent in this container."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserCounter(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("counts", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = 0, 0.0
-            if self._state.exists():
-                n, total = self._state.get()
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        UserCounter(),
-        outputStructType="user_id long, n_events long, sum_value double",
-        outputMode="Update",
-        timeMode="None",
     )
 
 

@@ -22,11 +22,6 @@ from pyspark.sql import functions as F
 from twitter_event_stream_spark.streaming.pipelines import WIRE_SCHEMA
 from twitter_event_stream_spark.tables import table
 
-#: The replay fixture decodes to the SAME shape the bridge's wire decoder
-#: produces — one definition, so a wire-schema change cannot silently
-#: leave the replay fixture emitting the old shape.
-EVENTS_SCHEMA = WIRE_SCHEMA
-
 
 def write_replay_chunks(
     spark: SparkSession,
@@ -45,19 +40,7 @@ def write_replay_chunks(
     watermark drop is guaranteed only after eviction); two chunks late, the
     window was evicted a batch earlier and the duplicate is genuinely late.
     """
-    from pyspark.sql.types import StructType
-
-    # Cast to the declared wire types, not just the declared names: the
-    # replay reader stamps EVENTS_SCHEMA on the chunk files, and a fixture
-    # whose ts came through the ns-fallback path (tables._normalize_events
-    # rebuilds it as TIMESTAMP) would otherwise write LTZ parquet that an
-    # NTZ reader rejects. The session is pinned UTC, so the cast relabels.
-    ev = table(spark, sf_dir, "events").select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in StructType.fromDDL(EVENTS_SCHEMA).fields
-        ]
-    )
+    ev = table(spark, sf_dir, "events")
     n = ev.count()
     if n == 0:
         return 0
@@ -106,7 +89,7 @@ def replay_stream(
 ) -> DataFrame:
     """The streaming DataFrame over the chunk dir (A3 — file source)."""
     return (
-        spark.readStream.schema(EVENTS_SCHEMA)
+        spark.readStream.schema(WIRE_SCHEMA)
         .option("maxFilesPerTrigger", files_per_trigger)
         .option("recursiveFileLookup", "true")
         .parquet(chunk_dir)

@@ -2,41 +2,24 @@
 
 Every query callable goes through :func:`load_tables`, which
 
-1. re-applies the runtime session conventions (UTC, nanosAsLong, AQE);
+1. re-applies the runtime session conventions (UTC, AQE);
 2. reads each parquet table of the scale-factor directory with its declared
-   schema (:data:`TABLE_SCHEMAS`), so no Spark job infers it — the current
-   fixtures store every timestamp as µs NTZ (isAdjustedToUTC=false), read
-   as ``TIMESTAMP_NTZ`` (SURVEY §1.3(1)); only ``events`` is inferred;
-3. keeps a guarded ns fallback: if a regenerated ``events.ts`` arrives as
-   INT64 nanoseconds (read as ``bigint`` under nanosAsLong), it is
-   normalized to µs with integer division (``ts DIV 1000``) so no
-   double-rounding can perturb the value — a no-op against current data;
-4. registers each table as a temp view under its canonical name.
+   schema (:data:`TABLE_SCHEMAS`), so no Spark job infers it — the fixtures
+   store every timestamp as µs NTZ (isAdjustedToUTC=false), read as
+   ``TIMESTAMP_NTZ`` (SURVEY §1.3(1)); a file whose column types differ
+   fails at its first scan (``PARQUET_COLUMN_DATA_TYPE_MISMATCH``);
+3. registers each table as a temp view under its canonical name.
 
-DataFrames are lazy, and only ``events`` reads a parquet footer (one Spark
-job) at load; a small per-(session, dir) cache avoids repeating that read,
-the Py4J reader calls and the view registration on every call.
+DataFrames are lazy, so a load runs no Spark job; a small per-(session,
+dir) cache avoids repeating the Py4J reader calls and the view registration
+on every call.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from twitter_event_stream_spark.session import configure_session
-
-TABLE_NAMES: tuple[str, ...] = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 #: Dimension tables small enough to always broadcast in joins (SURVEY §4.2:
 #: dims ≤20k rows). ``part`` qualifies at every shipped sf; at true 100 TB
@@ -44,10 +27,11 @@ TABLE_NAMES: tuple[str, ...] = (
 #: joins fall back to shuffled strategies via AQE size estimates.
 BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier", "part"})
 
-#: DDL schema of every fixture table but ``events`` (FIXTURES.md). A read
-#: with a declared schema runs no schema-inference job; a column missing
-#: from a file would read as NULL, which the schema-equality test rules out
-#: for every shipped fixture.
+#: DDL schema of every fixture table, in canonical order (FIXTURES.md). A
+#: read with a declared schema runs no schema-inference job; a column
+#: missing from a file would read as NULL, which the schema-equality test
+#: rules out for every shipped fixture. ``events`` is also the wire schema
+#: of the streaming bridge (``pipelines.WIRE_SCHEMA``).
 TABLE_SCHEMAS: dict[str, str] = {
     "region": "r_regionkey INT, r_name STRING",
     "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
@@ -70,12 +54,18 @@ TABLE_SCHEMAS: dict[str, str] = {
         "l_tax DOUBLE, l_returnflag STRING, l_linestatus STRING, "
         "l_shipdate TIMESTAMP_NTZ"
     ),
+    "events": (
+        "event_id long, ts timestamp_ntz, user_id long, event_type string, "
+        "value double, props string"
+    ),
     "documents": "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
     "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
 }
 
-#: The loaded frames per (session, dir): a hit skips the Py4J reader calls,
-#: the ``events`` footer read and, for the active dir, the view registration.
+TABLE_NAMES: tuple[str, ...] = tuple(TABLE_SCHEMAS)
+
+#: The loaded frames per (session, dir): a hit skips the Py4J reader calls
+#: and, for the active dir, the view registration.
 _cache: dict[tuple[int, str], dict[str, DataFrame]] = {}
 
 #: Which sf_dir's tables are currently bound to the session's temp views.
@@ -85,19 +75,6 @@ _cache: dict[tuple[int, str], dict[str, DataFrame]] = {}
 _active_views: dict[int, str] = {}
 
 
-def _normalize_events(df: DataFrame) -> DataFrame:
-    """INT64 ns → TimestampType µs, losslessly (data is µs-precision).
-
-    Dormant against current fixtures (µs NTZ → the ``bigint`` guard never
-    fires); kept for a ns-typed testdata regeneration. ``ts DIV 1000``
-    stays in integer arithmetic; a double division here could round (ulp
-    at 1.7e18 is 256 ns).
-    """
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    return df
-
-
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Load all fixture tables of ``sf_dir``; register canonical temp views."""
     configure_session(spark)
@@ -105,15 +82,10 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     key = (id(spark), sf)
     dfs = _cache.get(key)
     if dfs is None:
-        dfs = {}
-        for name in TABLE_NAMES:
-            path = f"{sf}/{name}.parquet"
-            if name == "events":
-                # inferred: a ns-typed ts must reach the guard as bigint, and a
-                # declared TIMESTAMP_NTZ fails at the scan on such a file
-                dfs[name] = _normalize_events(spark.read.parquet(path))
-            else:
-                dfs[name] = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
+        dfs = {
+            name: spark.read.schema(ddl).parquet(f"{sf}/{name}.parquet")
+            for name, ddl in TABLE_SCHEMAS.items()
+        }
         _cache[key] = dfs
     if _active_views.get(id(spark)) != sf:
         for name, df in dfs.items():
