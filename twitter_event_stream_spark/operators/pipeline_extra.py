@@ -318,8 +318,7 @@ def q_quantile_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_percentile pass, per-bucket local rank, literal-map prefix
     offsets, closed-form left-heavy ntile arithmetic on the exact rank).
     Same answer bit-for-bit, no single-task sort, no unpartitioned window
-    anywhere in the plan. :func:`bucketize_approx` below remains the
-    one-pass approximate twin for when sketch-exact bins suffice."""
+    anywhere in the plan."""
     from twitter_event_stream_spark.exprs import rnd
     from twitter_event_stream_spark.operators.scale_ops import (
         ntile_distributed,
@@ -564,56 +563,4 @@ def q_llm_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "dup_ratio"
             ),
         )
-    )
-
-
-def bucketize_approx(
-    df: DataFrame,
-    col: str,
-    n_buckets: int = 10,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Equal-frequency bucketize, 100 TB form (the scale twin of
-    `q_quantile_bucketize`'s exact ntile): approximate quantile cutpoints
-    from ONE mergeable-sketch aggregate (`approx_percentile`, GK-style —
-    partial per partition, merged on the driver side of the agg, never a
-    global sort), broadcast back as a literal array, bucket membership
-    decided per-row with a binary-search `width_bucket`-style expression.
-
-    Error model: approx_percentile guarantees rank error <= n/accuracy, so
-    bucket populations deviate from n/n_buckets by at most that bound —
-    the standard trade for removing the only global sort from the feature
-    pipeline. Caveat: rows TIED on one value always share a bucket (value
-    membership is a pure function of the value, `width_bucket` semantics),
-    so probability mass concentrated on few distinct values concentrates
-    buckets too — unlike exact ntile, which splits ties by an arbitrary
-    tiebreak to force equal populations. NULL values get a NULL bin.
-    Returns the input plus a `bin` column (1..n_buckets)."""
-    qs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts = df.agg(
-        F.percentile_approx(col, F.array(*[F.lit(q) for q in qs]), accuracy)
-    ).first()[0]
-    if cuts is None:  # empty input
-        return df.withColumn("bin", F.lit(None).cast("int"))
-    arr = F.array(*[F.lit(float(c)) for c in cuts])
-    # bin = 1 + number of cutpoints strictly below the value — a value EQUAL
-    # to a cutpoint is not counted, so ties go to the LOWER bucket
-    # (left-closed bins; close enough to ntile's left-heavy fill for
-    # feature use);
-    # NULL values get a NULL bin — percentile_approx ignored them for the
-    # cuts, so stuffing them into bin 1 would silently inflate it
-    return df.withColumn(
-        "bin",
-        F.when(
-            F.col(col).isNotNull(),
-            (
-                F.aggregate(
-                    arr,
-                    F.lit(0),
-                    lambda acc, c: acc
-                    + F.when(F.col(col) > c, F.lit(1)).otherwise(F.lit(0)),
-                )
-                + 1
-            ).cast("int"),
-        ),
     )

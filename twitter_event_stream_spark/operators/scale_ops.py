@@ -40,10 +40,11 @@ def q_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X60 — join/agg key skew profiler: the top-10 heaviest keys with their
     absolute counts, share of all rows, and skew ratio vs the mean key. This
     is the diagnostic you run BEFORE a 100 TB shuffle — a skew_ratio ≫ 1 key
-    is the straggler task that salting (operators/skew.py) or AQE skew-split
-    exists for. Shape: one partial-agg groupBy, a 1-row global agg broadcast
-    back, and a TakeOrderedAndProject for the top-k — the per-key count table
-    never globally sorts, and the window rank runs on 10 rows post-limit."""
+    is the straggler task that AQE skew-join splitting (pinned on by the
+    session) exists for. Shape: one partial-agg groupBy, a 1-row global agg
+    broadcast back, and a TakeOrderedAndProject for the top-k — the per-key
+    count table never globally sorts, and the window rank runs on 10 rows
+    post-limit."""
     ev = table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n"))
     stats = counts.agg(

@@ -42,7 +42,8 @@ def kafka_source(
 
 
 def socket_source(spark: SparkSession, host: str, port: int) -> DataFrame:
-    """A5 — direct TCP NDJSON ingest (tested end-to-end in CI)."""
+    """A5 — direct TCP NDJSON ingest; ``tests/test_socket_source.py`` feeds
+    it from a local TCP server and checks the decoded events."""
     raw = (
         spark.readStream.format("socket")
         .option("host", host)
