@@ -37,6 +37,16 @@ def spark_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def jvm_reaped_ticks(spark) -> int:
+    """CPU clock ticks of the children the driver JVM has reaped
+    (``cutime + cstime`` in ``/proc/<pid>/stat``). Unchanged over a stretch
+    of work means the JVM ran no child process to completion in it."""
+    pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    with open(f"/proc/{pid}/stat") as f:
+        fields = f.read().rsplit(")", 1)[1].split()  # fields[0] is field 3, state
+    return int(fields[13]) + int(fields[14])
+
+
 def assert_declared_schemas_match(spark, sf_dir: str) -> None:
     """Each declared table schema (tables.TABLE_SCHEMAS) equals what Spark
     infers from the files of ``sf_dir``: names, order and types. A declared

@@ -10,16 +10,19 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import assert_declared_schemas_match, spark_jobs
+from conftest import assert_declared_schemas_match, jvm_reaped_ticks, spark_jobs
 from twitter_event_stream_spark import registry
 from twitter_event_stream_spark import session as session_mod
 from twitter_event_stream_spark.operators.multimodal import with_payload
 from twitter_event_stream_spark.session import (
     CHECKPOINT_FILE_MANAGER_KEY,
+    CLASSPATH_KEY,
     DAEMON_MODULE,
     DAEMON_MODULE_KEY,
     ENGINE_ROOT,
     LOCAL_CHECKPOINT_FILE_MANAGER,
+    LOCAL_FS_CLASS,
+    LOCAL_FS_KEY,
     PYTHONPATH_KEY,
     configure_session,
 )
@@ -2311,6 +2314,151 @@ def test_get_spark_python_worker_confs(monkeypatch, extra, want_daemon, want_pat
     session_mod.get_spark(cpus=2, extra_confs=extra)
     assert builder.values[DAEMON_MODULE_KEY] == want_daemon
     assert builder.values[PYTHONPATH_KEY].split(os.pathsep) == want_path
+
+
+class _JvmWithoutEngineClasses:
+    """A JVM launched before any ``get_spark`` session: the engine's class
+    is not on its class path."""
+
+    class java:
+        class lang:
+            class Class:
+                @staticmethod
+                def forName(name):
+                    from types import SimpleNamespace
+
+                    from py4j.protocol import Py4JJavaError
+
+                    java_exception = SimpleNamespace(_target_id="o1")
+                    raise Py4JJavaError(f"ClassNotFoundException: {name}", java_exception)
+
+
+@pytest.mark.parametrize(
+    "extra, javac, jvm, want_fs, want_path",
+    [
+        (None, True, None, LOCAL_FS_CLASS, ["<classes>"]),
+        (
+            {LOCAL_FS_KEY: "org.apache.hadoop.fs.LocalFileSystem",
+             CLASSPATH_KEY: f"/a{os.pathsep}/b"},
+            True,
+            None,
+            "org.apache.hadoop.fs.LocalFileSystem",
+            ["/a", "/b", "<classes>"],
+        ),
+        (None, True, _JvmWithoutEngineClasses, None, ["<classes>"]),
+        (None, False, None, None, None),
+    ],
+    ids=["unset", "caller-values", "jvm-up-without-class", "no-javac"],
+)
+def test_get_spark_local_fs_confs(
+    monkeypatch, caplog, extra, javac, jvm, want_fs, want_path
+):
+    """``get_spark`` names the engine's ``file:`` FileSystem unless the
+    caller names one or the JVM is already up without its class, appends
+    its class dir to the driver class path after the caller's entries, and
+    without ``javac`` leaves both unset with one warning."""
+    from types import SimpleNamespace
+
+    if not javac:
+        which = shutil.which
+        monkeypatch.setattr(
+            session_mod.shutil, "which", lambda cmd: None if cmd == "javac" else which(cmd)
+        )
+    session_mod.local_fs_classes.cache_clear()
+    monkeypatch.setattr(session_mod, "SparkContext", SimpleNamespace(_jvm=jvm))
+    try:
+        builder = _StubBuilder()
+        monkeypatch.setattr(session_mod, "SparkSession", SimpleNamespace(builder=builder))
+        with caplog.at_level("WARNING", logger=session_mod.__name__):
+            session_mod.get_spark(cpus=2, extra_confs=extra)
+            session_mod.get_spark(cpus=2, extra_confs=extra)
+        classes = session_mod.local_fs_classes()
+    finally:
+        session_mod.local_fs_classes.cache_clear()
+    assert builder.values.get(LOCAL_FS_KEY) == want_fs
+    if want_path is None:
+        assert classes is None and CLASSPATH_KEY not in builder.values
+        assert len(caplog.records) == 1 and LOCAL_FS_KEY in caplog.text
+    else:
+        assert os.path.isfile(f"{classes}/{LOCAL_FS_CLASS.replace('.', '/')}.class")
+        want = [classes if p == "<classes>" else p for p in want_path]
+        assert builder.values[CLASSPATH_KEY].split(os.pathsep) == want
+        assert not caplog.records
+
+
+needs_javac = pytest.mark.skipif(shutil.which("javac") is None, reason="no JDK javac")
+
+
+def _hadoop_fs(spark, stock: bool = False):
+    """The session's ``file:`` FileSystem, or Hadoop's stock raw local one
+    under the same configuration."""
+    jvm = spark._jvm
+    uri = jvm.java.net.URI("file:///")
+    conf = spark._jsc.hadoopConfiguration()
+    if not stock:
+        return jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf)
+    fs = jvm.org.apache.hadoop.fs.RawLocalFileSystem()
+    fs.initialize(uri, conf)
+    return fs
+
+
+def _create_files(spark, fs, base: str, n: int = 100) -> None:
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    assert fs.mkdirs(Path(f"{base}/dir/sub"))
+    for i in range(n):
+        fs.create(Path(f"{base}/f{i}")).close()
+
+
+@needs_javac
+def test_session_local_fs_is_the_engines(spark):
+    assert _hadoop_fs(spark).getClass().getName() == LOCAL_FS_CLASS
+
+
+@needs_javac
+def test_local_fs_creates_fork_no_process(spark, tmp_path):
+    """100 creates (each with its ``.crc``) and a two-level mkdirs through
+    the session's ``file:`` FileSystem reap no child of the JVM."""
+    fs = _hadoop_fs(spark)
+    before = jvm_reaped_ticks(spark)
+    _create_files(spark, fs, str(tmp_path))
+    assert jvm_reaped_ticks(spark) - before == 0
+    assert os.path.isfile(tmp_path / ".f99.crc")
+
+
+def test_stock_local_fs_creates_fork(spark, tmp_path):
+    """The same loop on Hadoop's stock raw local FS does reap children
+    (``chmod``, without the native ``libhadoop``), so the pins above can
+    fail."""
+    if spark._jvm.org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded():
+        pytest.skip("native libhadoop changes permissions without a fork")
+    before = jvm_reaped_ticks(spark)
+    _create_files(spark, _hadoop_fs(spark, stock=True), str(tmp_path))
+    assert jvm_reaped_ticks(spark) - before > 0
+
+
+@needs_javac
+def test_local_fs_modes_match_stock(spark, tmp_path):
+    """Under Hadoop's umask 022 both file systems leave 0644 on a file and
+    its ``.crc`` and 0755 on each directory they make."""
+    jvm = spark._jvm
+    conf = jvm.org.apache.hadoop.conf.Configuration(spark._jsc.hadoopConfiguration())
+    conf.set("fs.permissions.umask-mode", "022")
+    uri = jvm.java.net.URI("file:///")
+    stock = jvm.org.apache.hadoop.fs.LocalFileSystem()
+    stock.initialize(uri, conf)
+    engine = jvm.org.apache.hadoop.fs.FileSystem.newInstance(uri, conf)
+    assert engine.getClass().getName() == LOCAL_FS_CLASS
+    modes = {}
+    for name, fs in [("engine", engine), ("stock", stock)]:
+        base = tmp_path / name
+        _create_files(spark, fs, str(base), n=1)
+        modes[name] = {
+            p: oct(os.stat(base / p).st_mode & 0o7777)
+            for p in ("f0", ".f0.crc", "dir", "dir/sub")
+        }
+        fs.close()
+    want = {"f0": "0o644", ".f0.crc": "0o644", "dir": "0o755", "dir/sub": "0o755"}
+    assert modes == {"engine": want, "stock": want}
 
 
 @pytest.mark.deep

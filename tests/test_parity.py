@@ -28,6 +28,22 @@ def test_rows_queries_run(spark, sf_dir, name):
     assert df.count() >= 0
 
 
+def test_freq_items_has_no_false_negatives(spark, oracle, sf_dir):
+    """``q_freq_items`` (ROWS: ``freqItems`` may add false positives) keeps
+    every ``event_type`` whose exact frequency in ``events`` is above its
+    10% support, counted by DuckDB."""
+    got = [r.frequent_event_type for r in registry.get("q_freq_items").fn(spark, sf_dir).collect()]
+    heavy = {
+        t for (t,) in oracle.execute(
+            "SELECT event_type FROM events GROUP BY event_type "
+            "HAVING count(*) > 0.1 * (SELECT count(*) FROM events)"
+        ).fetchall()
+    }
+    assert heavy, "no event type above the support: the check is empty"
+    assert len(got) == len(set(got))
+    assert heavy <= set(got)
+
+
 @pytest.mark.deep
 def test_differential_under_skewed_distribution(spark, tmp_path_factory):
     """Whole-registry differential audit #4 (round 5): every HASH query

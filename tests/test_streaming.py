@@ -14,7 +14,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import spark_jobs
+from conftest import jvm_reaped_ticks, spark_jobs
 from twitter_event_stream_spark.streaming.pipelines import (
     WIRE_SCHEMA,
     as_event_time,
@@ -249,6 +249,35 @@ def test_bridge_pipeline_fanout_partitioned(spark, sf_dir, chunk_dir):
     assert {c: len(p) for c, p in got.items()} == want
     sample = next(iter(got.values()))[0]
     assert '"event"' in sample and '"created_at"' in sample
+
+
+def test_bridge_drain_forks_no_process(spark, chunk_dir, tmp_path_factory):
+    """Per-batch fork pin: a drain of the bridge (replay → bridge_pipeline
+    → fan-out) reaps no child of the driver JVM. Every Hadoop create on
+    the path (offset and commit logs, state-store deltas, the writer's part
+    files and ``.crc`` files, the job commit, the manifest) sets its
+    permission through the engine's ``file:`` FileSystem instead of a
+    forked ``chmod``; on the stock local FS the JVM reaped about 50 ticks
+    of children over this drain."""
+    import os
+
+    base = str(tmp_path_factory.mktemp("bridge_forks"))
+    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
+    subs = spark.createDataFrame(
+        [(u, f"client_{u % 3}") for u in range(10)], "user_id long, client_id string"
+    )
+    before = jvm_reaped_ticks(spark)
+    q = (
+        bridge_pipeline(replay_stream(spark, chunk_dir, files_per_trigger=3), subs)
+        .writeStream.foreachBatch(fanout_foreach_partition(out))
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    assert jvm_reaped_ticks(spark) - before == 0
+    assert len([p for p in q.recentProgress if p.numInputRows]) == 4
+    assert manifested_fanout_files(out)
 
 
 def test_bridge_dedup_state_survives_restart(spark, tmp_path_factory):
